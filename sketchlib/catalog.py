@@ -150,6 +150,19 @@ def _factory_from_spec(spec: dict):
     return functools.partial(MultiSketch, parts)
 
 
+def _part(meta: dict, ms: MultiSketch, *wanted: str):
+    """(kind, part): the first of ``wanted`` registered in the entry's
+    spec, and its part of the MultiSketch — the one routing rule of the
+    Python verbs and the SQL functions."""
+    spec_kinds = [e["kind"] for e in meta["catalog_spec"]["kinds"]]
+    for w in wanted:
+        if w in spec_kinds:
+            return w, ms.parts[spec_kinds.index(w)]
+    raise KeyError(
+        f"none of {list(wanted)} registered for this column "
+        f"(registered kinds: {spec_kinds})")
+
+
 @dataclass
 class Answer:
     """One catalog answer: the value plus everything a caller needs to
@@ -218,22 +231,24 @@ class SketchCatalog:
                     f"  requested:  {json.dumps(spec, sort_keys=True)}")
         return self._refresh(table_path, column, spec, rebuild=rebuild)
 
-    def _refresh(self, table_path: str, column: str, spec: dict, *,
-                 rebuild: bool = False) -> Answer:
-        res = incremental_build(
+    def _fold(self, table_path: str, column: str, spec: dict, *,
+              rebuild: bool = False):
+        return incremental_build(
             self.spark, table_path, column, _factory_from_spec(spec),
             store_path=self.store_path,
             name=self._name(table_path, column), rebuild=rebuild,
             meta={"catalog_spec": spec,
                   "table_path": os.path.abspath(table_path),
                   "column": column})
-        entry = store.latest_entry(self.spark, self.store_path,
-                                   self._name(table_path, column))
-        covered = int(entry[1].get("table_rows", -1))
+
+    def _refresh(self, table_path: str, column: str, spec: dict, *,
+                 rebuild: bool = False) -> Answer:
+        res = self._fold(table_path, column, spec, rebuild=rebuild)
         return Answer(value=None, kind="refresh",
                       contract="delta-only incremental fold",
                       table=table_path, column=column, seq=res.seq,
-                      covered_rows=covered, stale_files=0,
+                      covered_rows=int(res.meta.get("table_rows", -1)),
+                      stale_files=0,
                       refreshed=res.new_files > 0,
                       sketch_bytes=res.sketch.nbytes(),
                       extra={"new_files": res.new_files,
@@ -268,8 +283,7 @@ class SketchCatalog:
         read of the sketches table — answers call this on the row they
         just loaded)."""
         base_seq = int(meta.get("manifest_base", 0))
-        _, ingested = _manifest_state(self.spark, self.store_path, name,
-                                      base_seq)
+        _, ingested = _manifest_state(self.store_path, name, base_seq)
         current = _current_files(table_path)
         return len(_diff_files(current, ingested or {}, table_path, name))
 
@@ -291,19 +305,11 @@ class SketchCatalog:
                 f"{table_path}:{column} is stale by {stale} file(s); "
                 "refresh() it or answer with policy='stale_ok'/'auto'")
         if stale and policy == "auto":
-            self._refresh(table_path, column, loaded[1]["catalog_spec"])
-            loaded = store.latest_sketch(self.spark, self.store_path, name)
+            # answer from the row the fold just published, not a re-read
+            res = self._fold(table_path, column, loaded[1]["catalog_spec"])
+            loaded = (res.seq, res.meta, res.sketch)
             stale, refreshed = 0, True
         return loaded[0], loaded[1], loaded[2], stale, refreshed
-
-    def _part(self, meta: dict, ms: MultiSketch, *wanted: str):
-        spec_kinds = [e["kind"] for e in meta["catalog_spec"]["kinds"]]
-        for w in wanted:
-            if w in spec_kinds:
-                return w, ms.parts[spec_kinds.index(w)]
-        raise KeyError(
-            f"none of {list(wanted)} registered for this column "
-            f"(registered kinds: {spec_kinds})")
 
     def _answer(self, table_path, column, policy, wanted, make,
                 via=None):
@@ -329,7 +335,7 @@ class SketchCatalog:
             seq, ms = self._merge_fleet(
                 self._gname(table_path, via, column), spec)
             meta, covered = {"catalog_spec": spec}, -1
-        kind, part = self._part(meta, ms, *wanted)
+        kind, part = _part(meta, ms, *wanted)
         value, contract, extra = make(kind, part)
         if via is not None:
             extra = {**extra, "merged_from_fleet": True,
@@ -347,34 +353,19 @@ class SketchCatalog:
         inside mapInPandas, and the driver folds only the per-partition
         partials (≤ shuffle-partition count, regardless of G). At a
         G=10^6 fleet the driver sees ~32 blobs, never the fleet."""
-        from pyspark.sql import functions as F
-
         from . import serde
 
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
-            raise KeyError(f"{name} has no committed grouped epoch")
-        prefix = name + "/"
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
+        epoch, base = self._committed(name)
+        winners = store.fleet_winners(self.spark, self.store_path, name,
+                                      base, epoch)
 
         def gen(pdfs):
-            import hashlib
-
             import pandas as pd
             acc = None
             for pdf in pdfs:
                 for nm, blob, sha in zip(pdf["name"], pdf["blob"],
                                          pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    ms = serde.loads(blob)
+                    ms = serde.loads(store._verified(nm, blob, sha))
                     if acc is None:
                         acc = ms
                     else:
@@ -589,8 +580,8 @@ class SketchCatalog:
         if old is None:
             raise KeyError(f"{table_path}:{column} has no epoch "
                            f"{seq_old} (pruned or never published)")
-        _, mg_new = self._part(meta, ms, "mg")
-        _, mg_old = self._part({"catalog_spec":
+        _, mg_new = _part(meta, ms, "mg")
+        _, mg_old = _part({"catalog_spec":
                                 old[1]["catalog_spec"]}, old[2], "mg")
         b = tv_bounds(mg_old, mg_new)
         return Answer(
@@ -622,9 +613,9 @@ class SketchCatalog:
                                   seq=seq_old)
         new = store.latest_sketch(self.spark, self.store_path, name,
                                   seq=d.seq)
-        _, mg_old = self._part({"catalog_spec":
+        _, mg_old = _part({"catalog_spec":
                                 old[1]["catalog_spec"]}, old[2], "mg")
-        _, mg_new = self._part({"catalog_spec":
+        _, mg_new = _part({"catalog_spec":
                                 new[1]["catalog_spec"]}, new[2], "mg")
         movers = _tm(mg_old, mg_new, limit=limit)
         return Answer(
@@ -644,8 +635,8 @@ class SketchCatalog:
                                                       policy)
         seq_b, meta_b, ms_b, stale_b, ref_b = self._entry(table_b, col_b,
                                                           policy)
-        _, ta = self._part(meta_a, ms_a, "theta")
-        _, tb = self._part(meta_b, ms_b, "theta")
+        _, ta = _part(meta_a, ms_a, "theta")
+        _, tb = _part(meta_b, ms_b, "theta")
         union = float(ta.estimate_union(tb))
         inter = float(ta.estimate_intersection(tb))
         jacc = inter / union if union > 0 else 0.0
@@ -728,7 +719,7 @@ class SketchCatalog:
                         column: str) -> Answer:
         spec = self._gspec(table_path, group_col, column)
         if spec.get("file_index"):
-            return self._refresh_file_index(table_path, column, spec)
+            return self._refresh_file_index(table_path, spec)
         return self._refresh_grouped(table_path, group_col, column, spec)
 
     def _gspec(self, table_path: str, group_col: str, column: str, *,
@@ -754,24 +745,30 @@ class SketchCatalog:
 
     def _gspec_at(self, name: str, epoch: int, base: int) -> dict | None:
         """Spec from the highest group row WITHIN the [base, epoch]
-        window — the committed spec of that epoch's lineage."""
-        from pyspark.sql import functions as F
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        rows = [] if df is None else (
-            df.filter(F.col("name").startswith(name + "/"))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-            .orderBy(F.col("seq").desc()).limit(1)
-            .select("meta_json").collect())
-        if not rows:
+        window — the committed spec of that epoch's lineage. Keys are
+        read for the whole window, meta for that one row only."""
+        keys = store._winner_rows(self.store_path, prefix=name,
+                                  min_seq=base, max_seq=epoch, payload=())
+        if not keys:
             return None
-        return json.loads(rows[0]["meta_json"]).get("catalog_spec")
+        top = max(keys.values(), key=store._rank)
+        row = store._winner_rows(self.store_path, names=[top.name],
+                                 seq=top.seq, payload=("meta_json",))
+        return json.loads(row[top.name].meta_json).get("catalog_spec")
+
+    def _committed(self, name: str) -> tuple[int, int]:
+        """(epoch, base) pins of a grouped lineage; KeyError when nothing
+        is committed."""
+        epoch, base = grouped_epoch(self.spark, self.store_path, name)
+        if epoch is None:
+            raise KeyError(f"{name} has no committed grouped epoch")
+        return epoch, base
 
     def stale_files_grouped(self, table_path: str, group_col: str,
                             column: str) -> int:
         name = self._gname(table_path, group_col, column)
         self._gspec(table_path, group_col, column)   # registered?
-        _, _, ingested = _grouped_manifest_state(self.spark,
-                                                 self.store_path, name)
+        _, _, ingested = _grouped_manifest_state(self.store_path, name)
         current = _current_files(table_path)
         return len(_diff_files(current, ingested or {}, table_path, name))
 
@@ -787,8 +784,7 @@ class SketchCatalog:
         # that public method re-validates registration with a second
         # spec read (two more store jobs) the line above already paid
         name = self._gname(table_path, group_col, column)
-        _, _, ingested = _grouped_manifest_state(self.spark,
-                                                 self.store_path, name)
+        _, _, ingested = _grouped_manifest_state(self.store_path, name)
         current = _current_files(table_path)
         stale = len(_diff_files(current, ingested or {}, table_path,
                                 name))
@@ -849,7 +845,7 @@ class SketchCatalog:
                 raise KeyError(
                     f"group {g!r} has no committed sketch under "
                     f"{table_path}:{group_col}:{column}")
-            kind, part = self._part(meta, got[g], *wanted)
+            kind, part = _part(meta, got[g], *wanted)
             return Answer(value=make(part), kind=kind, contract=contract,
                           table=table_path, column=column, seq=epoch,
                           covered_rows=-1, stale_files=stale,
@@ -870,7 +866,7 @@ class SketchCatalog:
         groups = current_group_sketches(self.spark, self.store_path, name)
         value, kind, total_bytes = {}, None, 0
         for g in sorted(groups):
-            kind, part = self._part(meta, groups[g], *wanted)
+            kind, part = _part(meta, groups[g], *wanted)
             value[g] = make(part)
             total_bytes += part.nbytes()
         return Answer(value=value, kind=kind or wanted[0],
@@ -894,14 +890,13 @@ class SketchCatalog:
     def _fleet_df(self, name: str, spec: dict, make, wanted):
         """(kind, DataFrame) — the fleet answer evaluated per group
         inside mapInPandas over the committed epoch's winner rows.
-        Winner selection (store.winners_streaming — no blob shuffle) and the epoch/base pins happen
-        in Spark BEFORE any blob moves; each task then sha-verifies and
-        deserializes only its own batch's KB blobs. Driver memory is
-        flat in G."""
+        Winner selection (store.fleet_winners — no blob shuffle) and the
+        epoch/base pins happen in Spark BEFORE any blob moves; each task
+        then sha-verifies and deserializes only its own batch's KB blobs.
+        Driver memory is flat in G."""
         import pandas as pd
 
         from . import serde
-        from pyspark.sql import functions as F
 
         spec_kinds = [e["kind"] for e in spec["kinds"]]
         resolved = [w for w in wanted if w in spec_kinds]
@@ -910,34 +905,23 @@ class SketchCatalog:
                 f"none of {list(wanted)} registered for this column "
                 f"(registered kinds: {spec_kinds})")
         kind, idx = resolved[0], spec_kinds.index(resolved[0])
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        prefix = name + "/"
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
-            raise KeyError(f"{name} has no committed grouped epoch")
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
+        epoch, base = self._committed(name)
+        winners = store.fleet_winners(self.spark, self.store_path, name,
+                                      base, epoch)
         row_fn = getattr(make, "df_rows",
                          lambda g, part: [(g, make(part))])
         out_schema = getattr(make, "df_schema", "group string, "
                                                 "value double")
-        plen = len(prefix)
+        plen = len(name) + 1
 
         def gen(pdfs):
-            import hashlib
             cols = [c.split()[0] for c in out_schema.split(",")]
             for pdf in pdfs:
                 rows = []
                 for nm, blob, sha in zip(pdf["name"], pdf["blob"],
                                          pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    part = serde.loads(blob).parts[idx]
+                    part = serde.loads(
+                        store._verified(nm, blob, sha)).parts[idx]
                     rows.extend(row_fn(nm[plen:], part))
                 yield pd.DataFrame(rows, columns=cols)
 
@@ -1017,7 +1001,6 @@ class SketchCatalog:
         import pandas as pd
 
         from . import serde
-        from pyspark.sql import functions as F
 
         spec_kinds = [e["kind"] for e in spec["kinds"]]
         if "mg" not in spec_kinds:
@@ -1025,27 +1008,18 @@ class SketchCatalog:
                 f"epoch {epoch} of {name} has no 'mg' part (registered "
                 f"kinds: {spec_kinds}) — grouped drift needs Misra-Gries")
         idx = spec_kinds.index("mg")
-        prefix = name + "/"
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
-        plen = len(prefix)
+        winners = store.fleet_winners(self.spark, self.store_path, name,
+                                      base, epoch)
+        plen = len(name) + 1
 
         def gen(pdfs):
-            import hashlib
             for pdf in pdfs:
                 keys, blobs = [], []
                 for nm, blob, sha in zip(pdf["name"], pdf["blob"],
                                          pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
                     keys.append(nm[plen:])
-                    blobs.append(serde.loads(blob).parts[idx].to_bytes())
+                    blobs.append(serde.loads(store._verified(
+                        nm, blob, sha)).parts[idx].to_bytes())
                 yield pd.DataFrame({"key": keys, "sketch": blobs})
 
         return winners.mapInPandas(gen, schema="key string, sketch binary")
@@ -1157,7 +1131,7 @@ class SketchCatalog:
                         f"group {g!r} has no committed sketch at epoch "
                         f"{epoch} under {table_path}:{group_col}:"
                         f"{column}")
-                _, part = self._part({"catalog_spec": spec}, got[g],
+                _, part = _part({"catalog_spec": spec}, got[g],
                                      "mg")
                 pair.append(part)
             movers = _tm(pair[0], pair[1], limit=limit)
@@ -1237,11 +1211,10 @@ class SketchCatalog:
             meta={"catalog_spec": spec,
                   "table_path": os.path.abspath(table_path),
                   "column": col})
-        entry = store.latest_entry(self.spark, self.store_path, name)
         return Answer(value=None, kind="refresh_sample",
                       contract="delta-only incremental sample fold",
                       table=table_path, column=col, seq=res.seq,
-                      covered_rows=int(entry[1].get("table_rows", -1)),
+                      covered_rows=int(res.meta.get("table_rows", -1)),
                       stale_files=0, refreshed=res.new_files > 0,
                       sketch_bytes=res.sketch.nbytes(),
                       extra={"new_files": res.new_files,
@@ -1719,35 +1692,24 @@ class SketchCatalog:
         bidx = spec_kinds.index("bloom")
         cidx = spec_kinds.index("cm") if "cm" in spec_kinds else -1
         fpr = spec["kinds"][bidx]["params"]["fpr"]
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
         from pyspark.sql import functions as F
 
         from . import serde
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None or epoch is None:
-            raise KeyError(f"{name} has no committed epoch")
-        prefix = name + "/"
-        winners = store.winners_streaming(
-            df.filter(F.col("name").startswith(prefix))
-            .filter((F.col("seq") >= base) & (F.col("seq") <= epoch))
-        ).select("name", "blob", "sha256")
-        plen = len(prefix)
+        epoch, base = self._committed(name)
+        winners = store.fleet_winners(self.spark, self.store_path, name,
+                                      base, epoch)
+        plen = len(name) + 1
         karr = np.asarray(list(keys), dtype=np.int64)
 
         def gen(pdfs):
-            import hashlib
-
             import pandas as pd
             for pdf in pdfs:
-                out_k, out_f, out_u = [], [], []
+                # one NULL-file row per batch counts the files probed,
+                # so the collect below learns the fleet size for free
+                out_k, out_f, out_u = [0], [None], [len(pdf)]
                 for nm, blob, sha in zip(pdf["name"], pdf["blob"],
                                          pdf["sha256"]):
-                    blob = bytes(blob)
-                    digest = hashlib.sha256(blob).hexdigest()
-                    if digest != sha:
-                        raise IOError(f"sketch {nm!r} corrupt: sha "
-                                      f"{digest[:16]} != {sha[:16]}")
-                    ms = serde.loads(blob)
+                    ms = serde.loads(store._verified(nm, blob, sha))
                     mask = ms.parts[bidx].contains_batch(karr)
                     if mask.any():
                         hits = karr[mask]
@@ -1763,26 +1725,25 @@ class SketchCatalog:
 
         probe = winners.mapInPandas(
             gen, "key long, file string, count_ub long")
+        hits = probe.filter(F.col("file").isNotNull())
         contract = ("no false negatives per key (every file containing "
                     f"it is listed); false positives <= fpr {fpr:g} "
                     "per (key, file); count_ub one-sided per file")
         if as_df:
-            return Answer(value=probe, kind="bloom", contract=contract,
+            return Answer(value=hits, kind="bloom", contract=contract,
                           table=table_path, column=label, seq=epoch,
                           covered_rows=-1, stale_files=stale,
                           refreshed=refreshed, sketch_bytes=-1,
                           extra={"n_keys": int(karr.shape[0]),
                                  "distributed": True})
-        # fleet size from the column-pruned frame (distinct committed
-        # names) — evaluating `winners` again would re-run the winner
-        # join just to count rows
-        total = (df.filter(F.col("name").startswith(prefix))
-                 .filter((F.col("seq") >= base)
-                         & (F.col("seq") <= epoch))
-                 .select("name").distinct().count())
+        total = 0
         value: dict = {int(k): [] for k in karr}
         for r in probe.collect():
-            value[int(r["key"])].append((r["file"], int(r["count_ub"])))
+            if r["file"] is None:
+                total += int(r["count_ub"])
+            else:
+                value[int(r["key"])].append((r["file"],
+                                             int(r["count_ub"])))
         for k in value:
             value[k].sort()
         return Answer(value=value, kind="bloom", contract=contract,
@@ -1925,53 +1886,61 @@ class SketchCatalog:
                 "stale_files": stale, "store_rows": store_rows,
                 "routes": routes}
 
+    def _registrations(self) -> list[dict]:
+        """One dict per registration — global entries AND grouped fleets
+        (one per fleet, not per group): name, seq, table_path, column,
+        group_col, spec, covered_rows. A fleet's spec and seq are its
+        committed epoch's (the max-seq fleet row may be an uncommitted
+        orphan with a CHANGED spec); fleets with nothing committed are
+        not listed. Store metadata only: row keys for the whole store,
+        meta for one row per registration. Shared with the SQL
+        ``catalog_entries()``."""
+        best: dict = {}
+        for w in store._winner_rows(self.store_path, payload=()).values():
+            if w.name.startswith("catalogg-"):
+                entry = w.name.split("/", 1)[0]
+            elif w.name.startswith("catalog/"):
+                entry = w.name
+            else:
+                continue
+            if entry not in best or store._rank(w) > store._rank(
+                    best[entry]):
+                best[entry] = w
+        metas = store._winner_rows(
+            self.store_path, names=[w.name for w in best.values()],
+            payload=("meta_json",))
+        out = []
+        for entry in sorted(best):
+            meta = json.loads(metas[best[entry].name].meta_json)
+            if "catalog_spec" not in meta:
+                continue
+            spec, seq = meta["catalog_spec"], best[entry].seq
+            if meta.get("group_col") is not None:
+                epoch, base = grouped_epoch(self.spark, self.store_path,
+                                            entry)
+                spec = (None if epoch is None
+                        else self._gspec_at(entry, epoch, base))
+                if spec is None:
+                    continue
+                seq = epoch
+            out.append({"name": entry, "seq": int(seq),
+                        "table_path": meta["table_path"],
+                        "column": meta["column"],
+                        "group_col": meta.get("group_col"), "spec": spec,
+                        "covered_rows": int(meta.get("table_rows", -1))})
+        return out
+
     def entries(self) -> list[dict]:
         """Every registered (table, column) — global entries AND grouped
         fleets (one row per fleet, not per group): spec, seq, covered
         rows and current staleness. Store-metadata read only (no table
-        scans)."""
-        df = store.read_table(self.spark, self.store_path + "/sketches")
-        if df is None:
-            return []
-        from pyspark.sql import functions as F
-        # grouped rows are "catalogg-<hash>/<group>"; collapse a fleet
-        # to its name prefix so one registration lists once
-        named = df.withColumn(
-            "entry", F.when(F.col("name").startswith("catalogg-"),
-                            F.split(F.col("name"), "/").getItem(0))
-                      .otherwise(F.col("name")))
-        rows = (named.filter(F.col("name").startswith("catalog/")
-                             | F.col("name").startswith("catalogg-"))
-                .groupBy("entry")
-                .agg(F.max(F.struct("seq", "meta_json")).alias("w"),
-                     F.count("*").alias("n_rows_store"))
-                .select("entry", "w.seq", "w.meta_json").collect())
+        scans, no Spark job)."""
         out = []
-        for r in sorted(rows, key=lambda r: r["entry"]):
-            meta = json.loads(r["meta_json"])
-            if "catalog_spec" not in meta:
-                continue
-            spec = meta["catalog_spec"]
-            if meta.get("group_col") is not None:
-                # the max-seq row of a fleet may be an uncommitted
-                # orphan with a CHANGED spec; identity fields (table,
-                # cols) are safe — the name hash binds them — but the
-                # kind list must come from the committed epoch
-                committed = self._gspec(meta["table_path"],
-                                        meta["group_col"],
-                                        meta["column"], missing_ok=True)
-                if committed is None:
-                    continue       # nothing committed yet: not listable
-                spec = committed
-            kinds = (["psample"] if "sample" in spec
-                     else [k["kind"] for k in spec["kinds"]])
-            e = {"name": r["entry"], "seq": int(r["seq"]),
-                 "table_path": meta["table_path"],
-                 "column": meta["column"],
-                 "group_col": meta.get("group_col"),
-                 "kinds": kinds,
-                 "file_index": bool(spec.get("file_index")),
-                 "covered_rows": int(meta.get("table_rows", -1))}
+        for r in self._registrations():
+            spec = r.pop("spec")
+            e = {**r, "kinds": (["psample"] if "sample" in spec
+                                else [k["kind"] for k in spec["kinds"]]),
+                 "file_index": bool(spec.get("file_index"))}
             try:
                 if e["group_col"] is not None:
                     e["stale_files"] = self.stale_files_grouped(

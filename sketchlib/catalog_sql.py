@@ -9,21 +9,10 @@ ask
     SELECT * FROM catalog_topk('<table>', 'tokens', 10)
 
 and be answered from KB-scale sketch blobs the store already holds —
-never a table scan. This mirrors how ``spark_build.register_sql_udfs``
-exposes broadcast probes, but instead of freezing one sketch at
+never a table scan. Like ``spark_build.register_sql_udfs`` it exposes
+sketch probes as SQL functions, but instead of freezing one sketch at
 registration time, each call resolves the CURRENT winning epoch of the
-named catalog entry at execution time:
-
-- the UDF executes on executors with no SparkSession, so resolution
-  reads the store's parquet directly with pyarrow (KB winner rows; the
-  ``name`` equality predicate prunes row groups);
-- winner selection is the store's rule (highest seq, sha tie-break) and
-  blobs are sha-verified before deserialization, exactly like
-  store.load_sketch;
-- results are cached per (store, entry) keyed by a listing fingerprint
-  of the store directory, so repeated calls after an unchanged store
-  never re-read a blob, while any publish (new epoch, compaction)
-  invalidates the cache on the next call.
+named catalog entry at execution time.
 
 Staleness contract: the SQL surface answers from the LAST PUBLISHED
 epoch — the ``stale_ok`` policy, reported nowhere because a SELECT must
@@ -36,6 +25,17 @@ reads exactly ONE committed group row (the epoch/base pins come from the
 fleet's commit markers in the store's ingested/ manifest), the same
 O(1)-rows shape as ``SketchCatalog.*_grouped(group=...)``.
 
+Resolution is not a copy of the Python catalog's: the functions run the
+catalog's own naming (``SketchCatalog._name`` / ``_gname``), kind routing
+(``catalog._part``), committed-epoch pins (``incremental.grouped_epoch``
+/ ``grouped_epoch_at``) and the store's one pyarrow winner reader
+(``store._winner_rows`` and its loaders) — executor-side with no
+SparkSession, which that layer never needs. Winners are sha-verified
+before deserialization, and reads are memoized on a listing fingerprint
+of the store tables, so repeated calls against an unchanged store never
+re-read parquet while any publish (new epoch, compaction) is seen on the
+next call.
+
 No counterpart in the reference — CountMinDB (cm.h) has a 4-method C++
 API and no SQL; this is north-star engine surface over the store/catalog
 contracts.
@@ -43,309 +43,80 @@ contracts.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
 
 import numpy as np
 import pandas as pd
 
-from . import serde
-
-# (store_path, name) -> (listing fingerprint, MultiSketch, meta dict).
-# FIFO-capped so long sessions with many entries don't pin old fleets.
-_ENTRY_CACHE: dict[tuple, tuple] = {}
-_ENTRY_CACHE_MAX = 64
+from . import serde, store
+from .catalog import _VERB_ROUTES, SketchCatalog, _part
+from .incremental import grouped_epoch, grouped_epoch_at
 
 
-def _entry_name(table_path: str, column: str) -> str:
-    """Mirror of SketchCatalog._name — the global-entry store name."""
-    key = hashlib.sha256(
-        os.path.abspath(table_path).encode()).hexdigest()[:12]
-    return f"catalog/{key}/{column}"
+def _pins(sp: str, prefix: str, seq=None) -> tuple[int, int]:
+    """(epoch, base) of a fleet: the committed epoch, or the historical
+    committed epoch ``seq`` (crashed-epoch orphans are not addressable)."""
+    if seq is not None:
+        return grouped_epoch_at(None, sp, prefix, int(seq))
+    return SketchCatalog(None, sp)._committed(prefix)
 
 
-def _group_entry_name(table_path: str, group_col: str,
-                      column: str) -> str:
-    """Mirror of SketchCatalog._gname — the grouped-fleet name prefix."""
-    key = hashlib.sha256(
-        f"{os.path.abspath(table_path)}|{group_col}|{column}"
-        .encode()).hexdigest()[:16]
-    return f"catalogg-{key}"
+def _entry(sp: str, table_path: str, column: str, seq=None):
+    """(meta, sketch) of a global entry's winning row, or of its epoch
+    ``seq``."""
+    got = store.latest_sketch(None, sp, SketchCatalog._name(table_path,
+                                                            column), seq)
+    if got is None:
+        raise KeyError(
+            f"{table_path}:{column} is not registered in the catalog "
+            f"store {sp}" + ("" if seq is None else f" at epoch {seq}")
+            + " (SQL functions answer from published epochs; register() "
+            "it first)")
+    return got[1], got[2]
 
 
-def _fingerprint(path: str) -> tuple:
-    """(path, size) listing of a store table directory — cheap cache
-    key: any publish/compaction changes the file set."""
-    import pyarrow.fs as pafs
-    fs = pafs.LocalFileSystem()
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(path, recursive=True))
-    except FileNotFoundError:
-        return ()
-    return tuple(sorted((i.path, i.size or 0) for i in infos
-                        if i.type == pafs.FileType.File))
+def _group(sp: str, table_path: str, group_col: str, column: str, group,
+           seq=None):
+    """(meta, sketch) of ONE committed group row of a fleet — at the
+    committed epoch, or at epoch ``seq``; the fleet is never read."""
+    prefix = SketchCatalog._gname(table_path, group_col, column)
+    epoch, base = _pins(sp, prefix, seq)
+    got = store.load_group_sketches(None, sp, prefix, max_seq=epoch,
+                                    min_seq=base, groups=[str(group)])
+    if str(group) not in got:
+        raise KeyError(
+            f"group {group!r} has no committed sketch under "
+            f"{table_path}:{group_col}:{column} in {sp}")
+    spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
+    return {"catalog_spec": spec}, got[str(group)]
 
 
-def _read_rows(path: str, filt, columns):
-    """Filtered pyarrow read of a store parquet table (row-group pruned
-    by the predicate); [] when the table doesn't exist yet."""
-    import pyarrow.dataset as ds
-    if not os.path.isdir(path):
-        return []
-    t = ds.dataset(path, format="parquet").to_table(
-        filter=filt, columns=columns)
-    return t.to_pylist()
+def _merged(sp: str, table_path: str, group_col: str, column: str):
+    """(meta, sketch) of the MERGED committed fleet — every group row
+    folded into one MultiSketch, in name order (SQL twin of the Python
+    verbs' ``via=``; single-task evaluation, so the Python path is the
+    10^6-group shape)."""
+    prefix = SketchCatalog._gname(table_path, group_col, column)
+    epoch, base = _pins(sp, prefix)
+    groups = store.load_group_sketches(None, sp, prefix, max_seq=epoch,
+                                       min_seq=base)
+    if not groups:
+        raise KeyError(
+            f"{table_path}:{group_col}:{column} has no committed "
+            f"grouped registration in {sp}")
+    ms = None
+    for g in sorted(groups):
+        if ms is None:
+            ms = groups[g]
+        else:
+            ms.merge(groups[g])
+    spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
+    return {"catalog_spec": spec}, ms
 
 
-def _pick_winner(rows):
-    """The store's winner rule: highest (seq, sha256)."""
-    return max(rows, key=lambda r: (int(r["seq"]), r["sha256"]))
-
-
-def _loads_verified(name: str, row) -> object:
-    blob = bytes(row["blob"])
-    digest = hashlib.sha256(blob).hexdigest()
-    if digest != row["sha256"]:
-        raise IOError(f"sketch {name!r} seq {row['seq']} corrupt: sha "
-                      f"{digest[:16]} != {row['sha256'][:16]}")
-    return serde.loads(blob)
-
-
-def _cache_get(key: tuple, fp: tuple):
-    hit = _ENTRY_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-    return None
-
-
-def _cache_put(key: tuple, fp: tuple, ms, meta) -> None:
-    while len(_ENTRY_CACHE) >= _ENTRY_CACHE_MAX:
-        # default=None: concurrent driver threads may evict the same
-        # oldest key; a bare pop would KeyError on the loser
-        _ENTRY_CACHE.pop(next(iter(_ENTRY_CACHE)), None)
-    _ENTRY_CACHE[key] = (fp, ms, meta)
-
-
-def _resolve(store_path: str, table_path: str, column: str,
-             wanted: tuple):
-    """(part, meta) for the winning epoch of a GLOBAL catalog entry,
-    executor-side."""
-    import pyarrow.dataset as ds
-    name = _entry_name(table_path, column)
-    fp = _fingerprint(store_path + "/sketches")
-    hit = _cache_get((store_path, name), fp)
-    if hit is None:
-        rows = _read_rows(store_path + "/sketches",
-                          ds.field("name") == name,
-                          ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"{table_path}:{column} is not registered in the catalog "
-                f"store {store_path} (SQL functions answer from published "
-                "epochs; register() it first)")
-        win = _pick_winner(rows)
-        ms = _loads_verified(name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put((store_path, name), fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _grouped_pins(store_path: str, name: str) -> tuple[int, int]:
-    """(committed epoch, base) of a grouped fleet from its commit
-    markers in the ingested/ manifest — pyarrow mirror of
-    incremental._grouped_manifest_state's marker logic."""
-    import pyarrow.dataset as ds
-    rows = _read_rows(store_path + "/ingested",
-                      (ds.field("name") == name) & (ds.field("file") == ""),
-                      ["seq", "file_size"])
-    if not rows:
-        raise KeyError(f"{name!r} has no committed grouped epoch in "
-                       f"{store_path}")
-    epoch, base = max((int(r["seq"]), int(r["file_size"])) for r in rows)
-    return epoch, max(base, 0)
-
-
-def _resolve_group(store_path: str, table_path: str, group_col: str,
-                   column: str, group: str, wanted: tuple):
-    """(part, meta) for ONE committed group row of a fleet — exactly one
-    winner row is read, never the fleet."""
-    import pyarrow.dataset as ds
-    prefix = _group_entry_name(table_path, group_col, column)
-    row_name = f"{prefix}/{group}"
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    hit = _cache_get((store_path, row_name), fp)
-    if hit is None:
-        epoch, base = _grouped_pins(store_path, prefix)
-        rows = _read_rows(
-            store_path + "/sketches",
-            (ds.field("name") == row_name)
-            & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-            ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"group {group!r} has no committed sketch under "
-                f"{table_path}:{group_col}:{column} in {store_path}")
-        win = _pick_winner(rows)
-        ms = _loads_verified(row_name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put((store_path, row_name), fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _grouped_pins_at(store_path: str, name: str,
-                     seq: int) -> tuple[int, int]:
-    """(epoch, base) pins for a HISTORICAL committed epoch of a grouped
-    fleet — pyarrow mirror of incremental.grouped_epoch_at: the commit
-    marker at ``seq`` carries its lineage's base in file_size; crashed-
-    epoch orphans are not addressable."""
-    import pyarrow.dataset as ds
-    rows = _read_rows(store_path + "/ingested",
-                      (ds.field("name") == name)
-                      & (ds.field("file") == "")
-                      & (ds.field("seq") == int(seq)),
-                      ["file_size"])
-    if not rows:
-        raise KeyError(f"{name!r} has no committed epoch {seq} in "
-                       f"{store_path}")
-    return int(seq), max(int(rows[0]["file_size"]), 0)
-
-
-def _resolve_group_at(store_path: str, table_path: str, group_col: str,
-                      column: str, group: str, seq: int, wanted: tuple):
-    """(part, meta) for ONE committed group row at a PINNED epoch —
-    the group's winner within [base_at_seq, seq]; exactly one store
-    row is read."""
-    import pyarrow.dataset as ds
-    prefix = _group_entry_name(table_path, group_col, column)
-    row_name = f"{prefix}/{group}"
-    epoch, base = _grouped_pins_at(store_path, prefix, seq)
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    key = (store_path, row_name, int(seq))
-    hit = _cache_get(key, fp)
-    if hit is None:
-        rows = _read_rows(
-            store_path + "/sketches",
-            (ds.field("name") == row_name)
-            & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-            ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"group {group!r} has no committed sketch at epoch "
-                f"{seq} under {table_path}:{group_col}:{column}")
-        win = _pick_winner(rows)
-        ms = _loads_verified(row_name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _resolve_at(store_path: str, table_path: str, column: str,
-                seq: int, wanted: tuple):
-    """(part, meta) for a PINNED epoch of a global catalog entry —
-    exact-seq row, sha tie-break, mirroring store.latest_sketch(seq=)."""
-    import pyarrow.dataset as ds
-    name = _entry_name(table_path, column)
-    fp = _fingerprint(store_path + "/sketches")
-    key = (store_path, name, int(seq))
-    hit = _cache_get(key, fp)
-    if hit is None:
-        rows = _read_rows(store_path + "/sketches",
-                          (ds.field("name") == name)
-                          & (ds.field("seq") == int(seq)),
-                          ["seq", "blob", "sha256", "meta_json"])
-        if not rows:
-            raise KeyError(
-                f"{table_path}:{column} has no epoch {seq} in "
-                f"{store_path} (pruned or never published)")
-        win = _pick_winner(rows)
-        ms = _loads_verified(name, win)
-        meta = json.loads(win["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _fleet_winner_rows(store_path: str, prefix: str,
-                       columns: list[str]):
-    """Committed winner row per group of a fleet: the name-RANGE
-    predicate ``prefix + '/' < name < prefix + '0'`` ('0' is the code
-    point after '/') pushes the prefix match into the parquet scan, so
-    only this fleet's rows are materialized; the [base, epoch] window
-    then excludes crashed orphans and pre-rebuild dead groups, and the
-    store's (seq, sha256) winner rule picks one row per name."""
-    import pyarrow.dataset as ds
-    epoch, base = _grouped_pins(store_path, prefix)
-    rows = _read_rows(
-        store_path + "/sketches",
-        (ds.field("name") > prefix + "/")
-        & (ds.field("name") < prefix + "0")
-        & (ds.field("seq") >= base) & (ds.field("seq") <= epoch),
-        columns)
-    winners: dict = {}
-    for r in rows:
-        cur = winners.get(r["name"])
-        if cur is None or (int(r["seq"]), r["sha256"]) > \
-                (int(cur["seq"]), cur["sha256"]):
-            winners[r["name"]] = r
-    return epoch, winners
-
-
-def _resolve_merged(store_path: str, table_path: str, group_col: str,
-                    column: str, wanted: tuple):
-    """(part, meta) of the MERGED fleet — every committed group row
-    folded into one MultiSketch (SQL twin of the Python verbs'
-    ``via=``; single-task evaluation, so the Python path is the
-    10^6-group shape). Cached per store fingerprint like the entry
-    resolvers; the spec comes from the highest winner row, i.e. the
-    committed epoch's lineage, mirroring SketchCatalog._gspec_at."""
-    prefix = _group_entry_name(table_path, group_col, column)
-    fp = _fingerprint(store_path + "/sketches") + \
-        _fingerprint(store_path + "/ingested")
-    key = (store_path, prefix, "merged")
-    hit = _cache_get(key, fp)
-    if hit is None:
-        _, winners = _fleet_winner_rows(
-            store_path, prefix, ["name", "seq", "blob", "sha256",
-                                 "meta_json"])
-        if not winners:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"grouped registration in {store_path}")
-        ms = None
-        for nm in sorted(winners):
-            m = _loads_verified(nm, winners[nm])
-            if ms is None:
-                ms = m
-            else:
-                ms.merge(m)
-        spec_row = max(winners.values(),
-                       key=lambda r: (int(r["seq"]), r["sha256"]))
-        meta = json.loads(spec_row["meta_json"])
-        _cache_put(key, fp, ms, meta)
-    else:
-        ms, meta = hit
-    return _part_of(ms, meta, wanted, table_path, column)
-
-
-def _part_of(ms, meta: dict, wanted: tuple, table_path: str,
-             column: str):
-    spec_kinds = [e["kind"] for e in meta["catalog_spec"]["kinds"]]
-    for w in wanted:
-        if w in spec_kinds:
-            return ms.parts[spec_kinds.index(w)], meta
-    raise KeyError(
-        f"none of {list(wanted)} registered for {table_path}:{column} "
-        f"(registered kinds: {spec_kinds})")
+def _kind(entry, verb: str):
+    """The part of a resolved (meta, sketch) that serves ``verb`` —
+    routed through the Python verbs' ``_VERB_ROUTES``."""
+    return _part(entry[0], entry[1], *_VERB_ROUTES[verb])[1]
 
 
 def register_catalog_sql(spark, store_path: str, *,
@@ -402,7 +173,7 @@ def register_catalog_sql(spark, store_path: str, *,
     def cd(table: pd.Series, col: pd.Series) -> pd.Series:
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, c in set(zip(table, col)):
-            part, _ = _resolve(sp, t, c, ("theta", "hll"))
+            part = _kind(_entry(sp, t, c), "count_distinct")
             out[(table == t) & (col == c)] = float(part.estimate())
         return out
 
@@ -415,7 +186,7 @@ def register_catalog_sql(spark, store_path: str, *,
         out = pd.Series(0, index=table.index, dtype="int64")
         for t, c in set(zip(table, col)):
             m = (table == t) & (col == c)
-            part, _ = _resolve(sp, t, c, ("cm",))
+            part = _kind(_entry(sp, t, c), "frequency")
             out[m] = part.point_query_batch(
                 key[m].to_numpy(dtype=np.int64))
         return out
@@ -429,7 +200,7 @@ def register_catalog_sql(spark, store_path: str, *,
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, c in set(zip(table, col)):
             m = (table == t) & (col == c)
-            part, _ = _resolve(sp, t, c, ("cs",))
+            part = _kind(_entry(sp, t, c), "frequency_unbiased")
             out[m] = part.point_query_batch(
                 key[m].to_numpy(dtype=np.int64))
         return out
@@ -438,7 +209,7 @@ def register_catalog_sql(spark, store_path: str, *,
     def f2(table: pd.Series, col: pd.Series) -> pd.Series:
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, c in set(zip(table, col)):
-            part, _ = _resolve(sp, t, c, ("cs",))
+            part = _kind(_entry(sp, t, c), "second_moment")
             out[(table == t) & (col == c)] = float(part.f2_estimate())
         return out
 
@@ -454,24 +225,7 @@ def register_catalog_sql(spark, store_path: str, *,
                                       pattern)):
             m = ((table == t) & (key_col == kc) & (weight_col == wc)
                  & (pattern == pat))
-            name = _entry_name(t, f"{kc}~{wc}")
-            fp = _fingerprint(sp + "/sketches")
-            hit = _cache_get((sp, name), fp)
-            if hit is None:
-                import pyarrow.dataset as ds
-                rows = _read_rows(sp + "/sketches",
-                                  ds.field("name") == name,
-                                  ["seq", "blob", "sha256", "meta_json"])
-                if not rows:
-                    raise KeyError(
-                        f"{t}:({kc}, {wc}) has no sample registration "
-                        f"in {sp}")
-                win = _pick_winner(rows)
-                ps = _loads_verified(name, win)
-                meta = json.loads(win["meta_json"])
-                _cache_put((sp, name), fp, ps, meta)
-            else:
-                ps, meta = hit
+            _, ps = _entry(sp, t, f"{kc}~{wc}")
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -484,37 +238,13 @@ def register_catalog_sql(spark, store_path: str, *,
         committed winner row (that group's sample at the committed
         epoch) answers the fnmatch pattern in O(k)."""
         import fnmatch
-
-        import pyarrow.dataset as ds
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, gc, kc, wc, g, pat in set(zip(table, gcol, key_col,
                                              weight_col, group,
                                              pattern)):
             m = ((table == t) & (gcol == gc) & (key_col == kc)
                  & (weight_col == wc) & (group == g) & (pattern == pat))
-            prefix = _group_entry_name(t, gc, f"{kc}~{wc}")
-            row_name = f"{prefix}/{g}"
-            fp = _fingerprint(sp + "/sketches") + \
-                _fingerprint(sp + "/ingested")
-            hit = _cache_get((sp, row_name), fp)
-            if hit is None:
-                epoch, base = _grouped_pins(sp, prefix)
-                rows = _read_rows(
-                    sp + "/sketches",
-                    (ds.field("name") == row_name)
-                    & (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch),
-                    ["seq", "blob", "sha256", "meta_json"])
-                if not rows:
-                    raise KeyError(
-                        f"group {g!r} has no committed sample under "
-                        f"{t}:{gc}:({kc}, {wc}) in {sp}")
-                win = _pick_winner(rows)
-                ps = _loads_verified(row_name, win)
-                meta = json.loads(win["meta_json"])
-                _cache_put((sp, row_name), fp, ps, meta)
-            else:
-                ps, meta = hit
+            _, ps = _group(sp, t, gc, f"{kc}~{wc}", g)
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -528,7 +258,7 @@ def register_catalog_sql(spark, store_path: str, *,
         out = pd.Series(False, index=table.index, dtype="bool")
         for t, c in set(zip(table, col)):
             m = (table == t) & (col == c)
-            part, _ = _resolve(sp, t, c, ("bloom",))
+            part = _kind(_entry(sp, t, c), "member")
             out[m] = part.contains_batch(
                 key[m].to_numpy(dtype=np.int64))
         return out
@@ -538,7 +268,7 @@ def register_catalog_sql(spark, store_path: str, *,
               q: pd.Series) -> pd.Series:
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, c, qq in set(zip(table, col, q)):
-            part, _ = _resolve(sp, t, c, ("kll", "tdigest", "dd"))
+            part = _kind(_entry(sp, t, c), "quantile")
             out[(table == t) & (col == c) & (q == qq)] = \
                 float(part.quantile(float(qq)))
         return out
@@ -548,7 +278,7 @@ def register_catalog_sql(spark, store_path: str, *,
                hi: pd.Series) -> pd.Series:
         out = pd.Series(0, index=table.index, dtype="int64")
         for t, c, a, b in set(zip(table, col, lo, hi)):
-            part, _ = _resolve(sp, t, c, ("dyadic",))
+            part = _kind(_entry(sp, t, c), "range_count")
             out[(table == t) & (col == c) & (lo == a) & (hi == b)] = \
                 int(part.range_count(int(a), int(b)))
         return out
@@ -558,7 +288,7 @@ def register_catalog_sql(spark, store_path: str, *,
             group: pd.Series) -> pd.Series:
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, gc, c, g in set(zip(table, gcol, col, group)):
-            part, _ = _resolve_group(sp, t, gc, c, g, ("theta", "hll"))
+            part = _kind(_group(sp, t, gc, c, g), "count_distinct")
             out[(table == t) & (gcol == gc) & (col == c)
                 & (group == g)] = float(part.estimate())
         return out
@@ -573,7 +303,7 @@ def register_catalog_sql(spark, store_path: str, *,
         for t, gc, c, g in set(zip(table, gcol, col, group)):
             m = ((table == t) & (gcol == gc) & (col == c)
                  & (group == g))
-            part, _ = _resolve_group(sp, t, gc, c, g, ("cm",))
+            part = _kind(_group(sp, t, gc, c, g), "frequency")
             out[m] = part.point_query_batch(
                 key[m].to_numpy(dtype=np.int64))
         return out
@@ -583,8 +313,7 @@ def register_catalog_sql(spark, store_path: str, *,
              group: pd.Series, q: pd.Series) -> pd.Series:
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, gc, c, g, qq in set(zip(table, gcol, col, group, q)):
-            part, _ = _resolve_group(sp, t, gc, c, g,
-                                     ("kll", "tdigest", "dd"))
+            part = _kind(_group(sp, t, gc, c, g), "quantile")
             out[(table == t) & (gcol == gc) & (col == c)
                 & (group == g) & (q == qq)] = \
                 float(part.quantile(float(qq)))
@@ -599,7 +328,7 @@ def register_catalog_sql(spark, store_path: str, *,
         this equals a global entry's answer exactly."""
         out = pd.Series(np.nan, index=table.index, dtype="float64")
         for t, g, c in set(zip(table, gcol, col)):
-            part, _ = _resolve_merged(sp, t, g, c, ("theta", "hll"))
+            part = _kind(_merged(sp, t, g, c), "count_distinct")
             out[(table == t) & (gcol == g) & (col == c)] = \
                 float(part.estimate())
         return out
@@ -613,7 +342,7 @@ def register_catalog_sql(spark, store_path: str, *,
         probed as one batch per (table, gcol, col)."""
         out = pd.Series(0, index=table.index, dtype="int64")
         for t, g, c in set(zip(table, gcol, col)):
-            part, _ = _resolve_merged(sp, t, g, c, ("cm",))
+            part = _kind(_merged(sp, t, g, c), "frequency")
             m = (table == t) & (gcol == g) & (col == c)
             out[m] = part.point_query_batch(
                 key[m].to_numpy(dtype="int64"))
@@ -622,7 +351,7 @@ def register_catalog_sql(spark, store_path: str, *,
     @udtf(returnType="key bigint, count bigint")
     class TopK:
         def eval(self, table_path: str, column: str, k: int):
-            part, _ = _resolve(sp, table_path, column, ("mg",))
+            part = _kind(_entry(sp, table_path, column), "topk")
             for key, cnt in part.top_items(int(k)):
                 yield int(key), int(cnt)
 
@@ -632,8 +361,8 @@ def register_catalog_sql(spark, store_path: str, *,
         row — the SQL twin of ``topk_grouped(group=...)``."""
         def eval(self, table_path: str, group_col: str, column: str,
                  group: str, k: int):
-            part, _ = _resolve_group(sp, table_path, group_col, column,
-                                     group, ("mg",))
+            part = _kind(_group(sp, table_path, group_col, column, group),
+                         "topk")
             for key, cnt in part.top_items(int(k)):
                 yield int(key), int(cnt)
 
@@ -646,13 +375,8 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, column: str, seq_old: int,
                  seq_new):
             from .drift import tv_bounds
-            mg_old, _ = _resolve_at(sp, table_path, column,
-                                    int(seq_old), ("mg",))
-            if seq_new is None:
-                mg_new, _ = _resolve(sp, table_path, column, ("mg",))
-            else:
-                mg_new, _ = _resolve_at(sp, table_path, column,
-                                        int(seq_new), ("mg",))
+            mg_old, mg_new = (_kind(_entry(sp, table_path, column, s),
+                                    "drift") for s in (seq_old, seq_new))
             b = tv_bounds(mg_old, mg_new)
             yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
                    int(b.n_b), int(b.n_candidates))
@@ -668,13 +392,8 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, column: str, seq_old: int,
                  seq_new, limit: int = 20):
             from .drift import top_movers as _tm
-            mg_old, _ = _resolve_at(sp, table_path, column,
-                                    int(seq_old), ("mg",))
-            if seq_new is None:
-                mg_new, _ = _resolve(sp, table_path, column, ("mg",))
-            else:
-                mg_new, _ = _resolve_at(sp, table_path, column,
-                                        int(seq_new), ("mg",))
+            mg_old, mg_new = (_kind(_entry(sp, table_path, column, s),
+                                    "drift") for s in (seq_old, seq_new))
             for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
                                              limit=int(limit)):
                 yield (int(tok), float(p_old), float(p_new), float(lb))
@@ -690,12 +409,9 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self, table_path: str, group_col: str, column: str,
                  group: str, seq_old: int, seq_new: int):
             from .drift import tv_bounds
-            mg_old, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_old),
-                                          ("mg",))
-            mg_new, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_new),
-                                          ("mg",))
+            mg_old, mg_new = (_kind(_group(sp, table_path, group_col,
+                                           column, group, s), "drift")
+                              for s in (seq_old, seq_new))
             b = tv_bounds(mg_old, mg_new)
             yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
                    int(b.n_b), int(b.n_candidates))
@@ -710,12 +426,9 @@ def register_catalog_sql(spark, store_path: str, *,
                  group: str, seq_old: int, seq_new: int,
                  limit: int = 20):
             from .drift import top_movers as _tm
-            mg_old, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_old),
-                                          ("mg",))
-            mg_new, _ = _resolve_group_at(sp, table_path, group_col,
-                                          column, group, int(seq_new),
-                                          ("mg",))
+            mg_old, mg_new = (_kind(_group(sp, table_path, group_col,
+                                           column, group, s), "drift")
+                              for s in (seq_old, seq_new))
             for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
                                              limit=int(limit)):
                 yield (int(tok), float(p_old), float(p_new), float(lb))
@@ -730,18 +443,13 @@ def register_catalog_sql(spark, store_path: str, *,
         blob is deserialized."""
         def eval(self, table_path: str, group_col: str, column: str,
                  seq_old: int, seq_new: int):
-            import pyarrow.dataset as ds
-            prefix = _group_entry_name(table_path, group_col, column)
-            plen = len(prefix) + 1
+            prefix = SketchCatalog._gname(table_path, group_col, column)
 
             def keys_at(seq):
-                epoch, base = _grouped_pins_at(sp, prefix, int(seq))
-                rows = _read_rows(
-                    sp + "/sketches",
-                    (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch), ["name"])
-                return {r["name"][plen:] for r in rows
-                        if r["name"].startswith(prefix + "/")}
+                epoch, base = _pins(sp, prefix, seq)
+                return {n[len(prefix) + 1:] for n in store._winner_rows(
+                    sp, prefix=prefix, min_seq=base, max_seq=epoch,
+                    payload=())}
 
             old_k, new_k = keys_at(seq_old), keys_at(seq_new)
             for k in sorted(new_k - old_k):
@@ -760,8 +468,8 @@ def register_catalog_sql(spark, store_path: str, *,
         Python verb's contract states."""
         def eval(self, table_a: str, col_a: str, table_b: str,
                  col_b: str):
-            ta, _ = _resolve(sp, table_a, col_a, ("theta",))
-            tb, _ = _resolve(sp, table_b, col_b, ("theta",))
+            ta, tb = (_part(*_entry(sp, t, c), "theta")[1]
+                      for t, c in ((table_a, col_a), (table_b, col_b)))
             union = float(ta.estimate_union(tb))
             inter = float(ta.estimate_intersection(tb))
             yield (union, inter, (inter / union if union > 0 else 0.0),
@@ -776,49 +484,12 @@ def register_catalog_sql(spark, store_path: str, *,
         twin of ``cat.entries()``; grouped kind lists are pinned to the
         committed epoch exactly like the Python verb."""
         def eval(self):
-            store_path = sp
-            rows = _read_rows(store_path + "/sketches", None,
-                              ["name", "seq", "meta_json"])
-            best: dict = {}
-            for r in rows:
-                nm = r["name"]
-                if nm.startswith("catalogg-"):
-                    entry = nm.split("/", 1)[0]
-                elif nm.startswith("catalog/"):
-                    entry = nm
-                else:
-                    continue
-                cur = best.get(entry)
-                if cur is None or int(r["seq"]) > int(cur["seq"]):
-                    best[entry] = r
-            for entry in sorted(best):
-                meta = json.loads(best[entry]["meta_json"])
-                if "catalog_spec" not in meta:
-                    continue
-                spec, seq = meta["catalog_spec"], int(best[entry]["seq"])
-                if meta.get("group_col") is not None:
-                    # pin the kind list to the committed epoch: the
-                    # max-seq fleet row may be a crashed publish's
-                    # orphan with a CHANGED spec
-                    try:
-                        epoch, base = _grouped_pins(store_path, entry)
-                    except KeyError:
-                        continue      # nothing committed: not listable
-                    cands = [r for r in rows
-                             if r["name"].startswith(entry + "/")
-                             and base <= int(r["seq"]) <= epoch]
-                    if not cands:
-                        continue
-                    win = max(cands, key=lambda r: int(r["seq"]))
-                    cspec = json.loads(win["meta_json"]).get(
-                        "catalog_spec")
-                    if cspec is None:
-                        continue
-                    spec, seq = cspec, epoch
+            for r in SketchCatalog(None, sp)._registrations():
+                spec = r["spec"]
                 kinds = ("psample" if "sample" in spec else
                          ",".join(k["kind"] for k in spec["kinds"]))
-                yield (entry, meta["table_path"], meta["column"],
-                       meta.get("group_col"), kinds, seq)
+                yield (r["name"], r["table_path"], r["column"],
+                       r["group_col"], kinds, r["seq"])
 
     @udtf(returnType="verb string, kind string, available boolean, "
                      "preference string, seq bigint, kinds string")
@@ -835,40 +506,20 @@ def register_catalog_sql(spark, store_path: str, *,
         the stale-file count."""
         def eval(self, table_path: str, column: str,
                  group_col: str = ""):
-            import pyarrow.dataset as ds
-
-            from .catalog import _VERB_ROUTES, SketchCatalog
-            store_path = sp
+            cat = SketchCatalog(None, sp)
             if group_col:
-                entry = _group_entry_name(table_path, group_col, column)
-                epoch, base = _grouped_pins(store_path, entry)
-                rows = _read_rows(
-                    store_path + "/sketches",
-                    (ds.field("seq") >= base)
-                    & (ds.field("seq") <= epoch),
-                    ["name", "seq", "meta_json"])
-                cands = [r for r in rows
-                         if r["name"].startswith(entry + "/")]
-                if not cands:
-                    raise KeyError(
-                        f"{table_path}:{group_col}:{column} has no "
-                        "committed grouped registration")
-                win = max(cands, key=lambda r: int(r["seq"]))
-                spec = json.loads(win["meta_json"]).get("catalog_spec")
-                seq = int(epoch)
+                spec = cat._gspec(table_path, group_col, column)
+                seq = grouped_epoch(None, sp, SketchCatalog._gname(
+                    table_path, group_col, column))[0]
                 verbs = {v: _VERB_ROUTES[v]
                          for v in SketchCatalog._GROUPED_VERBS}
             else:
-                entry = _entry_name(table_path, column)
-                rows = _read_rows(store_path + "/sketches",
-                                  ds.field("name") == entry,
-                                  ["seq", "meta_json"])
-                if not rows:
+                entry = store.latest_entry(
+                    None, sp, SketchCatalog._name(table_path, column))
+                if entry is None:
                     raise KeyError(
                         f"{table_path}:{column} is not registered")
-                win = max(rows, key=lambda r: int(r["seq"]))
-                spec = json.loads(win["meta_json"]).get("catalog_spec")
-                seq = int(win["seq"])
+                seq, spec = entry[0], entry[1].get("catalog_spec")
                 verbs = dict(_VERB_ROUTES)
             if spec is None:
                 raise KeyError(f"{table_path}:{column} carries no "
@@ -896,20 +547,16 @@ def register_catalog_sql(spark, store_path: str, *,
                  ngrams=None, ngram_seed: int = 1337):
             label = column if ngrams is None else \
                 f"{column}~{int(ngrams)}gram-{int(ngram_seed)}"
-            prefix = _group_entry_name(table_path, "__file__", label)
-            try:
-                _, winners = _fleet_winner_rows(
-                    sp, prefix, ["name", "seq", "blob", "sha256",
-                                 "meta_json"])
-            except KeyError:
-                winners = {}
+            prefix = SketchCatalog._gname(table_path, "__file__", label)
+            epoch, base = grouped_epoch(None, sp, prefix)
+            winners = {} if epoch is None else store._winner_rows(
+                sp, prefix=prefix, min_seq=base, max_seq=epoch,
+                payload=("blob",))
             if not winners:
                 raise KeyError(
                     f"{table_path}:{column} has no committed file "
                     f"index in {sp} (register_file_index() it first)")
-            spec_row = max(winners.values(),
-                           key=lambda r: (int(r["seq"]), r["sha256"]))
-            spec = json.loads(spec_row["meta_json"])["catalog_spec"]
+            spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
             kinds = [e["kind"] for e in spec["kinds"]]
             if "bloom" not in kinds:
                 raise KeyError(
@@ -919,7 +566,7 @@ def register_catalog_sql(spark, store_path: str, *,
             cidx = kinds.index("cm") if "cm" in kinds else -1
             plen, k = len(prefix) + 1, int(key)
             for nm in sorted(winners):
-                ms = _loads_verified(nm, winners[nm])
+                ms = serde.loads(winners[nm].blob)
                 if ms.parts[bidx].contains(k):
                     ub = (int(ms.parts[cidx].point_query(k))
                           if cidx >= 0 else -1)

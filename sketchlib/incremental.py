@@ -60,6 +60,7 @@ The module's full surface, one function per maintenance/analysis shape:
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from dataclasses import dataclass, field
@@ -71,8 +72,6 @@ from pyspark.sql import functions as F
 from . import store
 from .spark_build import (BuildResult, build_aggregator_parquet,
                           build_grouped_parquet, walk_parquet_files)
-
-_MANIFEST_SCHEMA = "name string, seq long, file string, file_size long"
 
 
 def _current_files(table_path: str) -> dict[str, int]:
@@ -86,14 +85,7 @@ def _current_files(table_path: str) -> dict[str, int]:
             for f in walk_parquet_files(table_path)}
 
 
-def _read_ingested(spark: SparkSession, store_path: str):
-    """The store's ``ingested/`` manifest DataFrame, or None when no
-    manifest exists yet (store.read_table contract: only "table does
-    not exist" maps to None)."""
-    return store.read_table(spark, store_path + "/ingested")
-
-
-def _manifest_state(spark: SparkSession, store_path: str, name: str,
+def _manifest_state(store_path: str, name: str,
                     base_seq: int) -> tuple[int | None, dict[str, int]]:
     """(max manifest seq, {relative_path: size}) for ``name`` in ONE
     manifest read, considering only rows at/after the last full (re)build
@@ -102,22 +94,16 @@ def _manifest_state(spark: SparkSession, store_path: str, name: str,
     so the max is unaffected unless the manifest append itself is missing
     — exactly the crash window the max is checked for). Missing manifest
     table == nothing ingested == (None, {})."""
-    df = _read_ingested(spark, store_path)
-    if df is None:
-        return None, {}
-    rows = (df.filter((F.col("name") == name)
-                      & (F.col("seq") >= base_seq))
-            .select("seq", "file", "file_size").collect())
+    rows = [r for r in store._manifest_rows(store_path, name)
+            if r[0] >= base_seq]
     if not rows:
         return None, {}
     # commit-marker rows (file="") count for the max seq, never the dict
-    return (max(int(r["seq"]) for r in rows),
-            {r["file"]: int(r["file_size"]) for r in rows if r["file"]})
+    return max(s for s, _, _ in rows), {f: sz for _, f, sz in rows if f}
 
 
-def _append_manifest(spark: SparkSession, store_path: str, name: str,
-                     seq: int, files: dict[str, int],
-                     base_epoch: int = -1) -> None:
+def _append_manifest(store_path: str, name: str, seq: int,
+                     files: dict[str, int], base_epoch: int = -1) -> None:
     # Written AFTER save_sketch: a crash between the two leaves the new
     # seq published with its delta missing from the manifest, so a retry
     # would double-fold those files. The seq-pinned manifest rows make
@@ -129,8 +115,7 @@ def _append_manifest(spark: SparkSession, store_path: str, name: str,
     # global path, which keeps its base in the published sketch's meta).
     rows = [(name, seq, "", base_epoch)]
     rows += [(name, seq, f, sz) for f, sz in sorted(files.items())]
-    (store.one_part_df(spark, rows, _MANIFEST_SCHEMA)
-     .write.mode("append").parquet(store_path + "/ingested"))
+    store._append_rows(store_path, "ingested", rows)
 
 
 @dataclass
@@ -142,6 +127,7 @@ class IncrementalResult:
     new_rows: int            # rows scanned by THIS call
     wall_s: float
     lineage: pd.DataFrame = field(repr=False, default=None)
+    meta: dict = field(repr=False, default=None)   # published row's meta
 
     @property
     def no_op(self) -> bool:
@@ -193,8 +179,7 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     if prev_seq is None or rebuild:
         new = current
     else:
-        man_seq, ingested = _manifest_state(spark, store_path, name,
-                                            base_seq)
+        man_seq, ingested = _manifest_state(store_path, name, base_seq)
         if man_seq is None or man_seq < prev_seq:
             raise IOError(
                 f"sketch {name!r} seq {prev_seq} has no manifest rows at "
@@ -207,7 +192,7 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
         return IncrementalResult(
             sketch=prev[2], seq=prev_seq, prev_seq=prev_seq, new_files=0,
             new_rows=0, wall_s=time.perf_counter() - t0,
-            lineage=pd.DataFrame())
+            lineage=pd.DataFrame(), meta=prev[1])
 
     abs_files = _abs_files(table_path, new)
     if builder is not None:
@@ -233,24 +218,24 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     # count lives in meta.delta_rows
     prev_rows = 0 if full else int(prev[1].get("table_rows", 0))
     table_rows = prev_rows + int(res.n_rows)
+    # the meta exactly as a later read of the published row returns it
+    meta = json.loads(json.dumps(
+        {**(meta or {}), "incremental_from": prev_seq,
+         "delta_files": len(new), "delta_rows": res.n_rows,
+         "table_rows": table_rows, "rebuild": bool(rebuild),
+         "manifest_base": next_seq if full else base_seq}, sort_keys=True))
     seq = store.save_sketch(
         spark, store_path, name, sketch, lineage=res.lineage,
-        n_rows=table_rows, seq=next_seq,
-        meta={**(meta or {}), "incremental_from": prev_seq,
-              "delta_files": len(new), "delta_rows": res.n_rows,
-              "table_rows": table_rows,
-              "rebuild": bool(rebuild),
-              "manifest_base": next_seq if full else base_seq})
-    _append_manifest(spark, store_path, name, seq, new)
+        n_rows=table_rows, seq=next_seq, meta=meta)
+    _append_manifest(store_path, name, seq, new)
     return IncrementalResult(
         sketch=sketch, seq=seq, prev_seq=prev_seq, new_files=len(new),
         new_rows=res.n_rows, wall_s=time.perf_counter() - t0,
-        lineage=res.lineage)
+        lineage=res.lineage, meta=meta)
 
 
 def _grouped_manifest_state(
-        spark: SparkSession, store_path: str,
-        name: str) -> tuple[int | None, int, dict[str, int]]:
+        store_path: str, name: str) -> tuple[int | None, int, dict[str, int]]:
     """(committed epoch, base epoch, ingested files) for a GROUPED
     maintenance lineage, from the manifest alone. Commit-marker rows
     (file="") carry the base epoch of the current lineage in file_size;
@@ -258,19 +243,13 @@ def _grouped_manifest_state(
     published above it belong to a crashed, uncommitted epoch and are
     ignored (retries republish at a FRESH seq, see
     incremental_build_grouped) rather than refused."""
-    df = _read_ingested(spark, store_path)
-    if df is None:
-        return None, 0, {}
-    rows = (df.filter(F.col("name") == name)
-            .select("seq", "file", "file_size").collect())
-    markers = [(int(r["seq"]), int(r["file_size"]))
-               for r in rows if not r["file"]]
+    rows = store._manifest_rows(store_path, name)
+    markers = [(s, sz) for s, f, sz in rows if not f]
     if not markers:
         return None, 0, {}
     epoch, base = max(markers)
     base = max(base, 0)   # global-path markers write -1; grouped >= 0
-    ingested = {r["file"]: int(r["file_size"]) for r in rows
-                if r["file"] and base <= int(r["seq"]) <= epoch}
+    ingested = {f: sz for s, f, sz in rows if f and base <= s <= epoch}
     return epoch, base, ingested
 
 
@@ -354,7 +333,7 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     if "/" in name:
         raise ValueError(f"grouped sketch name may not contain '/': {name!r}")
     current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(spark, store_path, name)
+    epoch, base, ingested = _grouped_manifest_state(store_path, name)
 
     full = epoch is None or rebuild
     if not full:
@@ -412,7 +391,7 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
         spark, store_path, entries,
         meta={**(meta or {}), "incremental_from": epoch,
               "delta_files": len(new), "rebuild": bool(rebuild)})
-    _append_manifest(spark, store_path, name, next_epoch, new,
+    _append_manifest(store_path, name, next_epoch, new,
                      base_epoch=next_base)
     return GroupedIncrementalResult(
         sketches=groups, seq=next_epoch, prev_seq=epoch,
@@ -426,7 +405,7 @@ def grouped_epoch(spark: SparkSession, store_path: str,
     lineage — the pins a correct external read needs: uncommitted orphan
     rows sit ABOVE the committed epoch, dead pre-rebuild rows BELOW the
     base. (None, 0) when nothing is committed yet."""
-    epoch, base, _ = _grouped_manifest_state(spark, store_path, name)
+    epoch, base, _ = _grouped_manifest_state(store_path, name)
     return epoch, base
 
 
@@ -441,17 +420,14 @@ def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
     rows from a pre-rebuild lineage that was dead at ``seq`` are
     excluded. Raises KeyError when ``seq`` was never committed — orphan
     publishes from crashed epochs are not addressable states."""
-    df = _read_ingested(spark, store_path)
-    rows = [] if df is None else (
-        df.filter((F.col("name") == name) & (F.col("file") == "")
-                  & (F.col("seq") == int(seq)))
-        .select("file_size").collect())
-    if not rows:
+    bases = [sz for s, f, sz in store._manifest_rows(store_path, name)
+             if not f and s == int(seq)]
+    if not bases:
         raise KeyError(
             f"{name!r} has no committed epoch {seq} (crashed-epoch "
             "orphans are not addressable; see grouped_epoch for the "
             "current committed state)")
-    return int(seq), max(int(rows[0]["file_size"]), 0)
+    return int(seq), max(bases[0], 0)
 
 
 def current_group_sketches(spark: SparkSession, store_path: str,
@@ -509,7 +485,7 @@ def incremental_build_table(spark: SparkSession, table_path: str,
     t0 = time.perf_counter()
     from .spark_build import _TRIPLE_SCHEMA, build_sketch_table
     current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(spark, store_path, name)
+    epoch, base, ingested = _grouped_manifest_state(store_path, name)
 
     full = epoch is None or rebuild
     if full:
@@ -540,7 +516,7 @@ def incremental_build_table(spark: SparkSession, table_path: str,
                  .agg(F.sum("cnt").alias("cnt")))
     out = f"{store_path}/tables/{name}/seq={next_epoch}"
     delta.write.mode("overwrite").parquet(out)
-    _append_manifest(spark, store_path, name, next_epoch, new,
+    _append_manifest(store_path, name, next_epoch, new,
                      base_epoch=next_base)
     return TableIncrementalResult(
         table=spark.read.parquet(out), path=out, seq=next_epoch,
@@ -561,7 +537,7 @@ def prune_table_epochs(spark: SparkSession, store_path: str, name: str,
     import shutil as _shutil
     if keep < 1:
         raise ValueError("keep must be >= 1 (the committed epoch itself)")
-    epoch, _, _ = _grouped_manifest_state(spark, store_path, name)
+    epoch, _, _ = _grouped_manifest_state(store_path, name)
     if epoch is None:
         return []
     root = os.path.join(store_path, "tables", name)
@@ -612,7 +588,7 @@ def snapshot_diff_table(spark: SparkSession, store_path: str, name: str,
     joined diff is cached around the negativity check so the caller's
     first action doesn't recompute the shuffle; unpersist the returned
     frame when done with it."""
-    epoch, base, _ = _grouped_manifest_state(spark, store_path, name)
+    epoch, base, _ = _grouped_manifest_state(store_path, name)
     if epoch is None:
         raise KeyError(f"no table sketch named {name!r} in {store_path}")
     if seq_new is None:

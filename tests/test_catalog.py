@@ -1268,3 +1268,91 @@ def test_ngram_file_index_decontamination_triage(spark, tmp_path):
     assert r.extra["new_files"] == 1 and r.extra["updated_groups"] == 1
     lb2 = cat.locate(data, "tokens", single, ngrams=N, ngram_seed=SEED)
     assert lb2.extra["files_total"] == 4
+
+
+def test_refresh_grouped_on_file_index(spark, tmp_path):
+    """refresh_grouped with the file-index group column folds appended
+    files into the per-file index (the same fold as refresh_file_index)."""
+    _write_part(tmp_path, 0, rows=300, seed=41)
+    data = str(tmp_path / "data")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register_file_index(data, "tokens")
+    _write_part(tmp_path, 1, rows=200, seed=42)
+    r = cat.refresh_grouped(data, "__file__", "tokens")
+    assert r.kind == "refresh_file_index"
+    assert r.extra["new_files"] == 1 and r.extra["updated_groups"] == 1
+    assert cat.locate(data, "tokens", 0).extra["files_total"] == 2
+    assert cat.stale_files_grouped(data, "__file__", "tokens") == 0
+
+
+def test_fresh_answers_run_no_spark_job(spark, table, tmp_path):
+    """A non-stale answer on a local store reads the store through
+    pyarrow and the table listing through the filesystem: no verb below
+    starts a Spark job."""
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register(table, "tokens", ["cm", "theta", "mg", "bloom"])
+    exact = _exact_counts(spark, table)
+    key = next(iter(exact))
+    cat.frequency(table, "tokens", key)     # first read fills the memo
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-answers", "catalog reads")
+    try:
+        answers = [cat.frequency(table, "tokens", key),
+                   cat.frequencies(table, "tokens", [key, key + 1]),
+                   cat.count_distinct(table, "tokens"),
+                   cat.topk(table, "tokens", k=3),
+                   cat.member(table, "tokens", key)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("fresh-answers") == []
+    assert all(a.stale_files == 0 and not a.refreshed for a in answers)
+    assert answers[0].value >= exact[key]
+    assert answers[4].value is True
+
+
+def test_fold_never_alters_an_answer_already_read(spark, tmp_path):
+    """A delta fold merges into the sketch it loads; the reads that came
+    before it — Python verb, SQL function, and the store object a caller
+    holds — keep their pre-fold answers, and every post-fold answer
+    equals a from-scratch build."""
+    from sketchlib import store
+    from sketchlib.catalog import _factory_from_spec
+    from sketchlib.catalog_sql import register_catalog_sql
+    from sketchlib.spark_build import build_aggregator_parquet
+
+    _write_part(tmp_path, 0, rows=500, seed=61)
+    data = str(tmp_path / "data")
+    sp = str(tmp_path / "store")
+    cat = SketchCatalog(spark, sp)
+    cat.register(data, "tokens", ["cm", "theta", "bloom"])
+    register_catalog_sql(spark, sp)
+    keys = sorted(_exact_counts(spark, data))[:8]
+    sql = (f"SELECT catalog_frequency('{data}', 'tokens', k) AS f "
+           f"FROM VALUES {', '.join(f'({k})' for k in keys)} AS t(k)")
+
+    held = store.latest_sketch(spark, sp, cat._name(data, "tokens"))
+    held_bytes = held[2].to_bytes()
+    py0 = cat.frequencies(data, "tokens", keys)
+    sql0 = [r["f"] for r in spark.sql(sql).collect()]
+    assert sql0 == [int(v) for v in py0.value]
+
+    _write_part(tmp_path, 1, rows=300, seed=62)
+    py1 = cat.frequencies(data, "tokens", keys)      # auto: folds first
+    assert py1.refreshed and py1.seq == held[0] + 1
+    sql1 = [r["f"] for r in spark.sql(sql).collect()]
+
+    assert held[2].to_bytes() == held_bytes
+    pinned = store.latest_sketch(spark, sp, cat._name(data, "tokens"),
+                                 seq=held[0])
+    assert pinned[2].to_bytes() == held_bytes
+    assert list(py0.value) == sql0
+
+    spec = cat._spec(data, "tokens")
+    rebuilt = build_aggregator_parquet(spark, data, "tokens",
+                                       _factory_from_spec(spec)).sketch
+    latest = store.load_sketch(spark, sp, cat._name(data, "tokens"))
+    assert latest.to_bytes() == rebuilt.to_bytes()
+    want = [int(v) for v in rebuilt.parts[0].point_query_batch(
+        np.asarray(keys, dtype=np.int64))]
+    assert [int(v) for v in py1.value] == sql1 == want

@@ -216,7 +216,7 @@ def test_compact_store_preserves_everything(spark, tmp_path):
         "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
         "groups": {g: s.to_bytes() for g, s in
                    store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(spark, st, "g"),
+        "gstate": _grouped_manifest_state(st, "g"),
         "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
     }
     n_files = len([f for f in os.listdir(st + "/sketches")
@@ -233,7 +233,7 @@ def test_compact_store_preserves_everything(spark, tmp_path):
         "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
         "groups": {g: s.to_bytes() for g, s in
                    store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(spark, st, "g"),
+        "gstate": _grouped_manifest_state(st, "g"),
         "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
     }
     assert before == after
@@ -331,3 +331,126 @@ def test_winners_streaming_matches_window_winners(spark):
     out = winners_streaming(dup).collect()
     assert len(out) == 2
     assert sorted(r["name"] for r in out) == ["a", "b"]
+
+
+@pytest.mark.parametrize("table", ["sketches", "lineage", "ingested"])
+def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
+    """A write that dies mid-append (a torn temp file, then an error)
+    leaves no part and no temp file behind, and the next read returns
+    the previous state: the previous winner for sketches/lineage, the
+    previous manifest for ingested — where the following fold then
+    refuses the crash window instead of double-folding."""
+    import functools
+    import math
+    import os
+    import shutil
+
+    from sketchlib import incremental, store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+    from sketchlib.datagen import generate_token_table
+
+    fac = functools.partial(CountMinSketch,
+                            CMConfig(eps=1e-2, delta=math.exp(-3), seed=3))
+    data, st = str(tmp_path / "data"), str(tmp_path / "store")
+    os.makedirs(data)
+
+    def land(i, rows):
+        src = str(tmp_path / "_s.parquet")
+        generate_token_table(src, rows=rows, seed=i, dist="zipf")
+        shutil.move(src, os.path.join(data, f"p{i}.parquet"))
+
+    land(0, 300)
+    first = incremental.incremental_build(spark, data, "tokens", fac,
+                                          store_path=st, name="cm")
+    files = {t: sorted(os.listdir(os.path.join(st, t)))
+             for t in ("sketches", "lineage", "ingested")}
+    manifest = incremental._manifest_state(st, "cm", 0)
+    lineage = sorted(r["pid"] for r in
+                     load_lineage(spark, st, "cm").collect())
+    real_write = store.pq.write_table
+
+    def torn_write(tbl, where, **kw):
+        if f"/{table}/" not in where:
+            return real_write(tbl, where, **kw)
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk went away mid-append")
+
+    land(1, 200)
+    monkeypatch.setattr(store.pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="mid-append"):
+        incremental.incremental_build(spark, data, "tokens", fac,
+                                      store_path=st, name="cm")
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(os.path.join(st, table))) == files[table]
+    assert incremental._manifest_state(st, "cm", 0) == manifest
+    if table == "ingested":
+        # the sketch published; the missing manifest is detected
+        assert store.latest_entry(spark, st, "cm")[0] == first.seq + 1
+        with pytest.raises(IOError, match="crashed between publish"):
+            incremental.incremental_build(spark, data, "tokens", fac,
+                                          store_path=st, name="cm")
+        return
+    for t in ("sketches", "lineage"):
+        assert sorted(os.listdir(os.path.join(st, t))) == files[t]
+    got = store.latest_sketch(spark, st, "cm")
+    assert got[0] == first.seq
+    assert got[2].to_bytes() == first.sketch.to_bytes()
+    assert sorted(r["pid"] for r in
+                  load_lineage(spark, st, "cm").collect()) == lineage
+    # the retry folds the delta exactly once
+    again = incremental.incremental_build(spark, data, "tokens", fac,
+                                          store_path=st, name="cm")
+    assert again.new_files == 1 and again.seq == first.seq + 1
+
+
+def test_spark_written_parts_read_identically(spark, tmp_path):
+    """Parts written by Spark (older stores, other writers) and by the
+    pyarrow appender are one table to every reader: winners, pinned
+    seqs, group reads, listings and the manifest agree across them."""
+    import hashlib as _h
+    import numpy as np
+    from sketchlib import incremental, store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+
+    path = str(tmp_path / "store")
+    cfg = CMConfig(eps=1e-2, delta=0.05, seed=1)
+    sks = []
+    for n in (5, 9, 13):
+        s = CountMinSketch(cfg)
+        s.update_batch(np.arange(n, dtype=np.int64))
+        sks.append(s)
+
+    def spark_row(name, seq, s, meta):
+        blob = s.to_bytes()
+        (store.one_part_df(spark, [(name, seq, "CMSK", blob,
+                                    _h.sha256(blob).hexdigest(), -1,
+                                    meta)], store._SKETCH_SCHEMA)
+         .write.mode("append").parquet(path + "/sketches"))
+
+    spark_row("x", 0, sks[0], '{"by": "spark"}')
+    assert store.save_sketch(spark, path, "x", sks[1],
+                             meta={"by": "arrow"}) == 1
+    spark_row("x", 2, sks[2], '{"by": "spark"}')
+    spark_row("g/a", 4, sks[0], "{}")
+    store.save_sketches_bulk(spark, path, [("g/b", 4, sks[1], 1)])
+
+    assert store.latest_entry(spark, path, "x") == (2, {"by": "spark"})
+    for seq, s in enumerate(sks):
+        assert (store.load_sketch(spark, path, "x", seq=seq).to_bytes()
+                == s.to_bytes())
+    assert store.max_seq_for_prefix(spark, path, "g") == 4
+    groups = store.load_group_sketches(spark, path, "g")
+    assert {g: s.to_bytes() for g, s in groups.items()} == {
+        "a": sks[0].to_bytes(), "b": sks[1].to_bytes()}
+    listing = {r["name"]: r["seq"]
+               for r in store.list_sketches(spark, path).collect()}
+    assert listing == {"x": 2, "g/a": 4, "g/b": 4}
+
+    (store.one_part_df(spark, [("m", 0, "", -1), ("m", 0, "f0", 10)],
+                       store._MANIFEST_SCHEMA)
+     .write.mode("append").parquet(path + "/ingested"))
+    incremental._append_manifest(path, "m", 1, {"f1": 20})
+    assert incremental._manifest_state(path, "m", 0) == (
+        1, {"f0": 10, "f1": 20})
