@@ -199,8 +199,7 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
         if abs_files:
             res = builder(spark, abs_files)
         else:
-            res = BuildResult(sketch=factory(), lineage=pd.DataFrame(),
-                              n_rows=0, wall_s=0.0)
+            res = BuildResult.empty(factory())
     else:
         res = build_aggregator_parquet(
             spark, table_path, values_col, factory, fanout=fanout,

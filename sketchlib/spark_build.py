@@ -4,24 +4,35 @@ This is the Spark-native restatement of the reference's buffer-then-merge
 architecture (SURVEY.md §3.1): the reference absorbs updates into an in-RAM
 buffer sketch and batch-merges it into the disk-resident sketch
 (/root/reference/cm.h:523-530, experiments.txt:8-23). Here every *partition*
-plays the buffer role:
+(or parquet row-group slice) plays the buffer role: mapInArrow/mapInPandas
+builds one partial sketch per partition from the Arrow value buffer (zero
+per-row Python) and emits one row ``(pid, sketch: binary, lineage
+metrics)``. Raw tokens never shuffle; only partial blobs move.
 
-  stage 1  mapInArrow: one partial sketch per input partition, built from the
-           Arrow list column's flat value buffer (zero per-row Python);
-           emits one row ``(pid, sketch: binary, lineage metrics)``.
-  stage 2  groupBy(pid % k) + applyInPandas: tree merge of partials.
-  stage 3  driver merges the <= k survivors.
+One merge planner (``_merge``) turns partials into the result, picking one
+of three cases from sizes the driver already knows:
 
-Because sketch merge is elementwise integer addition (cm.h:849-857) the
-result is byte-identical for any partitioning and any merge order.
+  driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES (the
+               common case): ONE Spark job collects every partial, blob and
+               lineage together (``toArrow``); the driver folds the blobs
+               in pid order. No persist, no shuffle.
+  shuffle tree above that bound: ``pmod(pid, m)`` merge stages over the
+               blob shuffle, recursive so that no task and not the driver
+               folds more than ``fanout`` blobs (fanout^2 partials take one
+               stage, fanout^3 two, ...); the driver folds the survivors.
+  in-process   parquet builds whose value column is at most
+               _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
+               footers the planner reads anyway): the same slice builder
+               the Spark tasks run is called in the driver process; no
+               Spark job at all (small incremental deltas).
 
-Partial sketches are tiny (d*w*8 bytes, ~1 MB at eps=1e-4) compared to input
-partitions (~128 MB of parquet), so stage 1 is effectively a map-side
-combine: the shuffle moves only sketch blobs, never raw tokens. At 10^12
-sequences / ~10^6 partitions the two-level tree keeps per-task merge fan-in
-at sqrt(n) and the driver fan-in at k; no single point ever sees all blobs.
+CM, HLL, theta, Bloom and Count-Sketch merge by addition (or max/union), so
+all three cases and every partitioning give byte-identical results.
+Order-sensitive sketches (MG, KLL) are folded in a fixed pid order, so the
+driver fold and the in-process path agree byte for byte and every path is
+reproducible run to run on the same layout.
 
-Checkpointed builds write stage-1 partials to a parquet directory keyed by
+Checkpointed builds write partials to a parquet directory keyed by
 partition id (the analogue of the reference's mmap'd SSD residency,
 cm.h:141-148); ``checkpoint_dir`` builds resume by skipping partitions whose
 partials already exist.
@@ -59,7 +70,27 @@ _PARTIAL_PA_SCHEMA = pa.schema([
     ("total_count", pa.int64()),
     ("build_ms", pa.float64()),
 ])
-_MERGED_SCHEMA = "sketch binary, n_rows bigint, n_items bigint, total_count bigint"
+_LINEAGE_PA_SCHEMA = pa.schema(
+    [f for f in _PARTIAL_PA_SCHEMA if f.name != "sketch"])
+_TREE_SCHEMA = "pid int, sketch binary"
+
+# Driver fold bound on partial count x partial bytes. The collect holds
+# every blob twice at its peak (the JVM's Arrow batches, then the Python
+# table), so 64 MB costs at most 128 MB: an eighth of Spark's default 1 GB
+# driver heap. Time is not the limit: the driver folds 652 KB Count-Min
+# partials (eps=1e-4) at about 1.2 GB/s, so 64 MB (~100 partials) takes
+# ~50 ms, while each job the tree adds costs ~0.2 s (dropping two took
+# perfbench's build p50 from 1.33 to 0.93 s; 4 vCPU).
+_DRIVER_FOLD_MAX_BYTES = 64 << 20
+
+# In-process bound on the value column's uncompressed bytes. One driver
+# core folds the catalog's cm+theta+mg+bloom MultiSketch at about 25 MB/s
+# of column bytes and a Count-Min at about 40 MB/s, so 4 MB takes at most
+# ~160 ms: less than the ~0.4 s a one-job fold spends in Spark (perfbench
+# ingest fold p50 0.45 s through the driver fold, 0.04 s in-process;
+# 4 vCPU). perfbench's ingest deltas (17 KB) and registered table
+# (0.59 MB) fold here; its build table (37.5 MB) stays on parallel slices.
+_IN_PROCESS_MAX_BYTES = 4 << 20
 
 
 @dataclass
@@ -72,6 +103,22 @@ class BuildResult:
     @property
     def tokens_per_sec(self) -> float:
         return self.sketch.n_items / self.wall_s if self.wall_s else float("nan")
+
+    @classmethod
+    def empty(cls, sketch, wall_s: float = 0.0) -> "BuildResult":
+        """A build over no input: zero lineage rows, with the columns and
+        dtypes of every other build's lineage."""
+        return cls(sketch=sketch,
+                   lineage=_lineage(_LINEAGE_PA_SCHEMA.empty_table()),
+                   n_rows=0, wall_s=wall_s)
+
+
+def _lineage(partials: pa.Table) -> pd.DataFrame:
+    """Per-partial lineage in pid order, one dtype per column whichever
+    path (Spark collect, checkpoint read, in-process) produced it."""
+    names = _LINEAGE_PA_SCHEMA.names
+    return (partials.select(names).cast(_LINEAGE_PA_SCHEMA)
+            .sort_by("pid").to_pandas())
 
 
 def _flat_tokens(batch: pa.RecordBatch, col_idx: int) -> np.ndarray:
@@ -133,34 +180,75 @@ def _partial_builder(cfg: CMConfig, tokens_col: str, cu: bool,
     return fn
 
 
-def _merge_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+def _fold(pids, blobs):
+    """Merge partial blobs in ascending pid order; None when there are
+    none. The fixed order keeps order-sensitive merges (MG, KLL)
+    reproducible."""
     acc = None
-    for blob in pdf["sketch"]:
-        cm = serde.loads(bytes(blob))
-        acc = cm if acc is None else acc.merge(cm)
-    return pd.DataFrame({
-        "sketch": [acc.to_bytes()],
-        "n_rows": [int(pdf["n_rows"].sum())],
-        "n_items": [acc.n_items],
-        "total_count": [getattr(acc, "total_count", 0)],
-    })
-
-
-def _tree_merge(partials: DataFrame, fanout: int | None,
-                n_partials: int) -> CountMinSketch | None:
-    if fanout is None:
-        fanout = max(1, math.isqrt(max(1, n_partials)))
-    merged = (
-        partials
-        .groupBy(F.pmod(F.col("pid"), F.lit(fanout)).alias("bucket"))
-        .applyInPandas(lambda pdf: _merge_pdf(pdf), schema=_MERGED_SCHEMA)
-    )
-    rows = merged.collect()
-    acc = None
-    for r in rows:
-        cm = serde.loads(bytes(r["sketch"]))
-        acc = cm if acc is None else acc.merge(cm)
+    for i in np.argsort(np.asarray(pids), kind="stable"):
+        blob = blobs[int(i)]
+        sk = serde.loads(blob.as_py() if isinstance(blob, pa.Scalar)
+                         else bytes(blob))
+        acc = sk if acc is None else acc.merge(sk)
     return acc
+
+
+def _merge_bucket(key, pdf):
+    """One shuffle-tree task: fold its group's blobs, keyed by the bucket."""
+    acc = _fold(pdf["pid"].to_numpy(), pdf["sketch"].to_numpy())
+    return pd.DataFrame({"pid": [int(key[0])],
+                         "sketch": [serde.dumps_partial(acc)]})
+
+
+def _shuffle_tree(partials: DataFrame, fanout: int | None,
+                  n_partials: int) -> DataFrame:
+    """Merge stages over the blob shuffle, leaving at most ``fanout`` rows
+    for the driver. The last stage groups by ``pmod(pid, fanout)``; each
+    stage before it has ``fanout`` times the buckets of the next, and
+    stages are added until no task folds more than ``fanout`` blobs: up
+    to fanout^2 partials take one stage, up to fanout^3 two. Bucket ids
+    become the next stage's pids. The default fanout, ceil(sqrt(n)),
+    gives one stage."""
+    if fanout is None:
+        fanout = math.isqrt(max(0, n_partials - 1)) + 1
+    mods = [fanout]
+    while fanout > 1 and n_partials > mods[-1] * fanout:
+        mods.append(mods[-1] * fanout)
+    level = partials.select("pid", "sketch")
+    for m in reversed(mods):
+        level = (level
+                 .groupBy(F.pmod(F.col("pid"), F.lit(m)).alias("bucket"))
+                 .applyInPandas(_merge_bucket, schema=_TREE_SCHEMA))
+    return level
+
+
+def _merge(partials: DataFrame, n_partials: int, blob_bytes: int,
+           fanout: int | None, empty, t0: float) -> BuildResult:
+    """THE merge planner for Spark-built partials (module docstring):
+    driver fold in one job while ``n_partials * blob_bytes`` stays under
+    _DRIVER_FOLD_MAX_BYTES, the shuffle tree above it. ``empty()`` makes
+    the result for zero partials."""
+    if n_partials * blob_bytes <= _DRIVER_FOLD_MAX_BYTES:
+        tbl = partials.toArrow()
+        return _result(_fold(tbl["pid"], tbl["sketch"]), tbl, empty, t0)
+    partials = partials.persist()
+    try:
+        lineage = partials.select(*_LINEAGE_PA_SCHEMA.names).toArrow()
+        top = _shuffle_tree(partials, fanout, n_partials).toArrow()
+    finally:
+        partials.unpersist()
+    return _result(_fold(top["pid"], top["sketch"]), lineage, empty, t0)
+
+
+def _result(sketch, lineage: pa.Table, empty, t0: float) -> BuildResult:
+    lin = _lineage(lineage)
+    return BuildResult(sketch=empty() if sketch is None else sketch,
+                       lineage=lin, n_rows=int(lin["n_rows"].sum()),
+                       wall_s=time.perf_counter() - t0)
+
+
+def _cm_bytes(cfg: CMConfig) -> int:
+    return cfg.depth * cfg.width * 8
 
 
 def build_sketch(df: DataFrame, tokens_col: str, cfg: CMConfig, *,
@@ -184,42 +272,30 @@ def build_sketch(df: DataFrame, tokens_col: str, cfg: CMConfig, *,
     """
     t0 = time.perf_counter()
     src = df.select(tokens_col).filter(F.col(tokens_col).isNotNull())
-    spark = df.sparkSession
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
+    empty = lambda: CountMinSketch(cfg)  # noqa: E731
 
     if checkpoint_dir is None:
         partials = src.mapInArrow(
             _partial_builder(cfg, tokens_col, cu, preaggregate=preaggregate),
-            schema=_PARTIAL_SCHEMA).persist()
-        try:
-            lineage = partials.select(*lineage_cols).toPandas()
-            sketch = _tree_merge(partials, fanout, len(lineage))
-        finally:
-            partials.unpersist()
-    else:
-        path = checkpoint_dir.rstrip("/") + "/partials"
-        try:
-            done = frozenset(
-                r["pid"] for r in spark.read.parquet(path).select("pid").collect())
-        except Exception:
-            done = frozenset()
-        n_parts = src.rdd.getNumPartitions()
-        if any(p not in done for p in range(n_parts)):
-            fresh = src.mapInArrow(
-                _partial_builder(cfg, tokens_col, cu, skip_pids=done,
-                                 preaggregate=preaggregate),
-                schema=_PARTIAL_SCHEMA)
-            fresh.write.mode("append").parquet(path)
-        partials = spark.read.parquet(path)
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-
-    if sketch is None:
-        sketch = CountMinSketch(cfg)
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+            schema=_PARTIAL_SCHEMA)
+        return _merge(partials, partials.rdd.getNumPartitions(),
+                      _cm_bytes(cfg), fanout, empty, t0)
+    spark = df.sparkSession
+    path = checkpoint_dir.rstrip("/") + "/partials"
+    try:
+        done = frozenset(
+            r["pid"] for r in spark.read.parquet(path).select("pid").collect())
+    except Exception:
+        done = frozenset()
+    n_parts = src.rdd.getNumPartitions()
+    if any(p not in done for p in range(n_parts)):
+        fresh = src.mapInArrow(
+            _partial_builder(cfg, tokens_col, cu, skip_pids=done,
+                             preaggregate=preaggregate),
+            schema=_PARTIAL_SCHEMA)
+        fresh.write.mode("append").parquet(path)
+    return _merge(spark.read.parquet(path), n_parts, _cm_bytes(cfg),
+                  fanout, empty, t0)
 
 
 def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
@@ -228,7 +304,7 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
     """Weighted build over a PRE-AGGREGATED (key, count) table — the
     reference's ``update(i, c)`` with c != 1 (cm.h:260, 482-488), batched:
     each partition folds its (key, count) rows with one weighted
-    scatter-add, partials tree-merge as usual. Counter-table- and
+    scatter-add, partials merge through the planner as usual. Counter-table- and
     total_count-identical to building from the exploded unit-update
     stream (tested) — NOT blob-byte-identical, because the serialized
     header's n_items records rows folded (len(keys)) rather than
@@ -260,19 +336,9 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
     t0 = time.perf_counter()
     src = (df.select(key_col, count_col)
            .filter(F.col(key_col).isNotNull() & F.col(count_col).isNotNull()))
-    partials = src.mapInArrow(fn, schema=_PARTIAL_SCHEMA).persist()
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
-    try:
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-    finally:
-        partials.unpersist()
-    if sketch is None:
-        sketch = CountMinSketch(cfg)
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+    partials = src.mapInArrow(fn, schema=_PARTIAL_SCHEMA)
+    return _merge(partials, partials.rdd.getNumPartitions(), _cm_bytes(cfg),
+                  fanout, lambda: CountMinSketch(cfg), t0)
 
 
 # ---------------------------------------------------------------------------
@@ -290,12 +356,16 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
 # slice id and carries (file, row-group) lineage.
 
 
-def _list_row_groups(path: str,
-                     files: list[str] | None = None) -> list[tuple[str, int, int]]:
-    """[(file, row_group_idx, n_rows)] for a parquet file or directory
-    (recursive). Hive-partitioned layouts (key=val dirs) are REFUSED: their
-    partition columns live in directory names, not the files, so a raw
-    row-group scan would silently drop them — route those through
+def _list_row_groups(path: str, files: list[str] | None = None,
+                     column: str | None = None
+                     ) -> list[tuple[str, int, int, int]]:
+    """[(file, row_group_idx, n_rows, column_bytes)] for a parquet file or
+    directory (recursive), from the footers alone. ``column_bytes`` is the
+    uncompressed size of ``column``'s chunks in that row group (every leaf
+    of a nested column; 0 when ``column`` is None) — the in-process
+    planner's size. Hive-partitioned layouts (key=val dirs) are REFUSED:
+    their partition columns live in directory names, not the files, so a
+    raw row-group scan would silently drop them — route those through
     ``build_sketch(spark.read.parquet(path), ...)`` instead.
 
     ``files``: explicit file list (absolute paths) to scan INSTEAD of
@@ -307,8 +377,15 @@ def _list_row_groups(path: str,
     out = []
     for f in sorted(files):
         md = pq.read_metadata(f)
+        leaves = [j for j in range(md.num_columns)
+                  if column is not None
+                  and (md.schema.column(j).path == column
+                       or md.schema.column(j).path.startswith(column + "."))]
         for i in range(md.num_row_groups):
-            out.append((f, i, md.row_group(i).num_rows))
+            rg = md.row_group(i)
+            out.append((f, i, rg.num_rows,
+                        sum(rg.column(j).total_uncompressed_size
+                            for j in leaves)))
     return out
 
 
@@ -337,7 +414,7 @@ def walk_parquet_files(path: str) -> list[str]:
     return files
 
 
-def _slice_assignments(rgs: list[tuple[str, int, int]], n_slices: int):
+def _slice_assignments(rgs: list[tuple], n_slices: int):
     """Contiguous row-group ranges per slice, one row per (slice, file)."""
     n = len(rgs)
     n_slices = max(1, min(n_slices, n))
@@ -346,7 +423,7 @@ def _slice_assignments(rgs: list[tuple[str, int, int]], n_slices: int):
         lo = s * n // n_slices
         hi = (s + 1) * n // n_slices
         by_file: dict[str, list[int]] = {}
-        for f, i, _ in rgs[lo:hi]:
+        for f, i, *_ in rgs[lo:hi]:
             by_file.setdefault(f, []).append(i)
         for f, idxs in by_file.items():
             rows.append((s, f, idxs))
@@ -420,7 +497,8 @@ def _parquet_partial_builder(cfg: CMConfig, tokens_col: str, cu: bool,
 def _slice_dispatch(one_slice):
     """mapInPandas wrapper shared by every parquet-direct builder: a
     partition may carry several slices; each MUST yield its own partial
-    keyed by its own slice id (checkpoint resume correctness)."""
+    keyed by its own slice id (checkpoint resume correctness). A slice
+    whose ``one_slice`` returns None (no groups) yields nothing."""
     def fn(pdf_iter):
         by_slice: dict[int, list[tuple[str, list[int]]]] = {}
         for pdf in pdf_iter:
@@ -428,13 +506,15 @@ def _slice_dispatch(one_slice):
                 by_slice.setdefault(int(row["slice_id"]), []).append(
                     (row["file"], [int(r) for r in row["rgs"]]))
         for slice_id in sorted(by_slice):
-            yield one_slice(slice_id, by_slice[slice_id])
+            out = one_slice(slice_id, by_slice[slice_id])
+            if out is not None:
+                yield out
     return fn
 
 
-def _rg_layout_digest(rgs: list[tuple[str, int, int]]) -> str:
+def _rg_layout_digest(rgs: list[tuple]) -> str:
     h = hashlib.sha256()
-    for f, i, n in rgs:
+    for f, i, n, *_ in rgs:
         h.update(f"{os.path.basename(f)}|{i}|{n}\n".encode())
     return h.hexdigest()
 
@@ -499,65 +579,64 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     changed core count or data layout (validated, not assumed).
     """
     t0 = time.perf_counter()
-    rgs = _list_row_groups(path)
-    if checkpoint_dir is not None:
-        # pass the raw (possibly-None) n_slices: an explicit value must
-        # match the pinned one, but the parallelism-derived DEFAULT must
-        # not be treated as explicit — a resume on a different core count
-        # would spuriously conflict with the pinned assignment
-        n_slices = _pin_checkpoint_slices(
-            checkpoint_dir.rstrip("/"), rgs, n_slices,
-            _default_n_slices(spark, len(rgs)))
-    elif n_slices is None:
+    rgs = _list_row_groups(path, column=tokens_col)
+    builder = _parquet_partial_builder(cfg, tokens_col, cu,
+                                       preaggregate=preaggregate)
+    empty = lambda: CountMinSketch(cfg)  # noqa: E731
+    if checkpoint_dir is None:
+        return _build_slices(spark, rgs, n_slices, builder, _cm_bytes(cfg),
+                             fanout, empty, t0)
+    if not rgs:
+        return BuildResult.empty(empty(), time.perf_counter() - t0)
+    # pass the raw (possibly-None) n_slices: an explicit value must match
+    # the pinned one, but the parallelism-derived DEFAULT must not be
+    # treated as explicit — a resume on a different core count would
+    # spuriously conflict with the pinned assignment
+    n_slices = _pin_checkpoint_slices(
+        checkpoint_dir.rstrip("/"), rgs, n_slices,
+        _default_n_slices(spark, len(rgs)))
+    n_slices, rows = _slice_assignments(rgs, n_slices)
+    ckpt_path = checkpoint_dir.rstrip("/") + "/partials"
+    try:
+        done = frozenset(r["pid"] for r in
+                         spark.read.parquet(ckpt_path).select("pid").collect())
+    except Exception:
+        done = frozenset()
+    rows = [r for r in rows if r[0] not in done]
+    if rows:
+        (_assign_slices(spark, rows)
+         .mapInPandas(builder, schema=_PARTIAL_SCHEMA)
+         .write.mode("append").parquet(ckpt_path))
+    return _merge(spark.read.parquet(ckpt_path), n_slices, _cm_bytes(cfg),
+                  fanout, empty, t0)
+
+
+def _assign_slices(spark: SparkSession, rows) -> DataFrame:
+    return _assign_df(spark, rows, "slice_id int, file string, rgs array<int>")
+
+
+def _build_slices(spark: SparkSession, rgs, n_slices: int | None, builder,
+                  blob_bytes: int, fanout: int | None, empty,
+                  t0: float) -> BuildResult:
+    """Partials of a parquet slice ``builder`` (a _slice_dispatch
+    function), merged by the planner: in this process when the value
+    column (``rgs``' fourth field) is at most _IN_PROCESS_MAX_BYTES, else
+    one Spark task per slice and ``_merge``. The slices are the same
+    either way, so the partials and their pid-order fold are too."""
+    if not rgs:
+        return BuildResult.empty(empty(), time.perf_counter() - t0)
+    if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
     n_slices, rows = _slice_assignments(rgs, n_slices)
-
-    done = frozenset()
-    ckpt_path = None
-    if checkpoint_dir is not None:
-        ckpt_path = checkpoint_dir.rstrip("/") + "/partials"
-        try:
-            done = frozenset(r["pid"] for r in
-                             spark.read.parquet(ckpt_path).select("pid").collect())
-        except Exception:
-            done = frozenset()
-        rows = [r for r in rows if r[0] not in done]
-
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
-    if rows:
-        assign = _assign_df(
-            spark, rows, "slice_id int, file string, rgs array<int>")
-        fresh = assign.mapInPandas(
-            _parquet_partial_builder(cfg, tokens_col, cu, preaggregate=preaggregate),
-            schema=_PARTIAL_SCHEMA)
-        if ckpt_path is not None:
-            fresh.write.mode("append").parquet(ckpt_path)
-            partials = spark.read.parquet(ckpt_path)
-            lineage = partials.select(*lineage_cols).toPandas()
-            sketch = _tree_merge(partials, fanout, len(lineage))
-        else:
-            fresh = fresh.persist()
-            try:
-                lineage = fresh.select(*lineage_cols).toPandas()
-                sketch = _tree_merge(fresh, fanout, len(lineage))
-            finally:
-                fresh.unpersist()
-    elif ckpt_path is not None:
-        partials = spark.read.parquet(ckpt_path)
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-    else:
-        # zero row groups and no checkpoint: an empty table builds an
-        # empty sketch instead of crashing on read.parquet(None)
-        lineage = pd.DataFrame(columns=lineage_cols)
-        sketch = None
-
-    if sketch is None:
-        sketch = CountMinSketch(cfg)
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+    if sum(r[3] for r in rgs) <= _IN_PROCESS_MAX_BYTES:
+        assign = pd.DataFrame(rows, columns=["slice_id", "file", "rgs"])
+        tbl = pa.Table.from_pandas(pd.concat(list(builder(iter([assign])))),
+                                   schema=_PARTIAL_PA_SCHEMA,
+                                   preserve_index=False)
+        return _result(_fold(tbl["pid"], tbl["sketch"]), tbl, empty, t0)
+    partials = _assign_slices(spark, rows).mapInPandas(
+        builder, schema=_PARTIAL_SCHEMA)
+    return _merge(partials, n_slices, blob_bytes, fanout, empty, t0)
 
 
 _GEN_TOKBUF = None  # per-worker persistent token buffer (see fn below)
@@ -630,24 +709,12 @@ def build_sketch_generated(spark: SparkSession, rows: int, cfg: CMConfig, *,
                     "total_count": [cm.total_count], "build_ms": [ms],
                 })
 
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
+    empty = lambda: CountMinSketch(cfg)  # noqa: E731
     if not assigns:
-        return BuildResult(sketch=CountMinSketch(cfg),
-                           lineage=pd.DataFrame(columns=lineage_cols),
-                           n_rows=0, wall_s=time.perf_counter() - t0)
-    assign = _assign_df(spark, assigns, "chunk int, start bigint, n int")
-    partials = assign.mapInPandas(fn, schema=_PARTIAL_SCHEMA).persist()
-    try:
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-    finally:
-        partials.unpersist()
-    if sketch is None:
-        sketch = CountMinSketch(cfg)
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+        return BuildResult.empty(empty(), time.perf_counter() - t0)
+    partials = _assign_df(spark, assigns, "chunk int, start bigint, n int"
+                          ).mapInPandas(fn, schema=_PARTIAL_SCHEMA)
+    return _merge(partials, len(assigns), _cm_bytes(cfg), fanout, empty, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -756,6 +823,17 @@ def _ingest_grouped(sketches: dict, rows: dict, keys: np.ndarray,
         rows[key] += int(row_counts[g])
 
 
+def _grouped_rows(pid: int, sketches: dict, rows: dict) -> dict:
+    """Grouped-partial columns: one row per key (a NULL key first)."""
+    ordered = sorted(sketches, key=lambda k: (k is not None, k))
+    return {"key": ordered, "pid": [pid] * len(ordered),
+            "sketch": [serde.dumps_partial(sketches[k]) for k in ordered],
+            "n_rows": [rows[k] for k in ordered],
+            "n_items": [sketches[k].n_items for k in ordered],
+            "total_count": [getattr(sketches[k], "total_count", 0)
+                            for k in ordered]}
+
+
 def _grouped_partial_builder(cfg: CMConfig, key_col: str, tokens_col: str, cu: bool):
     def fn(batches):
         ctx = TaskContext.get()
@@ -771,15 +849,9 @@ def _grouped_partial_builder(cfg: CMConfig, key_col: str, tokens_col: str, cu: b
             _ingest_grouped(sketches, rows, keys, batch.column(ti),
                             lambda: CountMinSketch(cfg), cu)
         if sketches:
-            ordered = sorted(sketches, key=lambda k: (k is not None, k))
-            yield pa.RecordBatch.from_pydict({
-                "key": ordered,
-                "pid": [pid] * len(ordered),
-                "sketch": [serde.dumps_partial(sketches[k]) for k in ordered],
-                "n_rows": [rows[k] for k in ordered],
-                "n_items": [sketches[k].n_items for k in ordered],
-                "total_count": [sketches[k].total_count for k in ordered],
-            }, schema=_GROUPED_PARTIAL_PA_SCHEMA)
+            yield pa.RecordBatch.from_pydict(
+                _grouped_rows(pid, sketches, rows),
+                schema=_GROUPED_PARTIAL_PA_SCHEMA)
     return fn
 
 
@@ -1018,8 +1090,7 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
 
     if not rows_assign:
         return 0      # empty table: inner product with anything is 0
-    assign = _assign_df(
-        spark, rows_assign, "slice_id int, file string, rgs array<int>")
+    assign = _assign_slices(spark, rows_assign)
     rows = assign.mapInPandas(fn, schema="sums array<long>").collect()
     if not rows:
         return 0
@@ -1038,8 +1109,8 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
 # Every sketch in the library (CountMinSketch, HllSketch, BloomFilter,
 # DDSketch, KllSketch, TDigest) is a mergeable aggregator: update_batch /
 # merge / to_bytes with a magic-dispatched serde. That makes the build
-# topology sketch-independent — one partial per partition, tree merge of
-# blobs — so HLL/Bloom/quantile builds reuse the exact machinery (and the
+# topology sketch-independent — one partial per partition, the merge
+# planner over blobs — so HLL/Bloom/quantile builds reuse the exact machinery (and the
 # byte-level merge semantics) proven for Count-Min.
 
 
@@ -1089,21 +1160,18 @@ def build_aggregator(df: DataFrame, values_col: str, factory, *,
     """
     t0 = time.perf_counter()
     src = df.select(values_col).filter(F.col(values_col).isNotNull())
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
     partials = src.mapInArrow(
         _agg_partial_builder(factory, values_col, extract),
-        schema=_PARTIAL_SCHEMA).persist()
-    try:
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-    finally:
-        partials.unpersist()
-    if sketch is None:
-        sketch = factory()
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+        schema=_PARTIAL_SCHEMA)
+    return _merge(partials, partials.rdd.getNumPartitions(),
+                  _blob_bytes(factory), fanout, factory, t0)
+
+
+def _blob_bytes(factory) -> int:
+    """Planner size of one partial: the empty sketch's nbytes(). Exact
+    for fixed-size sketches (CM, HLL, Bloom, Count-Sketch); a floor for
+    bounded-growth ones (theta, MG, KLL), whose partials stay KB-scale."""
+    return int(factory().nbytes())
 
 
 def _string_flat_lens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -1166,7 +1234,7 @@ def build_aggregator_pairs(df: DataFrame, key_col: str, weight_col: str,
                            fanout: int | None = None) -> BuildResult:
     """Distributed build of a weighted-ITEM sketch (e.g. PrioritySample)
     over (key, weight[, payload]) columns — the two-column counterpart of
-    build_aggregator, same partial schema, same √n tree merge, same
+    build_aggregator, same partial schema, same merge planner, same
     lineage. Rows with NULL or non-positive weight are excluded at the
     scan (they contribute nothing to any subset sum); a NULL payload maps
     to the empty-string group — the same label rows get when no payload
@@ -1180,21 +1248,11 @@ def build_aggregator_pairs(df: DataFrame, key_col: str, weight_col: str,
                                F.lit("")).alias(payload_col))
     src = (df.select(*cols)
            .filter(F.col(key_col).isNotNull() & (F.col(weight_col) > 0)))
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
     partials = src.mapInArrow(
         _pairs_partial_builder(factory, key_col, weight_col, payload_col),
-        schema=_PARTIAL_SCHEMA).persist()
-    try:
-        lineage = partials.select(*lineage_cols).toPandas()
-        sketch = _tree_merge(partials, fanout, len(lineage))
-    finally:
-        partials.unpersist()
-    if sketch is None:
-        sketch = factory()
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+        schema=_PARTIAL_SCHEMA)
+    return _merge(partials, partials.rdd.getNumPartitions(),
+                  _blob_bytes(factory), fanout, factory, t0)
 
 
 def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
@@ -1249,17 +1307,9 @@ def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
                     sk.update_flat(kflat, klens, w)
                 rows[g] += e - s
         if sketches:
-            ordered = sorted(sketches)
-            yield pa.RecordBatch.from_pydict({
-                "key": ordered,
-                "pid": [pid] * len(ordered),
-                "sketch": [serde.dumps_partial(sketches[k])
-                           for k in ordered],
-                "n_rows": [rows[k] for k in ordered],
-                "n_items": [sketches[k].n_items for k in ordered],
-                "total_count": [getattr(sketches[k], "total_count", 0)
-                                for k in ordered],
-            }, schema=_GROUPED_PARTIAL_PA_SCHEMA)
+            yield pa.RecordBatch.from_pydict(
+                _grouped_rows(pid, sketches, rows),
+                schema=_GROUPED_PARTIAL_PA_SCHEMA)
 
     src = (df.select(*cols)
            .filter(F.col("key").isNotNull() & F.col("_ik").isNotNull()
@@ -1332,32 +1382,11 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
     Checkpoint/resume stays on the CM-specific build_sketch_parquet.
     """
     t0 = time.perf_counter()
-    rgs = _list_row_groups(path, files=files)
-    if n_slices is None:
-        n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows = _slice_assignments(rgs, n_slices)
-    lineage_cols = ["pid", "n_rows", "n_items", "total_count", "build_ms"]
-    if rows:
-        assign = _assign_df(
-            spark, rows, "slice_id int, file string, rgs array<int>")
-        partials = assign.mapInPandas(
-            _parquet_agg_partial_builder(factory, values_col,
-                                         extract_array),
-            schema=_PARTIAL_SCHEMA).persist()
-        try:
-            lineage = partials.select(*lineage_cols).toPandas()
-            sketch = _tree_merge(partials, fanout, len(lineage))
-        finally:
-            partials.unpersist()
-    else:
-        lineage = pd.DataFrame(columns=lineage_cols)
-        sketch = None
-    if sketch is None:
-        sketch = factory()
-    wall = time.perf_counter() - t0
-    lineage = lineage.sort_values("pid").reset_index(drop=True)
-    return BuildResult(sketch=sketch, lineage=lineage,
-                       n_rows=int(lineage["n_rows"].sum()), wall_s=wall)
+    rgs = _list_row_groups(path, files=files, column=values_col)
+    return _build_slices(
+        spark, rgs, n_slices,
+        _parquet_agg_partial_builder(factory, values_col, extract_array),
+        _blob_bytes(factory), fanout, factory, t0)
 
 
 def build_grouped_aggregator(df: DataFrame, key_col: str, values_col: str,
@@ -1380,15 +1409,9 @@ def build_grouped_aggregator(df: DataFrame, key_col: str, values_col: str,
                 col = col.combine_chunks()
             _ingest_grouped(sketches, rows, keys, col, factory, False)
         if sketches:
-            ordered = sorted(sketches, key=lambda k: (k is not None, k))
-            yield pa.RecordBatch.from_pydict({
-                "key": ordered,
-                "pid": [pid] * len(ordered),
-                "sketch": [serde.dumps_partial(sketches[k]) for k in ordered],
-                "n_rows": [rows[k] for k in ordered],
-                "n_items": [sketches[k].n_items for k in ordered],
-                "total_count": [getattr(sketches[k], "total_count", 0) for k in ordered],
-            }, schema=_GROUPED_PARTIAL_PA_SCHEMA)
+            yield pa.RecordBatch.from_pydict(
+                _grouped_rows(pid, sketches, rows),
+                schema=_GROUPED_PARTIAL_PA_SCHEMA)
 
     src = (df.select(F.col(key_col).alias("key"), F.col(values_col))
              .filter(F.col(values_col).isNotNull()))
@@ -1420,43 +1443,27 @@ def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,
         n_slices = _default_n_slices(spark, len(rgs))
     n_slices, rows_assign = _slice_assignments(rgs, n_slices)
 
-    def partial_fn(pdf_iter):
-        by_slice: dict[int, list[tuple[str, list[int]]]] = {}
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                by_slice.setdefault(int(row["slice_id"]), []).append(
-                    (row["file"], [int(r) for r in row["rgs"]]))
-        for slice_id in sorted(by_slice):
-            sketches: dict[str, object] = {}
-            rows: dict[str, int] = {}
-            for file, rgl in by_slice[slice_id]:
-                pf = _pq_file(file)
-                for rg in rgl:
-                    tbl = pf.read_row_group(rg, columns=[key_col, tokens_col],
-                                            use_threads=False)
-                    keys = tbl.column(0).to_numpy(zero_copy_only=False)
-                    vcol = tbl.column(1)
-                    if isinstance(vcol, pa.ChunkedArray):
-                        vcol = vcol.combine_chunks()
-                    _ingest_grouped(sketches, rows, keys, vcol, factory, cu)
-            if sketches:
-                ordered = sorted(sketches, key=lambda k: (k is not None, k))
-                yield pd.DataFrame({
-                    "key": ordered,
-                    "pid": [slice_id] * len(ordered),
-                    "sketch": [serde.dumps_partial(sketches[k]) for k in ordered],
-                    "n_rows": [rows[k] for k in ordered],
-                    "n_items": [sketches[k].n_items for k in ordered],
-                    "total_count": [getattr(sketches[k], "total_count", 0)
-                                    for k in ordered],
-                })
+    def one_slice(slice_id, parts):
+        sketches: dict[str, object] = {}
+        rows: dict[str, int] = {}
+        for file, rgl in parts:
+            pf = _pq_file(file)
+            for rg in rgl:
+                tbl = pf.read_row_group(rg, columns=[key_col, tokens_col],
+                                        use_threads=False)
+                keys = tbl.column(0).to_numpy(zero_copy_only=False)
+                vcol = tbl.column(1)
+                if isinstance(vcol, pa.ChunkedArray):
+                    vcol = vcol.combine_chunks()
+                _ingest_grouped(sketches, rows, keys, vcol, factory, cu)
+        if sketches:
+            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
 
     if not rows_assign:
         # empty table: zero groups, an empty grouped frame
         return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
-    assign = _assign_df(
-        spark, rows_assign, "slice_id int, file string, rgs array<int>")
-    partials = assign.mapInPandas(partial_fn, schema=_GROUPED_PARTIAL_SCHEMA)
+    partials = _assign_slices(spark, rows_assign).mapInPandas(
+        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
     return _grouped_merge(partials, fanout, n_slices)
 
 
@@ -1505,61 +1512,41 @@ def build_per_file_parquet(spark: SparkSession, path: str,
         n_slices = _default_n_slices(spark, len(rgs))
     n_slices, rows_assign = _slice_assignments(rgs, n_slices)
 
-    def partial_fn(pdf_iter):
-        by_slice: dict[int, list[tuple[str, list[int]]]] = {}
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                by_slice.setdefault(int(row["slice_id"]), []).append(
-                    (row["file"], [int(r) for r in row["rgs"]]))
-        for slice_id in sorted(by_slice):
-            sketches: dict[str, object] = {}
-            rows: dict[str, int] = {}
-            for file, rgl in by_slice[slice_id]:
-                key = os.path.relpath(os.path.abspath(file), root)
-                sk = sketches.get(key)
-                if sk is None:
-                    sk = sketches[key] = factory()
-                    rows[key] = 0
-                pf = _pq_file(file)
-                for rg in rgl:
-                    tbl = pf.read_row_group(rg, columns=[tokens_col],
-                                            use_threads=False)
-                    vcol = tbl.column(0)
-                    if isinstance(vcol, pa.ChunkedArray):
-                        vcol = vcol.combine_chunks()
-                    if transform is not None:
-                        flat = transform(vcol)
-                    elif pa.types.is_list(vcol.type) \
-                            or pa.types.is_large_list(vcol.type):
-                        # flatten() drops NULL list slots — a null row
-                        # contributes nothing, which is what a
-                        # whole-file fold wants
-                        flat = vcol.flatten().to_numpy(
-                            zero_copy_only=False)
-                    else:
-                        flat = pc.drop_null(vcol).to_numpy(
-                            zero_copy_only=False)
-                    (sk.update_batch_cu if cu
-                     else sk.update_batch)(flat)
-                    rows[key] += tbl.num_rows
-            if sketches:
-                ordered = sorted(sketches)
-                yield pd.DataFrame({
-                    "key": ordered,
-                    "pid": [slice_id] * len(ordered),
-                    "sketch": [serde.dumps_partial(sketches[k])
-                               for k in ordered],
-                    "n_rows": [rows[k] for k in ordered],
-                    "n_items": [sketches[k].n_items for k in ordered],
-                    "total_count": [getattr(sketches[k], "total_count",
-                                            0) for k in ordered],
-                })
+    def one_slice(slice_id, parts):
+        sketches: dict[str, object] = {}
+        rows: dict[str, int] = {}
+        for file, rgl in parts:
+            key = os.path.relpath(os.path.abspath(file), root)
+            sk = sketches.get(key)
+            if sk is None:
+                sk = sketches[key] = factory()
+                rows[key] = 0
+            pf = _pq_file(file)
+            for rg in rgl:
+                tbl = pf.read_row_group(rg, columns=[tokens_col],
+                                        use_threads=False)
+                vcol = tbl.column(0)
+                if isinstance(vcol, pa.ChunkedArray):
+                    vcol = vcol.combine_chunks()
+                if transform is not None:
+                    flat = transform(vcol)
+                elif pa.types.is_list(vcol.type) \
+                        or pa.types.is_large_list(vcol.type):
+                    # flatten() drops NULL list slots — a null row
+                    # contributes nothing, which is what a whole-file
+                    # fold wants
+                    flat = vcol.flatten().to_numpy(zero_copy_only=False)
+                else:
+                    flat = pc.drop_null(vcol).to_numpy(zero_copy_only=False)
+                (sk.update_batch_cu if cu else sk.update_batch)(flat)
+                rows[key] += tbl.num_rows
+        if sketches:
+            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
 
     if not rows_assign:
         return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
-    assign = _assign_df(
-        spark, rows_assign, "slice_id int, file string, rgs array<int>")
-    partials = assign.mapInPandas(partial_fn, schema=_GROUPED_PARTIAL_SCHEMA)
+    partials = _assign_slices(spark, rows_assign).mapInPandas(
+        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
     return _grouped_merge(partials, fanout, n_slices)
 
 

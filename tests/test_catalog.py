@@ -1311,6 +1311,27 @@ def test_fresh_answers_run_no_spark_job(spark, table, tmp_path):
     assert answers[4].value is True
 
 
+def test_small_delta_fold_runs_no_spark_job(spark, table, tmp_path):
+    """An ``auto`` answer over a 10-row delta folds it in the driver
+    process (the merge planner's in-process path): the fold, publish and
+    answer start no Spark job, and the answer covers the delta."""
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register(table, "tokens", ["cm", "theta", "mg", "bloom"])
+    _write_part(tmp_path, 1, rows=10, seed=12)
+    exact = _exact_counts(spark, table)
+    key = next(iter(exact))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("small-delta-fold", "auto answer over a 10-row delta")
+    try:
+        a = cat.frequency(table, "tokens", key)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("small-delta-fold") == []
+    assert a.refreshed and a.stale_files == 0 and a.covered_rows == 810
+    assert a.value >= exact[key]
+
+
 def test_fold_never_alters_an_answer_already_read(spark, tmp_path):
     """A delta fold merges into the sketch it loads; the reads that came
     before it — Python verb, SQL function, and the store object a caller

@@ -92,16 +92,15 @@ def test_tree_merge_exchange_carries_only_blobs(spark, token_table_path):
     proportional to input tokens."""
     import math
     from sketchlib.countmin import CMConfig
-    from sketchlib.spark_build import (_merge_pdf, _partial_builder,
-                                       _MERGED_SCHEMA, _PARTIAL_SCHEMA)
+    from sketchlib.spark_build import (_partial_builder, _shuffle_tree,
+                                       _PARTIAL_SCHEMA)
 
     cfg = CMConfig(eps=1e-2, delta=math.exp(-3), seed=1337)
     src = spark.read.parquet(token_table_path).select("tokens")
     partials = src.mapInArrow(
         _partial_builder(cfg, "tokens", cu=False), schema=_PARTIAL_SCHEMA)
-    merged = (partials
-              .groupBy(F.pmod(F.col("pid"), F.lit(4)).alias("bucket"))
-              .applyInPandas(lambda pdf: _merge_pdf(pdf), schema=_MERGED_SCHEMA))
+    # the tree large builds run: fanout 4 over up to 16 partials is one stage
+    merged = _shuffle_tree(partials, 4, 16)
     p = plan_str(merged)
     assert "hashpartitioning(bucket" in p, p
     # exactly one exchange in the whole job: the blob shuffle of the merge

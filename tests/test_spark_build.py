@@ -1,8 +1,9 @@
 """Spark E2E: distributed sketch build vs exact counts (SURVEY.md §5 item 4).
 
-Covers: mapInArrow partial build, two-level merge byte-identity across
-partitionings, grouped (per-source) build, checkpoint/resume, and the
-broadcast point-query UDF.
+Covers: mapInArrow partial build, merge byte-identity across
+partitionings and across the merge planner's paths (in-process, driver
+fold, 2- and 3-level shuffle trees), Spark job counts, grouped
+(per-source) build, checkpoint/resume, and the broadcast point-query UDF.
 """
 
 import math
@@ -478,3 +479,135 @@ def test_build_per_file_parquet_matches_single_file_builds(spark, tmp_path):
         files=[os.path.join(data, "b.parquet")]).collect()
     assert [r["key"] for r in only_b] == ["b.parquet"]
     assert bytes(only_b[0]["sketch"]) == bytes(out["b.parquet"]["sketch"])
+
+
+def _run_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs it started)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"{group}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_build_runs_one_spark_job(spark, multi_rg_path):
+    """The merge planner's driver fold: one job collects every partial
+    with its lineage, and the driver folds the blobs (no persist, no
+    separate lineage collect, no merge shuffle)."""
+    import pyarrow.parquet as pq
+    from sketchlib.spark_build import build_sketch_parquet
+
+    res, jobs = _run_jobs(spark, "one-job-build", lambda: build_sketch_parquet(
+        spark, multi_rg_path, "tokens", CFG))
+    assert jobs == 1
+    ref = CountMinSketch(CFG)
+    ref.update_batch(pq.read_table(multi_rg_path, columns=["tokens"])
+                     .column(0).combine_chunks().flatten().to_numpy())
+    assert res.sketch.to_bytes() == ref.to_bytes()
+    assert len(res.lineage) > 1 and res.n_rows == 30_000
+
+
+@pytest.fixture(scope="module")
+def small_vocab_path(tmp_path_factory):
+    """Eight row groups of Zipf-skewed list<int32> tokens over 600 keys.
+    Fewer keys than the catalog MG's k=1024, so no MG update or merge
+    ever shrinks and its merges are additions like the other kinds'."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rng = np.random.default_rng(5)
+    lens = rng.integers(1, 60, 800)
+    vals = (rng.zipf(1.3, int(lens.sum())) % 600).astype(np.int32)
+    offsets = pa.array(np.r_[0, np.cumsum(lens)].astype(np.int32))
+    path = str(tmp_path_factory.mktemp("vocab") / "t.parquet")
+    pq.write_table(pa.table({"tokens": pa.ListArray.from_arrays(
+        offsets, pa.array(vals))}), path, row_group_size=100)
+    return path
+
+
+@pytest.mark.parametrize("kind", ["cm", "catalog_multi"])
+def test_merge_planner_paths_byte_identical(spark, small_vocab_path,
+                                            monkeypatch, tmp_path, kind):
+    """One table built four ways — in-process, driver fold, a 2-level
+    shuffle tree (one stage + the driver) and a 3-level one (two stages)
+    — gives byte-identical sketches and lineage of one shape, which an
+    empty build shares."""
+    from sketchlib import spark_build as sb
+    from sketchlib.catalog import _factory_from_spec, _normalize_kinds
+
+    if kind == "cm":
+        def build(path, fanout=None):
+            return sb.build_sketch_parquet(spark, path, "tokens", CFG,
+                                           n_slices=8, fanout=fanout)
+    else:
+        fac = _factory_from_spec({"kinds": _normalize_kinds(
+            ["cm", "theta", "mg", "bloom"])})
+
+        def build(path, fanout=None):
+            return sb.build_aggregator_parquet(spark, path, "tokens", fac,
+                                               n_slices=8, fanout=fanout)
+
+    stages = []
+    real_tree = sb._shuffle_tree
+
+    def counting_tree(partials, fanout, n_partials):
+        out = real_tree(partials, fanout, n_partials)
+        stages.append(str(out._jdf.queryExecution().analyzed())
+                      .count("FlatMapGroupsInPandas"))
+        return out
+
+    monkeypatch.setattr(sb, "_shuffle_tree", counting_tree)
+    local, jobs = _run_jobs(spark, "in-process", lambda: build(
+        small_vocab_path))
+    assert jobs == 0
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    driver, jobs = _run_jobs(spark, "driver-fold", lambda: build(
+        small_vocab_path))
+    assert jobs == 1 and stages == []
+    monkeypatch.setattr(sb, "_DRIVER_FOLD_MAX_BYTES", -1)
+    two = build(small_vocab_path, fanout=3)      # 8 partials <= 3^2
+    three = build(small_vocab_path, fanout=2)    # 8 partials > 2^2
+    assert stages == [1, 2]
+
+    want = local.sketch.to_bytes()
+    for res in (driver, two, three):
+        assert res.sketch.to_bytes() == want
+        assert res.n_rows == 800
+        pd_cols = ["pid", "n_rows", "n_items", "total_count"]
+        assert res.lineage[pd_cols].equals(local.lineage[pd_cols])
+    assert list(local.lineage["pid"]) == list(range(8))
+
+    (tmp_path / "empty").mkdir()
+    empty = build(str(tmp_path / "empty"))
+    assert empty.n_rows == 0 and len(empty.lineage) == 0
+    shape = list(local.lineage.dtypes.items())
+    for res in (driver, two, three, empty):
+        assert list(res.lineage.dtypes.items()) == shape
+
+
+def test_order_sensitive_merges_fold_in_pid_order(spark, small_vocab_path,
+                                                  monkeypatch):
+    """Misra-Gries merges depend on order once they shrink (k=8 here). The
+    in-process path and the driver fold fold the same slice partials in
+    pid order, so they agree byte for byte, and a tree build repeats
+    itself exactly."""
+    import functools
+
+    from sketchlib import spark_build as sb
+    from sketchlib.mg import MisraGries
+
+    fac = functools.partial(MisraGries, 8)
+
+    def build(fanout=None):
+        return sb.build_aggregator_parquet(
+            spark, small_vocab_path, "tokens", fac, n_slices=8,
+            fanout=fanout).sketch.to_bytes()
+
+    local = build()
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    assert build() == local
+    monkeypatch.setattr(sb, "_DRIVER_FOLD_MAX_BYTES", -1)
+    assert build(fanout=2) == build(fanout=2)
