@@ -34,7 +34,7 @@ SparkSession, which that layer never needs. Winners are sha-verified
 before deserialization, and reads are memoized on a listing fingerprint
 of the store tables, so repeated calls against an unchanged store never
 re-read parquet while any publish (new epoch, compaction) is seen on the
-next call.
+next call, which opens only the part files that call has not seen.
 
 No counterpart in the reference — CountMinDB (cm.h) has a 4-method C++
 API and no SQL; this is north-star engine surface over the store/catalog

@@ -81,7 +81,10 @@ def _current_files(table_path: str) -> dict[str, int]:
     scans (hive-partitioned layouts refused there)."""
     if not os.path.isdir(table_path):
         return {os.path.basename(table_path): os.path.getsize(table_path)}
-    return {os.path.relpath(f, table_path): os.path.getsize(f)
+    # every walked path starts with table_path: slicing the prefix off
+    # equals os.path.relpath, which abspath-es both sides per file
+    n = len(os.path.join(table_path, ""))
+    return {f[n:]: os.path.getsize(f)
             for f in walk_parquet_files(table_path)}
 
 

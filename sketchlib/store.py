@@ -36,14 +36,35 @@ job):
   the old part set or the new one, never a torn part; a failed append
   removes its ``.tmp``.
 
-Reads are memoized per (table, query) on a listing fingerprint of the
-table directory (path, size, mtime of every file), so any publish or
-compaction invalidates them. The memo holds bytes and strings only:
-every caller deserializes its own sketch, so a caller that merges into
-what it loaded can never alter another caller's answer. Only "table does
-not exist" reads as empty — any other read failure (permissions, corrupt
-footer, transient FS error) surfaces, never mistaken for an empty store
-(streaming._late_merge_store's replay guard relies on this).
+Every read lists its table directory: (path, size, mtime) of every
+file. Two memos hang off that listing, both in one byte-budgeted FIFO
+(``_MEMO``, ``_MEMO_BYTES``):
+
+- the per-part KEY INDEX (``_key_index``): per part and row group, the
+  name and seq bounds from the footer statistics, and the key columns —
+  (name, seq, sha256) in ``sketches/``, (name, seq, file, file_size)
+  in ``ingested/`` — as plain tuples, decoded the first time a read's
+  bounds admit that row group. Parts are write-once, so what a read
+  learns of a part is kept per listing entry: a read after a publish
+  opens only the new part, a cold one-name read of a many-row-group
+  part (a compacted fleet) decodes one row group, and winners are
+  picked from the index. An entry whose path, size or mtime changed is
+  read again, and entries of parts gone from the listing (after
+  ``compact_store``) are dropped. It is charged at its CPython object
+  sizes; an index over the budget is not kept, so the next read starts
+  cold. Payloads (``blob``, ``meta_json``) never enter the index:
+  winners' row groups are read from disk and sha-verified on every
+  memo miss;
+- the per-(table, query) ANSWER, valid while the listing is unchanged,
+  so any publish or compaction invalidates it. It holds bytes and
+  strings only: every caller deserializes its own sketch, so a caller
+  that merges into what it loaded can never alter another caller's
+  answer.
+
+Only "table does not exist" reads as empty — any other read failure
+(permissions, corrupt footer, transient FS error) surfaces, never
+mistaken for an empty store (streaming._late_merge_store's replay guard
+relies on this).
 
 Filesystems: a store path resolves through
 ``pyarrow.fs.FileSystem.from_uri`` (plain paths are local). Local stores
@@ -67,6 +88,7 @@ import contextlib
 import hashlib
 import json
 import os
+import sys
 import threading
 import uuid
 from collections import namedtuple
@@ -157,18 +179,102 @@ def _listing(fs: pafs.FileSystem, d: str) -> tuple | None:
 
 
 # (store, table, query) -> (listing, value, bytes), FIFO-evicted to a
-# total size
+# total size; a table's key index (see _key_index) is one more entry
 _MEMO: dict[tuple, tuple] = {}
 _MEMO_BYTES = 256 << 20
 _MEMO_LOCK = threading.Lock()
 
 
-def _memo_read(path: str, table: str, query: tuple, read):
-    """``read(fs, parts) -> (value, nbytes)`` over the part files of the
-    store table ``path/table``, memoized on the table's listing; None
-    (``read`` not called) when the table does not exist. Dot- and
-    underscore-prefixed files (temp files, Spark markers and checksums)
-    are not parts."""
+def _memo_put(key: tuple, listing: tuple, value, nbytes: int) -> None:
+    """Memoize ``value`` under ``key``, evicting the oldest entries to
+    stay within ``_MEMO_BYTES``. A value over the budget is not kept: it
+    drops what ``key`` held (a key index grows in place) and evicts
+    nothing else."""
+    with _MEMO_LOCK:
+        _MEMO.pop(key, None)
+        if nbytes > _MEMO_BYTES:
+            return
+        total = sum(v[2] for v in _MEMO.values())
+        while _MEMO and total + nbytes > _MEMO_BYTES:
+            total -= _MEMO.pop(next(iter(_MEMO)))[2]
+        _MEMO[key] = (listing, value, nbytes)
+
+
+def _sizeof(t: tuple) -> int:
+    """CPython bytes of the tuple ``t`` and of its items (objects shared
+    with others, such as small ints, are charged too)."""
+    return sys.getsizeof(t) + sum(map(sys.getsizeof, t))
+
+
+def _part_keys(fs: pafs.FileSystem, part: str, columns: tuple,
+               groups: tuple | None, sel) -> tuple:
+    """The key index entry of one part file once ``sel`` has read it: per
+    row group ``(rg, name min, name max, seq min, seq max, rows, bytes)``.
+    The bounds come from the footer statistics (None when missing);
+    ``rows`` are the tuples of ``columns`` (name and seq first) as plain
+    Python values, decoded the first time a selection's bounds admit the
+    row group and None until then; ``bytes`` is what the group holds.
+    ``groups`` is the entry so far (None: footer not read yet). One open
+    reads the footer if needed and every row group ``sel`` newly
+    admits."""
+    with fs.open_input_file(part) as f:
+        pf = pq.ParquetFile(f)
+        if groups is None:
+            md = pf.metadata
+            col = {md.schema.column(i).name: i
+                   for i in range(md.num_columns)}
+
+            def bounds(rg, c):
+                st = md.row_group(rg).column(col[c]).statistics
+                return ((st.min, st.max) if st is not None
+                        and st.has_min_max else (None, None))
+
+            groups = tuple(
+                g + (None, _sizeof(g + (None, 0))) for g in (
+                    (rg, *bounds(rg, "name"), *bounds(rg, "seq"))
+                    for rg in range(md.num_row_groups)
+                    if md.row_group(rg).num_rows))
+        out = []
+        for g in groups:
+            if g[5] is None and sel.group(*g[1:5]):
+                t = pf.read_row_group(g[0], columns=list(columns),
+                                      use_threads=False)
+                cols = [t.column(c).to_pylist() for c in columns]
+                rows = tuple(zip(*cols))
+                g = g[:5] + (rows, g[6] + sys.getsizeof(rows)
+                             + len(rows) * sys.getsizeof(rows[0])
+                             + sum(sum(map(sys.getsizeof, c)) for c in cols))
+            out.append(g)
+    return tuple(out)
+
+
+def _key_index(path: str, table: str, listing: tuple,
+               columns: tuple) -> dict:
+    """{listing entry: row groups or None} of every part of the table
+    ``path/table`` (see ``_part_keys``; None: not opened yet). Parts are
+    write-once (uuid names, atomic rename; compaction writes a new path),
+    so what a read learns of a part — its footer bounds, the key rows of
+    the row groups it reached — is kept per listing entry (path, size,
+    mtime) and reused by every later read: a read opens only the parts
+    that are new since the last one, and the row groups no read has
+    reached yet. Entries of parts gone from the listing are dropped.
+    Payload columns never enter the index. Dot- and underscore-prefixed
+    files (temp files, Spark markers and checksums) are not parts."""
+    with _MEMO_LOCK:
+        hit = _MEMO.get((path, table, ("keys", columns)))
+    old = {} if hit is None else hit[1]
+    if hit is not None and hit[0] == listing:
+        return old
+    return {e: old.get(e) for e in listing
+            if not e[0].rsplit("/", 1)[-1].startswith((".", "_"))}
+
+
+def _memo_read(path: str, table: str, query: tuple, columns: tuple, read):
+    """``read(fs, keys) -> (value, nbytes)`` over the store table
+    ``path/table``, ``keys`` its key index of ``columns``
+    (``_key_index``), memoized on the table's listing; None (``read`` not
+    called) when the table does not exist. The index is charged again
+    after each read, since a read can decode more of it."""
     fs, d = _fs(f"{path}/{table}")
     listing = _listing(fs, d)
     if listing is None:
@@ -178,16 +284,13 @@ def _memo_read(path: str, table: str, query: tuple, read):
         hit = _MEMO.get(key)
     if hit is not None and hit[0] == listing:
         return hit[1]
-    parts = [p for p, _, _ in listing
-             if not p.rsplit("/", 1)[-1].startswith((".", "_"))]
-    value, nbytes = read(fs, parts)
-    with _MEMO_LOCK:
-        _MEMO.pop(key, None)
-        total = sum(v[2] for v in _MEMO.values())
-        while _MEMO and total + nbytes > _MEMO_BYTES:
-            total -= _MEMO.pop(next(iter(_MEMO)))[2]
-        if nbytes <= _MEMO_BYTES:
-            _MEMO[key] = (listing, value, nbytes)
+    keys = _key_index(path, table, listing, columns)
+    value, nbytes = read(fs, keys)
+    _memo_put(key, listing, value, nbytes)
+    _memo_put((path, table, ("keys", columns)), listing, keys,
+              sys.getsizeof(keys) + sum(
+                  sys.getsizeof(groups) + sum(g[6] for g in groups)
+                  for groups in keys.values() if groups is not None))
     return value
 
 
@@ -203,23 +306,19 @@ class _Select(namedtuple("_Select", "names lo hi min_seq max_seq")):
                 and (self.min_seq is None or seq >= self.min_seq)
                 and (self.max_seq is None or seq <= self.max_seq))
 
-    def group(self, name_stats, seq_stats) -> bool:
-        """Whether a row group with these min/max statistics can hold a
-        wanted row (True when statistics are missing)."""
-        if name_stats is not None and name_stats.has_min_max:
-            lo, hi = name_stats.min, name_stats.max
+    def group(self, name_min, name_max, seq_min, seq_max) -> bool:
+        """Whether a row group with these name and seq bounds can hold a
+        wanted row (None bounds are unknown and admit)."""
+        if name_min is not None:
             if self.names is not None and not any(
-                    lo <= n <= hi for n in self.names):
+                    name_min <= n <= name_max for n in self.names):
                 return False
-            if (self.lo is not None and hi <= self.lo) or (
-                    self.hi is not None and lo >= self.hi):
+            if (self.lo is not None and name_max <= self.lo) or (
+                    self.hi is not None and name_min >= self.hi):
                 return False
-        if seq_stats is not None and seq_stats.has_min_max:
-            if (self.min_seq is not None and seq_stats.max < self.min_seq
-                    or self.max_seq is not None
-                    and seq_stats.min > self.max_seq):
-                return False
-        return True
+        return seq_min is None or not (
+            self.min_seq is not None and seq_max < self.min_seq
+            or self.max_seq is not None and seq_min > self.max_seq)
 
 
 def _read_part(fs: pafs.FileSystem, part: str, rg: int | None = None,
@@ -231,23 +330,20 @@ def _read_part(fs: pafs.FileSystem, part: str, rg: int | None = None,
                 pf.read_row_group(rg, columns=columns, use_threads=False))
 
 
-def _scan(fs: pafs.FileSystem, parts: list[str], sel: _Select,
-          columns: list[str]):
-    """(part, row group, table of ``columns``) for every row group whose
-    statistics admit ``sel`` — parquet footers prune, the caller filters
-    rows with ``sel.row``."""
-    for part in parts:
-        with fs.open_input_file(part) as f:
-            pf = pq.ParquetFile(f)
-            md = pf.metadata
-            col = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}
-            for rg in range(md.num_row_groups):
-                meta = md.row_group(rg)
-                if sel.group(meta.column(col["name"]).statistics,
-                             meta.column(col["seq"]).statistics):
-                    yield part, rg, pf.read_row_group(
-                        rg, columns=columns, use_threads=False)
+def _scan(fs: pafs.FileSystem, keys: dict, sel: _Select, columns: tuple):
+    """(part, row group, key rows) of every row group of the key index
+    ``keys`` whose bounds admit ``sel``, with the rows ``sel.row``
+    selects. A part is opened only when it is new to the index or holds
+    an admitted row group whose rows were never decoded; what it reads is
+    kept in ``keys``."""
+    for entry, groups in keys.items():
+        if groups is None or any(g[5] is None and sel.group(*g[1:5])
+                                 for g in groups):
+            groups = keys[entry] = _part_keys(fs, entry[0], columns,
+                                              groups, sel)
+        for rg, name_min, name_max, seq_min, seq_max, rows, _ in groups:
+            if sel.group(name_min, name_max, seq_min, seq_max):
+                yield entry[0], rg, [r for r in rows if sel.row(r[0], r[1])]
 
 
 # one winning sketches/ row; meta_json / blob are None when not read
@@ -295,15 +391,14 @@ def _winner_rows(path: str, *, names=None, prefix: str | None = None,
                   min_seq if seq is None else seq,
                   max_seq if seq is None else seq)
 
-    def read(fs, parts):
+    def read(fs, keys):
         best: dict[str, tuple] = {}     # name -> (Winner, part, row group)
-        for part, rg, t in _scan(fs, parts, sel,
-                                 ["name", "seq", "sha256"]):
-            for n, s, h in zip(*(c.to_pylist() for c in t.columns)):
-                row = Winner(n, s, h, None, None)
-                if sel.row(n, s) and (n not in best or
-                                      _rank(row) > _rank(best[n][0])):
-                    best[n] = (row, part, rg)
+        for part, rg, rows in _scan(fs, keys, sel, columns):
+            for key in rows:
+                row = Winner(*key, None, None)
+                if (row.name not in best
+                        or _rank(row) > _rank(best[row.name][0])):
+                    best[row.name] = (row, part, rg)
         out = {n: w for n, (w, _, _) in best.items()}
         # payload of exactly the row groups holding winners
         where: dict[tuple, set] = {}
@@ -322,24 +417,25 @@ def _winner_rows(path: str, *, names=None, prefix: str | None = None,
         return out, sum(128 + len(n) + len(w.meta_json or "")
                         + len(w.blob or b"") for n, w in out.items())
 
+    columns = ("name", "seq", "sha256")
     query = ("winners", sel, tuple(payload))
-    return dict(_memo_read(path, "sketches", query, read) or {})
+    return dict(_memo_read(path, "sketches", query, columns, read) or {})
 
 
 def _manifest_rows(path: str, name: str) -> tuple:
     """((seq, file, file_size), ...) — every ``ingested/`` manifest row
     of ``name`` in the store at ``path``; () when there is none."""
     sel = _Select(frozenset([name]), None, None, None, None)
+    columns = ("name", "seq", "file", "file_size")
 
-    def read(fs, parts):
-        rows = tuple(
-            (s, f, sz) for _, _, t in _scan(
-                fs, parts, sel, ["name", "seq", "file", "file_size"])
-            for n, s, f, sz in zip(*(c.to_pylist() for c in t.columns))
-            if n == name)
+    def read(fs, keys):
+        rows = tuple((s, f, sz)
+                     for _, _, found in _scan(fs, keys, sel, columns)
+                     for _, s, f, sz in found)
         return rows, sum(64 + len(f) for _, f, _ in rows)
 
-    return _memo_read(path, "ingested", ("manifest", name), read) or ()
+    return _memo_read(path, "ingested", ("manifest", name), columns,
+                      read) or ()
 
 
 def _write_part(fs: pafs.FileSystem, d: str, tbl: pa.Table,
@@ -599,7 +695,9 @@ def compact_store(spark: SparkSession, path: str) -> dict[str, dict]:
 
     Every publish appends a file, so a daily-publish store accumulates
     365 files/year per table — harmless for correctness (loads pick
-    winning rows) but a listing/open cost on every read. Compaction
+    winning rows). Reads open only parts they have not seen (the key
+    index), so the files cost one listing entry each per read and a
+    cold process one open each. Compaction
     rewrites sketches/, lineage/ and ingested/ each into a single
     parquet file, PRESERVING every row: history is a feature
     (snapshot_diff needs old seqs; the manifest's current lineage drives

@@ -624,3 +624,25 @@ def test_concurrent_catalog_auto_policy_race(spark, table, tmp_path):
     assert cat_b.stale_files(data, "tokens") == 0
     again = cat_b.count_distinct(data, "tokens")
     assert not again.refreshed and again.value == a_answer.value
+
+
+def test_current_files_keys_equal_relpath(tmp_path, monkeypatch):
+    """The manifest's relative paths equal os.path.relpath's for a nested
+    directory, a trailing slash, a relative table path and a single-file
+    table."""
+    from sketchlib.incremental import _current_files
+    from sketchlib.spark_build import walk_parquet_files
+
+    root = tmp_path / "t"
+    for rel in ("a.parquet", "sub/b.parquet", "sub/deep/c.parquet"):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_bytes(b"x" * len(rel))
+    monkeypatch.chdir(tmp_path)
+    for table in (str(root), str(root) + "/", "t", "t/", "./t"):
+        got = _current_files(table)
+        assert sorted(got) == ["a.parquet", "sub/b.parquet",
+                               "sub/deep/c.parquet"]
+        assert got == {os.path.relpath(f, table): os.path.getsize(f)
+                       for f in walk_parquet_files(table)}
+        assert got == {k: len(k) for k in got}
+    assert _current_files("t/a.parquet") == {"a.parquet": 9}

@@ -95,7 +95,11 @@ def test_latest_wins_and_seq_pinning(spark, tmp_path):
         load_sketch(spark, store, "nope")
 
 
-def test_corrupt_blob_rejected(spark, tmp_path):
+@pytest.mark.parametrize("read", ["cold", "warm"])
+def test_corrupt_blob_rejected(spark, tmp_path, read):
+    """A blob that no longer hashes to its recorded sha is refused —
+    also when an earlier read of the intact part warmed the key index
+    and the answer memo (``warm``)."""
     import glob
     import os
 
@@ -105,6 +109,8 @@ def test_corrupt_blob_rejected(spark, tmp_path):
     cm = CountMinSketch(CMConfig(eps=1e-2, delta=0.1, seed=1))
     cm.update_batch(np.array([4, 4, 5], dtype=np.int64))
     save_sketch(spark, store, "x", cm)
+    if read == "warm":
+        assert load_sketch(spark, store, "x").to_bytes() == cm.to_bytes()
     # flip bytes in the stored blob by rewriting the parquet with a
     # corrupted copy (simulates storage rot; sha no longer matches)
     import pyarrow.parquet as pq
@@ -211,14 +217,20 @@ def test_compact_store_preserves_everything(spark, tmp_path):
     incremental_build_grouped(spark, data, "source", "tokens", fac,
                               store_path=st, name="g")
 
-    before = {
-        "latest": store.load_sketch(spark, st, "cm").to_bytes(),
-        "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
-        "groups": {g: s.to_bytes() for g, s in
-                   store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(st, "g"),
-        "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
-    }
+    def reads():
+        return {
+            "latest": store.load_sketch(spark, st, "cm").to_bytes(),
+            "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
+            "groups": {g: s.to_bytes() for g, s in
+                       store.load_group_sketches(spark, st, "g").items()},
+            "gstate": _grouped_manifest_state(st, "g"),
+            "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
+            "winners": store._winner_rows(st),
+            "manifests": {n: sorted(store._manifest_rows(st, n))
+                          for n in ("cm", "g")},
+        }
+
+    before = reads()  # also warms the key index of every part
     n_files = len([f for f in os.listdir(st + "/sketches")
                    if f.endswith(".parquet")])
     assert n_files > 1
@@ -228,15 +240,15 @@ def test_compact_store_preserves_everything(spark, tmp_path):
     assert stats["ingested"]["files_after"] == 1
     spark.catalog.clearCache()
 
-    after = {
-        "latest": store.load_sketch(spark, st, "cm").to_bytes(),
-        "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
-        "groups": {g: s.to_bytes() for g, s in
-                   store.load_group_sketches(spark, st, "g").items()},
-        "gstate": _grouped_manifest_state(st, "g"),
-        "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
-    }
-    assert before == after
+    assert reads() == before
+    # the key index holds the compacted parts only, no removed one
+    for table in ("sketches", "ingested"):
+        listed = {p for p, _, _ in store._listing(
+            *store._fs(f"{st}/{table}"))}
+        indexed = {e[0] for k, (_, index, _) in store._MEMO.items()
+                   if k[:2] == (st, table) and k[2][0] == "keys"
+                   for e in index}
+        assert indexed and indexed <= listed
 
     # incremental maintenance keeps working across the compaction
     _part("p2.parquet", 200, 3)
@@ -454,3 +466,108 @@ def test_spark_written_parts_read_identically(spark, tmp_path):
     incremental._append_manifest(path, "m", 1, {"f1": 20})
     assert incremental._manifest_state(path, "m", 0) == (
         1, {"f0": 10, "f1": 20})
+
+
+def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
+    """After a publish, a read opens the new part (for its keys) and the
+    winner's payload part — not every part of the store's history. The
+    same holds for manifest reads of ``ingested/``."""
+    from sketchlib import incremental, store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+
+    path = str(tmp_path / "store")
+    cfg = CMConfig(eps=1e-2, delta=0.1, seed=1)
+
+    def version(i):
+        s = CountMinSketch(cfg)
+        s.update_batch(np.arange(i + 1, dtype=np.int64))
+        return s
+
+    for i in range(20):
+        store.save_sketch(spark, path, "x", version(i))
+        incremental._append_manifest(path, "x", i, {f"f{i}": i})
+    assert store.latest_sketch(spark, path, "x")[0] == 19
+    assert incremental._manifest_state(path, "x", 0)[0] == 19
+
+    opened = []
+    real_open = store.pq.ParquetFile
+
+    def counting_open(*a, **kw):
+        opened.append(1)
+        return real_open(*a, **kw)
+
+    monkeypatch.setattr(store.pq, "ParquetFile", counting_open)
+    store.save_sketch(spark, path, "x", version(20))
+    opened.clear()
+    got = store.latest_sketch(spark, path, "x")
+    assert got[0] == 20 and got[2].to_bytes() == version(20).to_bytes()
+    assert len(opened) == 2  # the new part's keys, then its payload
+
+    incremental._append_manifest(path, "x", 20, {"f20": 20})
+    opened.clear()
+    seq, files = incremental._manifest_state(path, "x", 0)
+    assert seq == 20 and files == {f"f{i}": i for i in range(21)}
+    assert len(opened) == 1
+
+
+def test_read_decodes_only_admitted_row_groups(tmp_path):
+    """In a part of many row groups (a compacted fleet), a one-name read
+    decodes the keys of the row group whose footer bounds admit the name
+    only; another name decodes its own row group once, and a read of
+    every name reaches them all."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib import store
+    from sketchlib.countmin import CMConfig, CountMinSketch
+
+    path = str(tmp_path / "store")
+    os.makedirs(path + "/sketches")
+    sketches = {}
+    for g in range(40):
+        s = CountMinSketch(CMConfig(eps=0.5, delta=0.5, seed=1))
+        s.update_batch(np.array([g], dtype=np.int64))
+        sketches[f"f/{g:03d}"] = s
+    rows = [store._sketch_row(n, 0, s, 1, None) for n, s in sketches.items()]
+    schema = store._arrow_schema(store._SCHEMAS["sketches"])
+    pq.write_table(pa.table([pa.array(c, type=f.type)
+                             for c, f in zip(zip(*rows), schema)],
+                            schema=schema),
+                   path + "/sketches/part-0.parquet", row_group_size=4)
+
+    def decoded():
+        (index,) = [v[1] for k, v in store._MEMO.items()
+                    if k[:2] == (path, "sketches") and k[2][0] == "keys"]
+        (groups,) = index.values()
+        assert len(groups) == 10
+        return [g[0] for g in groups if g[5] is not None]
+
+    def blob(name):
+        return store._winner_rows(path, names=[name])[name].blob
+
+    assert blob("f/007") == sketches["f/007"].to_bytes()
+    assert decoded() == [1]
+    assert blob("f/030") == sketches["f/030"].to_bytes()
+    assert decoded() == [1, 7]
+    got = store._winner_rows(path, prefix="f", payload=())
+    assert sorted(got) == sorted(sketches)
+    assert decoded() == list(range(10))
+
+
+def test_memo_value_over_budget_evicts_nothing(monkeypatch):
+    """A value larger than the whole memo budget is not kept: it drops
+    its own key's old value, and the other entries stay."""
+    from sketchlib import store
+
+    monkeypatch.setattr(store, "_MEMO", {})
+    monkeypatch.setattr(store, "_MEMO_BYTES", 100)
+    store._memo_put(("a",), (), "a", 60)
+    store._memo_put(("b",), (), "b", 30)
+    store._memo_put(("c",), (), "c", 101)
+    assert list(store._MEMO) == [("a",), ("b",)]
+    store._memo_put(("b",), (), "b2", 101)
+    assert list(store._MEMO) == [("a",)]
+    store._memo_put(("d",), (), "d", 50)
+    assert list(store._MEMO) == [("d",)]
