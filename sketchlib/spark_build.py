@@ -9,6 +9,15 @@ builds one partial sketch per partition from the Arrow value buffer (zero
 per-row Python) and emits one row ``(pid, sketch: binary, lineage
 metrics)``. Raw tokens never shuffle; only partial blobs move.
 
+One partial builder per source; a sketch type is a factory and a feed.
+DataFrame sources run ``_agg_partial_builder`` (mapInArrow), parquet
+row-group slices ``_parquet_agg_partial_builder``, grouped DataFrame
+builds ``_grouped_agg_builder``; each emits the same partial record
+(``_partial_row``). The factory makes an empty sketch; the feed updates
+it from one Arrow batch or column. Count-Min is ``CountMinSketch(cfg)``
+fed by ``update_batch`` (``update_batch_cu`` when ``cu``), as any other
+sketch.
+
 One merge planner (``_merge``) turns partials into the result, picking one
 of three cases from sizes the driver already knows:
 
@@ -40,6 +49,7 @@ partials already exist.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import math
@@ -56,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .countmin import CMConfig, CountMinSketch
 from .hashing import columns_into, tokens_to_u64
-from . import serde
+from . import serde, store
 
 _PARTIAL_SCHEMA = (
     "pid int, sketch binary, n_rows bigint, n_items bigint, "
@@ -121,15 +131,18 @@ def _lineage(partials: pa.Table) -> pd.DataFrame:
             .sort_by("pid").to_pandas())
 
 
-def _flat_tokens(batch: pa.RecordBatch, col_idx: int) -> np.ndarray:
-    """Column -> flat numpy values: list columns are flattened via their
-    offsets (null-aware), scalar columns pass through; stays in C."""
-    col = batch.column(col_idx)
-    if isinstance(col, pa.ChunkedArray):  # defensive; RecordBatch gives Array
-        col = col.combine_chunks()
+def _flat_values(col) -> np.ndarray:
+    """Arrow column -> flat numpy values: list columns are flattened via
+    their offsets (null list slots contribute nothing), scalar columns pass
+    through; a zero-copy view where the buffer allows one."""
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
         col = col.flatten()
     return col.to_numpy(zero_copy_only=False)
+
+
+def _flat_tokens(batch: pa.RecordBatch, col_idx: int) -> np.ndarray:
+    """``_flat_values`` of one batch column: the default ``extract``."""
+    return _flat_values(batch.column(col_idx))
 
 
 def _assign_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -147,37 +160,64 @@ def _assign_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         spark.sparkContext.parallelize(rows, max(1, len(rows))), schema)
 
 
-def _partial_builder(cfg: CMConfig, tokens_col: str, cu: bool,
-                     skip_pids: frozenset[int] | None = None,
-                     preaggregate: bool | None = None):
+def _pid() -> int:
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+def _partial_row(pid: int, sk, n_rows: int, t0: float) -> dict:
+    """THE partial record of every ungrouped builder, as columns:
+    ``build_ms`` is the fold since ``t0``; the blob is ``dumps_partial``
+    (size-adaptive where the sketch has such an encoding)."""
+    ms = (time.perf_counter() - t0) * 1e3
+    return {"pid": [pid], "sketch": [serde.dumps_partial(sk)],
+            "n_rows": [n_rows], "n_items": [sk.n_items],
+            "total_count": [getattr(sk, "total_count", 0)],
+            "build_ms": [ms]}
+
+
+def _update(sk, vals, cu: bool) -> None:
+    (sk.update_batch_cu if cu else sk.update_batch)(vals)
+
+
+def _column_feed(values_col: str, extract=None, cu: bool = False):
+    """Feed of one value column: ``extract(batch, col_idx)`` (default:
+    flatten) into ``update_batch``, or ``update_batch_cu`` when ``cu``."""
+    extract = extract or _flat_tokens
+
+    def feed(sk, batch):
+        _update(sk, extract(batch, batch.schema.get_field_index(values_col)),
+                cu)
+    return feed
+
+
+def _agg_partial_builder(factory, feed, skip_pids=frozenset()):
+    """THE mapInArrow partial builder: one ``factory()`` sketch per
+    partition, ``feed(sketch, batch)`` per Arrow batch, one partial row.
+    Partitions in ``skip_pids`` (checkpointed already) emit nothing. Both
+    callables must be picklable."""
     def fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        if skip_pids and pid in skip_pids:
+        pid = _pid()
+        if pid in skip_pids:
             return
         t0 = time.perf_counter()
-        cm = CountMinSketch(cfg)
+        sk = factory()
         n_rows = 0
-        col_idx = None
         for batch in batches:
-            if col_idx is None:
-                col_idx = batch.schema.get_field_index(tokens_col)
-            toks = _flat_tokens(batch, col_idx)
-            if cu:
-                cm.update_batch_cu(toks)
-            else:
-                cm.update_batch(toks, preaggregate=preaggregate)
+            feed(sk, batch)
             n_rows += batch.num_rows
-        ms = (time.perf_counter() - t0) * 1e3
-        yield pa.RecordBatch.from_pydict({
-            "pid": [pid],
-            "sketch": [cm.to_bytes()],
-            "n_rows": [n_rows],
-            "n_items": [cm.n_items],
-            "total_count": [cm.total_count],
-            "build_ms": [ms],
-        }, schema=_PARTIAL_PA_SCHEMA)
+        yield pa.RecordBatch.from_pydict(_partial_row(pid, sk, n_rows, t0),
+                                         schema=_PARTIAL_PA_SCHEMA)
     return fn
+
+
+def _build_frame(src: DataFrame, factory, feed, fanout: int | None,
+                 t0: float) -> BuildResult:
+    """Partials of ``src`` through the one builder, merged by the planner."""
+    partials = src.mapInArrow(_agg_partial_builder(factory, feed),
+                              schema=_PARTIAL_SCHEMA)
+    return _merge(partials, partials.rdd.getNumPartitions(),
+                  _blob_bytes(factory), fanout, factory, t0)
 
 
 def _fold(pids, blobs):
@@ -247,14 +287,32 @@ def _result(sketch, lineage: pa.Table, empty, t0: float) -> BuildResult:
                        wall_s=time.perf_counter() - t0)
 
 
-def _cm_bytes(cfg: CMConfig) -> int:
-    return cfg.depth * cfg.width * 8
+def _checkpointed(spark: SparkSession, checkpoint_dir: str, n_partials: int,
+                  fresh, blob_bytes: int, fanout: int | None, empty,
+                  t0: float) -> BuildResult:
+    """A resumable build: partials append to ``{checkpoint_dir}/partials``
+    keyed by pid; ``fresh(done)`` is the DataFrame of the partials whose
+    pid is not in ``done``, built only when a pid of range(n_partials) is
+    missing; then every partial there is merged. The done pids are read
+    with the partial schema given: a missing directory means none is done,
+    one holding only an uncommitted ``_temporary/`` reads as 0 rows, and
+    any other read failure raises, rather than rebuilding every partition
+    and appending it beside partials that exist."""
+    path = checkpoint_dir.rstrip("/") + "/partials"
+    prior = store.read_table(spark, path, schema=_PARTIAL_SCHEMA)
+    done = frozenset() if prior is None else frozenset(
+        r["pid"] for r in prior.select("pid").collect())
+    if any(p not in done for p in range(n_partials)):
+        fresh(done).write.mode("append").parquet(path)
+    partials = store.read_table(spark, path, schema=_PARTIAL_SCHEMA)
+    if partials is None:
+        return BuildResult.empty(empty(), time.perf_counter() - t0)
+    return _merge(partials, n_partials, blob_bytes, fanout, empty, t0)
 
 
 def build_sketch(df: DataFrame, tokens_col: str, cfg: CMConfig, *,
                  cu: bool = False, fanout: int | None = None,
-                 checkpoint_dir: str | None = None,
-                 preaggregate: bool | None = None) -> BuildResult:
+                 checkpoint_dir: str | None = None) -> BuildResult:
     """Build one Count-Min sketch over every token in ``df[tokens_col]``.
 
     ``cu`` selects the conservative-update variant per partition (partials
@@ -272,30 +330,23 @@ def build_sketch(df: DataFrame, tokens_col: str, cfg: CMConfig, *,
     """
     t0 = time.perf_counter()
     src = df.select(tokens_col).filter(F.col(tokens_col).isNotNull())
-    empty = lambda: CountMinSketch(cfg)  # noqa: E731
-
+    factory = functools.partial(CountMinSketch, cfg)
+    feed = _column_feed(tokens_col, cu=cu)
     if checkpoint_dir is None:
-        partials = src.mapInArrow(
-            _partial_builder(cfg, tokens_col, cu, preaggregate=preaggregate),
-            schema=_PARTIAL_SCHEMA)
-        return _merge(partials, partials.rdd.getNumPartitions(),
-                      _cm_bytes(cfg), fanout, empty, t0)
-    spark = df.sparkSession
-    path = checkpoint_dir.rstrip("/") + "/partials"
-    try:
-        done = frozenset(
-            r["pid"] for r in spark.read.parquet(path).select("pid").collect())
-    except Exception:
-        done = frozenset()
-    n_parts = src.rdd.getNumPartitions()
-    if any(p not in done for p in range(n_parts)):
-        fresh = src.mapInArrow(
-            _partial_builder(cfg, tokens_col, cu, skip_pids=done,
-                             preaggregate=preaggregate),
-            schema=_PARTIAL_SCHEMA)
-        fresh.write.mode("append").parquet(path)
-    return _merge(spark.read.parquet(path), n_parts, _cm_bytes(cfg),
-                  fanout, empty, t0)
+        return _build_frame(src, factory, feed, fanout, t0)
+    return _checkpointed(
+        df.sparkSession, checkpoint_dir, src.rdd.getNumPartitions(),
+        lambda done: src.mapInArrow(_agg_partial_builder(factory, feed, done),
+                                    schema=_PARTIAL_SCHEMA),
+        _blob_bytes(factory), fanout, factory, t0)
+
+
+def _counts_feed(key_col: str, count_col: str):
+    def feed(cm, batch):
+        cm.update_batch(batch.column(key_col).to_numpy(zero_copy_only=False),
+                        counts=batch.column(count_col).to_numpy(
+                            zero_copy_only=False))
+    return feed
 
 
 def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
@@ -310,35 +361,11 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
     header's n_items records rows folded (len(keys)) rather than
     Σ counts — at the cost of one scan of the aggregate instead of
     Σ counts updates."""
-    def fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        t0 = time.perf_counter()
-        cm = CountMinSketch(cfg)
-        n_rows = 0
-        ki = ci = None
-        for batch in batches:
-            if ki is None:
-                ki = batch.schema.get_field_index(key_col)
-                ci = batch.schema.get_field_index(count_col)
-            keys = batch.column(ki).to_numpy(zero_copy_only=False)
-            cnts = batch.column(ci).to_numpy(zero_copy_only=False)
-            if keys.shape[0]:
-                cm.update_batch(keys, counts=cnts)
-                n_rows += batch.num_rows
-        ms = (time.perf_counter() - t0) * 1e3
-        yield pa.RecordBatch.from_pydict({
-            "pid": [pid], "sketch": [cm.to_bytes()], "n_rows": [n_rows],
-            "n_items": [cm.n_items], "total_count": [cm.total_count],
-            "build_ms": [ms],
-        }, schema=_PARTIAL_PA_SCHEMA)
-
     t0 = time.perf_counter()
     src = (df.select(key_col, count_col)
            .filter(F.col(key_col).isNotNull() & F.col(count_col).isNotNull()))
-    partials = src.mapInArrow(fn, schema=_PARTIAL_SCHEMA)
-    return _merge(partials, partials.rdd.getNumPartitions(), _cm_bytes(cfg),
-                  fanout, lambda: CountMinSketch(cfg), t0)
+    return _build_frame(src, functools.partial(CountMinSketch, cfg),
+                        _counts_feed(key_col, count_col), fanout, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -458,38 +485,35 @@ def _pq_file(path: str):
     return pf
 
 
-def _parquet_partial_builder(cfg: CMConfig, tokens_col: str, cu: bool,
-                             preaggregate: bool | None = None):
-    import pyarrow.parquet as pq  # noqa: F401
+def _parquet_agg_partial_builder(factory, values_col: str,
+                                 extract_array=None, cu: bool = False):
+    """THE parquet slice builder: one ``factory()`` sketch per slice, read
+    row group by row group through the worker-persistent ParquetFile
+    cache. Null rows are dropped, as the DataFrame path's isNotNull filter
+    drops them (a null scalar would decay its chunk to float64 NaNs), so
+    the sketch bytes and ``n_rows`` equal that path's. The feed is
+    ``extract_array(pa.Array) -> np.ndarray`` (default: flatten; e.g.
+    ngrams.array_bigrams) into ``update_batch``, or ``update_batch_cu``
+    when ``cu``."""
+    extract_array = extract_array or _flat_values
 
     def one_slice(slice_id: int, parts: list[tuple[str, list[int]]]):
         t0 = time.perf_counter()
-        cm = CountMinSketch(cfg)
+        sk = factory()
         n_rows = 0
         for file, rgs in parts:
             pf = _pq_file(file)
             for rg in rgs:
                 # use_threads=False: every core already runs a worker; nested
                 # Arrow threadpools (32 tasks x 32 threads) thrash the box
-                col = pf.read_row_group(int(rg), columns=[tokens_col],
+                col = pf.read_row_group(int(rg), columns=[values_col],
                                         use_threads=False).column(0)
                 for chunk in col.chunks:
-                    flat = chunk.flatten()
-                    try:  # int32 values without nulls: zero-copy view
-                        toks = flat.to_numpy(zero_copy_only=True)
-                    except pa.ArrowInvalid:
-                        toks = flat.to_numpy(zero_copy_only=False)
-                    if cu:
-                        cm.update_batch_cu(toks)
-                    else:
-                        cm.update_batch(toks, preaggregate=preaggregate)
-                    n_rows += len(chunk)
-        ms = (time.perf_counter() - t0) * 1e3
-        return pd.DataFrame({
-            "pid": [slice_id], "sketch": [cm.to_bytes()], "n_rows": [n_rows],
-            "n_items": [cm.n_items], "total_count": [cm.total_count],
-            "build_ms": [ms],
-        })
+                    if chunk.null_count:
+                        chunk = chunk.drop_null()
+                    n_rows += len(chunk)   # ROWS, before list flattening
+                    _update(sk, extract_array(chunk), cu)
+        return pd.DataFrame(_partial_row(slice_id, sk, n_rows, t0))
 
     return _slice_dispatch(one_slice)
 
@@ -567,27 +591,27 @@ def _default_n_slices(spark: SparkSession, n_rgs: int) -> int:
 def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
                          cfg: CMConfig, *, cu: bool = False,
                          fanout: int | None = None, n_slices: int | None = None,
-                         checkpoint_dir: str | None = None,
-                         preaggregate: bool | None = None) -> BuildResult:
+                         checkpoint_dir: str | None = None) -> BuildResult:
     """Count-Min build over a parquet table using Python-side columnar reads.
 
-    Functionally identical (byte-identical result) to
+    Functionally identical (byte-identical result, same ``n_rows``) to
     ``build_sketch(spark.read.parquet(path), ...)`` but ~5x faster: the token
-    arrays never pass through JVM rows. With ``checkpoint_dir`` the slice
-    assignment is pinned in {checkpoint_dir}/SLICES.json on the first run, so
-    resume skips completed slices before any IO happens and is immune to a
-    changed core count or data layout (validated, not assumed).
+    arrays never pass through JVM rows. Null rows are dropped as in
+    ``build_sketch``; list and scalar columns are both accepted. With
+    ``checkpoint_dir`` the slice assignment is pinned in
+    {checkpoint_dir}/SLICES.json on the first run, so resume skips completed
+    slices before any IO happens and is immune to a changed core count or
+    data layout (validated, not assumed).
     """
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, column=tokens_col)
-    builder = _parquet_partial_builder(cfg, tokens_col, cu,
-                                       preaggregate=preaggregate)
-    empty = lambda: CountMinSketch(cfg)  # noqa: E731
+    factory = functools.partial(CountMinSketch, cfg)
+    builder = _parquet_agg_partial_builder(factory, tokens_col, cu=cu)
     if checkpoint_dir is None:
-        return _build_slices(spark, rgs, n_slices, builder, _cm_bytes(cfg),
-                             fanout, empty, t0)
+        return _build_slices(spark, rgs, n_slices, builder,
+                             _blob_bytes(factory), fanout, factory, t0)
     if not rgs:
-        return BuildResult.empty(empty(), time.perf_counter() - t0)
+        return BuildResult.empty(factory(), time.perf_counter() - t0)
     # pass the raw (possibly-None) n_slices: an explicit value must match
     # the pinned one, but the parallelism-derived DEFAULT must not be
     # treated as explicit — a resume on a different core count would
@@ -596,19 +620,12 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
         checkpoint_dir.rstrip("/"), rgs, n_slices,
         _default_n_slices(spark, len(rgs)))
     n_slices, rows = _slice_assignments(rgs, n_slices)
-    ckpt_path = checkpoint_dir.rstrip("/") + "/partials"
-    try:
-        done = frozenset(r["pid"] for r in
-                         spark.read.parquet(ckpt_path).select("pid").collect())
-    except Exception:
-        done = frozenset()
-    rows = [r for r in rows if r[0] not in done]
-    if rows:
-        (_assign_slices(spark, rows)
-         .mapInPandas(builder, schema=_PARTIAL_SCHEMA)
-         .write.mode("append").parquet(ckpt_path))
-    return _merge(spark.read.parquet(ckpt_path), n_slices, _cm_bytes(cfg),
-                  fanout, empty, t0)
+    return _checkpointed(
+        spark, checkpoint_dir, n_slices,
+        lambda done: _assign_slices(
+            spark, [r for r in rows if r[0] not in done]).mapInPandas(
+                builder, schema=_PARTIAL_SCHEMA),
+        _blob_bytes(factory), fanout, factory, t0)
 
 
 def _assign_slices(spark: SparkSession, rows) -> DataFrame:
@@ -702,19 +719,16 @@ def build_sketch_generated(spark: SparkSession, rows: int, cfg: CMConfig, *,
                     # measured — Session E); with IO/decode interleaved
                     # (parquet path) the heuristic default still wins
                     cm.update_batch(toks, preaggregate=False)
-                ms = (time.perf_counter() - t1) * 1e3
-                yield pd.DataFrame({
-                    "pid": [int(row["chunk"])], "sketch": [cm.to_bytes()],
-                    "n_rows": [int(row["n"])], "n_items": [cm.n_items],
-                    "total_count": [cm.total_count], "build_ms": [ms],
-                })
+                yield pd.DataFrame(_partial_row(int(row["chunk"]), cm,
+                                                int(row["n"]), t1))
 
-    empty = lambda: CountMinSketch(cfg)  # noqa: E731
+    factory = functools.partial(CountMinSketch, cfg)
     if not assigns:
-        return BuildResult.empty(empty(), time.perf_counter() - t0)
+        return BuildResult.empty(factory(), time.perf_counter() - t0)
     partials = _assign_df(spark, assigns, "chunk int, start bigint, n int"
                           ).mapInPandas(fn, schema=_PARTIAL_SCHEMA)
-    return _merge(partials, len(assigns), _cm_bytes(cfg), fanout, empty, t0)
+    return _merge(partials, len(assigns), _blob_bytes(factory), fanout,
+                  factory, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -834,20 +848,16 @@ def _grouped_rows(pid: int, sketches: dict, rows: dict) -> dict:
                             for k in ordered]}
 
 
-def _grouped_partial_builder(cfg: CMConfig, key_col: str, tokens_col: str, cu: bool):
+def _grouped_agg_builder(ingest):
+    """THE grouped mapInArrow builder: per-(partition, key) sketches that
+    ``ingest(sketches, rows, batch)`` (the grouped feed) folds each Arrow
+    batch into; one partial row per key."""
     def fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        sketches: dict[str, CountMinSketch] = {}
-        rows: dict[str, int] = {}
-        ki = ti = None
+        pid = _pid()
+        sketches: dict = {}
+        rows: dict = {}
         for batch in batches:
-            if ki is None:
-                ki = batch.schema.get_field_index(key_col)
-                ti = batch.schema.get_field_index(tokens_col)
-            keys = batch.column(ki).to_numpy(zero_copy_only=False)
-            _ingest_grouped(sketches, rows, keys, batch.column(ti),
-                            lambda: CountMinSketch(cfg), cu)
+            ingest(sketches, rows, batch)
         if sketches:
             yield pa.RecordBatch.from_pydict(
                 _grouped_rows(pid, sketches, rows),
@@ -855,11 +865,30 @@ def _grouped_partial_builder(cfg: CMConfig, key_col: str, tokens_col: str, cu: b
     return fn
 
 
+def _grouped_feed(values_col: str, factory, cu: bool = False):
+    """Grouped feed of one value column, keyed by the batch's ``key``."""
+    def ingest(sketches, rows, batch):
+        _ingest_grouped(sketches, rows,
+                        batch.column("key").to_numpy(zero_copy_only=False),
+                        batch.column(values_col), factory, cu)
+    return ingest
+
+
+def _grouped_frame(df: DataFrame, key_col: str, values_col: str, factory,
+                   cu: bool, fanout: int) -> DataFrame:
+    """Per-key sketches of one value column through the grouped builder."""
+    src = (df.select(F.col(key_col).alias("key"), F.col(values_col))
+             .filter(F.col(values_col).isNotNull()))
+    partials = src.mapInArrow(
+        _grouped_agg_builder(_grouped_feed(values_col, factory, cu)),
+        schema=_GROUPED_PARTIAL_SCHEMA)
+    return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
+
+
 def _merge_grouped_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    acc = None
-    for blob in pdf["sketch"]:
-        cm = serde.loads(bytes(blob))
-        acc = cm if acc is None else acc.merge(cm)
+    """One key's partials folded in pid order (whatever order the shuffle
+    delivered them in), so MG and KLL fleets are reproducible."""
+    acc = _fold(pdf["pid"].to_numpy(), pdf["sketch"].to_numpy())
     return pd.DataFrame({
         "key": [pdf["key"].iloc[0]],
         "sketch": [acc.to_bytes()],
@@ -874,7 +903,8 @@ def _merge_grouped_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 # dominant cost on a contended host), and level-1 merge tasks cost more
 # scheduling/worker overhead than the blob adds they perform. The tree is
 # for the 10^5-10^6-partial regime (SCALE.md); small builds merge in ONE
-# grouped stage. Byte-identity is unaffected (merge order is irrelevant).
+# grouped stage. Both fold in pid order; level 1 emits its bucket as the
+# pid of its output.
 _GROUPED_TREE_THRESHOLD = 1024
 
 
@@ -882,16 +912,16 @@ def _grouped_merge(partials: DataFrame, fanout: int,
                    n_partials: int | None) -> DataFrame:
     if n_partials is not None and n_partials <= _GROUPED_TREE_THRESHOLD:
         return (partials.groupBy("key")
-                .applyInPandas(lambda pdf: _merge_grouped_pdf(pdf),
+                .applyInPandas(_merge_grouped_pdf,
                                schema=_GROUPED_MERGED_SCHEMA))
     level1 = (partials
               .groupBy("key", F.pmod(F.col("pid"), F.lit(fanout)).alias("bucket"))
               .applyInPandas(
-                  lambda pdf: _merge_grouped_pdf(pdf).assign(pid=0)[
-                      ["key", "pid", "sketch", "n_rows", "n_items", "total_count"]],
+                  lambda key, pdf: _merge_grouped_pdf(pdf).assign(
+                      pid=int(key[1]))[_GROUPED_PARTIAL_PA_SCHEMA.names],
                   schema=_GROUPED_PARTIAL_SCHEMA))
     return (level1.groupBy("key")
-            .applyInPandas(lambda pdf: _merge_grouped_pdf(pdf),
+            .applyInPandas(_merge_grouped_pdf,
                            schema=_GROUPED_MERGED_SCHEMA))
 
 
@@ -908,12 +938,8 @@ def build_grouped(df: DataFrame, key_col: str, tokens_col: str, cfg: CMConfig,
 
     Returns a DataFrame ``(key, sketch, n_rows, n_items, total_count)``.
     """
-    src = (df.select(F.col(key_col).alias("key"), F.col(tokens_col))
-             .filter(F.col(tokens_col).isNotNull()))
-    partials = src.mapInArrow(
-        _grouped_partial_builder(cfg, "key", tokens_col, cu),
-        schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
+    return _grouped_frame(df, key_col, tokens_col,
+                          functools.partial(CountMinSketch, cfg), cu, fanout)
 
 
 def collect_grouped(grouped_df: DataFrame) -> dict[str, CountMinSketch]:
@@ -1076,11 +1102,7 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
                     col = pf.read_row_group(int(rg), columns=[tokens_col],
                                             use_threads=False).column(0)
                     for chunk in col.chunks:
-                        flat = chunk.flatten()
-                        try:
-                            toks = flat.to_numpy(zero_copy_only=True)
-                        except pa.ArrowInvalid:
-                            toks = flat.to_numpy(zero_copy_only=False)
+                        toks = _flat_values(chunk)
                         if toks.shape[0]:
                             cm = _cached_sketch(digest, bc.value)
                             sums += cm.row_probe_sums(toks)
@@ -1110,40 +1132,8 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
 # DDSketch, KllSketch, TDigest) is a mergeable aggregator: update_batch /
 # merge / to_bytes with a magic-dispatched serde. That makes the build
 # topology sketch-independent — one partial per partition, the merge
-# planner over blobs — so HLL/Bloom/quantile builds reuse the exact machinery (and the
-# byte-level merge semantics) proven for Count-Min.
-
-
-def _agg_partial_builder(factory, values_col: str, extract=None):
-    """``extract(batch, col_idx) -> np.ndarray`` overrides the default
-    flatten (e.g. ngrams.batch_bigrams packs within-row adjacent pairs);
-    it must be picklable."""
-    if extract is None:
-        extract = _flat_tokens
-
-    def fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        t0 = time.perf_counter()
-        sk = factory()
-        n_rows = 0
-        col_idx = None
-        for batch in batches:
-            if col_idx is None:
-                col_idx = batch.schema.get_field_index(values_col)
-            vals = extract(batch, col_idx)
-            sk.update_batch(vals)
-            n_rows += batch.num_rows
-        ms = (time.perf_counter() - t0) * 1e3
-        yield pa.RecordBatch.from_pydict({
-            "pid": [pid],
-            "sketch": [sk.to_bytes()],
-            "n_rows": [n_rows],
-            "n_items": [sk.n_items],
-            "total_count": [getattr(sk, "total_count", 0)],
-            "build_ms": [ms],
-        }, schema=_PARTIAL_PA_SCHEMA)
-    return fn
+# planner over blobs — so every sketch, Count-Min included, runs through
+# the same builders with only its factory and feed differing.
 
 
 def build_aggregator(df: DataFrame, values_col: str, factory, *,
@@ -1160,11 +1150,8 @@ def build_aggregator(df: DataFrame, values_col: str, factory, *,
     """
     t0 = time.perf_counter()
     src = df.select(values_col).filter(F.col(values_col).isNotNull())
-    partials = src.mapInArrow(
-        _agg_partial_builder(factory, values_col, extract),
-        schema=_PARTIAL_SCHEMA)
-    return _merge(partials, partials.rdd.getNumPartitions(),
-                  _blob_bytes(factory), fanout, factory, t0)
+    return _build_frame(src, factory, _column_feed(values_col, extract),
+                        fanout, t0)
 
 
 def _blob_bytes(factory) -> int:
@@ -1194,39 +1181,17 @@ def _string_flat_lens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data[offs[0]:offs[-1]], np.diff(offs)
 
 
-def _pairs_partial_builder(factory, key_col: str, weight_col: str,
-                           payload_col: str | None):
-    """Partial builder for weighted-item sketches (PrioritySample): each
-    batch's keys/payloads are consumed straight from the Arrow value
-    buffers (update_flat), weights as one numpy column."""
-    def fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        t0 = time.perf_counter()
-        sk = factory()
-        n_rows = 0
-        for batch in batches:
-            kflat, klens = _string_flat_lens(
-                batch.column(batch.schema.get_field_index(key_col)))
-            w = batch.column(batch.schema.get_field_index(weight_col)
-                             ).to_numpy(zero_copy_only=False)
-            if payload_col is not None:
-                pflat, plens = _string_flat_lens(
-                    batch.column(batch.schema.get_field_index(payload_col)))
-                sk.update_flat(kflat, klens, w, pflat, plens)
-            else:
-                sk.update_flat(kflat, klens, w)
-            n_rows += batch.num_rows
-        ms = (time.perf_counter() - t0) * 1e3
-        yield pa.RecordBatch.from_pydict({
-            "pid": [pid],
-            "sketch": [sk.to_bytes()],
-            "n_rows": [n_rows],
-            "n_items": [sk.n_items],
-            "total_count": [getattr(sk, "total_count", 0)],
-            "build_ms": [ms],
-        }, schema=_PARTIAL_PA_SCHEMA)
-    return fn
+def _pairs_feed(key_col: str, weight_col: str, payload_col: str | None):
+    """Feed of weighted-item sketches (PrioritySample): keys and payloads
+    straight from the Arrow value buffers (update_flat), weights as one
+    numpy column."""
+    def feed(sk, batch):
+        kflat, klens = _string_flat_lens(batch.column(key_col))
+        w = batch.column(weight_col).to_numpy(zero_copy_only=False)
+        payload = (() if payload_col is None
+                   else _string_flat_lens(batch.column(payload_col)))
+        sk.update_flat(kflat, klens, w, *payload)
+    return feed
 
 
 def build_aggregator_pairs(df: DataFrame, key_col: str, weight_col: str,
@@ -1248,11 +1213,9 @@ def build_aggregator_pairs(df: DataFrame, key_col: str, weight_col: str,
                                F.lit("")).alias(payload_col))
     src = (df.select(*cols)
            .filter(F.col(key_col).isNotNull() & (F.col(weight_col) > 0)))
-    partials = src.mapInArrow(
-        _pairs_partial_builder(factory, key_col, weight_col, payload_col),
-        schema=_PARTIAL_SCHEMA)
-    return _merge(partials, partials.rdd.getNumPartitions(),
-                  _blob_bytes(factory), fanout, factory, t0)
+    return _build_frame(src, factory,
+                        _pairs_feed(key_col, weight_col, payload_col),
+                        fanout, t0)
 
 
 def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
@@ -1267,8 +1230,6 @@ def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
     Per-group subsetting uses Arrow ``take`` (C++-vectorized) so the
     Python loop is per GROUP per batch, never per row. Returns
     (key, sketch, n_rows, n_items, total_count)."""
-    import pyarrow.compute as pc
-
     cols = [F.col(group_col).cast("string").alias("key"),
             F.col(key_col).cast("string").alias("_ik"),
             F.col(weight_col).cast("double").alias("_w")]
@@ -1276,94 +1237,27 @@ def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
         # NULL payload -> "" group (see build_aggregator_pairs)
         cols.append(F.coalesce(F.col(payload_col).cast("string"),
                                F.lit("")).alias("_pl"))
+    feed = _pairs_feed("_ik", "_w", "_pl" if payload_col else None)
 
-    def partial_fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        sketches: dict[str, object] = {}
-        rows: dict[str, int] = {}
-        for batch in batches:
-            gvals = batch.column(0).to_numpy(zero_copy_only=False)
-            kcol, wcol = batch.column(1), batch.column(2)
-            pcol = batch.column(3) if payload_col else None
-            order = np.argsort(gvals, kind="stable")
-            g_sorted = gvals[order]
-            starts = np.flatnonzero(
-                np.r_[True, g_sorted[1:] != g_sorted[:-1]])
-            bounds = np.r_[starts, len(g_sorted)]
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                g = g_sorted[s]
-                idx = pa.array(order[s:e])
-                sk = sketches.get(g)
-                if sk is None:
-                    sk = sketches[g] = factory()
-                    rows[g] = 0
-                kflat, klens = _string_flat_lens(kcol.take(idx))
-                w = pc.take(wcol, idx).to_numpy(zero_copy_only=False)
-                if pcol is not None:
-                    pflat, plens = _string_flat_lens(pcol.take(idx))
-                    sk.update_flat(kflat, klens, w, pflat, plens)
-                else:
-                    sk.update_flat(kflat, klens, w)
-                rows[g] += e - s
-        if sketches:
-            yield pa.RecordBatch.from_pydict(
-                _grouped_rows(pid, sketches, rows),
-                schema=_GROUPED_PARTIAL_PA_SCHEMA)
+    def ingest(sketches, rows, batch):
+        gvals = batch.column(0).to_numpy(zero_copy_only=False)
+        order = np.argsort(gvals, kind="stable")
+        g_sorted = gvals[order]
+        starts = np.flatnonzero(np.r_[True, g_sorted[1:] != g_sorted[:-1]])
+        bounds = np.r_[starts, len(g_sorted)]
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            g = g_sorted[s]
+            if g not in sketches:
+                sketches[g], rows[g] = factory(), 0
+            feed(sketches[g], batch.take(pa.array(order[s:e])))
+            rows[g] += e - s
 
     src = (df.select(*cols)
            .filter(F.col("key").isNotNull() & F.col("_ik").isNotNull()
                    & (F.col("_w") > 0)))
-    partials = src.mapInArrow(partial_fn, schema=_GROUPED_PARTIAL_SCHEMA)
+    partials = src.mapInArrow(_grouped_agg_builder(ingest),
+                              schema=_GROUPED_PARTIAL_SCHEMA)
     return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
-
-
-def _parquet_agg_partial_builder(factory, values_col: str,
-                                 extract_array=None):
-    """Factory-generic twin of _parquet_partial_builder: same slice
-    protocol, same worker-persistent ParquetFile cache, any mergeable
-    sketch. Partials serialize via dumps_partial (size-adaptive when the
-    sketch offers it — e.g. DyadicCM's sparse per-level encoding).
-    ``extract_array(pa.Array) -> np.ndarray`` overrides the default
-    flatten (e.g. ngrams.array_bigrams)."""
-    def one_slice(slice_id: int, parts: list[tuple[str, list[int]]]):
-        t0 = time.perf_counter()
-        sk = factory()
-        n_rows = 0
-        for file, rgs in parts:
-            pf = _pq_file(file)
-            for rg in rgs:
-                col = pf.read_row_group(int(rg), columns=[values_col],
-                                        use_threads=False).column(0)
-                for chunk in col.chunks:
-                    if chunk.null_count:
-                        # the DataFrame path filters isNotNull() before
-                        # building; without this, a null scalar decays the
-                        # whole chunk to float64-with-NaN and the sketch
-                        # silently hashes garbage — byte-identity requires
-                        # dropping null ROWS here too
-                        chunk = chunk.drop_null()
-                    n_rows += len(chunk)   # ROWS, before list flattening
-                    if extract_array is not None:
-                        vals = extract_array(chunk)
-                    else:
-                        if pa.types.is_list(chunk.type) or \
-                                pa.types.is_large_list(chunk.type):
-                            chunk = chunk.flatten()
-                        try:
-                            vals = chunk.to_numpy(zero_copy_only=True)
-                        except pa.ArrowInvalid:
-                            vals = chunk.to_numpy(zero_copy_only=False)
-                    sk.update_batch(vals)
-        ms = (time.perf_counter() - t0) * 1e3
-        return pd.DataFrame({
-            "pid": [slice_id], "sketch": [serde.dumps_partial(sk)],
-            "n_rows": [n_rows], "n_items": [sk.n_items],
-            "total_count": [getattr(sk, "total_count", 0)],
-            "build_ms": [ms],
-        })
-
-    return _slice_dispatch(one_slice)
 
 
 def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
@@ -1372,14 +1266,15 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
                              extract_array=None,
                              files: list[str] | None = None) -> BuildResult:
     """Parquet-direct build of ANY sketchlib mergeable sketch: workers read
-    row-group slices with pyarrow (no JVM scan, no Arrow IPC double-hop),
-    exactly like the Count-Min fast path (build_sketch_parquet). Measured
-    at 2.08 B tokens on local[32]: Count-Sketch 67.2 M tok/s here vs
-    26.7 M via ``build_aggregator(spark.read.parquet(path), ...)`` (2.5x
-    — the token arrays never leave the Python worker), and within 1.27x
-    of a same-shape Count-Min on this same path (85.0 M tok/s).
-    Byte-identical result to the DataFrame path for the same data.
-    Checkpoint/resume stays on the CM-specific build_sketch_parquet.
+    row-group slices with pyarrow (no JVM scan, no Arrow IPC double-hop)
+    through the one parquet slice builder that build_sketch_parquet also
+    runs. Measured at 2.08 B tokens on local[32]: Count-Sketch 67.2 M tok/s
+    here vs 26.7 M via ``build_aggregator(spark.read.parquet(path), ...)``
+    (2.5x — the token arrays never leave the Python worker), and within
+    1.27x of a same-shape Count-Min (85.0 M tok/s).
+    Byte-identical result to the DataFrame path for the same data, with
+    the same ``n_rows`` (null rows dropped). Checkpoint/resume is
+    build_sketch_parquet's.
     """
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, files=files, column=values_col)
@@ -1393,30 +1288,43 @@ def build_grouped_aggregator(df: DataFrame, key_col: str, values_col: str,
                              factory, *, fanout: int = 8) -> DataFrame:
     """Per-key build of any sketchlib sketch (map-side combined, like
     build_grouped). Returns (key, sketch, n_rows, n_items, total_count)."""
-    def partial_fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        sketches = {}
-        rows = {}
-        ki = vi = None
-        for batch in batches:
-            if ki is None:
-                ki = batch.schema.get_field_index("key")
-                vi = batch.schema.get_field_index(values_col)
-            keys = batch.column(ki).to_numpy(zero_copy_only=False)
-            col = batch.column(vi)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            _ingest_grouped(sketches, rows, keys, col, factory, False)
-        if sketches:
-            yield pa.RecordBatch.from_pydict(
-                _grouped_rows(pid, sketches, rows),
-                schema=_GROUPED_PARTIAL_PA_SCHEMA)
+    return _grouped_frame(df, key_col, values_col, factory, False, fanout)
 
-    src = (df.select(F.col(key_col).alias("key"), F.col(values_col))
-             .filter(F.col(values_col).isNotNull()))
-    partials = src.mapInArrow(partial_fn, schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
+
+def _factory(cfg_or_factory):
+    """A CMConfig's Count-Min factory, or the factory itself."""
+    if isinstance(cfg_or_factory, CMConfig):
+        return functools.partial(CountMinSketch, cfg_or_factory)
+    return cfg_or_factory
+
+
+def _grouped_slices(spark: SparkSession, path: str, files, n_slices,
+                    fanout: int, columns: list[str], ingest) -> DataFrame:
+    """The tail of the grouped parquet builds: each slice reads
+    ``columns`` of its row groups, ``ingest(sketches, rows, table, file)``
+    folds each into per-key sketches, one partial row per (slice, key)
+    goes to _grouped_merge. An empty table gives an empty grouped frame."""
+    rgs = _list_row_groups(path, files=files)
+    if not rgs:
+        return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
+    if n_slices is None:
+        n_slices = _default_n_slices(spark, len(rgs))
+    n_slices, rows_assign = _slice_assignments(rgs, n_slices)
+
+    def one_slice(slice_id, parts):
+        sketches: dict = {}
+        rows: dict = {}
+        for file, rgl in parts:
+            pf = _pq_file(file)
+            for rg in rgl:
+                ingest(sketches, rows, pf.read_row_group(
+                    rg, columns=columns, use_threads=False), file)
+        if sketches:
+            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
+
+    partials = _assign_slices(spark, rows_assign).mapInPandas(
+        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
+    return _grouped_merge(partials, fanout, n_slices)
 
 
 def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,
@@ -1430,41 +1338,15 @@ def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,
     a zero-arg sketch factory. Returns (key, sketch, n_rows, n_items,
     total_count). ``files`` restricts the scan to an explicit file list
     (the incremental-maintenance delta, as in build_aggregator_parquet)."""
-    import pyarrow.parquet as pq
+    factory = _factory(cfg_or_factory)
 
-    if isinstance(cfg_or_factory, CMConfig):
-        cfg = cfg_or_factory
-        factory = lambda: CountMinSketch(cfg)  # noqa: E731
-    else:
-        factory = cfg_or_factory
+    def ingest(sketches, rows, tbl, file):
+        _ingest_grouped(sketches, rows,
+                        tbl.column(0).to_numpy(zero_copy_only=False),
+                        tbl.column(1).combine_chunks(), factory, cu)
 
-    rgs = _list_row_groups(path, files=files)
-    if n_slices is None:
-        n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows_assign = _slice_assignments(rgs, n_slices)
-
-    def one_slice(slice_id, parts):
-        sketches: dict[str, object] = {}
-        rows: dict[str, int] = {}
-        for file, rgl in parts:
-            pf = _pq_file(file)
-            for rg in rgl:
-                tbl = pf.read_row_group(rg, columns=[key_col, tokens_col],
-                                        use_threads=False)
-                keys = tbl.column(0).to_numpy(zero_copy_only=False)
-                vcol = tbl.column(1)
-                if isinstance(vcol, pa.ChunkedArray):
-                    vcol = vcol.combine_chunks()
-                _ingest_grouped(sketches, rows, keys, vcol, factory, cu)
-        if sketches:
-            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
-
-    if not rows_assign:
-        # empty table: zero groups, an empty grouped frame
-        return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
-    partials = _assign_slices(spark, rows_assign).mapInPandas(
-        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, n_slices)
+    return _grouped_slices(spark, path, files, n_slices, fanout,
+                           [key_col, tokens_col], ingest)
 
 
 def build_per_file_parquet(spark: SparkSession, path: str,
@@ -1496,58 +1378,24 @@ def build_per_file_parquet(spark: SparkSession, path: str,
     boundaries respected by the transform itself, so per-file indexing
     of DERIVED keys needs no extra machinery). Must be deterministic:
     delta folds and rebuilds must derive identical keys."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq  # noqa: F401  (parity with siblings)
-
-    if isinstance(cfg_or_factory, CMConfig):
-        cfg = cfg_or_factory
-        factory = lambda: CountMinSketch(cfg)  # noqa: E731
-    else:
-        factory = cfg_or_factory
+    factory = _factory(cfg_or_factory)
     root = os.path.abspath(path) if os.path.isdir(path) \
         else os.path.dirname(os.path.abspath(path))
 
-    rgs = _list_row_groups(path, files=files)
-    if n_slices is None:
-        n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows_assign = _slice_assignments(rgs, n_slices)
+    def ingest(sketches, rows, tbl, file):
+        key = os.path.relpath(os.path.abspath(file), root)
+        if key not in sketches:
+            sketches[key], rows[key] = factory(), 0
+        vcol = tbl.column(0).combine_chunks()
+        # a NULL row (list slot or scalar) contributes nothing, which is
+        # what a whole-file fold wants
+        flat = (transform(vcol) if transform is not None
+                else _flat_values(vcol.drop_null()))
+        _update(sketches[key], flat, cu)
+        rows[key] += tbl.num_rows
 
-    def one_slice(slice_id, parts):
-        sketches: dict[str, object] = {}
-        rows: dict[str, int] = {}
-        for file, rgl in parts:
-            key = os.path.relpath(os.path.abspath(file), root)
-            sk = sketches.get(key)
-            if sk is None:
-                sk = sketches[key] = factory()
-                rows[key] = 0
-            pf = _pq_file(file)
-            for rg in rgl:
-                tbl = pf.read_row_group(rg, columns=[tokens_col],
-                                        use_threads=False)
-                vcol = tbl.column(0)
-                if isinstance(vcol, pa.ChunkedArray):
-                    vcol = vcol.combine_chunks()
-                if transform is not None:
-                    flat = transform(vcol)
-                elif pa.types.is_list(vcol.type) \
-                        or pa.types.is_large_list(vcol.type):
-                    # flatten() drops NULL list slots — a null row
-                    # contributes nothing, which is what a whole-file
-                    # fold wants
-                    flat = vcol.flatten().to_numpy(zero_copy_only=False)
-                else:
-                    flat = pc.drop_null(vcol).to_numpy(zero_copy_only=False)
-                (sk.update_batch_cu if cu else sk.update_batch)(flat)
-                rows[key] += tbl.num_rows
-        if sketches:
-            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
-
-    if not rows_assign:
-        return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
-    partials = _assign_slices(spark, rows_assign).mapInPandas(
-        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, n_slices)
+    return _grouped_slices(spark, path, files, n_slices, fanout,
+                           [tokens_col], ingest)
 
 
 # ---------------------------------------------------------------------------

@@ -134,14 +134,17 @@ def one_part_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         spark.sparkContext.parallelize(rows, numSlices=1), schema)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+def read_table(spark: SparkSession, path: str,
+               schema: str | None = None) -> DataFrame | None:
     """A store table as a Spark DataFrame, or None when the table doesn't
     exist yet. ONLY "path does not exist" maps to None — any other read
     failure must surface. The single place the version-sensitive Spark
-    error-message match lives."""
+    error-message match lives. With ``schema`` given, a directory holding
+    no committed file reads as 0 rows instead of failing schema inference."""
     from pyspark.errors import AnalysisException
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None

@@ -69,15 +69,19 @@ def test_sketch_build_stage1_shuffles_no_tokens(spark, token_table_path):
     map over the scan: Scan -> MapInArrow with NO Exchange — the raw token
     arrays never shuffle. (The later tree merge exchanges only KB-sized
     sketch blobs, by construction.)"""
+    import functools
     import math
-    from sketchlib.countmin import CMConfig
-    from sketchlib.spark_build import _partial_builder, _PARTIAL_SCHEMA
+    from sketchlib.countmin import CMConfig, CountMinSketch
+    from sketchlib.spark_build import (_agg_partial_builder, _column_feed,
+                                       _PARTIAL_SCHEMA)
 
     cfg = CMConfig(eps=1e-2, delta=math.exp(-3), seed=1337)
     src = (spark.read.parquet(token_table_path)
            .select("tokens").filter(F.col("tokens").isNotNull()))
     partials = src.mapInArrow(
-        _partial_builder(cfg, "tokens", cu=False), schema=_PARTIAL_SCHEMA)
+        _agg_partial_builder(functools.partial(CountMinSketch, cfg),
+                             _column_feed("tokens")),
+        schema=_PARTIAL_SCHEMA)
     p = plan_str(partials)
     assert "Exchange" not in p, p
     assert "MapInArrow" in p or "ArrowEvalPython" in p or "PythonMapInArrow" in p, p
@@ -90,15 +94,18 @@ def test_tree_merge_exchange_carries_only_blobs(spark, token_table_path):
     """The merge stage's exchange partitions by pmod(pid, fanout): its input
     schema is (pid, sketch blob, metrics) — constant size per task, never
     proportional to input tokens."""
+    import functools
     import math
-    from sketchlib.countmin import CMConfig
-    from sketchlib.spark_build import (_partial_builder, _shuffle_tree,
-                                       _PARTIAL_SCHEMA)
+    from sketchlib.countmin import CMConfig, CountMinSketch
+    from sketchlib.spark_build import (_agg_partial_builder, _column_feed,
+                                       _shuffle_tree, _PARTIAL_SCHEMA)
 
     cfg = CMConfig(eps=1e-2, delta=math.exp(-3), seed=1337)
     src = spark.read.parquet(token_table_path).select("tokens")
     partials = src.mapInArrow(
-        _partial_builder(cfg, "tokens", cu=False), schema=_PARTIAL_SCHEMA)
+        _agg_partial_builder(functools.partial(CountMinSketch, cfg),
+                             _column_feed("tokens")),
+        schema=_PARTIAL_SCHEMA)
     # the tree large builds run: fanout 4 over up to 16 partials is one stage
     merged = _shuffle_tree(partials, 4, 16)
     p = plan_str(merged)
@@ -155,15 +162,17 @@ def test_grouped_partials_no_token_shuffle(spark, token_table_path):
     """Grouped stage 1 is also a pure map (per-(partition, key) partials):
     no Exchange before tokens reduce to blobs, so a skewed key costs no hot
     shuffle partition."""
+    import functools
     import math
-    from sketchlib.countmin import CMConfig
-    from sketchlib.spark_build import (_grouped_partial_builder,
+    from sketchlib.countmin import CMConfig, CountMinSketch
+    from sketchlib.spark_build import (_grouped_agg_builder, _grouped_feed,
                                        _GROUPED_PARTIAL_SCHEMA)
     cfg = CMConfig(eps=1e-2, delta=math.exp(-3), seed=1337)
     src = (spark.read.parquet(token_table_path)
            .select(F.col("source").alias("key"), "tokens"))
     partials = src.mapInArrow(
-        _grouped_partial_builder(cfg, "key", "tokens", False),
+        _grouped_agg_builder(_grouped_feed(
+            "tokens", functools.partial(CountMinSketch, cfg))),
         schema=_GROUPED_PARTIAL_SCHEMA)
     p = plan_str(partials)
     assert "Exchange" not in p, p

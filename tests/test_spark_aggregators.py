@@ -237,11 +237,14 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
     """Null rows must be dropped exactly like the DataFrame path's
     isNotNull filter — same sketch bytes, same n_rows — for both scalar
     and list columns (a null scalar would otherwise decay the chunk to
-    float64 NaNs and hash garbage)."""
+    float64 NaNs and hash garbage); build_sketch_parquet likewise against
+    build_sketch."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from sketchlib.countmin import CMConfig
     from sketchlib.kll import KllSketch
-    from sketchlib.spark_build import build_aggregator_parquet
+    from sketchlib.spark_build import (build_aggregator_parquet,
+                                       build_sketch, build_sketch_parquet)
     path = str(tmp_path / "nulls.parquet")
     pq.write_table(pa.table({
         "v": pa.array([3, None, 5, 7, None, 9], pa.int32()),
@@ -255,3 +258,9 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
         via_df = build_aggregator(df, col, fac)
         assert direct.sketch.to_bytes() == via_df.sketch.to_bytes(), col
         assert direct.n_rows == via_df.n_rows == 4
+    cfg = CMConfig(eps=1e-2, delta=0.05, seed=7)
+    for col in ("v", "arr"):
+        direct = build_sketch_parquet(spark, path, col, cfg)
+        via_df = build_sketch(df, col, cfg)
+        assert direct.sketch.to_bytes() == via_df.sketch.to_bytes(), col
+        assert direct.n_rows == via_df.n_rows == 4, col

@@ -6,7 +6,9 @@ fold, 2- and 3-level shuffle trees), Spark job counts, grouped
 (per-source) build, checkpoint/resume, and the broadcast point-query UDF.
 """
 
+import functools
 import math
+import os
 
 import numpy as np
 import pytest
@@ -16,9 +18,11 @@ from sketchlib.countmin import CMConfig, CountMinSketch
 from sketchlib.spark_build import (
     build_grouped,
     build_sketch,
+    build_sketch_parquet,
     collect_grouped,
     point_query_col,
-    _partial_builder,
+    _agg_partial_builder,
+    _column_feed,
     _PARTIAL_SCHEMA,
 )
 
@@ -87,7 +91,9 @@ def test_checkpoint_resume(spark, tokens_df, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     # simulate a crashed run: only partitions 2 and 3 got checkpointed
     pre = df4.select("tokens").mapInArrow(
-        _partial_builder(CFG, "tokens", False, skip_pids=frozenset({0, 1})),
+        _agg_partial_builder(functools.partial(CountMinSketch, CFG),
+                             _column_feed("tokens"),
+                             skip_pids=frozenset({0, 1})),
         schema=_PARTIAL_SCHEMA)
     pre.write.mode("append").parquet(ckpt + "/partials")
     done_pids = {r["pid"] for r in spark.read.parquet(ckpt + "/partials").collect()}
@@ -103,6 +109,72 @@ def test_checkpoint_resume(spark, tokens_df, tmp_path):
     assert res2.sketch.to_bytes() == full.sketch.to_bytes()
 
 
+def _listing(d):
+    return sorted((name, os.path.getsize(os.path.join(root, name)))
+                  for root, _, names in os.walk(d) for name in names)
+
+
+def test_checkpoint_read_failure_raises(spark, token_table_path, tmp_path):
+    """A checkpoint whose partials cannot be read must fail the build, not
+    read as "nothing done": that rebuilt every slice and appended it
+    beside the partials already there."""
+    ckpt = str(tmp_path / "ckpt")
+    build_sketch_parquet(spark, token_table_path, "tokens", CFG, n_slices=2,
+                         checkpoint_dir=ckpt)
+    partials = os.path.join(ckpt, "partials")
+    victim = sorted(f for f in os.listdir(partials)
+                    if f.endswith(".parquet"))[0]
+    with open(os.path.join(partials, victim), "wb") as f:
+        f.write(b"not a parquet file")
+    before = _listing(partials)
+    with pytest.raises(Exception):
+        build_sketch_parquet(spark, token_table_path, "tokens", CFG,
+                             checkpoint_dir=ckpt)
+    assert _listing(partials) == before
+
+
+def test_checkpoint_uncommitted_only_resumes(spark, tokens_df,
+                                             token_table_path, tmp_path):
+    """A partials directory holding only an uncommitted ``_temporary/`` (a
+    run killed before its first commit) resumes to the full build."""
+    df4 = tokens_df.repartition(4)
+    for name, build, full in (
+            ("parquet",
+             lambda ckpt: build_sketch_parquet(
+                 spark, token_table_path, "tokens", CFG, checkpoint_dir=ckpt),
+             build_sketch_parquet(spark, token_table_path, "tokens", CFG)),
+            ("frame",
+             lambda ckpt: build_sketch(df4, "tokens", CFG,
+                                       checkpoint_dir=ckpt),
+             build_sketch(df4, "tokens", CFG))):
+        ckpt = str(tmp_path / name)
+        os.makedirs(os.path.join(ckpt, "partials", "_temporary", "0"))
+        res = build(ckpt)
+        assert res.sketch.to_bytes() == full.sketch.to_bytes(), name
+        assert res.n_rows == full.n_rows, name
+
+
+def test_grouped_merge_folds_in_pid_order():
+    """Grouped merges fold one key's partials in pid order whatever order
+    the shuffle delivers them in: Misra-Gries merges are order-sensitive."""
+    import pandas as pd
+    from sketchlib.mg import MisraGries
+    from sketchlib.spark_build import _fold, _merge_grouped_pdf
+    rng = np.random.default_rng(3)
+    blobs = []
+    for _ in range(3):
+        mg = MisraGries(k=4)
+        mg.update_batch(rng.integers(0, 12, 200))
+        blobs.append(mg.to_bytes())
+    order = [2, 0, 1]
+    pdf = pd.DataFrame({"key": ["k"] * 3, "pid": order,
+                        "sketch": [blobs[p] for p in order],
+                        "n_rows": [1, 1, 1], "n_items": [200] * 3,
+                        "total_count": [0] * 3})
+    out = _merge_grouped_pdf(pdf)
+    assert out["sketch"].iloc[0] == _fold([0, 1, 2], blobs).to_bytes()
+
+
 def test_point_query_udf(spark, tokens_df, exact_counts):
     res = build_sketch(tokens_df, "tokens", CFG)
     some = list(exact_counts)[:500]
@@ -113,20 +185,26 @@ def test_point_query_udf(spark, tokens_df, exact_counts):
         assert r["est"] >= exact_counts[r["token"]]
 
 
-def test_conservative_update_build(tokens_df, exact_counts):
+def test_conservative_update_build(spark, tokens_df, exact_counts, tmp_path):
     tight = CMConfig(eps=2e-3, delta=0.05, seed=1337)
     small = tokens_df.limit(200).repartition(2)
     exact = {r["token"]: r["count"]
              for r in small.select(F.explode("tokens").alias("token"))
              .groupBy("token").count().collect()}
-    std = build_sketch(small, "tokens", tight)
-    cu = build_sketch(small, "tokens", tight, cu=True)
-    keys = np.fromiter(exact.keys(), dtype=np.int64)
-    true = np.fromiter((exact[int(k)] for k in keys), dtype=np.int64)
-    est_std = std.sketch.point_query_batch(keys)
-    est_cu = cu.sketch.point_query_batch(keys)
-    assert np.all(est_cu >= true)
-    assert est_cu.sum() <= est_std.sum()
+    path = str(tmp_path / "small.parquet")
+    small.write.parquet(path)
+    for build in (
+            lambda **kw: build_sketch(small, "tokens", tight, **kw),
+            lambda **kw: build_sketch_parquet(spark, path, "tokens", tight,
+                                              **kw)):
+        std = build()
+        cu = build(cu=True)
+        keys = np.fromiter(exact.keys(), dtype=np.int64)
+        true = np.fromiter((exact[int(k)] for k in keys), dtype=np.int64)
+        est_std = std.sketch.point_query_batch(keys)
+        est_cu = cu.sketch.point_query_batch(keys)
+        assert np.all(est_cu >= true)
+        assert est_cu.sum() <= est_std.sum()
 
 
 def test_grouped_parquet_direct_equivalence(spark, token_table_path):
