@@ -283,9 +283,9 @@ class SketchCatalog:
         read of the sketches table — answers call this on the row they
         just loaded)."""
         base_seq = int(meta.get("manifest_base", 0))
-        _, ingested = _manifest_state(self.store_path, name, base_seq)
+        ingested = _manifest_state(self.store_path, name, base_seq)
         current = _current_files(table_path)
-        return len(_diff_files(current, ingested or {}, table_path, name))
+        return len(_diff_files(current, ingested, table_path, name))
 
     def _entry(self, table_path: str, column: str,
                policy: str | None) -> tuple[int, dict, MultiSketch,
@@ -656,7 +656,7 @@ class SketchCatalog:
     # One sketch fleet per group value (e.g. per-source corpus profiles),
     # maintained by incremental_build_grouped: a delta that touches 3 of
     # 10k groups reads+writes 3 KB-scale rows. Answers load the COMMITTED
-    # full group set (crash-orphan- and dead-group-safe pins) — driver
+    # full group set (pinned to the rebuild base: no dead groups) — driver
     # fan-in is G x blob, so grouped answers are for group counts that
     # fit a driver dict (same envelope as theta.overlap_matrix's guard).
 
@@ -725,16 +725,10 @@ class SketchCatalog:
     def _gspec(self, table_path: str, group_col: str, column: str, *,
                missing_ok: bool = False) -> dict | None:
         """Spec from a COMMITTED group row's meta (all rows of a publish
-        carry it). Pinned to the committed epoch / rebuild base exactly
-        like current_group_sketches: a crashed ``register_grouped(
-        rebuild=True)`` with a CHANGED spec leaves orphan rows above the
-        committed epoch, and an unpinned max-seq read would return the
-        orphan's spec — then _part would index the wrong MultiSketch
-        part for committed-epoch sketches, and the spec-mismatch guard
-        would compare against a spec that was never committed."""
-        name = self._gname(table_path, group_col, column)
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        spec = None if epoch is None else self._gspec_at(name, epoch, base)
+        carry it), pinned to the committed epoch / rebuild base exactly
+        like current_group_sketches, so rows of a lineage that a
+        ``register_grouped(rebuild=True)`` replaced never supply it."""
+        spec = self._gspec_at_name(self._gname(table_path, group_col, column))
         if spec is None:
             if missing_ok:
                 return None
@@ -780,14 +774,7 @@ class SketchCatalog:
         single-group question, a winners DataFrame for a fleet one."""
         policy = policy or self.policy
         spec = self._gspec(table_path, group_col, column)
-        # inline the staleness diff instead of stale_files_grouped():
-        # that public method re-validates registration with a second
-        # spec read (two more store jobs) the line above already paid
-        name = self._gname(table_path, group_col, column)
-        _, _, ingested = _grouped_manifest_state(self.store_path, name)
-        current = _current_files(table_path)
-        stale = len(_diff_files(current, ingested or {}, table_path,
-                                name))
+        stale = self.stale_files_grouped(table_path, group_col, column)
         refreshed = False
         if stale and policy == "refuse":
             raise StaleEntryError(
@@ -1024,6 +1011,33 @@ class SketchCatalog:
 
         return winners.mapInPandas(gen, schema="key string, sketch binary")
 
+    def _epochs(self, table_path: str, group_col: str, column: str,
+                seq_old: int, seq_new: int | None, policy: str | None,
+                spec: bool = True):
+        """(name, (epoch, base, spec) at ``seq_old``, the same at
+        ``seq_new``, stale_files, refreshed) of a fleet's two PUBLISHED
+        epochs; ``seq_new`` defaults to the committed epoch after
+        ``policy``'s freshness handling. KeyError for an uncommitted
+        epoch, or (``spec``) one with no committed group row."""
+        from .incremental import grouped_epoch_at
+        name = self._gname(table_path, group_col, column)
+        stale, refreshed = 0, False
+        if seq_new is None:
+            _, stale, refreshed = self._gscope(table_path, group_col,
+                                               column, policy)
+            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
+        pins = []
+        for seq in (seq_old, seq_new):
+            epoch, base = grouped_epoch_at(self.spark, self.store_path,
+                                           name, seq)
+            pins.append((epoch, base, spec and self._gspec_at(name, epoch,
+                                                              base)))
+            if pins[-1][2] is None:
+                raise KeyError(
+                    f"{table_path}:{group_col}:{column} has no committed "
+                    f"group rows for epoch {seq_old} / {seq_new}")
+        return (name, *pins, stale, refreshed)
+
     def drift_grouped(self, table_path: str, group_col: str, column: str,
                       seq_old: int, seq_new: int | None = None, *,
                       policy: str | None = None) -> Answer:
@@ -1041,23 +1055,9 @@ class SketchCatalog:
         folds appends first, so 'now' means NOW)."""
         from .drift import grouped_tv_bounds
 
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        from .incremental import grouped_epoch_at
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
-        spec_old = self._gspec_at(name, old_epoch, old_base)
-        spec_new = self._gspec_at(name, new_epoch, new_base)
-        if spec_old is None or spec_new is None:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"group rows for epoch {seq_old} / {seq_new}")
+        name, (old_epoch, old_base, spec_old), (
+            new_epoch, new_base, spec_new), stale, refreshed = self._epochs(
+                table_path, group_col, column, seq_old, seq_new, policy)
         value = grouped_tv_bounds(
             self._mg_part_df(name, old_epoch, old_base, spec_old),
             self._mg_part_df(name, new_epoch, new_base, spec_new))
@@ -1096,24 +1096,10 @@ class SketchCatalog:
         silence is NOT stability — resolution is d_old + d_new."""
         from .drift import grouped_top_movers
         from .drift import top_movers as _tm
-        from .incremental import grouped_epoch_at
 
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
-        spec_old = self._gspec_at(name, old_epoch, old_base)
-        spec_new = self._gspec_at(name, new_epoch, new_base)
-        if spec_old is None or spec_new is None:
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no committed "
-                f"group rows for epoch {seq_old} / {seq_new}")
+        name, (old_epoch, old_base, spec_old), (
+            new_epoch, new_base, spec_new), stale, refreshed = self._epochs(
+                table_path, group_col, column, seq_old, seq_new, policy)
         contract = ("per group: certified shifts only — "
                     "|p_new - p_old| lower bound positive; magnitudes "
                     "are lower bounds, silence is not stability")
@@ -1509,22 +1495,12 @@ class SketchCatalog:
         fleet membership is unchanged."""
         from pyspark.sql import functions as F
 
-        from .incremental import grouped_epoch_at
-
-        name = self._gname(table_path, group_col, column)
-        refreshed, stale = False, 0
-        if seq_new is None:
-            _, stale, refreshed = self._gscope(table_path, group_col,
-                                               column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
-        old_epoch, old_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_old)
-        new_epoch, new_base = grouped_epoch_at(
-            self.spark, self.store_path, name, seq_new)
+        name, (old_epoch, old_base, _), (new_epoch, new_base, _), stale, \
+            refreshed = self._epochs(table_path, group_col, column,
+                                     seq_old, seq_new, policy, spec=False)
 
         def keys_at(epoch, base):
-            df = store.read_table(self.spark,
-                                  self.store_path + "/sketches")
+            df = store._spark_table(self.spark, self.store_path, "sketches")
             prefix = name + "/"
             return (df.filter(F.col("name").startswith(prefix))
                     .filter((F.col("seq") >= base)
@@ -1890,8 +1866,8 @@ class SketchCatalog:
         """One dict per registration — global entries AND grouped fleets
         (one per fleet, not per group): name, seq, table_path, column,
         group_col, spec, covered_rows. A fleet's spec and seq are its
-        committed epoch's (the max-seq fleet row may be an uncommitted
-        orphan with a CHANGED spec); fleets with nothing committed are
+        committed epoch's, read inside its rebuild base (rows below it
+        may carry a replaced spec); fleets with no committed group are
         not listed. Store metadata only: row keys for the whole store,
         meta for one row per registration. Shared with the SQL
         ``catalog_entries()``."""
@@ -1916,13 +1892,10 @@ class SketchCatalog:
                 continue
             spec, seq = meta["catalog_spec"], best[entry].seq
             if meta.get("group_col") is not None:
-                epoch, base = grouped_epoch(self.spark, self.store_path,
-                                            entry)
-                spec = (None if epoch is None
-                        else self._gspec_at(entry, epoch, base))
+                spec = self._gspec_at_name(entry)
                 if spec is None:
                     continue
-                seq = epoch
+                seq = grouped_epoch(self.spark, self.store_path, entry)[0]
             out.append({"name": entry, "seq": int(seq),
                         "table_path": meta["table_path"],
                         "column": meta["column"],

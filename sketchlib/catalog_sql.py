@@ -31,10 +31,11 @@ catalog's own naming (``SketchCatalog._name`` / ``_gname``), kind routing
 / ``grouped_epoch_at``) and the store's one pyarrow winner reader
 (``store._winner_rows`` and its loaders) — executor-side with no
 SparkSession, which that layer never needs. Winners are sha-verified
-before deserialization, and reads are memoized on a listing fingerprint
-of the store tables, so repeated calls against an unchanged store never
-re-read parquet while any publish (new epoch, compaction) is seen on the
-next call, which opens only the part files that call has not seen.
+before deserialization, and reads are memoized on the store head's
+generation, so repeated calls against an unchanged store stat one file
+and never re-read parquet, while any commit (new epoch, compaction) is
+seen on the next call, which opens only the part files that call has
+not seen.
 
 No counterpart in the reference — CountMinDB (cm.h) has a 4-method C++
 API and no SQL; this is north-star engine surface over the store/catalog
@@ -54,7 +55,7 @@ from .incremental import grouped_epoch, grouped_epoch_at
 
 def _pins(sp: str, prefix: str, seq=None) -> tuple[int, int]:
     """(epoch, base) of a fleet: the committed epoch, or the historical
-    committed epoch ``seq`` (crashed-epoch orphans are not addressable)."""
+    committed epoch ``seq``."""
     if seq is not None:
         return grouped_epoch_at(None, sp, prefix, int(seq))
     return SketchCatalog(None, sp)._committed(prefix)
@@ -439,7 +440,7 @@ def register_catalog_sql(spark, store_path: str, *,
         SQL twin of ``cat.groups_diff``: committed row-NAME set
         difference (status 'appeared' / 'disappeared'), each epoch
         pinned to its commit marker's base so pre-rebuild dead groups
-        and crashed orphans are excluded. Store metadata only — no
+        are excluded. Store metadata only — no
         blob is deserialized."""
         def eval(self, table_path: str, group_col: str, column: str,
                  seq_old: int, seq_new: int):

@@ -15,16 +15,12 @@ only: a daily 0.1% append costs 0.1% of a rebuild, forever.
 2. diff against the store's ingested-file manifest for this sketch name;
 3. parquet-direct build over ONLY the new files
    (spark_build.build_aggregator_parquet(files=...));
-4. merge into the loaded previous sketch, publish as the next seq,
-   append the new files to the manifest — atomically last, so a crash
-   between build and manifest append re-ingests (idempotent to retry
-   only after the SAVE; see the crash-window note on _append_manifest).
-
-The manifest lives next to the store's sketches/lineage tables:
-
-- ``ingested/`` parquet rows ``(name, seq, file, file_size)`` — file
-  paths RELATIVE to the table root (the table can move wholesale),
-  append-only like the rest of the store.
+4. merge into the loaded previous sketch and commit the next seq, its
+   lineage and the new files' manifest rows — ``(name, seq, file,
+   file_size)`` in the store's ``ingested/``, paths RELATIVE to the
+   table root so the table can move wholesale — as ONE store commit: a
+   fold that dies anywhere leaves the previous state, and its retry
+   folds the same delta exactly once.
 
 Append-only is a checked assumption, not a hope: a manifest file whose
 size changed or that disappeared means the table was compacted/rewritten
@@ -37,15 +33,16 @@ uses the identical contract (data files are immutable once committed).
 
 Driver-side cost is one file listing + one manifest read per call —
 O(#files) strings, the same order as any parquet directory scan the
-build itself must do. Concurrency contract is the store's: one writer
-per name (store.save_sketch).
+build itself must do. One writer per name, enforced by the store's commit: a fold refused
+because another writer folded the name first re-runs once from the new
+state — usually a no-op, since that writer folded the same files.
 
 The module's full surface, one function per maintenance/analysis shape:
 
 - ``incremental_build``        — one global sketch (any mergeable type)
 - ``incremental_build_grouped``— one sketch per key (per-source fleet);
-  only groups the delta touches are read/republished; crashed epochs
-  retry at a fresh seq (commit = the single manifest append)
+  only groups the delta touches are read/republished, in one commit
+  with the epoch's manifest rows
 - ``incremental_build_table``  — the ε-beyond-executor-memory regime:
   (row, col, cnt) parquet epochs merged by counter-coordinate
   groupBy-sum, no dense blob, no driver state
@@ -53,13 +50,13 @@ The module's full surface, one function per maintenance/analysis shape:
   subtract, so new − old of two publishes IS the appended delta's
   sketch, bit-exact (dense) / row-exact (table); cross-lineage seqs
   refused
-- ``grouped_epoch`` / ``current_group_sketches`` — the committed pins
-  external readers need (orphans above the epoch, dead groups below
-  the base)
+- ``grouped_epoch`` / ``current_group_sketches`` — the pins external
+  readers need (dead groups below the rebuild base)
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -89,36 +86,43 @@ def _current_files(table_path: str) -> dict[str, int]:
 
 
 def _manifest_state(store_path: str, name: str,
-                    base_seq: int) -> tuple[int | None, dict[str, int]]:
-    """(max manifest seq, {relative_path: size}) for ``name`` in ONE
-    manifest read, considering only rows at/after the last full (re)build
-    (``base_seq`` — rows below it describe a pre-rebuild table state and
-    must not poison the diff; the (re)build's own rows sit AT base_seq,
-    so the max is unaffected unless the manifest append itself is missing
-    — exactly the crash window the max is checked for). Missing manifest
-    table == nothing ingested == (None, {})."""
-    rows = [r for r in store._manifest_rows(store_path, name)
-            if r[0] >= base_seq]
-    if not rows:
-        return None, {}
-    # commit-marker rows (file="") count for the max seq, never the dict
-    return max(s for s, _, _ in rows), {f: sz for _, f, sz in rows if f}
+                    base_seq: int) -> dict[str, int]:
+    """{relative_path: size} of the files ingested into ``name``, in ONE
+    manifest read, considering only rows at/after the last full
+    (re)build (``base_seq`` — rows below it describe a pre-rebuild table
+    state and must not poison the diff). Nothing ingested == {}."""
+    return {f: sz for s, f, sz in store._manifest_rows(store_path, name)
+            if f and s >= base_seq}
 
 
 def _append_manifest(store_path: str, name: str, seq: int,
                      files: dict[str, int], base_epoch: int = -1) -> None:
-    # Written AFTER save_sketch: a crash between the two leaves the new
-    # seq published with its delta missing from the manifest, so a retry
-    # would double-fold those files. The seq-pinned manifest rows make
-    # the window detectable (latest sketch seq > max manifest seq for the
-    # name) and incremental_build refuses to proceed across it. The
-    # commit-marker row (file="") makes that detection work even for a
-    # publish over an EMPTY table, which folds zero files; its file_size
-    # carries the lineage's base epoch for the GROUPED path (-1 on the
-    # global path, which keeps its base in the published sketch's meta).
+    # The commit-marker row (file="") records epoch ``seq`` even for an
+    # EMPTY delta; its file_size is the lineage's base epoch on the
+    # GROUPED path (-1 on the global path: its base is in the meta).
     rows = [(name, seq, "", base_epoch)]
     rows += [(name, seq, f, sz) for f, sz in sorted(files.items())]
-    store._append_rows(store_path, "ingested", rows)
+    with store._transaction(store_path, join=True):
+        store._stage(store_path, "ingested", rows)
+
+
+def _in_one_commit(fold):
+    """Run ``fold`` in one store transaction — its sketch, lineage and
+    manifest rows commit together, ``wall_s`` covers the commit — and
+    once more from the new state when another writer committed one of
+    its names first (store.CommitConflict)."""
+    @functools.wraps(fold)
+    def run(*args, store_path: str, **kw):
+        t0 = time.perf_counter()
+        try:
+            with store._transaction(store_path):
+                res = fold(*args, store_path=store_path, **kw)
+        except store.CommitConflict:
+            with store._transaction(store_path):
+                res = fold(*args, store_path=store_path, **kw)
+        res.wall_s = time.perf_counter() - t0
+        return res
+    return run
 
 
 @dataclass
@@ -128,7 +132,7 @@ class IncrementalResult:
     prev_seq: int | None     # seq merged from (None on first build)
     new_files: int           # files folded by THIS call
     new_rows: int            # rows scanned by THIS call
-    wall_s: float
+    wall_s: float = 0.0      # with the commit (set by _in_one_commit)
     lineage: pd.DataFrame = field(repr=False, default=None)
     meta: dict = field(repr=False, default=None)   # published row's meta
 
@@ -137,6 +141,7 @@ class IncrementalResult:
         return self.prev_seq == self.seq
 
 
+@_in_one_commit
 def incremental_build(spark: SparkSession, table_path: str, values_col: str,
                       factory, *, store_path: str, name: str,
                       extract_array=None, fanout: int | None = None,
@@ -171,7 +176,6 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     list is handled here (fresh empty sketch), so builders never see
     zero files.
     """
-    t0 = time.perf_counter()
     current = _current_files(table_path)
     prev = store.latest_sketch(spark, store_path, name)
     prev_seq = None if prev is None else prev[0]
@@ -182,20 +186,14 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     if prev_seq is None or rebuild:
         new = current
     else:
-        man_seq, ingested = _manifest_state(store_path, name, base_seq)
-        if man_seq is None or man_seq < prev_seq:
-            raise IOError(
-                f"sketch {name!r} seq {prev_seq} has no manifest rows at "
-                f"that seq (manifest max: {man_seq}) — a prior call "
-                "crashed between publish and manifest append; re-run with "
-                "rebuild=True")
-        new = _diff_files(current, ingested, table_path, name)
+        new = _diff_files(current,
+                          _manifest_state(store_path, name, base_seq),
+                          table_path, name)
 
     if not new and prev_seq is not None and not rebuild:
         return IncrementalResult(
             sketch=prev[2], seq=prev_seq, prev_seq=prev_seq, new_files=0,
-            new_rows=0, wall_s=time.perf_counter() - t0,
-            lineage=pd.DataFrame(), meta=prev[1])
+            new_rows=0, lineage=pd.DataFrame(), meta=prev[1])
 
     abs_files = _abs_files(table_path, new)
     if builder is not None:
@@ -232,8 +230,7 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     _append_manifest(store_path, name, seq, new)
     return IncrementalResult(
         sketch=sketch, seq=seq, prev_seq=prev_seq, new_files=len(new),
-        new_rows=res.n_rows, wall_s=time.perf_counter() - t0,
-        lineage=res.lineage, meta=meta)
+        new_rows=res.n_rows, lineage=res.lineage, meta=meta)
 
 
 def _grouped_manifest_state(
@@ -241,10 +238,7 @@ def _grouped_manifest_state(
     """(committed epoch, base epoch, ingested files) for a GROUPED
     maintenance lineage, from the manifest alone. Commit-marker rows
     (file="") carry the base epoch of the current lineage in file_size;
-    the highest marker seq is the committed epoch — group-sketch rows
-    published above it belong to a crashed, uncommitted epoch and are
-    ignored (retries republish at a FRESH seq, see
-    incremental_build_grouped) rather than refused."""
+    the highest marker seq is the committed epoch."""
     rows = store._manifest_rows(store_path, name)
     markers = [(s, sz) for s, f, sz in rows if not f]
     if not markers:
@@ -284,13 +278,14 @@ class GroupedIncrementalResult:
     new_files: int
     new_rows: int
     updated_groups: int       # groups republished by THIS call
-    wall_s: float
+    wall_s: float = 0.0       # with the commit (set by _in_one_commit)
 
     @property
     def no_op(self) -> bool:
         return self.prev_seq == self.seq
 
 
+@_in_one_commit
 def incremental_build_grouped(spark: SparkSession, table_path: str,
                               key_col: str, values_col: str, factory, *,
                               store_path: str, name: str,
@@ -306,16 +301,8 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     republished — a daily append touching 3 of 10k sources rewrites 3
     KB-scale rows. Per-group results are byte-identical to from-scratch
     grouped builds (merge associativity, as in the global path; tested).
-
-    Crash safety differs from the global path by construction: the
-    manifest append (commit marker + file rows, ONE write) is the commit
-    point and group publishes land first — but a retry may fold a
-    BIGGER delta than the crashed attempt (files appended in between),
-    so retries publish at a FRESH seq above any orphan row (one max-seq
-    store read) rather than reusing the orphan's; orphans can then never
-    tie with, let alone shadow, a committed row, because every group an
-    orphan touches is also in the retry's (superset) delta and wins by
-    seq. NULL group keys are refused loudly — str() coercion would
+    The group rows and the epoch's manifest rows are ONE commit, as on
+    the global path. NULL group keys are refused — str() coercion would
     silently merge NULL with the literal string "None".
 
     Driver fan-in per call: (groups in the delta) x blob size — only the
@@ -331,7 +318,6 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     When set, values_col/fanout/n_slices are ignored; it must be
     deterministic in the file list and use the same factory config
     every call."""
-    t0 = time.perf_counter()
     if "/" in name:
         raise ValueError(f"grouped sketch name may not contain '/': {name!r}")
     current = _current_files(table_path)
@@ -343,15 +329,10 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
         if not new:
             return GroupedIncrementalResult(
                 sketches={}, seq=epoch, prev_seq=epoch, new_files=0,
-                new_rows=0, updated_groups=0,
-                wall_s=time.perf_counter() - t0)
+                new_rows=0, updated_groups=0)
     else:
         new = current
-    # fresh-seq rule: publish above any orphan row from a crashed epoch
     next_epoch = 0 if epoch is None else epoch + 1
-    orphan_max = store.max_seq_for_prefix(spark, store_path, name)
-    if orphan_max is not None:
-        next_epoch = max(next_epoch, orphan_max + 1)
     next_base = next_epoch if full else base
 
     from . import serde
@@ -398,47 +379,41 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     return GroupedIncrementalResult(
         sketches=groups, seq=next_epoch, prev_seq=epoch,
         new_files=len(new), new_rows=new_rows,
-        updated_groups=len(entries), wall_s=time.perf_counter() - t0)
+        updated_groups=len(entries))
 
 
 def grouped_epoch(spark: SparkSession, store_path: str,
                   name: str) -> tuple[int | None, int]:
     """(committed epoch, base epoch) of a grouped/table maintenance
-    lineage — the pins a correct external read needs: uncommitted orphan
-    rows sit ABOVE the committed epoch, dead pre-rebuild rows BELOW the
-    base. (None, 0) when nothing is committed yet."""
+    lineage — the pins a correct external read needs: dead pre-rebuild
+    rows sit BELOW the base. (None, 0) when nothing is committed yet."""
     epoch, base, _ = _grouped_manifest_state(store_path, name)
     return epoch, base
 
 
 def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
                      seq: int) -> tuple[int, int]:
-    """(epoch, base) pins for a HISTORICAL committed epoch ``seq`` of a
-    grouped lineage — what a correct read of a PAST fleet state needs
-    (e.g. certified drift between two published epochs). Groups
-    republish only when touched, so epoch ``seq``'s winner for a group
-    may sit at any seq in [base, seq]; the base comes from ``seq``'s own
-    commit marker (markers carry their lineage's base in file_size), so
-    rows from a pre-rebuild lineage that was dead at ``seq`` are
-    excluded. Raises KeyError when ``seq`` was never committed — orphan
-    publishes from crashed epochs are not addressable states."""
+    """(epoch, base) pins of a PAST committed epoch ``seq`` of a grouped
+    lineage (e.g. for drift between two epochs): a group's winner may sit
+    at any seq in [base, seq], the base read from ``seq``'s own commit
+    marker, so rows of a lineage dead at ``seq`` are excluded. KeyError
+    when ``seq`` was never committed."""
     bases = [sz for s, f, sz in store._manifest_rows(store_path, name)
              if not f and s == int(seq)]
     if not bases:
         raise KeyError(
-            f"{name!r} has no committed epoch {seq} (crashed-epoch "
-            "orphans are not addressable; see grouped_epoch for the "
-            "current committed state)")
+            f"{name!r} has no committed epoch {seq} (see grouped_epoch "
+            "for the current committed state)")
     return int(seq), max(bases[0], 0)
 
 
 def current_group_sketches(spark: SparkSession, store_path: str,
                            name: str) -> dict[str, object]:
     """The COMMITTED full group set of a grouped maintenance lineage:
-    store.load_group_sketches pinned to the committed epoch (excludes
-    crashed-epoch orphans) and the rebuild base (excludes groups dropped
-    by the last rebuild). This is the read external consumers want —
-    an unpinned load_group_sketches sees orphans and dead groups."""
+    store.load_group_sketches pinned to the committed epoch and the
+    rebuild base (excludes groups dropped by the last rebuild). This is
+    the read external consumers want — an unpinned load_group_sketches
+    sees dead groups."""
     epoch, base = grouped_epoch(spark, store_path, name)
     if epoch is None:
         return {}
@@ -477,13 +452,11 @@ def incremental_build_table(spark: SparkSession, table_path: str,
     touches the driver: the fold is one triples scan of the delta plus
     one nnz-bounded shuffle, vs a full 10^12-row rescan for a rebuild.
 
-    Store layout: ``<store>/tables/<name>/seq=<k>/``; the shared
-    manifest (commit marker + file rows, one append) commits epoch k.
-    Crash safety is the grouped path's: the epoch-(k+1) table written
-    before a crashed commit is orphaned, ignored (reads pin the
-    committed epoch) and deterministically overwritten on retry. Do not
-    reuse a blob-sketch name for a table sketch — they share the
-    manifest namespace."""
+    Store layout: ``<store>/tables/<name>/seq=<k>/``, written before the
+    manifest commit of epoch k; a fold that dies first leaves a
+    directory no commit marker names, which reads ignore and the retry
+    overwrites. Do not reuse a blob-sketch name for a table sketch —
+    they share the manifest namespace."""
     t0 = time.perf_counter()
     from .spark_build import _TRIPLE_SCHEMA, build_sketch_table
     current = _current_files(table_path)
@@ -533,7 +506,8 @@ def prune_table_epochs(spark: SparkSession, store_path: str, name: str,
     — where history is cheap and snapshot diffs want it — each table
     epoch is a FULL nnz-sized counter table, so daily folds would grow
     storage by one table per day forever. Epochs above the committed one
-    (crashed-retry orphans) are left alone: the retry overwrites them.
+    (left by a fold that died before its commit) are left alone: the
+    retry overwrites them.
     ``snapshot_diff_table`` against a pruned epoch fails with a clear
     error rather than a raw missing-path. Returns the pruned seqs."""
     import shutil as _shutil
@@ -584,7 +558,7 @@ def snapshot_diff_table(spark: SparkSession, store_path: str, name: str,
     current lineage are refused by the manifest pins (seq_old below the
     last rebuild's base describes a table state that no longer exists —
     its counters may subtract without going negative yet mean nothing;
-    seq_new above the committed epoch would read a crashed, uncommitted
+    seq_new above the committed epoch would read an uncommitted
     directory). Within the lineage, non-prefix operands (any counter
     going negative) are refused, as in CountMinSketch.subtract. The
     joined diff is cached around the negativity check so the caller's
@@ -599,8 +573,8 @@ def snapshot_diff_table(spark: SparkSession, store_path: str, name: str,
         raise ValueError(
             f"epochs ({seq_old}, {seq_new}) outside the current lineage "
             f"of {name!r} (base {base}, committed {epoch}): below-base "
-            "epochs predate the last rebuild, above-committed epochs are "
-            "crashed orphans")
+            "epochs predate the last rebuild, above-committed epochs were "
+            "never committed")
     new = _read_epoch_table(spark, store_path, name, seq_new)
     old = _read_epoch_table(spark, store_path, name, seq_old)
     diff = (new.withColumnRenamed("cnt", "cnt_new")

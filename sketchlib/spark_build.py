@@ -1341,6 +1341,8 @@ def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,
     factory = _factory(cfg_or_factory)
 
     def ingest(sketches, rows, tbl, file):
+        # null values are dropped, as _grouped_frame's filter does
+        tbl = tbl.filter(tbl.column(1).is_valid())
         _ingest_grouped(sketches, rows,
                         tbl.column(0).to_numpy(zero_copy_only=False),
                         tbl.column(1).combine_chunks(), factory, cu)

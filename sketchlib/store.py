@@ -2,94 +2,72 @@
 
 A build over the full table is the expensive artifact (at 10^12 sequences
 it is hours of cluster time); the sketch itself is KBs. The store persists
-named sketches of ANY sketchlib type (magic-dispatched — serde.loads) as a
-plain parquet TABLE, so it is listable/joinable from Spark, DuckDB or
-pyarrow and keeps the byte-identity contract: ``load_sketch(save_sketch(s))
-.to_bytes() == s.to_bytes()`` exactly.
+named sketches of ANY sketchlib type (magic-dispatched — serde.loads) as
+plain parquet tables, listable/joinable from Spark, DuckDB or pyarrow, and
+keeps the byte-identity contract ``load_sketch(save_sketch(s)).to_bytes()
+== s.to_bytes()``. Layout under ``<path>/``:
 
-Layout under ``<path>/``:
+- ``sketches/`` rows ``(name, seq, kind, blob, sha256, n_rows, meta_json)``
+  (a re-save adds a higher seq; loads resolve latest-wins), ``lineage/``
+  rows ``(name, seq, pid, n_rows, n_items, total_count, build_ms)`` (the
+  per-partition build audit trail), ``ingested/`` rows ``(name, seq,
+  file, file_size)`` (incremental.py's manifest) — write-once parts;
+- ``_head``: JSON of the store's id, generation and live parts. Readers
+  read exactly these parts, never one the head does not name;
+- ``_log/<g>.json``: the claim of generation g — the names its commit
+  wrote, the parts it added and removed.
 
-- ``sketches/``  parquet rows ``(name, seq, kind, blob, sha256, n_rows,
-  meta_json)`` — append-only; a re-save of ``name`` appends a higher
-  ``seq`` and loads resolve latest-wins (object-store friendly: no
-  read-modify-write of existing files).
-- ``lineage/``   parquet rows ``(name, seq, pid, n_rows, n_items,
-  total_count, build_ms)`` — the per-partition build lineage of each
-  saved sketch, queryable for audit ("which slice contributed what").
-- ``ingested/``  parquet rows ``(name, seq, file, file_size)`` — the
-  incremental-maintenance manifest (incremental.py).
+The commit rule. Every write is one commit (``_commit``): (1) its parts
+are written, one per table (dot-prefixed temp file, fsync, rename,
+directory fsync); (2) it claims generation g+1 by creating
+``_log/<g+1>.json`` exclusively (hard link of a durable temp file); (3) it
+replaces the head atomically (temp file, fsync, rename, directory fsync).
+``save_sketch``, ``save_sketches_bulk``, each incremental fold and
+``compact_store`` make exactly one commit; a fold stages its sketch,
+lineage and manifest rows in one ``_transaction``. A writer killed before
+step 2 leaves parts no head names; one killed after it leaves a claim the
+next writer installs before its own. Readers see the state before a
+commit or after it, never a mix.
 
-One I/O layer serves every reader and writer of these tables, on the
-driver and inside executor-side SQL functions alike (pyarrow, no Spark
-job):
+The single-writer rule, enforced: ``CommitConflict`` refuses a commit when
+a commit that landed after the writer's read (its transaction's starting
+generation) wrote one of its sketch or manifest names — two folds of one
+fleet share the fleet's manifest name; different names never conflict —
+and a sketch row whose seq is not above its name's committed seq, so no
+two committed rows share a ``(name, seq)``.
 
-- ``_winner_rows`` — THE winner rule: per name, the row with the highest
-  ``(seq, sha256)`` (sha breaks same-seq writer-race ties
-  deterministically). Rows are selected by exact names, a name prefix
-  (``prefix/<group>``) or everything, optionally inside a seq window or
-  at one exact seq. Winning blobs are sha-verified before anyone calls
-  ``serde.loads``; superseded rows are never hashed.
-- ``_manifest_rows`` — the ``ingested/`` rows of one name.
-- ``_append_rows`` — one parquet part per append, atomically: write a
-  dot-prefixed ``.tmp``, fsync it, rename it into place, fsync the
-  directory. Readers (pyarrow and Spark both skip dot-prefixed files) see
-  the old part set or the new one, never a torn part; a failed append
-  removes its ``.tmp``.
+Reads (pyarrow, no Spark job, on the driver and in executor-side SQL
+functions) go through ``_winner_rows`` — THE winner rule, highest
+``(seq, sha256)`` per name; winning blobs sha-verified, superseded rows
+never hashed — and ``_manifest_rows``. A read stats the head; next to the
+parsed head, one byte-budgeted FIFO (``_MEMO``) keeps each table's KEY
+INDEX (``_memo_read``; per part file, so a read after a commit opens only
+the new parts) and each query's ANSWER for one generation, so a read with
+no commit in between is one stat. Answers hold bytes and strings only: a
+caller that merges into what it loaded never alters another's answer.
 
-Every read lists its table directory: (path, size, mtime) of every
-file. Two memos hang off that listing, both in one byte-budgeted FIFO
-(``_MEMO``, ``_MEMO_BYTES``):
-
-- the per-part KEY INDEX (``_key_index``): per part and row group, the
-  name and seq bounds from the footer statistics, and the key columns —
-  (name, seq, sha256) in ``sketches/``, (name, seq, file, file_size)
-  in ``ingested/`` — as plain tuples, decoded the first time a read's
-  bounds admit that row group. Parts are write-once, so what a read
-  learns of a part is kept per listing entry: a read after a publish
-  opens only the new part, a cold one-name read of a many-row-group
-  part (a compacted fleet) decodes one row group, and winners are
-  picked from the index. An entry whose path, size or mtime changed is
-  read again, and entries of parts gone from the listing (after
-  ``compact_store``) are dropped. It is charged at its CPython object
-  sizes; an index over the budget is not kept, so the next read starts
-  cold. Payloads (``blob``, ``meta_json``) never enter the index:
-  winners' row groups are read from disk and sha-verified on every
-  memo miss;
-- the per-(table, query) ANSWER, valid while the listing is unchanged,
-  so any publish or compaction invalidates it. It holds bytes and
-  strings only: every caller deserializes its own sketch, so a caller
-  that merges into what it loaded can never alter another caller's
-  answer.
-
-Only "table does not exist" reads as empty — any other read failure
-(permissions, corrupt footer, transient FS error) surfaces, never
-mistaken for an empty store (streaming._late_merge_store's replay guard
-relies on this).
-
-Filesystems: a store path resolves through
-``pyarrow.fs.FileSystem.from_uri`` (plain paths are local). Local stores
-are the tested path. Remote schemes (``s3://``, ``gs://``, ``hdfs://``,
-...) go through the same calls but are UNTESTED: fsync is a no-op there
-and not every object store renames atomically.
-
-Spark readers remain only where a consumer streams a fleet or returns a
-DataFrame: ``list_sketches``, ``load_lineage`` and ``fleet_winners``
-(``_winners`` / ``winners_streaming``).
-
-Checkpoints (spark_build.checkpoint_dir) are the RESUME mechanism for
-in-flight builds — partial blobs keyed by slice. The store is the
-PUBLISH mechanism for finished ones; they intentionally do not share a
-format.
+Only a missing store, or one without a committed part, reads as empty;
+any other read failure surfaces (streaming._late_merge_store's replay
+guard relies on this), and tables with neither a head nor ``_log/``
+(written without a commit) are refused. Paths resolve through
+``pyarrow.fs``; local stores are the tested path. Remote schemes are
+UNTESTED and unsafe for more than one writer: no exclusive create (a claim
+is a check, then a move), renames not atomic everywhere, fsync a no-op.
+Spark readers (``list_sketches``, ``load_lineage``, ``fleet_winners``)
+read the head's parts too. Checkpoints (spark_build.checkpoint_dir) resume
+in-flight builds; the store publishes finished ones.
 """
 
 from __future__ import annotations
 
 import contextlib
+import contextvars
 import hashlib
 import json
 import os
 import sys
 import threading
+import time
 import uuid
 from collections import namedtuple
 
@@ -136,11 +114,12 @@ def one_part_df(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 def read_table(spark: SparkSession, path: str,
                schema: str | None = None) -> DataFrame | None:
-    """A store table as a Spark DataFrame, or None when the table doesn't
+    """A parquet directory as a Spark DataFrame, or None when it doesn't
     exist yet. ONLY "path does not exist" maps to None — any other read
     failure must surface. The single place the version-sensitive Spark
     error-message match lives. With ``schema`` given, a directory holding
-    no committed file reads as 0 rows instead of failing schema inference."""
+    no committed file reads as 0 rows instead of failing schema
+    inference."""
     from pyspark.errors import AnalysisException
     reader = spark.read if schema is None else spark.read.schema(schema)
     try:
@@ -151,7 +130,7 @@ def read_table(spark: SparkSession, path: str,
         raise
 
 
-# -- the pyarrow I/O layer ---------------------------------------------------
+# -- files --------------------------------------------------------------------
 
 def _fs(path: str) -> tuple[pafs.FileSystem, str]:
     """(filesystem, path inside it) of a store path."""
@@ -170,25 +149,62 @@ def _fsync(fs: pafs.FileSystem, path: str) -> None:
             os.close(fd)
 
 
-def _listing(fs: pafs.FileSystem, d: str) -> tuple | None:
-    """(path, size, mtime) of every file under a table directory — the
-    memo key; None when the table does not exist."""
+def _atomic(fs: pafs.FileSystem, final: str, write,
+            exclusive: bool = False) -> None:
+    """Create ``final`` from ``write(tmp)``: a dot-prefixed temp file
+    beside it (pyarrow and Spark skip those), fsync, rename into place —
+    or, ``exclusive``, hard-link it there (FileExistsError when
+    ``final`` exists) — then fsync the directory. Readers never see a
+    torn file; a failure removes the temp file."""
+    d, base = final.rsplit("/", 1)
+    tmp = f"{d}/.{base}.{uuid.uuid4().hex[:8]}.tmp"
     try:
-        infos = fs.get_file_info(pafs.FileSelector(d, recursive=True))
-    except FileNotFoundError:
-        return None
-    return tuple(sorted((i.path, i.size, i.mtime_ns) for i in infos
-                        if i.type == pafs.FileType.File))
+        write(tmp)
+        _fsync(fs, tmp)
+        if exclusive and isinstance(fs, pafs.LocalFileSystem):
+            os.link(tmp, final)
+            fs.delete_file(tmp)
+        elif exclusive and _stat(fs, final) is not None:  # remote: racy
+            raise FileExistsError(final)
+        else:
+            fs.move(tmp, final)
+        _fsync(fs, d)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            fs.delete_file(tmp)
+        raise
 
 
-# (store, table, query) -> (listing, value, bytes), FIFO-evicted to a
-# total size; a table's key index (see _key_index) is one more entry
+def _json(fs: pafs.FileSystem, path: str, doc=None, exclusive=False,
+          mtime_ns=None):
+    """Read JSON ``path``, or create it holding ``doc`` (``_atomic``)."""
+    if doc is None:
+        with fs.open_input_stream(path) as f:
+            return json.loads(f.read())
+
+    def write(tmp):
+        with fs.open_output_stream(tmp) as f:
+            f.write(json.dumps(doc).encode())
+        if mtime_ns:
+            os.utime(tmp, ns=(mtime_ns, mtime_ns))
+    _atomic(fs, path, write, exclusive)
+
+
+def _stat(fs: pafs.FileSystem, path: str) -> tuple | None:
+    """(size, mtime) of a file; None when it does not exist."""
+    i = fs.get_file_info(path)
+    return None if i.type == pafs.FileType.NotFound else (i.size, i.mtime_ns)
+
+
+# (store, table, query) -> (version, value, bytes), FIFO-evicted to a
+# total size; each table's key index and each store's parsed head are
+# entries too
 _MEMO: dict[tuple, tuple] = {}
 _MEMO_BYTES = 256 << 20
 _MEMO_LOCK = threading.Lock()
 
 
-def _memo_put(key: tuple, listing: tuple, value, nbytes: int) -> None:
+def _memo_put(key: tuple, version, value, nbytes: int) -> None:
     """Memoize ``value`` under ``key``, evicting the oldest entries to
     stay within ``_MEMO_BYTES``. A value over the budget is not kept: it
     drops what ``key`` held (a key index grows in place) and evicts
@@ -200,7 +216,14 @@ def _memo_put(key: tuple, listing: tuple, value, nbytes: int) -> None:
         total = sum(v[2] for v in _MEMO.values())
         while _MEMO and total + nbytes > _MEMO_BYTES:
             total -= _MEMO.pop(next(iter(_MEMO)))[2]
-        _MEMO[key] = (listing, value, nbytes)
+        _MEMO[key] = (version, value, nbytes)
+
+
+def _memo_get(key: tuple, version):
+    """The value memoized under ``key`` at ``version``, else None."""
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+    return hit[1] if hit is not None and hit[0] == version else None
 
 
 def _sizeof(t: tuple) -> int:
@@ -208,6 +231,195 @@ def _sizeof(t: tuple) -> int:
     with others, such as small ints, are charged too)."""
     return sys.getsizeof(t) + sum(map(sys.getsizeof, t))
 
+
+# -- the head and the commit ----------------------------------------------------
+
+# {"store": id made by the first commit (a store made again at a path
+# never matches old memo entries), "generation", "parts": {table: names}}
+_EMPTY = {"store": None, "generation": 0, "parts": {t: [] for t in _SCHEMAS}}
+
+
+def _head(path: str) -> dict:
+    """The committed head of the store at ``path``, memoized on one stat
+    of ``_head``; ``_EMPTY`` when there is none, unless table directories
+    exist and ``_log/`` does not (a store written without a commit)."""
+    fs, root = _fs(path)
+    st = _stat(fs, f"{root}/_head")
+    if st is None:
+        if _stat(fs, f"{root}/_log") is None and any(
+                _stat(fs, f"{root}/{t}") for t in _SCHEMAS):
+            raise IOError(
+                f"store {path} has tables but no _head: it was not "
+                "written through a commit, so which parts are live is "
+                "unknown — republish its sketches into a new store")
+        return _EMPTY
+    head = _memo_get((path, "_head"), st)
+    if head is None:
+        head = _json(fs, f"{root}/_head")
+        _memo_put((path, "_head"), st, head, 4 * st[0])
+    return head
+
+
+def _advance(fs: pafs.FileSystem, root: str, head: dict) -> dict:
+    """``head`` with every generation claimed above it applied."""
+    while True:
+        try:
+            entry = _json(fs, f"{root}/_log/{head['generation'] + 1}.json")
+        except FileNotFoundError:
+            return head
+        parts = {}
+        for t, ps in head["parts"].items():
+            gone = set(entry["remove"].get(t, ()))
+            parts[t] = [p for p in ps if p not in gone] + entry["add"].get(
+                t, [])
+        head = {"store": entry["store"], "parts": parts,
+                "generation": head["generation"] + 1}
+
+
+def _claim(fs: pafs.FileSystem, root: str, gen: int, entry: dict) -> None:
+    """Step 2 of a commit: create ``_log/<gen>.json`` holding ``entry``,
+    exclusively (FileExistsError when another commit claimed ``gen``)."""
+    _json(fs, f"{root}/_log/{gen}.json", entry, exclusive=True)
+
+
+def _write_head(fs: pafs.FileSystem, root: str, head: dict) -> None:
+    """Step 3 of a commit: replace ``_head`` atomically. A local head's
+    mtime is set above its predecessor's, so no two heads share the
+    (size, mtime) stat that readers memoize it on."""
+    old = _stat(fs, f"{root}/_head")
+    bump = old is not None and isinstance(fs, pafs.LocalFileSystem)
+    _json(fs, f"{root}/_head", head,
+          mtime_ns=bump and max(time.time_ns(), old[1] + 1))
+
+
+def _current(path: str) -> dict:
+    """The head with every claimed generation installed — rewritten while
+    later ones appear, so a racing writer's older head never stays."""
+    fs, root = _fs(path)
+    head = _head(path)
+    while (later := _advance(fs, root, head)) is not head:
+        _write_head(fs, root, later)
+        head = later
+    return head
+
+
+class CommitConflict(RuntimeError):
+    """A commit refused under the single-writer rule (see the module
+    docstring); nothing of it is visible. Re-read the store and retry."""
+
+
+def _drop(fs: pafs.FileSystem, root: str, parts: dict) -> None:
+    """Delete the part files ``parts`` ({table: file names})."""
+    for t, ps in parts.items():
+        for p in ps:
+            with contextlib.suppress(FileNotFoundError):
+                fs.delete_file(f"{root}/{t}/{p}")
+
+
+def _write_parts(fs: pafs.FileSystem, root: str, tables: dict,
+                 stem: str = "part") -> dict:
+    """Step 1 of a commit: a part per arrow table of ``tables``; returns
+    {table: [file name]}. ``_log/`` comes first (a store whose first
+    commit dies here reads as empty); a failure removes the parts."""
+    fs.create_dir(f"{root}/_log", recursive=True)
+    add: dict[str, list] = {}
+    try:
+        for t, tbl in tables.items():
+            add[t] = [_write_part(fs, f"{root}/{t}", tbl, stem)]
+    except BaseException:
+        _drop(fs, root, add)
+        raise
+    return add
+
+
+def _commit(path: str, base: int, names, add: dict,
+            remove: dict | None = None) -> int:
+    """THE commit: the written parts ``add`` ({table: [file names]}) go
+    live and ``remove`` leaves the head as one new generation, returned.
+    CommitConflict (``add`` deleted) when a generation above ``base``,
+    the one the writer read, wrote one of ``names`` — or was pruned, so
+    that cannot be ruled out — or a part in ``remove`` is gone. A claim
+    lost to a racing writer is retried on the next generation."""
+    fs, root = _fs(path)
+    names, remove = set(names), remove or {}
+    try:
+        while True:
+            head = _current(path)
+            for g in range(base + 1, head["generation"] + 1):
+                try:
+                    hit = names.intersection(
+                        _json(fs, f"{root}/_log/{g}.json")["names"])
+                except FileNotFoundError:
+                    hit = names       # pruned: cannot be ruled out
+                if hit:
+                    raise CommitConflict(
+                        f"store {path}: generation {g}, committed after "
+                        f"this writer read generation {base}, may have "
+                        f"written {sorted(hit)[:3]} — one writer per "
+                        "name; re-read and retry")
+            if any(not set(ps) <= set(head["parts"][t])
+                   for t, ps in remove.items()):
+                raise CommitConflict(f"store {path}: the parts to remove "
+                                     "were replaced by another commit")
+            entry = {"store": head["store"] or uuid.uuid4().hex,
+                     "names": sorted(names), "add": add, "remove": remove}
+            try:
+                _claim(fs, root, head["generation"] + 1, entry)
+                break
+            except FileExistsError:
+                continue
+    except BaseException:
+        _drop(fs, root, add)
+        raise
+    _current(path)
+    return head["generation"] + 1
+
+
+# the transaction open in this context: (store path, base generation,
+# {table: staged rows})
+_TXN: contextvars.ContextVar = contextvars.ContextVar("sketchlib_store_txn",
+                                                      default=None)
+
+
+@contextlib.contextmanager
+def _transaction(path: str, join: bool = False):
+    """Stage the store writes of the block (``_stage``) into ONE commit
+    made when it exits without an exception (``join``: into the
+    transaction open on ``path`` in this context, if any). The writer's
+    read is the generation the transaction starts from."""
+    if join and _TXN.get() is not None and _TXN.get()[0] == path:
+        yield
+        return
+    tx = (path, _current(path)["generation"], {})
+    token = _TXN.set(tx)
+    try:
+        yield
+    finally:
+        _TXN.reset(token)
+    rows = tx[2]
+    if not rows:
+        return
+    keys = [(r[0], r[1]) for r in rows.get("sketches", ())]
+    have = _winner_rows(path, names={n for n, _ in keys},
+                        payload=()) if keys else {}
+    stale = [k for k in keys if k[0] in have and have[k[0]].seq >= k[1]]
+    if stale or len(set(keys)) < len(keys):
+        raise CommitConflict(f"store {path}: {(stale or keys)[:3]} not "
+                             "above the committed seq (or repeated)")
+    schemas = {t: _arrow_schema(_SCHEMAS[t]) for t in rows}
+    _commit(path, tx[1], {r[0] for rs in rows.values() for r in rs},
+            _write_parts(*_fs(path), {t: pa.table(dict(zip(
+                schemas[t].names, zip(*rs))), schema=schemas[t])
+                for t, rs in rows.items()}))
+
+
+def _stage(path: str, table: str, rows: list[tuple]) -> None:
+    """Add ``table`` rows (column-order tuples) to ``path``'s transaction."""
+    if rows:
+        _TXN.get()[2].setdefault(table, []).extend(rows)
+
+
+# -- reads ----------------------------------------------------------------------
 
 def _part_keys(fs: pafs.FileSystem, part: str, columns: tuple,
                groups: tuple | None, sel) -> tuple:
@@ -251,46 +463,30 @@ def _part_keys(fs: pafs.FileSystem, part: str, columns: tuple,
     return tuple(out)
 
 
-def _key_index(path: str, table: str, listing: tuple,
-               columns: tuple) -> dict:
-    """{listing entry: row groups or None} of every part of the table
-    ``path/table`` (see ``_part_keys``; None: not opened yet). Parts are
-    write-once (uuid names, atomic rename; compaction writes a new path),
-    so what a read learns of a part — its footer bounds, the key rows of
-    the row groups it reached — is kept per listing entry (path, size,
-    mtime) and reused by every later read: a read opens only the parts
-    that are new since the last one, and the row groups no read has
-    reached yet. Entries of parts gone from the listing are dropped.
-    Payload columns never enter the index. Dot- and underscore-prefixed
-    files (temp files, Spark markers and checksums) are not parts."""
-    with _MEMO_LOCK:
-        hit = _MEMO.get((path, table, ("keys", columns)))
-    old = {} if hit is None else hit[1]
-    if hit is not None and hit[0] == listing:
-        return old
-    return {e: old.get(e) for e in listing
-            if not e[0].rsplit("/", 1)[-1].startswith((".", "_"))}
-
-
 def _memo_read(path: str, table: str, query: tuple, columns: tuple, read):
-    """``read(fs, keys) -> (value, nbytes)`` over the store table
-    ``path/table``, ``keys`` its key index of ``columns``
-    (``_key_index``), memoized on the table's listing; None (``read`` not
-    called) when the table does not exist. The index is charged again
-    after each read, since a read can decode more of it."""
-    fs, d = _fs(f"{path}/{table}")
-    listing = _listing(fs, d)
-    if listing is None:
+    """``read(fs, keys) -> (value, nbytes)`` over the committed parts of
+    ``path/table``, memoized per generation; None when there is none.
+    ``keys`` is the table's KEY INDEX of ``columns`` — {part path:
+    ``_part_keys`` entry or None} — reused across generations (parts are
+    write-once), so a read opens only the parts new since the last one;
+    it is charged again after each read, which can decode more of it."""
+    head = _head(path)
+    if not head["parts"][table]:
         return None
-    key = (path, table, query)
+    version = (head["store"], head["generation"])
+    hit = _memo_get((path, table, query), version)
+    if hit is not None:
+        return hit
+    fs, root = _fs(path)
     with _MEMO_LOCK:
-        hit = _MEMO.get(key)
-    if hit is not None and hit[0] == listing:
-        return hit[1]
-    keys = _key_index(path, table, listing, columns)
+        was, old, _ = _MEMO.get((path, table, ("keys", columns)),
+                                (None, {}, 0))
+    keys = old if was == version else {
+        p: old.get(p) for p in (f"{root}/{table}/{name}"
+                                for name in head["parts"][table])}
     value, nbytes = read(fs, keys)
-    _memo_put(key, listing, value, nbytes)
-    _memo_put((path, table, ("keys", columns)), listing, keys,
+    _memo_put((path, table, query), version, value, nbytes)
+    _memo_put((path, table, ("keys", columns)), version, keys,
               sys.getsizeof(keys) + sum(
                   sys.getsizeof(groups) + sum(g[6] for g in groups)
                   for groups in keys.values() if groups is not None))
@@ -339,14 +535,13 @@ def _scan(fs: pafs.FileSystem, keys: dict, sel: _Select, columns: tuple):
     selects. A part is opened only when it is new to the index or holds
     an admitted row group whose rows were never decoded; what it reads is
     kept in ``keys``."""
-    for entry, groups in keys.items():
+    for part, groups in keys.items():
         if groups is None or any(g[5] is None and sel.group(*g[1:5])
                                  for g in groups):
-            groups = keys[entry] = _part_keys(fs, entry[0], columns,
-                                              groups, sel)
+            groups = keys[part] = _part_keys(fs, part, columns, groups, sel)
         for rg, name_min, name_max, seq_min, seq_max, rows, _ in groups:
             if sel.group(name_min, name_max, seq_min, seq_max):
-                yield entry[0], rg, [r for r in rows if sel.row(r[0], r[1])]
+                yield part, rg, [r for r in rows if sel.row(r[0], r[1])]
 
 
 # one winning sketches/ row; meta_json / blob are None when not read
@@ -444,8 +639,7 @@ def _manifest_rows(path: str, name: str) -> tuple:
 def _write_part(fs: pafs.FileSystem, d: str, tbl: pa.Table,
                 stem: str = "part") -> str:
     """Write ``tbl`` as one new parquet part into the table directory
-    ``d`` atomically (tmp, fsync, rename, directory fsync); returns the
-    part's path.
+    ``d`` atomically (``_atomic``); returns the part's file name.
 
     Rows are sorted by (name, seq) and written in row groups sized by
     BYTES (~24 MB each, clamped to [16, 4096] rows): parquet keeps
@@ -463,31 +657,11 @@ def _write_part(fs: pafs.FileSystem, d: str, tbl: pa.Table,
     tbl = tbl.sort_by([("name", "ascending"), ("seq", "ascending")])
     rg_rows = max(16, min(4096, (24 << 20) // max(
         1, tbl.nbytes // max(1, tbl.num_rows))))
-    final = f"{d}/{stem}-{uuid.uuid4().hex}-pya.snappy.parquet"
-    tmp = f"{d}/.{final.rsplit('/', 1)[-1]}.tmp"
-    try:
-        pq.write_table(tbl, tmp, filesystem=fs, compression="snappy",
-                       row_group_size=rg_rows)
-        _fsync(fs, tmp)
-        fs.move(tmp, final)
-        _fsync(fs, d)
-    except BaseException:
-        with contextlib.suppress(OSError):
-            fs.delete_file(tmp)
-        raise
-    return final
-
-
-def _append_rows(path: str, table: str, rows: list[tuple]) -> str | None:
-    """Append ``rows`` (tuples in column order) to the store table
-    ``path/table`` — sketches, lineage or ingested — as one atomic part;
-    returns its path, None when there are no rows."""
-    if not rows:
-        return None
-    schema = _arrow_schema(_SCHEMAS[table])
-    tbl = pa.table([pa.array(col, type=f.type)
-                    for col, f in zip(zip(*rows), schema)], schema=schema)
-    return _write_part(*_fs(f"{path}/{table}"), tbl)
+    name = f"{stem}-{uuid.uuid4().hex}-pya.snappy.parquet"
+    _atomic(fs, f"{d}/{name}", lambda tmp: pq.write_table(
+        tbl, tmp, filesystem=fs, compression="snappy",
+        row_group_size=rg_rows))
+    return name
 
 
 # -- public loaders and writers ---------------------------------------------
@@ -508,42 +682,22 @@ def _next_seq(spark: SparkSession, path: str, name: str) -> int:
 def save_sketch(spark: SparkSession, path: str, name: str, sketch, *,
                 lineage=None, n_rows: int = -1, meta: dict | None = None,
                 seq: int | None = None) -> int:
-    """Persist ``sketch`` under ``name``; returns the assigned seq.
-
-    Concurrency contract: ONE writer per name. ``seq`` is assigned by a
-    read-then-append, so two simultaneous writers of the same name can
-    both claim the same seq; loads still resolve deterministically —
-    ties break on blob sha256 (content-addressed, see ``load_sketch``) —
-    but one of the two writes is shadowed. Different names never
-    interfere (appends are independent files).
-
-    ``lineage`` is an optional pandas DataFrame with columns
-    (pid, n_rows, n_items, total_count, build_ms) — pass
-    ``BuildResult.lineage`` to keep the per-partition audit trail with
-    the published sketch. The lineage part lands first and the sketch
-    row is the commit: if the sketch append fails, the lineage part is
-    removed again, so a failed save leaves the store as it was.
-
-    ``seq`` pins the sequence number explicitly (callers that must know
-    it before the write, e.g. incremental.py's manifest_base meta);
-    default is the usual read-then-append assignment. Same single-writer
-    contract either way.
-    """
-    if seq is None:
-        seq = _next_seq(spark, path, name)
-    row = _sketch_row(name, seq, sketch, n_rows, meta)
-    lineage_part = None
-    if lineage is not None and len(lineage):
-        lineage_part = _append_rows(path, "lineage", [
-            (name, seq, int(r["pid"]), int(r["n_rows"]), int(r["n_items"]),
-             int(r["total_count"]), float(r["build_ms"]))
-            for _, r in lineage.iterrows()])
-    try:
-        _append_rows(path, "sketches", [row])
-    except BaseException:
-        if lineage_part is not None:
-            _fs(path)[0].delete_file(lineage_part)
-        raise
+    """Persist ``sketch`` under ``name`` with its optional ``lineage``
+    (a pandas DataFrame of pid, n_rows, n_items, total_count, build_ms,
+    e.g. ``BuildResult.lineage``) in one commit — inside an incremental
+    fold, with its manifest rows too; returns the seq: ``seq`` when
+    pinned (it must be above the name's committed seq), else one above.
+    ONE writer per name, enforced (CommitConflict)."""
+    with _transaction(path, join=True):
+        if seq is None:
+            seq = _next_seq(spark, path, name)
+        if lineage is not None:
+            _stage(path, "lineage", [
+                (name, seq, int(r["pid"]), int(r["n_rows"]),
+                 int(r["n_items"]), int(r["total_count"]),
+                 float(r["build_ms"])) for _, r in lineage.iterrows()])
+        _stage(path, "sketches",
+               [_sketch_row(name, seq, sketch, n_rows, meta)])
     return seq
 
 
@@ -581,48 +735,29 @@ def latest_entry(spark: SparkSession, path: str,
     return None if w is None else (w.seq, json.loads(w.meta_json))
 
 
-def max_seq_for_prefix(spark: SparkSession, path: str,
-                       prefix: str) -> int | None:
-    """Highest seq over every name of the form ``prefix/<group>``, or
-    None when the store/prefix doesn't exist. INCLUDES uncommitted
-    orphan rows from crashed grouped epochs — grouped maintenance uses
-    this to publish retries at a fresh seq strictly above any orphan, so
-    a retry folding a bigger delta can never tie (and sha-coin-flip)
-    with the crashed attempt's rows."""
-    rows = _winner_rows(path, prefix=prefix, payload=()).values()
-    return max((w.seq for w in rows), default=None)
-
-
 def save_sketches_bulk(spark: SparkSession, path: str,
                        entries: list[tuple[str, int, object, int]],
                        meta: dict | None = None) -> None:
-    """Append many ``(name, seq, sketch, n_rows)`` rows as ONE part — the
-    grouped-publish path. Same row format and integrity contract as
-    save_sketch; no lineage rows (grouped builds carry their audit trail
-    in the caller's manifest meta). Driver memory holds all blobs at
-    once — bounded by (groups touched × blob size), the same fan-in the
-    grouped build's collect already paid."""
-    _append_rows(path, "sketches",
-                 [_sketch_row(name, seq, sketch, n_rows, meta)
-                  for name, seq, sketch, n_rows in entries])
+    """Commit many ``(name, seq, sketch, n_rows)`` rows as ONE part — the
+    grouped-publish path; save_sketch's row format and commit contract,
+    no lineage rows. Driver memory holds all blobs at once — bounded by
+    (groups touched × blob size), the fan-in the grouped build's collect
+    already paid."""
+    with _transaction(path, join=True):
+        _stage(path, "sketches",
+               [_sketch_row(name, seq, sketch, n_rows, meta)
+                for name, seq, sketch, n_rows in entries])
 
 
 def load_group_sketches(spark: SparkSession, path: str, prefix: str,
                         max_seq: int | None = None,
                         min_seq: int | None = None,
                         groups: list[str] | None = None) -> dict[str, object]:
-    """{group: sketch} for every name of the form ``prefix/<group>``, in
-    ONE store read. Per group, the winning row — optionally bounded to
-    ``min_seq <= seq <= max_seq``: max_seq is the committed-epoch pin
-    that lets grouped incremental maintenance ignore orphan publishes
-    from a crashed, uncommitted epoch; min_seq is the last full-rebuild
-    epoch, below which rows describe a table state that no longer
-    exists. Groups republish only when touched, so a group's latest seq
-    is typically BELOW the current epoch. ``groups`` restricts the read
-    to those group values (pushed into the parquet scan) — the
-    incremental path loads only the delta's groups, never the whole
-    fleet. Superseded rows are never hashed or deserialized — a corrupt
-    superseded version cannot fail a read of intact winners."""
+    """{group: sketch} of the names ``prefix/<group>`` (only ``groups``
+    when given) in ONE store read: per group the winner within
+    ``[min_seq, max_seq]`` — max_seq pins a committed epoch, min_seq the
+    last rebuild's base (older rows describe a dead table state). A
+    corrupt superseded version cannot fail a read of intact winners."""
     names = None if groups is None else [f"{prefix}/{g}" for g in groups]
     rows = _winner_rows(path, names=names, prefix=prefix, min_seq=min_seq,
                         max_seq=max_seq, payload=("blob",))
@@ -630,25 +765,35 @@ def load_group_sketches(spark: SparkSession, path: str, prefix: str,
             for n, w in rows.items()}
 
 
+def _spark_table(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """The committed rows of a store table for Spark readers: the table
+    directory, filtered to the parts the head names (one driver-side
+    listing; a path list above Spark's parallel-listing threshold would
+    run a listing job)."""
+    parts = _head(path)["parts"][table]
+    if not parts:
+        return spark.createDataFrame([], _SCHEMAS[table])
+    return (spark.read.schema(_SCHEMAS[table]).parquet(f"{path}/{table}")
+            .filter(F.col("_metadata.file_name").isin(parts)))
+
+
 def fleet_winners(spark: SparkSession, path: str, prefix: str,
                   min_seq: int, max_seq: int) -> DataFrame:
     """(name, blob, sha256) winner rows of every ``prefix/<group>`` name
     inside ``[min_seq, max_seq]`` as a lazy Spark DataFrame — for
     consumers that stream a fleet through mapInPandas, where blobs must
-    never reach the driver (winners_streaming: no blob shuffle either).
-    Consumers verify each blob with ``_verified``."""
-    df = read_table(spark, path + "/sketches")
-    if df is None:
-        raise KeyError(f"{prefix} has no committed grouped epoch")
+    never reach the driver. Consumers verify each blob with
+    ``_verified``."""
     return winners_streaming(
-        df.filter(F.col("name").startswith(prefix + "/"))
+        _spark_table(spark, path, "sketches")
+        .filter(F.col("name").startswith(prefix + "/"))
         .filter((F.col("seq") >= min_seq) & (F.col("seq") <= max_seq))
     ).select("name", "blob", "sha256")
 
 
 def _winners(df: DataFrame) -> DataFrame:
     """One row per name: highest (seq, sha256) — the winner rule for
-    Spark consumers (exact-duplicate rows collapse to one)."""
+    Spark consumers."""
     from pyspark.sql.window import Window
     w = Window.partitionBy("name").orderBy(F.col("seq").desc(),
                                            F.col("sha256").desc())
@@ -657,118 +802,64 @@ def _winners(df: DataFrame) -> DataFrame:
 
 
 def winners_streaming(df: DataFrame) -> DataFrame:
-    """`_winners` WITHOUT shuffling payload columns: the window over
-    ``partitionBy(name)`` exchanges whole rows, so fleet-scale reads
-    would shuffle G × KB of blob bytes just to pick winners. Here the
-    winner (name, seq, sha256) keys are computed on a column-pruned
-    projection (tiny Exchange) and broadcast-SEMI-joined back, so blobs
-    stream from parquet straight into the consumer — the shape for
-    10^5-10^6-row fleets. One subtlety: EXACT-duplicate rows (same
-    name, seq AND sha — possible only when two writers race to publish
-    byte-identical content at the same seq) collapse under the window
-    but would BOTH survive a semi-join, double-counting a group in a
-    downstream merge; their absence is checked on the pruned frame
-    first and the rare duplicate case falls back to the shuffling
-    `_winners`."""
-    pruned = df.select("name", "seq", "sha256")
-    dup = (pruned.groupBy("name", "seq", "sha256")
-           .agg(F.count("*").alias("c")).filter(F.col("c") > 1)
-           .limit(1).count())
-    if dup:
-        return _winners(df)
-    keys = _winners(pruned)
+    """`_winners` WITHOUT shuffling payload columns (fleet-scale reads
+    would exchange G × KB of blobs to pick winners): the winner keys are
+    computed on a (name, seq, sha256) projection and broadcast-SEMI-
+    joined back, so blobs stream from parquet straight into the
+    consumer. One row per name, since no two committed rows share a
+    (name, seq)."""
+    keys = _winners(df.select("name", "seq", "sha256"))
     return df.join(F.broadcast(keys), ["name", "seq", "sha256"],
                    "left_semi")
 
 
 def list_sketches(spark: SparkSession, path: str) -> DataFrame:
-    """EXACTLY one row per name — its winning version (highest seq, sha
-    tie-break), the same winner every loader returns. A plain
-    max-seq join would emit two rows per name after a same-seq writer
-    race or a crash-left duplicate, making listings disagree with
-    loads."""
+    """EXACTLY one row per name: its winning version, the same winner
+    every loader returns."""
     return _winners(
-        spark.read.parquet(path + "/sketches")
+        _spark_table(spark, path, "sketches")
         .select("name", "seq", "kind", F.length("blob").alias("bytes"),
                 "sha256", "n_rows", "meta_json"))
 
 
 def compact_store(spark: SparkSession, path: str) -> dict[str, dict]:
-    """Merge each store table's many small append files into ONE file.
-
-    Every publish appends a file, so a daily-publish store accumulates
-    365 files/year per table — harmless for correctness (loads pick
-    winning rows). Reads open only parts they have not seen (the key
-    index), so the files cost one listing entry each per read and a
-    cold process one open each. Compaction
-    rewrites sketches/, lineage/ and ingested/ each into a single
-    parquet file, PRESERVING every row: history is a feature
-    (snapshot_diff needs old seqs; the manifest's current lineage drives
-    incremental diffs), so nothing is pruned — only exact duplicate rows
-    (left by a crashed prior compaction) are dropped.
-
-    Never-missing by construction: the compacted file is written INTO
-    the live directory first, then ONLY the part files it actually read
-    are removed — a FRESH read at any instant sees the old snapshot,
-    old+new (duplicate rows, which winning-row selection tolerates), or
-    just the new file; the directory itself is never renamed so the
-    store never appears missing/empty mid-compact. A part file appended
-    by a racing publish (a contract violation — see below) is NOT
-    deleted, so its rows survive even then. Two caveats: a reader
-    holding a PLAN or cache whose file listing predates the compaction
-    can hit FileNotFoundException on the removed parts (re-read, or
-    spark.catalog.clearCache(), after compacting); and a crash
-    mid-removal leaves duplicates that the next compaction cleans.
-
-    Driver-side rewrite through the store's I/O layer (the store is
-    KB-MB scale by design): the compacted part is written like any
-    append — tmp, fsync, rename, directory fsync — before a single part
-    file is removed, so a power loss can never persist the deletes
-    without the part that replaces them. Single-writer contract as
-    everywhere in the store: don't compact concurrently with a publish.
-    Returns {table: {files_before, files_after, rows, dupes_dropped}}.
-    """
-    stats: dict[str, dict] = {}
-    for table in _SCHEMAS:
-        fs, d = _fs(f"{path}/{table}")
-        try:
-            infos = fs.get_file_info(pafs.FileSelector(d))
-        except FileNotFoundError:
-            continue
-        parts = sorted(i.base_name for i in infos
-                       if i.base_name.endswith(".parquet")
-                       and not i.base_name.startswith((".", "_")))
-        if not parts:
-            continue
-        schema = _arrow_schema(_SCHEMAS[table])
-        t = pa.concat_tables(_read_part(fs, f"{d}/{p}").select(
-            schema.names).cast(schema) for p in parts)
-        pdf = t.to_pandas().drop_duplicates()  # crash-left exact dupes
-        _write_part(fs, d, pa.Table.from_pandas(pdf, schema=t.schema,
-                                                preserve_index=False),
-                    stem="compact")
-        # delete exactly the snapshot we read (plus spark's write markers
-        # and checksum companions) — never a file that appeared since
-        gone = set(parts) | {f".{p}.crc" for p in parts} | {
-            "_SUCCESS", "._SUCCESS.crc"}
-        for i in infos:
-            if i.base_name in gone:
+    """Merge each table's live parts (one per commit that wrote it) into
+    ONE, keeping every row (snapshot_diff needs old seqs, incremental
+    diffs the manifest). One commit swaps the new parts in and the old
+    out, then the old files and the claims below it are deleted. A Spark
+    plan from before can hit a missing file (re-read, or
+    spark.catalog.clearCache()). A commit beside it keeps its parts; a
+    racing compaction, or a writer that read before the claims went, is
+    refused. Returns {table: {files_before, files_after, rows}}."""
+    fs, root = _fs(path)
+    head = _current(path)
+    old = {t: ps for t, ps in head["parts"].items() if ps}
+    tables = {}
+    for t, ps in old.items():
+        schema = _arrow_schema(_SCHEMAS[t])
+        tables[t] = pa.concat_tables(_read_part(fs, f"{root}/{t}/{p}")
+                                     .select(schema.names).cast(schema)
+                                     for p in ps)
+    if old:
+        gen = _commit(path, head["generation"], (),
+                      _write_parts(fs, root, tables, "compact"), old)
+        _drop(fs, root, old)
+        for i in fs.get_file_info(pafs.FileSelector(f"{root}/_log")):
+            if i.base_name.split(".")[0].isdigit() \
+                    and int(i.base_name.split(".")[0]) < gen:
                 fs.delete_file(i.path)
-        stats[table] = {"files_before": len(parts), "files_after": 1,
-                        "rows": len(pdf),
-                        "dupes_dropped": t.num_rows - len(pdf)}
-    return stats
+    return {t: {"files_before": len(old[t]), "files_after": 1,
+                "rows": tables[t].num_rows} for t in old}
 
 
 def load_lineage(spark: SparkSession, path: str, name: str,
                  seq: int | None = None) -> DataFrame:
     """Per-partition build lineage of a saved sketch: the winning
-    version's unless ``seq`` pins one (lineage rows of a save that never
-    committed its sketch row are never returned as the latest)."""
+    version's unless ``seq`` pins one."""
     if seq is None:
         entry = latest_entry(spark, path, name)
         seq = -1 if entry is None else entry[0]
-    return (spark.read.parquet(path + "/lineage")
+    return (_spark_table(spark, path, "lineage")
             .filter((F.col("name") == name) & (F.col("seq") == seq))
             .select("name", "seq", "pid", "n_rows", "n_items",
                     "total_count", "build_ms"))

@@ -487,14 +487,11 @@ def test_quantile_grouped_contract_matches_kind(spark, tmp_path):
     assert "relative value error" in b.contract
 
 
-def test_gspec_pinned_to_committed_epoch(spark, tmp_path):
-    """ADVICE r4: orphan rows from a crashed rebuild with a CHANGED
-    spec (published above the committed epoch, no commit marker) must
-    not supply the kind list — _gspec, answers, the spec-mismatch
-    guard and entries() all read the committed spec."""
+def test_gspec_pinned_to_committed_epoch(spark, tmp_path, monkeypatch):
+    """ADVICE r4: a rebuild with a CHANGED spec that dies before its
+    commit leaves no row of the new spec visible — _gspec, answers, the
+    spec-mismatch guard and entries() all read the committed spec."""
     from sketchlib import store as store_mod
-    from sketchlib.catalog import _normalize_kinds
-    from sketchlib.theta import ThetaSketch
 
     _write_part(tmp_path, 0, rows=400, seed=11)
     data = str(tmp_path / "data")
@@ -504,19 +501,16 @@ def test_gspec_pinned_to_committed_epoch(spark, tmp_path):
     cat.register_grouped(data, "source", "tokens", kinds)
     committed = cat.count_distinct_grouped(data, "source", "tokens")
 
-    # simulate the crash: a rebuild to ["theta"] published one group row
-    # at a fresh seq but died before the manifest commit marker
-    name = cat._gname(data, "source", "tokens")
-    orphan_spec = {"version": 1, "column": "tokens",
-                   "group_col": "source",
-                   "kinds": _normalize_kinds(["theta"])}
-    g = sorted(committed.value)[0]
-    sk = ThetaSketch(4096, 1337)
-    store_mod.save_sketches_bulk(
-        spark, store_path, [(f"{name}/{g}", 999, sk, 0)],
-        meta={"catalog_spec": orphan_spec,
-              "table_path": os.path.abspath(data),
-              "column": "tokens", "group_col": "source"})
+    # the crash: a rebuild to ["theta"] wrote its parts, then died
+    # before claiming its generation
+    def killed(*args):
+        raise OSError("killed before the claim")
+
+    monkeypatch.setattr(store_mod, "_claim", killed)
+    with pytest.raises(OSError, match="killed"):
+        cat.register_grouped(data, "source", "tokens", ["theta"],
+                             rebuild=True)
+    monkeypatch.undo()
 
     # committed spec still rules every read path
     assert [k["kind"] for k in
@@ -526,7 +520,7 @@ def test_gspec_pinned_to_committed_epoch(spark, tmp_path):
     (ent,) = cat.entries()
     assert ent["kinds"] == kinds
     # idempotent re-register with the COMMITTED spec must not raise;
-    # the orphan's spec is the one that now mismatches
+    # the dead rebuild's spec is the one that now mismatches
     cat.register_grouped(data, "source", "tokens", kinds)
     with pytest.raises(ValueError, match="different spec"):
         cat.register_grouped(data, "source", "tokens", ["theta"])
@@ -837,7 +831,7 @@ def test_groups_diff_between_epochs(spark, tmp_path):
     epochs from store METADATA only: an appended novel source shows as
     'appeared'; after a rebuild without it, it shows as 'disappeared';
     unchanged epochs diff to empty. Epoch pins follow the committed
-    lineage (crashed orphans unaddressable, pre-rebuild rows dead)."""
+    lineage (uncommitted epochs unaddressable, pre-rebuild rows dead)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1377,3 +1371,23 @@ def test_fold_never_alters_an_answer_already_read(spark, tmp_path):
     want = [int(v) for v in rebuilt.parts[0].point_query_batch(
         np.asarray(keys, dtype=np.int64))]
     assert [int(v) for v in py1.value] == sql1 == want
+
+
+def test_fleet_read_runs_no_duplicate_check_job(spark, table, tmp_path):
+    """A ``via=<group_col>`` fleet read streams the committed winners
+    straight into the merge: winners_streaming runs no job of its own to
+    look for exact-duplicate rows (the commit refuses a committed
+    (name, seq), so there are none), and the store's parts are read with
+    their known schema, so no job infers it. The read runs 3 Spark jobs;
+    it ran 7 with that check and the schema inference."""
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register_grouped(table, "source", "tokens", ["theta"])
+    expect = cat.count_distinct(table, "tokens", via="source").value
+    sc = spark.sparkContext
+    sc.setJobGroup("fleet-read", "count_distinct via the fleet")
+    try:
+        a = cat.count_distinct(table, "tokens", via="source")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fleet-read")) == 3
+    assert a.value == expect and not a.refreshed

@@ -90,8 +90,8 @@ def test_sql_group_answer_pinned_to_committed_epoch(spark, setup):
         f"'tokens', '{g}') AS v").collect()[0]["v"]
     assert got == fleet.value[g]
 
-    # an uncommitted orphan row above the committed epoch (crashed
-    # publish) must not change the SQL answer
+    # a row above the committed epoch (a direct publish that no fold's
+    # commit marker covers) must not change the SQL answer
     from sketchlib import store as store_mod
     from sketchlib.theta import ThetaSketch
     name = cat._gname(data, "source", "tokens")

@@ -7,7 +7,6 @@ import math
 import os
 import shutil
 
-import numpy as np
 import pytest
 
 from sketchlib.countmin import CMConfig, CountMinSketch
@@ -244,38 +243,44 @@ def test_grouped_untouched_groups_not_republished(spark, tmp_path):
     assert set(loaded) == {"a", "b", "c"}
 
 
-def test_grouped_crash_window_is_idempotent(spark, table, tmp_path):
-    """Orphan group publishes from a crashed (uncommitted) epoch can NOT
-    shadow the retry even when the retry folds a BIGGER delta (files
-    appended between crash and retry): retries publish at a fresh seq
-    strictly above every orphan row, so the committed row always wins by
-    seq — never by sha coin-flip."""
+def test_grouped_crash_window_is_idempotent(spark, table, tmp_path,
+                                            monkeypatch):
+    """A grouped fold that dies before its commit leaves nothing of its
+    epoch visible — no group row, no manifest row — so its retry folds
+    at the same epoch even when it folds a BIGGER delta (files appended
+    between crash and retry), and every committed group equals a
+    from-scratch build."""
     from sketchlib import store as store_mod
     from sketchlib.incremental import (current_group_sketches,
+                                       grouped_epoch,
                                        incremental_build_grouped)
     store_path = str(tmp_path / "store")
     data = str(table / "data")
     fac = functools.partial(CountMinSketch, CFG)
     incremental_build_grouped(spark, data, "source", "tokens", fac,
                               store_path=store_path, name="g")
-    # simulate the crash: epoch-1 group rows land with DIFFERENT content
-    # than the eventual retry will publish, and the manifest commit never
-    # happens
-    junk = CountMinSketch(CFG)
-    junk.update_batch(np.arange(100, dtype=np.int64))
-    store_mod.save_sketches_bulk(spark, store_path,
-                                 [("g/web", 1, junk, 100)])
+    _write_part(table, 1, rows=200, seed=33)
+
+    def killed(*args):
+        raise OSError("killed before the claim")
+
+    monkeypatch.setattr(store_mod, "_claim", killed)
+    with pytest.raises(OSError, match="killed"):
+        incremental_build_grouped(spark, data, "source", "tokens", fac,
+                                  store_path=store_path, name="g")
+    monkeypatch.undo()
+    assert grouped_epoch(spark, store_path, "g") == (0, 0)
+    assert store_mod._winner_rows(store_path, prefix="g", min_seq=1) == {}
     # more data arrives BETWEEN crash and retry — the retry's delta is a
     # strict superset of the crashed attempt's
-    _write_part(table, 1, rows=300, seed=22)
+    _write_part(table, 2, rows=300, seed=22)
     r = incremental_build_grouped(spark, data, "source", "tokens", fac,
                                   store_path=store_path, name="g")
-    assert r.seq == 2 and r.new_rows == 300   # fresh seq, above the orphan
+    assert r.seq == 1 and r.new_rows == 500
     full = _grouped_bytes(spark, data, fac)
     for g, s in r.sketches.items():
         assert s.to_bytes() == full[g]
-    # the committed read returns the retry's bytes for EVERY group,
-    # including the one the orphan tried to claim
+    # the committed read returns the retry's bytes for EVERY group
     loaded = current_group_sketches(spark, store_path, "g")
     assert {g: s.to_bytes() for g, s in loaded.items()} == full
 
@@ -526,12 +531,12 @@ def test_concurrent_global_folds_one_winner_no_torn_epoch(spark, table,
     """VERDICT r4 #7: two sessions folding the SAME stale entry
     simultaneously (the catalog auto-policy race). Writer B completes an
     entire fold INSIDE writer A's window between delta computation and
-    publish (injected by wrapping store.save_sketch), so both publish at
-    the same seq. Both folded the same delta from the same committed
-    base, so the racing rows are BYTE-IDENTICAL: loads resolve one
-    winner deterministically, the manifest stays consistent (the next
-    fold is a clean no-op — nothing double-folded, nothing refused), and
-    the final sketch equals a from-scratch rebuild bit for bit."""
+    publish (injected by wrapping store.save_sketch). A's commit is
+    refused — B wrote the name after A read it — and A re-runs once from
+    B's state, where there is nothing left to fold: ONE committed row at
+    seq 1, the manifest consistent (the next fold is a clean no-op —
+    nothing double-folded, nothing refused), and the final sketch equals
+    a from-scratch rebuild bit for bit."""
     import sketchlib.store as store_mod
 
     store_path = str(tmp_path / "store")
@@ -557,17 +562,18 @@ def test_concurrent_global_folds_one_winner_no_torn_epoch(spark, table,
                               store_path=store_path, name="race")
     finally:
         store_mod.save_sketch = orig_save
-    assert a.seq == 1 and a.new_files == 1
+    assert a.seq == 1 and a.no_op and a.new_files == 0
 
-    # two physical rows raced at seq 1 with identical bytes; one winner
-    from pyspark.sql import functions as F
-    raced = (spark.read.parquet(store_path + "/sketches")
-             .filter((F.col("name") == "race") & (F.col("seq") == 1))
-             .select("sha256").collect())
-    assert len(raced) == 2
-    assert len({r["sha256"] for r in raced}) == 1      # byte-identical
+    # one committed row at seq 1: B's
+    import pyarrow.parquet as pq
+    raced = [r for p in store_mod._head(store_path)["parts"]["sketches"]
+             for r in pq.read_table(f"{store_path}/sketches/{p}",
+                                    columns=["name", "seq"]).to_pylist()
+             if r == {"name": "race", "seq": 1}]
+    assert len(raced) == 1
     loaded = store_mod.latest_sketch(spark, store_path, "race")
     assert loaded[0] == 1
+    assert loaded[2].to_bytes() == a.sketch.to_bytes()
 
     # no torn epoch: the next fold neither refuses nor double-folds
     again = incremental_build(spark, data, "tokens", _factory,

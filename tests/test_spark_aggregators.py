@@ -238,18 +238,21 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
     isNotNull filter — same sketch bytes, same n_rows — for both scalar
     and list columns (a null scalar would otherwise decay the chunk to
     float64 NaNs and hash garbage); build_sketch_parquet likewise against
-    build_sketch."""
+    build_sketch, and build_grouped_parquet per key against
+    build_grouped."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from sketchlib.countmin import CMConfig
     from sketchlib.kll import KllSketch
     from sketchlib.spark_build import (build_aggregator_parquet,
+                                       build_grouped, build_grouped_parquet,
                                        build_sketch, build_sketch_parquet)
     path = str(tmp_path / "nulls.parquet")
     pq.write_table(pa.table({
         "v": pa.array([3, None, 5, 7, None, 9], pa.int32()),
         "arr": pa.array([[1, 2], None, [3], [4, 5, 6], None, [7]],
                         pa.list_(pa.int32())),
+        "k": pa.array(["a", "a", "b", "a", "b", "b"]),
     }), path)
     df = spark.read.parquet(path)
     for col, fac in (("v", functools.partial(KllSketch, 64)),
@@ -264,3 +267,10 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
         via_df = build_sketch(df, col, cfg)
         assert direct.sketch.to_bytes() == via_df.sketch.to_bytes(), col
         assert direct.n_rows == via_df.n_rows == 4, col
+        direct, via_df = ({r["key"]: (bytes(r["sketch"]), r["n_rows"])
+                           for r in g.collect()}
+                          for g in (build_grouped_parquet(spark, path, "k",
+                                                          col, cfg),
+                                    build_grouped(df, "k", col, cfg)))
+        assert direct == via_df, col
+        assert {k: n for k, (_, n) in direct.items()} == {"a": 2, "b": 2}

@@ -99,7 +99,10 @@ def test_latest_wins_and_seq_pinning(spark, tmp_path):
 def test_corrupt_blob_rejected(spark, tmp_path, read):
     """A blob that no longer hashes to its recorded sha is refused —
     also when an earlier read of the intact part warmed the key index
-    and the answer memo (``warm``)."""
+    (``warm``): a commit of another name moves the generation, so the
+    next read of ``x`` misses the answer memo and re-reads its payload
+    from disk. (With no commit in between, a warm read is answered from
+    memory: it stats the head only.)"""
     import glob
     import os
 
@@ -124,6 +127,8 @@ def test_corrupt_blob_rejected(spark, tmp_path, read):
     pq.write_table(pa.table(cols), f)
     for crc in glob.glob(store + "/sketches/.*.crc"):
         os.remove(crc)  # drop Hadoop's CRC sidecars: OUR sha must catch it
+    if read == "warm":
+        save_sketch(spark, store, "y", cm)
     with pytest.raises(IOError):
         load_sketch(spark, store, "x")
 
@@ -145,10 +150,11 @@ def test_lineage_roundtrip_with_build(spark, tmp_path):
 
 
 def test_latest_entry_and_same_seq_tiebreak(spark, tmp_path):
-    """ADVICE r2: two writers that raced to the same seq must resolve
-    deterministically (sha256 tie-break), and latest_entry surfaces the
-    winning version's meta."""
-    import pyarrow.parquet as pq
+    """ADVICE r2: two writers that raced to the same seq resolve
+    deterministically — the commit refuses the second, whether it read
+    the store before the first committed (a racing writer) or pins the
+    committed seq — and latest_entry surfaces the committed version's
+    meta."""
     from sketchlib.countmin import CMConfig, CountMinSketch
     from sketchlib import store
     import numpy as np
@@ -159,35 +165,37 @@ def test_latest_entry_and_same_seq_tiebreak(spark, tmp_path):
     a.update_batch(np.arange(10, dtype=np.int64))
     b = CountMinSketch(cfg)
     b.update_batch(np.arange(20, dtype=np.int64))
-    store.save_sketch(spark, path, "raced", a, meta={"writer": "a"})
-    # simulate the race: second writer appends the SAME seq 0
-    row = [("raced", 0, "CM01", b.to_bytes(),
-            __import__("hashlib").sha256(b.to_bytes()).hexdigest(),
-            -1, '{"writer": "b"}')]
-    (spark.createDataFrame(row, store._SKETCH_SCHEMA)
-     .coalesce(1).write.mode("append").parquet(path + "/sketches"))
+    with pytest.raises(store.CommitConflict):
+        with store._transaction(path):      # writer b reads the store
+            store.save_sketch(spark, path, "raced", b, meta={"writer": "b"})
+            with store._transaction(path):  # writer a commits first
+                store.save_sketch(spark, path, "raced", a,
+                                  meta={"writer": "a"})
+    with pytest.raises(store.CommitConflict):
+        store.save_sketch(spark, path, "raced", b, seq=0,
+                          meta={"writer": "b"})
 
-    expect = max([(a, "a"), (b, "b")],
-                 key=lambda t: __import__("hashlib")
-                 .sha256(t[0].to_bytes()).hexdigest())
     got = store.load_sketch(spark, path, "raced")
-    assert got.to_bytes() == expect[0].to_bytes()
+    assert got.to_bytes() == a.to_bytes()
     ent = store.latest_entry(spark, path, "raced")
     assert ent is not None and ent[0] == 0
-    assert ent[1]["writer"] == expect[1]
+    assert ent[1]["writer"] == "a"
     assert store.latest_entry(spark, path, "nope") is None
     assert store.latest_entry(spark, str(tmp_path / "absent"), "x") is None
 
 
-def test_compact_store_preserves_everything(spark, tmp_path):
+def test_compact_store_preserves_everything(spark, tmp_path, monkeypatch):
     """Compaction merges each table into one file while every read —
     latest, seq-pinned, grouped, manifest state, snapshot diff — returns
-    byte-identical results; a second compaction is a no-op-shaped pass,
-    and crash-left duplicate rows are dropped."""
+    byte-identical results. A compaction killed between its claim and
+    its head leaves readers on the old parts; the next writer installs
+    it, and a retried compaction keeps every row exactly once."""
     import functools
     import math
     import os
     import shutil
+
+    import pyarrow.parquet as pq
 
     from sketchlib import store
     from sketchlib.countmin import CMConfig, CountMinSketch
@@ -242,27 +250,39 @@ def test_compact_store_preserves_everything(spark, tmp_path):
 
     assert reads() == before
     # the key index holds the compacted parts only, no removed one
+    head = store._head(st)
     for table in ("sketches", "ingested"):
-        listed = {p for p, _, _ in store._listing(
-            *store._fs(f"{st}/{table}"))}
-        indexed = {e[0] for k, (_, index, _) in store._MEMO.items()
+        (live,) = head["parts"][table]
+        assert os.listdir(f"{st}/{table}") == [live]
+        indexed = {e for k, (_, index, _) in store._MEMO.items()
                    if k[:2] == (st, table) and k[2][0] == "keys"
                    for e in index}
-        assert indexed and indexed <= listed
+        assert indexed == {f"{os.path.abspath(st)}/{table}/{live}"}
 
     # incremental maintenance keeps working across the compaction
     _part("p2.parquet", 200, 3)
     r = incremental_build(spark, data, "tokens", fac,
                           store_path=st, name="cm")
     assert r.new_rows == 200
+    head_r = store._head(st)
 
-    # crash-left duplicates: copy the compacted file, compact again
-    d = st + "/sketches"
-    comp = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    shutil.copy(os.path.join(d, comp[0]),
-                os.path.join(d, "compact-crashdupe.parquet"))
-    stats2 = store.compact_store(spark, st)
-    assert stats2["sketches"]["dupes_dropped"] > 0
+    # a compaction killed after its claim: readers keep the old parts
+    before = reads()
+    rows = {t: sum(pq.ParquetFile(f"{st}/{t}/{p}").metadata.num_rows
+                   for p in store._head(st)["parts"][t])
+            for t in ("sketches", "ingested")}
+
+    def killed(*args):
+        raise OSError("killed")
+
+    monkeypatch.setattr(store, "_write_head", killed)
+    with pytest.raises(OSError, match="killed"):
+        store.compact_store(spark, st)
+    monkeypatch.undo()
+    assert store._head(st) == head_r and reads() == before
+    stats2 = store.compact_store(spark, st)   # installs it, then compacts
+    assert {t: stats2[t]["rows"] for t in rows} == rows
+    assert reads() == before
     assert (store.load_sketch(spark, st, "cm").to_bytes()
             == r.sketch.to_bytes())
 
@@ -280,9 +300,9 @@ def test_corrupt_superseded_row_does_not_break_group_reads(spark, tmp_path):
     good = CountMinSketch(cfg)
     good.update_batch(np.arange(50, dtype=np.int64))
     # seq 0: a row whose recorded sha does NOT match its blob (bit rot)
-    row = [("g/a", 0, "CM01", good.to_bytes(), "0" * 64, -1, "{}")]
-    (store.one_part_df(spark, row, store._SKETCH_SCHEMA)
-     .write.mode("append").parquet(path + "/sketches"))
+    with store._transaction(path):
+        store._stage(path, "sketches",
+                     [("g/a", 0, "CM01", good.to_bytes(), "0" * 64, -1, "{}")])
     # seq 1: an intact winner for the same group
     store.save_sketch(spark, path, "g/a", good)
     loaded = store.load_group_sketches(spark, path, "g")
@@ -293,9 +313,9 @@ def test_corrupt_superseded_row_does_not_break_group_reads(spark, tmp_path):
 
 
 def test_list_sketches_one_row_per_name_after_race(spark, tmp_path):
-    """A same-seq writer race (two different blobs at one seq) must not
-    make listings emit duplicate names — the listing shows the same
-    winner every loader returns."""
+    """A row written into the store outside a commit (a second writer
+    appending the same seq) is invisible: the listing keeps one row per
+    name, the same winner every loader returns."""
     import hashlib as _h
     import numpy as np
     from sketchlib import store
@@ -315,13 +335,15 @@ def test_list_sketches_one_row_per_name_after_race(spark, tmp_path):
     listing = store.list_sketches(spark, path).collect()
     assert len(listing) == 1
     winner = store.load_sketch(spark, path, "raced")
+    assert winner.to_bytes() == a.to_bytes()
     assert listing[0]["sha256"] == _h.sha256(winner.to_bytes()).hexdigest()
 
 
 def test_winners_streaming_matches_window_winners(spark):
     """winners_streaming must pick exactly the rows _winners picks —
-    without shuffling payloads — and must fall back to the collapsing
-    window when exact-duplicate rows (same name, seq AND sha) exist."""
+    without shuffling payloads. (Exact-duplicate rows, which the
+    semi-join would keep twice, cannot be committed: see
+    test_latest_entry_and_same_seq_tiebreak.)"""
     from sketchlib.store import _winners, winners_streaming
 
     rows = [("a", 0, "s0", bytearray(b"old")), ("a", 2, "s2", bytearray(b"new")),
@@ -335,23 +357,14 @@ def test_winners_streaming_matches_window_winners(spark):
            for r in winners_streaming(df).collect()}
     assert got == want == {("a", 2, "s2", b"new"), ("b", 1, "s1", b"bee")}
 
-    # exact duplicate: the semi-join would keep both copies; the
-    # fallback must collapse to ONE row like the window does
-    dup = df.union(spark.createDataFrame(
-        [("a", 2, "s2", b"new")],
-        "name string, seq long, sha256 string, blob binary"))
-    out = winners_streaming(dup).collect()
-    assert len(out) == 2
-    assert sorted(r["name"] for r in out) == ["a", "b"]
-
 
 @pytest.mark.parametrize("table", ["sketches", "lineage", "ingested"])
 def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
-    """A write that dies mid-append (a torn temp file, then an error)
-    leaves no part and no temp file behind, and the next read returns
-    the previous state: the previous winner for sketches/lineage, the
-    previous manifest for ingested — where the following fold then
-    refuses the crash window instead of double-folding."""
+    """A fold whose write dies mid-append in any of the three tables (a
+    torn temp file, then an error) leaves no part and no temp file
+    behind in any table, and the next read returns the previous state —
+    winner, lineage and manifest, since the three commit together; the
+    retry folds the delta exactly once."""
     import functools
     import math
     import os
@@ -395,17 +408,9 @@ def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
                                       store_path=st, name="cm")
     monkeypatch.undo()
 
-    assert sorted(os.listdir(os.path.join(st, table))) == files[table]
-    assert incremental._manifest_state(st, "cm", 0) == manifest
-    if table == "ingested":
-        # the sketch published; the missing manifest is detected
-        assert store.latest_entry(spark, st, "cm")[0] == first.seq + 1
-        with pytest.raises(IOError, match="crashed between publish"):
-            incremental.incremental_build(spark, data, "tokens", fac,
-                                          store_path=st, name="cm")
-        return
-    for t in ("sketches", "lineage"):
+    for t in ("sketches", "lineage", "ingested"):
         assert sorted(os.listdir(os.path.join(st, t))) == files[t]
+    assert incremental._manifest_state(st, "cm", 0) == manifest
     got = store.latest_sketch(spark, st, "cm")
     assert got[0] == first.seq
     assert got[2].to_bytes() == first.sketch.to_bytes()
@@ -418,9 +423,12 @@ def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
 
 
 def test_spark_written_parts_read_identically(spark, tmp_path):
-    """Parts written by Spark (older stores, other writers) and by the
-    pyarrow appender are one table to every reader: winners, pinned
-    seqs, group reads, listings and the manifest agree across them."""
+    """Parts written into the store outside a commit (by Spark, or any
+    other writer) are invisible to every reader alike: winners, pinned
+    seqs, group reads, listings and the manifest all read the committed
+    parts only, and the next commit does not take an uncommitted seq. A
+    directory with such parts and no commit at all is refused, not read
+    as empty."""
     import hashlib as _h
     import numpy as np
     from sketchlib import incremental, store
@@ -442,36 +450,41 @@ def test_spark_written_parts_read_identically(spark, tmp_path):
          .write.mode("append").parquet(path + "/sketches"))
 
     spark_row("x", 0, sks[0], '{"by": "spark"}')
-    assert store.save_sketch(spark, path, "x", sks[1],
-                             meta={"by": "arrow"}) == 1
-    spark_row("x", 2, sks[2], '{"by": "spark"}')
+    with pytest.raises(IOError, match="no _head"):
+        store.latest_entry(spark, path, "x")
+
+    path = str(tmp_path / "committed")
+    assert store.save_sketch(spark, path, "x", sks[0],
+                             meta={"by": "arrow"}) == 0
+    spark_row("x", 1, sks[1], '{"by": "spark"}')
     spark_row("g/a", 4, sks[0], "{}")
     store.save_sketches_bulk(spark, path, [("g/b", 4, sks[1], 1)])
 
-    assert store.latest_entry(spark, path, "x") == (2, {"by": "spark"})
-    for seq, s in enumerate(sks):
+    assert store.latest_entry(spark, path, "x") == (0, {"by": "arrow"})
+    assert store.save_sketch(spark, path, "x", sks[2]) == 1
+    for seq, s in ((0, sks[0]), (1, sks[2])):
         assert (store.load_sketch(spark, path, "x", seq=seq).to_bytes()
                 == s.to_bytes())
-    assert store.max_seq_for_prefix(spark, path, "g") == 4
     groups = store.load_group_sketches(spark, path, "g")
     assert {g: s.to_bytes() for g, s in groups.items()} == {
-        "a": sks[0].to_bytes(), "b": sks[1].to_bytes()}
+        "b": sks[1].to_bytes()}
     listing = {r["name"]: r["seq"]
                for r in store.list_sketches(spark, path).collect()}
-    assert listing == {"x": 2, "g/a": 4, "g/b": 4}
+    assert listing == {"x": 1, "g/b": 4}
 
     (store.one_part_df(spark, [("m", 0, "", -1), ("m", 0, "f0", 10)],
                        store._MANIFEST_SCHEMA)
      .write.mode("append").parquet(path + "/ingested"))
     incremental._append_manifest(path, "m", 1, {"f1": 20})
-    assert incremental._manifest_state(path, "m", 0) == (
-        1, {"f0": 10, "f1": 20})
+    assert incremental._manifest_state(path, "m", 0) == {"f1": 20}
 
 
 def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
     """After a publish, a read opens the new part (for its keys) and the
     winner's payload part — not every part of the store's history. The
-    same holds for manifest reads of ``ingested/``."""
+    same holds for manifest reads of ``ingested/``. A read with no
+    commit since the last one stats the head once and opens no part
+    file, and no read walks a table directory."""
     from sketchlib import incremental, store
     from sketchlib.countmin import CMConfig, CountMinSketch
 
@@ -487,27 +500,45 @@ def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
         store.save_sketch(spark, path, "x", version(i))
         incremental._append_manifest(path, "x", i, {f"f{i}": i})
     assert store.latest_sketch(spark, path, "x")[0] == 19
-    assert incremental._manifest_state(path, "x", 0)[0] == 19
+    assert len(incremental._manifest_state(path, "x", 0)) == 20
 
-    opened = []
-    real_open = store.pq.ParquetFile
+    opened, walks, stats = [], [], []
+    real_open, real_walk = store.pq.ParquetFile, store.pafs.FileSelector
+    real_stat = store._stat
 
     def counting_open(*a, **kw):
         opened.append(1)
         return real_open(*a, **kw)
 
+    def counting_walk(*a, **kw):
+        walks.append(a)
+        return real_walk(*a, **kw)
+
+    def counting_stat(fs, p):
+        stats.append(p)
+        return real_stat(fs, p)
+
     monkeypatch.setattr(store.pq, "ParquetFile", counting_open)
+    monkeypatch.setattr(store.pafs, "FileSelector", counting_walk)
+    monkeypatch.setattr(store, "_stat", counting_stat)
     store.save_sketch(spark, path, "x", version(20))
     opened.clear()
     got = store.latest_sketch(spark, path, "x")
     assert got[0] == 20 and got[2].to_bytes() == version(20).to_bytes()
     assert len(opened) == 2  # the new part's keys, then its payload
 
+    opened.clear()
+    stats.clear()
+    got = store.latest_sketch(spark, path, "x")     # warm: no commit since
+    assert got[0] == 20 and got[2].to_bytes() == version(20).to_bytes()
+    assert opened == [] and stats == [path + "/_head"]
+
     incremental._append_manifest(path, "x", 20, {"f20": 20})
     opened.clear()
-    seq, files = incremental._manifest_state(path, "x", 0)
-    assert seq == 20 and files == {f"f{i}": i for i in range(21)}
+    files = incremental._manifest_state(path, "x", 0)
+    assert files == {f"f{i}": i for i in range(21)}
     assert len(opened) == 1
+    assert walks == []
 
 
 def test_read_decodes_only_admitted_row_groups(tmp_path):
@@ -524,7 +555,8 @@ def test_read_decodes_only_admitted_row_groups(tmp_path):
     from sketchlib.countmin import CMConfig, CountMinSketch
 
     path = str(tmp_path / "store")
-    os.makedirs(path + "/sketches")
+    for d in ("sketches", "_log"):
+        os.makedirs(f"{path}/{d}")
     sketches = {}
     for g in range(40):
         s = CountMinSketch(CMConfig(eps=0.5, delta=0.5, seed=1))
@@ -536,6 +568,7 @@ def test_read_decodes_only_admitted_row_groups(tmp_path):
                              for c, f in zip(zip(*rows), schema)],
                             schema=schema),
                    path + "/sketches/part-0.parquet", row_group_size=4)
+    store._commit(path, 0, (), {"sketches": ["part-0.parquet"]})
 
     def decoded():
         (index,) = [v[1] for k, v in store._MEMO.items()
