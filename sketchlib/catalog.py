@@ -23,6 +23,18 @@ the table. The registration spec is persisted in the store's metadata,
 so a catalog reopened in a new session (or on a different driver)
 rediscovers every entry without re-registration.
 
+Five entry shapes share one path per step: global, grouped fleet
+(one sketch per group value), global sample, grouped sample and
+per-file index. A registration is a spec; ``_register`` refuses a
+different spec for an existing entry and ``_fold`` folds the table's
+appended files with the global or grouped incremental build and the
+builder the spec's shape takes. Every answer passes one freshness gate
+(``_gate``) and routes to a sketch part through ``_part``. Committed
+fleet rows are read by three readers: ``_group_row`` (one group),
+``_fleet_dict`` (every group, on the driver, up to
+``_MAX_DICT_GROUPS``) and ``_stream_fleet`` (every group, inside
+mapInPandas); the SQL functions read through the same ones.
+
 No counterpart in the reference — CountMinDB (cm.h) is a single sketch
 with no store or catalog; this layer composes sketchlib's store,
 incremental-maintenance and MultiSketch contracts into the "analytics
@@ -49,11 +61,14 @@ from .dyadic import DyadicCM
 from .hll import HllSketch
 from .incremental import (_current_files, _diff_files,
                           _grouped_manifest_state, _manifest_state,
-                          current_group_sketches, grouped_epoch,
+                          grouped_epoch, grouped_epoch_at,
                           incremental_build, incremental_build_grouped)
 from .kll import KllSketch
 from .mg import MisraGries
 from .multi import MultiSketch
+from .spark_build import (build_aggregator_pairs,
+                          build_grouped_aggregator_pairs,
+                          build_per_file_parquet)
 from .tdigest import TDigest
 from .theta import ThetaSketch
 
@@ -142,25 +157,80 @@ _VERB_ROUTES = {
     "key_quantile": ("dyadic",),
     "drift": ("mg",),
     "top_movers": ("mg",),
+    "subset_sum": ("psample",),
+    "sample_total": ("psample",),
+    "sample_group_sums": ("psample",),
+    "locate": ("bloom",),
+    "pruned_read": ("bloom",),
 }
 
+# entry shape -> (contract of its delta fold, the verbs that answer from
+# it — the routes explain() reports)
+_SHAPES = {
+    "": ("delta-only incremental fold",
+         ("count_distinct", "frequency", "frequency_unbiased",
+          "second_moment", "member", "topk", "quantile", "range_count",
+          "key_quantile", "drift", "top_movers")),
+    "grouped": ("delta-only grouped incremental fold",
+                ("count_distinct", "topk", "frequency", "quantile",
+                 "drift", "top_movers")),
+    "sample": ("delta-only incremental sample fold",
+               ("subset_sum", "sample_total", "sample_group_sums")),
+    "sample_grouped": ("delta-only grouped incremental sample fold",
+                       ("subset_sum",)),
+    "file_index": ("delta-only per-file fold (appended files only; "
+                   "existing file rows never republish)",
+                   ("locate", "pruned_read")),
+}
+
+# A dict answer decodes every group's blob on the driver: at G=100k
+# that took 7.97 s and +73.2 MB of driver RSS (BENCH/fleet_g100k_r5.json).
+# Larger fleets answer one group (group=) or as a DataFrame (as_df=True),
+# whose cost does not grow on the driver.
+_MAX_DICT_GROUPS = 10_000
+
+
+def _shape(spec: dict) -> str:
+    """The key of ``spec``'s entry shape in ``_SHAPES``."""
+    if spec.get("file_index"):
+        return "file_index"
+    sample = "sample" if "sample" in spec else ""
+    grouped = "grouped" if "group_col" in spec else ""
+    return "_".join(filter(None, (sample, grouped)))
+
+
+def _kinds(spec: dict) -> list[str]:
+    """Registered kinds, in part order; a sample entry's one
+    PrioritySample is the kind 'psample'."""
+    if "sample" in spec:
+        return ["psample"]
+    return [e["kind"] for e in spec["kinds"]]
+
+
 def _factory_from_spec(spec: dict):
+    if "sample" in spec:
+        s = spec["sample"]
+        return functools.partial(PrioritySample, int(s["k"]), int(s["seed"]))
     parts = tuple(_KINDS[e["kind"]][1](e["params"])
                   for e in spec["kinds"])
     return functools.partial(MultiSketch, parts)
 
 
-def _part(meta: dict, ms: MultiSketch, *wanted: str):
+def _part(meta: dict, ms, *wanted: str):
     """(kind, part): the first of ``wanted`` registered in the entry's
-    spec, and its part of the MultiSketch — the one routing rule of the
-    Python verbs and the SQL functions."""
-    spec_kinds = [e["kind"] for e in meta["catalog_spec"]["kinds"]]
+    spec, and its part of ``ms`` (None when ``ms`` is None: routing
+    only) — the one routing rule of the Python verbs, explain() and the
+    SQL functions. A sample entry's part is its PrioritySample."""
+    spec = meta["catalog_spec"]
+    kinds = _kinds(spec)
     for w in wanted:
-        if w in spec_kinds:
-            return w, ms.parts[spec_kinds.index(w)]
+        if w in kinds:
+            if ms is None or "sample" in spec:
+                return w, ms
+            return w, ms.parts[kinds.index(w)]
     raise KeyError(
         f"none of {list(wanted)} registered for this column "
-        f"(registered kinds: {spec_kinds})")
+        f"(registered kinds: {kinds})")
 
 
 @dataclass
@@ -208,6 +278,37 @@ class SketchCatalog:
             os.path.abspath(table_path).encode()).hexdigest()[:12]
         return f"catalog/{key}/{column}"
 
+    @classmethod
+    def _label(cls, spec: dict) -> str:
+        """The column label an entry is stored under: the column, a
+        sample's ``key~weight`` or a file index's n-gram stream."""
+        s = spec.get("sample")
+        if s:
+            return cls._sample_col(s["key_col"], s["weight_col"])
+        return cls._fidx_label(spec["column"], spec.get("ngrams"))
+
+    def _where(self, table_path: str, spec: dict) -> str:
+        return ":".join(filter(None, (table_path, spec.get("group_col"),
+                                      self._label(spec))))
+
+    def _unregistered(self, table_path: str, group_col: str | None,
+                      column: str) -> KeyError:
+        """The refusal of a read of an entry nothing registered, naming
+        the registration verb its address implies."""
+        if group_col == self._FILE_GROUP:
+            what, verb = "file index ", "register_file_index"
+        else:
+            sample = "~" in column      # sample labels are key~weight
+            what = ("grouped " if group_col else "") + (
+                "sample " if sample else "")
+            verb = ("register" + ("_sample" if sample else "")
+                    + ("_grouped" if group_col else ""))
+        where = ":".join(filter(None, (table_path, group_col, column)))
+        return KeyError(
+            f"{where} is not registered in this catalog (store: "
+            f"{self.store_path}): it has no {what}registration; call "
+            f"{verb}() first")
+
     # -- registration ----------------------------------------------------
 
     def register(self, table_path: str, column: str, kinds, *,
@@ -217,47 +318,104 @@ class SketchCatalog:
         spec is an idempotent refresh; a DIFFERENT spec without
         ``rebuild`` raises — silently swapping sketch configs under an
         incremental merge would corrupt the estimates."""
-        spec = {"version": _SPEC_VERSION, "column": column,
-                "kinds": _normalize_kinds(kinds)}
-        name = self._name(table_path, column)
-        prev = store.latest_entry(self.spark, self.store_path, name)
-        if prev is not None and not rebuild:
-            old = prev[1].get("catalog_spec")
+        return self._register(table_path, {
+            "version": _SPEC_VERSION, "column": column,
+            "kinds": _normalize_kinds(kinds)}, rebuild)
+
+    def _register(self, table_path: str, spec: dict,
+                  rebuild: bool) -> Answer:
+        """Every shape's registration: refuse a spec that differs from
+        the registered one unless ``rebuild``, then fold."""
+        if not rebuild:
+            g, label = spec.get("group_col"), self._label(spec)
+            if g is not None:
+                old = self._gspec(table_path, g, label, missing_ok=True)
+            else:
+                prev = store.latest_entry(self.spark, self.store_path,
+                                          self._name(table_path, label))
+                old = None if prev is None else prev[1].get("catalog_spec")
             if old is not None and old != spec:
+                what = "sample spec" if "sample" in spec else "spec"
                 raise ValueError(
-                    f"{table_path}:{column} is already registered with a "
-                    "different spec; pass rebuild=True to replace it.\n"
+                    f"{self._where(table_path, spec)} is already "
+                    f"registered with a different {what}; pass "
+                    "rebuild=True to replace it.\n"
                     f"  registered: {json.dumps(old, sort_keys=True)}\n"
                     f"  requested:  {json.dumps(spec, sort_keys=True)}")
-        return self._refresh(table_path, column, spec, rebuild=rebuild)
+        return self._refresh(table_path, spec, rebuild=rebuild)
 
-    def _fold(self, table_path: str, column: str, spec: dict, *,
+    def _fold(self, table_path: str, spec: dict, *,
               rebuild: bool = False):
-        return incremental_build(
-            self.spark, table_path, column, _factory_from_spec(spec),
-            store_path=self.store_path,
-            name=self._name(table_path, column), rebuild=rebuild,
-            meta={"catalog_spec": spec,
-                  "table_path": os.path.abspath(table_path),
-                  "column": column})
+        """Fold the files appended to the table into the entry ``spec``
+        describes (every file with ``rebuild``): the global or grouped
+        incremental build, run with the builder of the spec's shape.
+        Returns the build's result."""
+        g, s = spec.get("group_col"), spec.get("sample")
+        label, factory = self._label(spec), _factory_from_spec(spec)
+        builder = None
+        if spec.get("file_index"):
+            ng, transform = spec.get("ngrams"), None
+            if ng:
+                from .ngrams import array_ngrams
+                transform = functools.partial(array_ngrams, n=int(ng["n"]),
+                                              seed=int(ng["seed"]))
 
-    def _refresh(self, table_path: str, column: str, spec: dict, *,
+            def builder(sp, files):
+                return build_per_file_parquet(
+                    sp, table_path, spec["column"], factory, files=files,
+                    transform=transform)
+        elif s:
+            def builder(sp, files):
+                df = sp.read.parquet(*files)
+                if g is None:
+                    return build_aggregator_pairs(
+                        df, s["key_col"], s["weight_col"], factory,
+                        payload_col=s["payload_col"])
+                return build_grouped_aggregator_pairs(
+                    df, g, s["key_col"], s["weight_col"], factory,
+                    payload_col=s["payload_col"])
+
+        meta = {"catalog_spec": spec,
+                "table_path": os.path.abspath(table_path), "column": label}
+        kw = dict(store_path=self.store_path, rebuild=rebuild,
+                  builder=builder)
+        if g is None:
+            return incremental_build(
+                self.spark, table_path, label, factory, meta=meta,
+                name=self._name(table_path, label), **kw)
+        res = incremental_build_grouped(
+            self.spark, table_path, g, label, factory,
+            meta={**meta, "group_col": g},
+            name=self._gname(table_path, g, label), **kw)
+        if res.prev_seq is None and res.updated_groups == 0:
+            raise ValueError(
+                f"cannot register {self._where(table_path, spec)} over an "
+                "empty table: no group row would carry the spec")
+        return res
+
+    def _refresh(self, table_path: str, spec: dict, *,
                  rebuild: bool = False) -> Answer:
-        res = self._fold(table_path, column, spec, rebuild=rebuild)
-        return Answer(value=None, kind="refresh",
-                      contract="delta-only incremental fold",
-                      table=table_path, column=column, seq=res.seq,
-                      covered_rows=int(res.meta.get("table_rows", -1)),
-                      stale_files=0,
-                      refreshed=res.new_files > 0,
-                      sketch_bytes=res.sketch.nbytes(),
-                      extra={"new_files": res.new_files,
-                             "new_rows": res.new_rows})
+        res = self._fold(table_path, spec, rebuild=rebuild)
+        shape = _shape(spec)
+        extra = {"new_files": res.new_files, "new_rows": res.new_rows}
+        if "group_col" in spec:
+            covered, nbytes = -1, 0
+            extra.update(updated_groups=res.updated_groups,
+                         group_col=spec["group_col"])
+        else:
+            covered = int(res.meta.get("table_rows", -1))
+            nbytes = res.sketch.nbytes()
+        return Answer(value=None,
+                      kind="_".join(filter(None, ("refresh", shape))),
+                      contract=_SHAPES[shape][0], table=table_path,
+                      column=self._label(spec), seq=res.seq,
+                      covered_rows=covered, stale_files=0,
+                      refreshed=res.new_files > 0, sketch_bytes=nbytes,
+                      extra=extra)
 
     def refresh(self, table_path: str, column: str) -> Answer:
         """Bring a registered entry up to date (delta scan only)."""
-        spec = self._spec(table_path, column)
-        return self._refresh(table_path, column, spec)
+        return self._refresh(table_path, self._spec(table_path, column))
 
     # -- lookup / freshness -----------------------------------------------
 
@@ -265,9 +423,7 @@ class SketchCatalog:
         name = self._name(table_path, column)
         entry = store.latest_entry(self.spark, self.store_path, name)
         if entry is None or "catalog_spec" not in entry[1]:
-            raise KeyError(
-                f"{table_path}:{column} is not registered in this catalog "
-                f"(store: {self.store_path}); call register() first")
+            raise self._unregistered(table_path, None, column)
         return entry[1]["catalog_spec"]
 
     def stale_files(self, table_path: str, column: str) -> int:
@@ -275,41 +431,53 @@ class SketchCatalog:
         name = self._name(table_path, column)
         entry = store.latest_entry(self.spark, self.store_path, name)
         if entry is None:
-            raise KeyError(f"{table_path}:{column} is not registered")
+            raise self._unregistered(table_path, None, column)
         return self._stale_from(name, entry[1], table_path)
 
-    def _stale_from(self, name: str, meta: dict, table_path: str) -> int:
-        """Staleness diff from an already-loaded meta (no extra store
-        read of the sketches table — answers call this on the row they
-        just loaded)."""
-        base_seq = int(meta.get("manifest_base", 0))
-        ingested = _manifest_state(self.store_path, name, base_seq)
-        current = _current_files(table_path)
-        return len(_diff_files(current, ingested, table_path, name))
+    def _stale_from(self, name: str, meta: dict | None,
+                    table_path: str) -> int:
+        """Files appended since entry ``name`` last folded, from an
+        already-loaded meta (no extra store read of the sketches table —
+        answers call this on the row they just loaded); ``meta`` None
+        for a fleet, whose ingested files are its committed epoch's."""
+        if meta is None:
+            ingested = _grouped_manifest_state(self.store_path, name)[2]
+        else:
+            ingested = _manifest_state(self.store_path, name,
+                                       int(meta.get("manifest_base", 0)))
+        return len(_diff_files(_current_files(table_path), ingested,
+                               table_path, name))
+
+    def _gate(self, table_path: str, spec: dict, stale: int,
+              policy: str | None):
+        """The freshness gate of every answer: with ``stale`` files
+        unfolded, ``refuse`` raises, ``auto`` folds them and returns the
+        fold's result, ``stale_ok`` (like a fresh entry) returns None."""
+        policy = policy or self.policy
+        if stale and policy == "refuse":
+            raise StaleEntryError(
+                f"{self._where(table_path, spec)} is stale by {stale} "
+                "file(s); refresh it or answer with "
+                "policy='stale_ok'/'auto'")
+        if stale and policy == "auto":
+            return self._fold(table_path, spec)
+        return None
 
     def _entry(self, table_path: str, column: str,
                policy: str | None) -> tuple[int, dict, MultiSketch,
                                             int, bool]:
         """(seq, meta, sketch, stale_files, refreshed) under policy."""
-        policy = policy or self.policy
         name = self._name(table_path, column)
         loaded = store.latest_sketch(self.spark, self.store_path, name)
         if loaded is None or "catalog_spec" not in loaded[1]:
-            raise KeyError(
-                f"{table_path}:{column} is not registered in this catalog "
-                f"(store: {self.store_path}); call register() first")
+            raise self._unregistered(table_path, None, column)
         stale = self._stale_from(name, loaded[1], table_path)
-        refreshed = False
-        if stale and policy == "refuse":
-            raise StaleEntryError(
-                f"{table_path}:{column} is stale by {stale} file(s); "
-                "refresh() it or answer with policy='stale_ok'/'auto'")
-        if stale and policy == "auto":
+        res = self._gate(table_path, loaded[1]["catalog_spec"], stale,
+                         policy)
+        if res is not None:
             # answer from the row the fold just published, not a re-read
-            res = self._fold(table_path, column, loaded[1]["catalog_spec"])
-            loaded = (res.seq, res.meta, res.sketch)
-            stale, refreshed = 0, True
-        return loaded[0], loaded[1], loaded[2], stale, refreshed
+            return res.seq, res.meta, res.sketch, 0, True
+        return loaded[0], loaded[1], loaded[2], stale, False
 
     def _answer(self, table_path, column, policy, wanted, make,
                 via=None):
@@ -324,7 +492,8 @@ class SketchCatalog:
         t-digest/DD merges are order-dependent in bytes but their error
         contracts hold for any merge order. No table scan either way —
         a fleet of G store rows answers global questions without
-        maintaining a separate global entry."""
+        maintaining a separate global entry. A sample entry answers the
+        same way, ``wanted`` routing to its PrioritySample."""
         if via is None:
             seq, meta, ms, stale, refreshed = self._entry(
                 table_path, column, policy)
@@ -355,32 +524,117 @@ class SketchCatalog:
         G=10^6 fleet the driver sees ~32 blobs, never the fleet."""
         from . import serde
 
-        epoch, base = self._committed(name)
-        winners = store.fleet_winners(self.spark, self.store_path, name,
-                                      base, epoch)
-
-        def gen(pdfs):
-            import pandas as pd
+        def merge(pairs):
             acc = None
-            for pdf in pdfs:
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    ms = serde.loads(store._verified(nm, blob, sha))
-                    if acc is None:
-                        acc = ms
-                    else:
-                        acc.merge(ms)
+            for _, ms in pairs:
+                if acc is None:
+                    acc = ms
+                else:
+                    acc.merge(ms)
             if acc is not None:
-                yield pd.DataFrame({"blob": [serde.dumps_partial(acc)]})
+                yield (serde.dumps_partial(acc),)
 
-        partials = [bytes(r["blob"]) for r in
-                    winners.mapInPandas(gen, "blob binary").collect()]
+        pins = self._committed(name)
+        partials = [bytes(r["blob"]) for r in self._stream_fleet(
+            name, merge, "blob binary", pins).collect()]
         if not partials:
             raise KeyError(f"{name} has no committed group rows")
         acc = serde.loads(partials[0])
         for blob in partials[1:]:
             acc.merge(serde.loads(blob))
-        return int(epoch), acc
+        return int(pins[0]), acc
+
+    # -- committed fleet rows ---------------------------------------------
+    #
+    # Every read of a fleet's committed rows — by the Python verbs and by
+    # the SQL functions — goes through one of three readers, pinned to a
+    # committed epoch and its rebuild base (rows of a lineage a rebuild
+    # replaced sit below the base): one group's row, every group's rows
+    # as a driver dict, or every group's rows streamed through
+    # mapInPandas.
+
+    def _committed(self, name: str, seq: int | None = None
+                   ) -> tuple[int, int]:
+        """(epoch, base) pins of a grouped lineage: its committed epoch,
+        or the past committed epoch ``seq``; KeyError when there is
+        none."""
+        if seq is not None:
+            return grouped_epoch_at(self.spark, self.store_path, name,
+                                    int(seq))
+        epoch, base = grouped_epoch(self.spark, self.store_path, name)
+        if epoch is None:
+            raise KeyError(f"{name} has no committed grouped epoch")
+        return epoch, base
+
+    def _group_row(self, table_path: str, group_col: str, column: str,
+                   group, seq: int | None = None):
+        """(epoch, spec, sketch) of ONE committed group row of a fleet —
+        at its committed epoch, or at the past committed epoch ``seq``;
+        store.load_group_sketches reads that one row, never the fleet.
+        O(1) driver bytes at any G."""
+        name, g = self._gname(table_path, group_col, column), str(group)
+        epoch, base = self._committed(name, seq)
+        got = store.load_group_sketches(
+            self.spark, self.store_path, name,
+            max_seq=epoch, min_seq=base, groups=[g])
+        if g not in got:
+            raise KeyError(
+                f"group {g!r} has no committed sketch at epoch {epoch} "
+                f"under {table_path}:{group_col}:{column}")
+        return epoch, self._gspec_at(name, epoch, base), got[g]
+
+    def _fleet_dict(self, table_path: str, group_col: str, column: str):
+        """(epoch, spec, {group: sketch}) of a fleet's committed rows,
+        every blob decoded on the driver — refused above
+        ``_MAX_DICT_GROUPS`` groups, counted from the row keys before
+        any blob is read."""
+        name = self._gname(table_path, group_col, column)
+        epoch, base = grouped_epoch(self.spark, self.store_path, name)
+        if epoch is None:
+            raise self._unregistered(table_path, group_col, column)
+        n = len(store._winner_rows(self.store_path, prefix=name,
+                                   min_seq=base, max_seq=epoch, payload=()))
+        if n > _MAX_DICT_GROUPS:
+            raise ValueError(
+                f"{table_path}:{group_col}:{column} has {n} groups, above "
+                f"the {_MAX_DICT_GROUPS} a driver dict answer loads; ask "
+                "for one group with group= or for the fleet with "
+                "as_df=True")
+        groups = store.load_group_sketches(
+            self.spark, self.store_path, name, max_seq=epoch, min_seq=base)
+        return epoch, self._gspec_at(name, epoch, base), groups
+
+    def _stream_fleet(self, name: str, fn, schema: str,
+                      pins: tuple[int, int] | None = None):
+        """Lazy DataFrame of ``schema`` rows: ``fn`` over each task's
+        (group, sketch) pairs of the fleet's committed winner rows (at
+        ``pins``, default the committed epoch). Winner selection
+        (store.fleet_winners — no blob shuffle) and the pins run in
+        Spark before any blob moves; each task then sha-verifies and
+        deserializes only its own KB blobs. Driver memory is flat in
+        G."""
+        import itertools
+
+        from . import serde
+
+        epoch, base = pins or self._committed(name)
+        winners = store.fleet_winners(self.spark, self.store_path, name,
+                                      base, epoch)
+        plen = len(name) + 1
+        cols = [c.split()[0] for c in schema.split(",")]
+
+        def gen(pdfs):
+            import pandas as pd
+            rows = iter(fn(
+                (nm[plen:], serde.loads(store._verified(nm, blob, sha)))
+                for pdf in pdfs
+                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
+                                         pdf["sha256"])))
+            # bounded output batches, as the input's Arrow batches are
+            while chunk := list(itertools.islice(rows, 10_000)):
+                yield pd.DataFrame(chunk, columns=cols)
+
+        return winners.mapInPandas(gen, schema=schema)
 
     # -- answers -----------------------------------------------------------
 
@@ -657,8 +911,8 @@ class SketchCatalog:
     # maintained by incremental_build_grouped: a delta that touches 3 of
     # 10k groups reads+writes 3 KB-scale rows. Answers load the COMMITTED
     # full group set (pinned to the rebuild base: no dead groups) — driver
-    # fan-in is G x blob, so grouped answers are for group counts that
-    # fit a driver dict (same envelope as theta.overlap_matrix's guard).
+    # fan-in of a dict answer is G x blob, so it is refused above
+    # _MAX_DICT_GROUPS groups.
 
     @staticmethod
     def _gname(table_path: str, group_col: str, column: str) -> str:
@@ -677,50 +931,15 @@ class SketchCatalog:
         group row's meta, so reopen works exactly like the global path.
         Requires at least one committed group row to rediscover the spec
         — registering over an empty table is refused."""
-        spec = {"version": _SPEC_VERSION, "column": column,
-                "group_col": group_col, "kinds": _normalize_kinds(kinds)}
-        name = self._gname(table_path, group_col, column)
-        old = self._gspec(table_path, group_col, column, missing_ok=True)
-        if old is not None and old != spec and not rebuild:
-            raise ValueError(
-                f"{table_path}:{group_col}:{column} is already registered "
-                "with a different spec; pass rebuild=True to replace it.\n"
-                f"  registered: {json.dumps(old, sort_keys=True)}\n"
-                f"  requested:  {json.dumps(spec, sort_keys=True)}")
-        return self._refresh_grouped(table_path, group_col, column, spec,
-                                     rebuild=rebuild)
-
-    def _refresh_grouped(self, table_path: str, group_col: str,
-                         column: str, spec: dict, *,
-                         rebuild: bool = False) -> Answer:
-        res = incremental_build_grouped(
-            self.spark, table_path, group_col, column,
-            _factory_from_spec(spec), store_path=self.store_path,
-            name=self._gname(table_path, group_col, column),
-            rebuild=rebuild,
-            meta={"catalog_spec": spec,
-                  "table_path": os.path.abspath(table_path),
-                  "column": column, "group_col": group_col})
-        if res.prev_seq is None and res.updated_groups == 0:
-            raise ValueError(
-                f"cannot register a grouped entry over an empty table "
-                f"({table_path}): no group row would carry the spec")
-        return Answer(value=None, kind="refresh_grouped",
-                      contract="delta-only grouped incremental fold",
-                      table=table_path, column=column, seq=res.seq,
-                      covered_rows=-1, stale_files=0,
-                      refreshed=res.new_files > 0, sketch_bytes=0,
-                      extra={"new_files": res.new_files,
-                             "new_rows": res.new_rows,
-                             "updated_groups": res.updated_groups,
-                             "group_col": group_col})
+        return self._register(table_path, {
+            "version": _SPEC_VERSION, "column": column,
+            "group_col": group_col, "kinds": _normalize_kinds(kinds)},
+            rebuild)
 
     def refresh_grouped(self, table_path: str, group_col: str,
                         column: str) -> Answer:
-        spec = self._gspec(table_path, group_col, column)
-        if spec.get("file_index"):
-            return self._refresh_file_index(table_path, spec)
-        return self._refresh_grouped(table_path, group_col, column, spec)
+        return self._refresh(table_path,
+                             self._gspec(table_path, group_col, column))
 
     def _gspec(self, table_path: str, group_col: str, column: str, *,
                missing_ok: bool = False) -> dict | None:
@@ -729,12 +948,8 @@ class SketchCatalog:
         like current_group_sketches, so rows of a lineage that a
         ``register_grouped(rebuild=True)`` replaced never supply it."""
         spec = self._gspec_at_name(self._gname(table_path, group_col, column))
-        if spec is None:
-            if missing_ok:
-                return None
-            raise KeyError(
-                f"{table_path}:{group_col}:{column} has no grouped "
-                f"registration in this catalog (store: {self.store_path})")
+        if spec is None and not missing_ok:
+            raise self._unregistered(table_path, group_col, column)
         return spec
 
     def _gspec_at(self, name: str, epoch: int, base: int) -> dict | None:
@@ -750,21 +965,18 @@ class SketchCatalog:
                                  seq=top.seq, payload=("meta_json",))
         return json.loads(row[top.name].meta_json).get("catalog_spec")
 
-    def _committed(self, name: str) -> tuple[int, int]:
-        """(epoch, base) pins of a grouped lineage; KeyError when nothing
-        is committed."""
+    def _gspec_at_name(self, name: str) -> dict | None:
+        """Committed spec of an arbitrary grouped lineage name (shared
+        by token fleets, sample fleets and file indexes)."""
         epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        if epoch is None:
-            raise KeyError(f"{name} has no committed grouped epoch")
-        return epoch, base
+        return None if epoch is None else self._gspec_at(name, epoch,
+                                                         base)
 
     def stale_files_grouped(self, table_path: str, group_col: str,
                             column: str) -> int:
-        name = self._gname(table_path, group_col, column)
         self._gspec(table_path, group_col, column)   # registered?
-        _, _, ingested = _grouped_manifest_state(self.store_path, name)
-        current = _current_files(table_path)
-        return len(_diff_files(current, ingested or {}, table_path, name))
+        return self._stale_from(self._gname(table_path, group_col, column),
+                                None, table_path)
 
     def _gscope(self, table_path: str, group_col: str, column: str,
                 policy: str | None) -> tuple[dict, int, bool]:
@@ -772,147 +984,84 @@ class SketchCatalog:
         handling WITHOUT loading any sketch row, so answer paths read
         exactly the rows they need afterwards: one winner row for a
         single-group question, a winners DataFrame for a fleet one."""
-        policy = policy or self.policy
         spec = self._gspec(table_path, group_col, column)
-        stale = self.stale_files_grouped(table_path, group_col, column)
-        refreshed = False
-        if stale and policy == "refuse":
-            raise StaleEntryError(
-                f"{table_path}:{group_col}:{column} is stale by {stale} "
-                "file(s); refresh_grouped() it or answer with "
-                "policy='stale_ok'/'auto'")
-        if stale and policy == "auto":
-            if spec.get("file_index"):
-                self._refresh_file_index(table_path, spec)
-            else:
-                self._refresh_grouped(table_path, group_col, column,
-                                      spec)
-            stale, refreshed = 0, True
-        return spec, stale, refreshed
-
-    def _gentry(self, table_path: str, group_col: str, column: str,
-                policy: str | None):
-        spec, stale, refreshed = self._gscope(table_path, group_col,
-                                              column, policy)
-        name = self._gname(table_path, group_col, column)
-        groups = current_group_sketches(self.spark, self.store_path, name)
-        return spec, groups, stale, refreshed
+        stale = self._stale_from(self._gname(table_path, group_col, column),
+                                 None, table_path)
+        if self._gate(table_path, spec, stale, policy) is None:
+            return spec, stale, False
+        return spec, 0, True
 
     def _grouped_answer(self, table_path, group_col, column, policy,
                         wanted, make, *, group=None, as_df=False):
-        """Three answer shapes behind every grouped verb:
+        """Three answer shapes behind every grouped verb, token or
+        sample:
 
         - ``group=<g>`` — a SINGLE-group question reads exactly one
-          committed winner row (store.load_group_sketches pushes the
-          ``name IN (prefix/g)`` predicate into the parquet scan); the
-          fleet is never loaded. O(1) driver bytes at any G.
+          committed winner row (``_group_row``); the fleet is never
+          loaded. O(1) driver bytes at any G.
         - ``as_df=True`` — a FULL-FLEET question evaluated per group
-          inside mapInPandas over the committed epoch's winner rows;
-          ``Answer.value`` is a lazy (group, ...) DataFrame and no blob
-          ever reaches the driver. The shape for G = 10^5-10^6 fleets.
+          inside mapInPandas over the committed epoch's winner rows
+          (``_stream_fleet``); ``Answer.value`` is a lazy (group, ...)
+          DataFrame and no blob ever reaches the driver. The shape for
+          G = 10^5-10^6 fleets.
         - default — the small-G convenience: ``{group: value}`` dict,
-          driver fan-in G x KB blob (same envelope as
-          theta.overlap_matrix's guard)."""
+          driver fan-in G x KB blob (``_fleet_dict``, refused above
+          ``_MAX_DICT_GROUPS`` groups).
+
+        ``make(part)`` computes one group's value; its optional
+        attributes give the contract (``contract``, or
+        ``contract_by_kind`` for the kind the spec resolves to), extra
+        fields of a single-group answer (``extra``) and the DataFrame
+        rows (``df_rows``, ``df_schema``)."""
         if group is not None and as_df:
             raise ValueError("group= and as_df=True are exclusive: a "
                              "single-group answer is already one row")
         spec, stale, refreshed = self._gscope(table_path, group_col,
                                               column, policy)
-        name = self._gname(table_path, group_col, column)
         meta = {"catalog_spec": spec}
-        contract = "per group: " + self._gcontract(spec, make, wanted)
+        kind, _ = _part(meta, None, *wanted)
+        by_kind = getattr(make, "contract_by_kind", None)
+        contract = "per group: " + (
+            by_kind.get(kind, by_kind[None]) if by_kind is not None
+            else getattr(make, "contract", "per-group sketch answer"))
+        answer = functools.partial(
+            Answer, kind=kind, contract=contract, table=table_path,
+            column=column, covered_rows=-1, stale_files=stale,
+            refreshed=refreshed)
 
         if group is not None:
-            epoch, base = grouped_epoch(self.spark, self.store_path, name)
-            g = str(group)
-            got = store.load_group_sketches(
-                self.spark, self.store_path, name,
-                max_seq=epoch, min_seq=base, groups=[g])
-            if g not in got:
-                raise KeyError(
-                    f"group {g!r} has no committed sketch under "
-                    f"{table_path}:{group_col}:{column}")
-            kind, part = _part(meta, got[g], *wanted)
-            return Answer(value=make(part), kind=kind, contract=contract,
-                          table=table_path, column=column, seq=epoch,
-                          covered_rows=-1, stale_files=stale,
-                          refreshed=refreshed,
+            epoch, spec, ms = self._group_row(table_path, group_col,
+                                              column, group)
+            _, part = _part({"catalog_spec": spec}, ms, *wanted)
+            extra = getattr(make, "extra", lambda part: {})(part)
+            return answer(value=make(part), seq=epoch,
                           sketch_bytes=part.nbytes(),
-                          extra={"group": g, "groups": 1,
-                                 "group_col": group_col})
+                          extra={"group": str(group), "groups": 1,
+                                 "group_col": group_col, **extra})
 
         if as_df:
-            kind, value = self._fleet_df(name, spec, make, wanted)
-            return Answer(value=value, kind=kind, contract=contract,
-                          table=table_path, column=column, seq=-1,
-                          covered_rows=-1, stale_files=stale,
-                          refreshed=refreshed, sketch_bytes=-1,
+            row_fn = getattr(make, "df_rows",
+                             lambda g, part: [(g, make(part))])
+
+            def rows(pairs):
+                for g, ms in pairs:
+                    yield from row_fn(g, _part(meta, ms, *wanted)[1])
+
+            value = self._stream_fleet(
+                self._gname(table_path, group_col, column), rows,
+                getattr(make, "df_schema", "group string, value double"))
+            return answer(value=value, seq=-1, sketch_bytes=-1,
                           extra={"groups": -1, "group_col": group_col,
                                  "distributed": True})
 
-        groups = current_group_sketches(self.spark, self.store_path, name)
-        value, kind, total_bytes = {}, None, 0
-        for g in sorted(groups):
-            kind, part = _part(meta, groups[g], *wanted)
-            value[g] = make(part)
-            total_bytes += part.nbytes()
-        return Answer(value=value, kind=kind or wanted[0],
-                      contract=contract, table=table_path, column=column,
-                      seq=-1, covered_rows=-1, stale_files=stale,
-                      refreshed=refreshed, sketch_bytes=total_bytes,
-                      extra={"groups": len(groups),
-                             "group_col": group_col})
-
-    def _gcontract(self, spec: dict, make, wanted) -> str:
-        """Contract string for the kind the spec RESOLVES to (first of
-        ``wanted`` registered) — a fleet whose quantile kind resolved to
-        t-digest must not report the KLL wording."""
-        spec_kinds = [e["kind"] for e in spec["kinds"]]
-        kind = next((w for w in wanted if w in spec_kinds), wanted[0])
-        by_kind = getattr(make, "contract_by_kind", None)
-        if by_kind is not None:
-            return by_kind.get(kind, by_kind[None])
-        return getattr(make, "contract", "per-group sketch answer")
-
-    def _fleet_df(self, name: str, spec: dict, make, wanted):
-        """(kind, DataFrame) — the fleet answer evaluated per group
-        inside mapInPandas over the committed epoch's winner rows.
-        Winner selection (store.fleet_winners — no blob shuffle) and the
-        epoch/base pins happen in Spark BEFORE any blob moves; each task
-        then sha-verifies and deserializes only its own batch's KB blobs.
-        Driver memory is flat in G."""
-        import pandas as pd
-
-        from . import serde
-
-        spec_kinds = [e["kind"] for e in spec["kinds"]]
-        resolved = [w for w in wanted if w in spec_kinds]
-        if not resolved:
-            raise KeyError(
-                f"none of {list(wanted)} registered for this column "
-                f"(registered kinds: {spec_kinds})")
-        kind, idx = resolved[0], spec_kinds.index(resolved[0])
-        epoch, base = self._committed(name)
-        winners = store.fleet_winners(self.spark, self.store_path, name,
-                                      base, epoch)
-        row_fn = getattr(make, "df_rows",
-                         lambda g, part: [(g, make(part))])
-        out_schema = getattr(make, "df_schema", "group string, "
-                                                "value double")
-        plen = len(name) + 1
-
-        def gen(pdfs):
-            cols = [c.split()[0] for c in out_schema.split(",")]
-            for pdf in pdfs:
-                rows = []
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    part = serde.loads(
-                        store._verified(nm, blob, sha)).parts[idx]
-                    rows.extend(row_fn(nm[plen:], part))
-                yield pd.DataFrame(rows, columns=cols)
-
-        return kind, winners.mapInPandas(gen, schema=out_schema)
+        epoch, spec, groups = self._fleet_dict(table_path, group_col,
+                                               column)
+        parts = {g: _part({"catalog_spec": spec}, groups[g], *wanted)[1]
+                 for g in sorted(groups)}
+        return answer(value={g: make(p) for g, p in parts.items()},
+                      seq=epoch,
+                      sketch_bytes=sum(p.nbytes() for p in parts.values()),
+                      extra={"groups": len(parts), "group_col": group_col})
 
     def count_distinct_grouped(self, table_path: str, group_col: str,
                                column: str, *, group=None,
@@ -982,34 +1131,18 @@ class SketchCatalog:
 
     def _mg_part_df(self, name: str, epoch: int, base: int, spec: dict):
         """(key, sketch) DataFrame of the fleet's Misra-Gries parts at a
-        committed epoch — winner selection and epoch pins in Spark,
-        MG-part extraction per batch in mapInPandas; blobs never reach
-        the driver. The input shape drift.grouped_tv_bounds wants."""
-        import pandas as pd
+        committed epoch, extracted per task inside mapInPandas; blobs
+        never reach the driver. The input shape drift.grouped_tv_bounds
+        wants."""
+        meta = {"catalog_spec": spec}
+        _part(meta, None, "mg")         # refused before any Spark work
 
-        from . import serde
+        def rows(pairs):
+            for g, ms in pairs:
+                yield g, _part(meta, ms, "mg")[1].to_bytes()
 
-        spec_kinds = [e["kind"] for e in spec["kinds"]]
-        if "mg" not in spec_kinds:
-            raise KeyError(
-                f"epoch {epoch} of {name} has no 'mg' part (registered "
-                f"kinds: {spec_kinds}) — grouped drift needs Misra-Gries")
-        idx = spec_kinds.index("mg")
-        winners = store.fleet_winners(self.spark, self.store_path, name,
-                                      base, epoch)
-        plen = len(name) + 1
-
-        def gen(pdfs):
-            for pdf in pdfs:
-                keys, blobs = [], []
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    keys.append(nm[plen:])
-                    blobs.append(serde.loads(store._verified(
-                        nm, blob, sha)).parts[idx].to_bytes())
-                yield pd.DataFrame({"key": keys, "sketch": blobs})
-
-        return winners.mapInPandas(gen, schema="key string, sketch binary")
+        return self._stream_fleet(name, rows, "key string, sketch binary",
+                                  (epoch, base))
 
     def _epochs(self, table_path: str, group_col: str, column: str,
                 seq_old: int, seq_new: int | None, policy: str | None,
@@ -1019,17 +1152,15 @@ class SketchCatalog:
         epochs; ``seq_new`` defaults to the committed epoch after
         ``policy``'s freshness handling. KeyError for an uncommitted
         epoch, or (``spec``) one with no committed group row."""
-        from .incremental import grouped_epoch_at
         name = self._gname(table_path, group_col, column)
         stale, refreshed = 0, False
         if seq_new is None:
             _, stale, refreshed = self._gscope(table_path, group_col,
                                                column, policy)
-            seq_new, _ = grouped_epoch(self.spark, self.store_path, name)
+            seq_new, _ = self._committed(name)
         pins = []
         for seq in (seq_old, seq_new):
-            epoch, base = grouped_epoch_at(self.spark, self.store_path,
-                                           name, seq)
+            epoch, base = self._committed(name, seq)
             pins.append((epoch, base, spec and self._gspec_at(name, epoch,
                                                               base)))
             if pins[-1][2] is None:
@@ -1105,28 +1236,18 @@ class SketchCatalog:
                     "are lower bounds, silence is not stability")
 
         if group is not None:
-            g = str(group)
             pair = []
-            for spec, epoch, base in ((spec_old, old_epoch, old_base),
-                                      (spec_new, new_epoch, new_base)):
-                got = store.load_group_sketches(
-                    self.spark, self.store_path, name,
-                    max_seq=epoch, min_seq=base, groups=[g])
-                if g not in got:
-                    raise KeyError(
-                        f"group {g!r} has no committed sketch at epoch "
-                        f"{epoch} under {table_path}:{group_col}:"
-                        f"{column}")
-                _, part = _part({"catalog_spec": spec}, got[g],
-                                     "mg")
-                pair.append(part)
+            for epoch in (old_epoch, new_epoch):
+                _, spec, ms = self._group_row(table_path, group_col,
+                                              column, group, epoch)
+                pair.append(_part({"catalog_spec": spec}, ms, "mg")[1])
             movers = _tm(pair[0], pair[1], limit=limit)
             return Answer(
                 value=movers, kind="mg", contract=contract,
                 table=table_path, column=column, seq=new_epoch,
                 covered_rows=-1, stale_files=stale, refreshed=refreshed,
                 sketch_bytes=pair[0].nbytes() + pair[1].nbytes(),
-                extra={"seq_old": old_epoch, "group": g,
+                extra={"seq_old": old_epoch, "group": str(group),
                        "group_col": group_col})
 
         value = grouped_top_movers(
@@ -1156,6 +1277,24 @@ class SketchCatalog:
     def _sample_col(key_col: str, weight_col: str) -> str:
         return f"{key_col}~{weight_col}"
 
+    @staticmethod
+    def _sample_spec(key_col: str, weight_col: str, payload_col, k: int,
+                     seed: int) -> dict:
+        return {"key_col": key_col, "weight_col": weight_col,
+                "payload_col": payload_col, "k": int(k), "seed": int(seed)}
+
+    @staticmethod
+    def _predicate(pred, pattern):
+        """``pred`` (callable on the key string), or the fnmatch glob
+        ``pattern`` (the SQL-shippable form) as one — exactly one of
+        them."""
+        import fnmatch
+        if (pred is None) == (pattern is None):
+            raise ValueError("pass exactly one of pred= or pattern=")
+        if pattern is None:
+            return pred
+        return lambda s: fnmatch.fnmatchcase(s, pattern)
+
     def register_sample(self, table_path: str, key_col: str,
                         weight_col: str, *, payload_col: str | None = None,
                         k: int = 256, seed: int = 1337,
@@ -1165,88 +1304,10 @@ class SketchCatalog:
         Duplicate keys (within a batch or across delta folds) collapse
         to the MAX (weight, payload) instance — the sample's documented
         dedup rule — so re-ingested rows never double-count."""
-        import functools as _ft
-
-        spec = {"version": _SPEC_VERSION,
-                "sample": {"key_col": key_col, "weight_col": weight_col,
-                           "payload_col": payload_col, "k": int(k),
-                           "seed": int(seed)}}
-        col = self._sample_col(key_col, weight_col)
-        name = self._name(table_path, col)
-        prev = store.latest_entry(self.spark, self.store_path, name)
-        if prev is not None and not rebuild:
-            old = prev[1].get("catalog_spec")
-            if old is not None and old != spec:
-                raise ValueError(
-                    f"{table_path}:{col} is already registered with a "
-                    "different sample spec; pass rebuild=True.\n"
-                    f"  registered: {json.dumps(old, sort_keys=True)}\n"
-                    f"  requested:  {json.dumps(spec, sort_keys=True)}")
-        factory = _ft.partial(PrioritySample, int(k), int(seed))
-
-        def builder(sp, files):
-            from .spark_build import build_aggregator_pairs
-            return build_aggregator_pairs(
-                sp.read.parquet(*files), key_col, weight_col, factory,
-                payload_col=payload_col)
-
-        res = incremental_build(
-            self.spark, table_path, col, factory,
-            store_path=self.store_path, name=name, rebuild=rebuild,
-            builder=builder,
-            meta={"catalog_spec": spec,
-                  "table_path": os.path.abspath(table_path),
-                  "column": col})
-        return Answer(value=None, kind="refresh_sample",
-                      contract="delta-only incremental sample fold",
-                      table=table_path, column=col, seq=res.seq,
-                      covered_rows=int(res.meta.get("table_rows", -1)),
-                      stale_files=0, refreshed=res.new_files > 0,
-                      sketch_bytes=res.sketch.nbytes(),
-                      extra={"new_files": res.new_files,
-                             "new_rows": res.new_rows})
-
-    def _sample_entry(self, table_path: str, key_col: str,
-                      weight_col: str, policy: str | None):
-        policy = policy or self.policy
-        col = self._sample_col(key_col, weight_col)
-        name = self._name(table_path, col)
-        loaded = store.latest_sketch(self.spark, self.store_path, name)
-        if loaded is None or "sample" not in (loaded[1].get(
-                "catalog_spec") or {}):
-            raise KeyError(
-                f"{table_path}:({key_col}, {weight_col}) has no sample "
-                f"registration (store: {self.store_path}); call "
-                "register_sample() first")
-        stale = self._stale_from(name, loaded[1], table_path)
-        refreshed = False
-        if stale and policy == "refuse":
-            raise StaleEntryError(
-                f"{table_path}:{col} sample is stale by {stale} "
-                "file(s); register_sample() again or answer with "
-                "policy='stale_ok'/'auto'")
-        if stale and policy == "auto":
-            s = loaded[1]["catalog_spec"]["sample"]
-            self.register_sample(table_path, key_col, weight_col,
-                                 payload_col=s["payload_col"],
-                                 k=s["k"], seed=s["seed"])
-            loaded = store.latest_sketch(self.spark, self.store_path,
-                                         name)
-            stale, refreshed = 0, True
-        return loaded[0], loaded[1], loaded[2], stale, refreshed
-
-    def _sample_answer(self, table_path, key_col, weight_col, policy,
-                       make) -> Answer:
-        seq, meta, ps, stale, refreshed = self._sample_entry(
-            table_path, key_col, weight_col, policy)
-        value, contract, extra = make(ps)
-        return Answer(value=value, kind="psample", contract=contract,
-                      table=table_path,
-                      column=self._sample_col(key_col, weight_col),
-                      seq=seq,
-                      covered_rows=int(meta.get("table_rows", -1)),
-                      stale_files=stale, refreshed=refreshed,
-                      sketch_bytes=ps.nbytes(), extra=extra)
+        return self._register(table_path, {
+            "version": _SPEC_VERSION,
+            "sample": self._sample_spec(key_col, weight_col, payload_col,
+                                        k, seed)}, rebuild)
 
     def subset_sum(self, table_path: str, key_col: str, weight_col: str,
                    pred=None, *, pattern: str | None = None,
@@ -1262,13 +1323,9 @@ class SketchCatalog:
         the merged sample equals a global sample with the same (k,
         seed) over the same rows — answers identical, maintained
         per-group."""
-        import fnmatch
-        if (pred is None) == (pattern is None):
-            raise ValueError("pass exactly one of pred= or pattern=")
-        if pattern is not None:
-            pred = lambda s: fnmatch.fnmatchcase(s, pattern)  # noqa: E731
+        pred = self._predicate(pred, pattern)
 
-        def make(ps):
+        def make(kind, ps):
             exact = ps.threshold is None
             var = ("exact (sample never overflowed)" if exact else
                    f"unbiased; variance within {(ps.k + 1)}/{ps.k - 1} "
@@ -1276,11 +1333,9 @@ class SketchCatalog:
             return (float(ps.estimate_subset(pred)), var,
                     {"exact_mode": exact, "n_sampled":
                      min(len(ps.keys), ps.k)})
-        if via is not None:
-            return self._merged_sample_answer(table_path, via, key_col,
-                                              weight_col, policy, make)
-        return self._sample_answer(table_path, key_col, weight_col,
-                                   policy, make)
+        return self._answer(table_path,
+                            self._sample_col(key_col, weight_col), policy,
+                            _VERB_ROUTES["subset_sum"], make, via=via)
 
     def sample_total(self, table_path: str, key_col: str,
                      weight_col: str, *, via: str | None = None,
@@ -1289,52 +1344,14 @@ class SketchCatalog:
         unbiased estimate of it (their gap is the sampling noise).
         ``via=<group_col>`` merges the grouped sample fleet (Σw sums
         exactly across groups)."""
-        def make(ps):
+        def make(kind, ps):
             return ({"exact": float(ps.total_weight),
                      "estimate": float(ps.estimate_total())},
                     "exact Sigma-w tracked exactly; estimate unbiased",
                     {})
-        if via is not None:
-            return self._merged_sample_answer(table_path, via, key_col,
-                                              weight_col, policy, make)
-        return self._sample_answer(table_path, key_col, weight_col,
-                                   policy, make)
-
-    def _merged_sample_answer(self, table_path: str, group_col: str,
-                              key_col: str, weight_col: str, policy,
-                              make) -> Answer:
-        """Global sample answer from a MERGED grouped sample fleet —
-        the psample twin of ``_answer(via=...)``: committed group rows
-        tree-merge distributedly (PrioritySample.merge), the driver
-        folds only per-partition partials."""
-        policy = policy or self.policy
-        col = self._sample_col(key_col, weight_col)
-        name = self._gname(table_path, group_col, col)
-        spec = self._gspec_at_name(name)
-        if spec is None or "sample" not in spec:
-            raise KeyError(
-                f"{table_path}:{group_col}:({key_col}, {weight_col}) "
-                "has no grouped sample registration; call "
-                "register_sample_grouped() first")
-        stale = self.stale_files_grouped(table_path, group_col, col)
-        refreshed = False
-        if stale and policy == "refuse":
-            raise StaleEntryError(
-                f"grouped sample is stale by {stale} file(s)")
-        if stale and policy == "auto":
-            s = spec["sample"]
-            self.register_sample_grouped(
-                table_path, group_col, key_col, weight_col,
-                payload_col=s["payload_col"], k=s["k"], seed=s["seed"])
-            stale, refreshed = 0, True
-        epoch, ps = self._merge_fleet(name, spec)
-        value, contract, extra = make(ps)
-        return Answer(value=value, kind="psample", contract=contract,
-                      table=table_path, column=col, seq=epoch,
-                      covered_rows=-1, stale_files=stale,
-                      refreshed=refreshed, sketch_bytes=ps.nbytes(),
-                      extra={**extra, "merged_from_fleet": True,
-                             "group_col": group_col})
+        return self._answer(table_path,
+                            self._sample_col(key_col, weight_col), policy,
+                            _VERB_ROUTES["sample_total"], make, via=via)
 
     def sample_group_sums(self, table_path: str, key_col: str,
                           weight_col: str, *,
@@ -1342,12 +1359,13 @@ class SketchCatalog:
         """Per-payload-group subset sums (e.g. total tokens per source)
         from the sample alone — requires the entry to have been
         registered with payload_col."""
-        def make(ps):
+        def make(kind, ps):
             return (ps.estimate_group_sums(),
                     "unbiased per group; exact while the sample never "
                     "overflowed", {"exact_mode": ps.threshold is None})
-        return self._sample_answer(table_path, key_col, weight_col,
-                                   policy, make)
+        return self._answer(table_path,
+                            self._sample_col(key_col, weight_col), policy,
+                            _VERB_ROUTES["sample_group_sums"], make)
 
     def register_sample_grouped(self, table_path: str, group_col: str,
                                 key_col: str, weight_col: str, *,
@@ -1359,57 +1377,10 @@ class SketchCatalog:
         grouped fleet: an append touching 3 of 10k groups republishes
         3 KB-scale rows. Built via build_grouped_aggregator_pairs
         through the grouped incremental builder hook."""
-        import functools as _ft
-
-        spec = {"version": _SPEC_VERSION, "group_col": group_col,
-                "sample": {"key_col": key_col, "weight_col": weight_col,
-                           "payload_col": payload_col, "k": int(k),
-                           "seed": int(seed)}}
-        col = self._sample_col(key_col, weight_col)
-        name = self._gname(table_path, group_col, col)
-        old = self._gspec_at_name(name)
-        if old is not None and old != spec and not rebuild:
-            raise ValueError(
-                f"{table_path}:{group_col}:{col} is already registered "
-                "with a different sample spec; pass rebuild=True.\n"
-                f"  registered: {json.dumps(old, sort_keys=True)}\n"
-                f"  requested:  {json.dumps(spec, sort_keys=True)}")
-        factory = _ft.partial(PrioritySample, int(k), int(seed))
-
-        def builder(sp, files):
-            from .spark_build import build_grouped_aggregator_pairs
-            return build_grouped_aggregator_pairs(
-                sp.read.parquet(*files), group_col, key_col, weight_col,
-                factory, payload_col=payload_col)
-
-        res = incremental_build_grouped(
-            self.spark, table_path, group_col, col, factory,
-            store_path=self.store_path, name=name, rebuild=rebuild,
-            builder=builder,
-            meta={"catalog_spec": spec,
-                  "table_path": os.path.abspath(table_path),
-                  "column": col, "group_col": group_col})
-        if res.prev_seq is None and res.updated_groups == 0:
-            raise ValueError(
-                f"cannot register a grouped sample over an empty table "
-                f"({table_path}): no group row would carry the spec")
-        return Answer(value=None, kind="refresh_sample_grouped",
-                      contract="delta-only grouped incremental sample "
-                               "fold",
-                      table=table_path, column=col, seq=res.seq,
-                      covered_rows=-1, stale_files=0,
-                      refreshed=res.new_files > 0, sketch_bytes=0,
-                      extra={"new_files": res.new_files,
-                             "new_rows": res.new_rows,
-                             "updated_groups": res.updated_groups,
-                             "group_col": group_col})
-
-    def _gspec_at_name(self, name: str) -> dict | None:
-        """Committed spec of an arbitrary grouped lineage name (shared
-        by token fleets and sample fleets)."""
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        return None if epoch is None else self._gspec_at(name, epoch,
-                                                         base)
+        return self._register(table_path, {
+            "version": _SPEC_VERSION, "group_col": group_col,
+            "sample": self._sample_spec(key_col, weight_col, payload_col,
+                                        k, seed)}, rebuild)
 
     def subset_sum_grouped(self, table_path: str, group_col: str,
                            key_col: str, weight_col: str, pred=None, *,
@@ -1420,66 +1391,17 @@ class SketchCatalog:
         predicate. ``group=<g>`` reads exactly ONE committed winner row;
         default returns the {group: estimate} dict (small-G driver
         convenience, same envelope as the other grouped dict answers)."""
-        import fnmatch
-        if (pred is None) == (pattern is None):
-            raise ValueError("pass exactly one of pred= or pattern=")
-        if pattern is not None:
-            pred = lambda s: fnmatch.fnmatchcase(s, pattern)  # noqa: E731
-        col = self._sample_col(key_col, weight_col)
-        name = self._gname(table_path, group_col, col)
-        spec = self._gspec_at_name(name)
-        if spec is None or "sample" not in spec:
-            raise KeyError(
-                f"{table_path}:{group_col}:({key_col}, {weight_col}) "
-                "has no grouped sample registration; call "
-                "register_sample_grouped() first")
-        policy = policy or self.policy
-        stale = self.stale_files_grouped(table_path, group_col, col)
-        refreshed = False
-        if stale and policy == "refuse":
-            raise StaleEntryError(
-                f"grouped sample is stale by {stale} file(s)")
-        if stale and policy == "auto":
-            s = spec["sample"]
-            self.register_sample_grouped(
-                table_path, group_col, key_col, weight_col,
-                payload_col=s["payload_col"], k=s["k"], seed=s["seed"])
-            stale, refreshed = 0, True
-        epoch, base = grouped_epoch(self.spark, self.store_path, name)
-        contract = ("per group: unbiased subset sum "
-                    "(Duffield-Lund-Thorup); exact while that group's "
-                    "sample never overflowed")
-        if group is not None:
-            g = str(group)
-            got = store.load_group_sketches(
-                self.spark, self.store_path, name,
-                max_seq=epoch, min_seq=base, groups=[g])
-            if g not in got:
-                raise KeyError(
-                    f"group {g!r} has no committed sample under "
-                    f"{table_path}:{group_col}")
-            ps = got[g]
-            return Answer(value=float(ps.estimate_subset(pred)),
-                          kind="psample", contract=contract,
-                          table=table_path, column=col, seq=epoch,
-                          covered_rows=-1, stale_files=stale,
-                          refreshed=refreshed,
-                          sketch_bytes=ps.nbytes(),
-                          extra={"group": g, "groups": 1,
-                                 "group_col": group_col,
-                                 "exact_mode": ps.threshold is None})
-        groups = current_group_sketches(self.spark, self.store_path,
-                                        name)
-        value = {g: float(ps.estimate_subset(pred))
-                 for g, ps in sorted(groups.items())}
-        return Answer(value=value, kind="psample", contract=contract,
-                      table=table_path, column=col, seq=epoch,
-                      covered_rows=-1, stale_files=stale,
-                      refreshed=refreshed,
-                      sketch_bytes=sum(ps.nbytes()
-                                       for ps in groups.values()),
-                      extra={"groups": len(groups),
-                             "group_col": group_col})
+        pred = self._predicate(pred, pattern)
+
+        def make(ps):
+            return float(ps.estimate_subset(pred))
+        make.contract = ("unbiased subset sum (Duffield-Lund-Thorup); "
+                         "exact while that group's sample never "
+                         "overflowed")
+        make.extra = lambda ps: {"exact_mode": ps.threshold is None}
+        return self._grouped_answer(
+            table_path, group_col, self._sample_col(key_col, weight_col),
+            policy, _VERB_ROUTES["subset_sum"], make, group=group)
 
     def groups_diff(self, table_path: str, group_col: str, column: str,
                     seq_old: int, seq_new: int | None = None, *,
@@ -1573,57 +1495,7 @@ class SketchCatalog:
                 "kinds": _normalize_kinds(kinds)}
         if ngrams is not None:
             spec["ngrams"] = {"n": int(ngrams), "seed": int(ngram_seed)}
-        label = self._fidx_label(column, spec.get("ngrams"))
-        name = self._gname(table_path, self._FILE_GROUP, label)
-        old = self._gspec_at_name(name)
-        if old is not None and old != spec and not rebuild:
-            raise ValueError(
-                f"{table_path}:{label} already has a file index with a "
-                "different spec; pass rebuild=True to replace it.\n"
-                f"  registered: {json.dumps(old, sort_keys=True)}\n"
-                f"  requested:  {json.dumps(spec, sort_keys=True)}")
-        return self._refresh_file_index(table_path, spec,
-                                        rebuild=rebuild)
-
-    def _refresh_file_index(self, table_path: str, spec: dict, *,
-                            rebuild: bool = False) -> Answer:
-        column = spec["column"]
-        label = self._fidx_label(column, spec.get("ngrams"))
-        ng = spec.get("ngrams")
-        transform = None
-        if ng:
-            from .ngrams import array_ngrams
-            n_, seed_ = int(ng["n"]), int(ng["seed"])
-            transform = lambda col: array_ngrams(col, n_, seed_)  # noqa: E731
-
-        def builder(sp, files):
-            from .spark_build import build_per_file_parquet
-            return build_per_file_parquet(
-                sp, table_path, column, _factory_from_spec(spec),
-                files=files, transform=transform)
-
-        res = incremental_build_grouped(
-            self.spark, table_path, self._FILE_GROUP, label,
-            _factory_from_spec(spec), store_path=self.store_path,
-            name=self._gname(table_path, self._FILE_GROUP, label),
-            rebuild=rebuild, builder=builder,
-            meta={"catalog_spec": spec,
-                  "table_path": os.path.abspath(table_path),
-                  "column": label, "group_col": self._FILE_GROUP})
-        if res.prev_seq is None and res.updated_groups == 0:
-            raise ValueError(
-                f"cannot register a file index over an empty table "
-                f"({table_path}): no file row would carry the spec")
-        return Answer(value=None, kind="refresh_file_index",
-                      contract="delta-only per-file fold (appended "
-                               "files only; existing file rows never "
-                               "republish)",
-                      table=table_path, column=label, seq=res.seq,
-                      covered_rows=-1, stale_files=0,
-                      refreshed=res.new_files > 0, sketch_bytes=0,
-                      extra={"new_files": res.new_files,
-                             "new_rows": res.new_rows,
-                             "updated_groups": res.updated_groups})
+        return self._register(table_path, spec, rebuild)
 
     def refresh_file_index(self, table_path: str, column: str, *,
                            ngrams: int | None = None,
@@ -1633,7 +1505,7 @@ class SketchCatalog:
                                           "seed": ngram_seed}
         label = self._fidx_label(column, ng)
         spec = self._gspec(table_path, self._FILE_GROUP, label)
-        return self._refresh_file_index(table_path, spec)
+        return self._refresh(table_path, spec)
 
     def locate_batch(self, table_path: str, column: str, keys, *,
                      ngrams: int | None = None, ngram_seed: int = 1337,
@@ -1658,49 +1530,36 @@ class SketchCatalog:
             else {"n": ngrams, "seed": ngram_seed})
         spec, stale, refreshed = self._gscope(
             table_path, self._FILE_GROUP, label, policy)
-        name = self._gname(table_path, self._FILE_GROUP, label)
-        spec_kinds = [e["kind"] for e in spec["kinds"]]
-        if "bloom" not in spec_kinds:
-            raise KeyError(
-                f"file index on {table_path}:{column} has no 'bloom' "
-                f"kind (registered: {spec_kinds}) — locate() needs the "
-                "membership filter")
-        bidx = spec_kinds.index("bloom")
-        cidx = spec_kinds.index("cm") if "cm" in spec_kinds else -1
-        fpr = spec["kinds"][bidx]["params"]["fpr"]
+        meta = {"catalog_spec": spec}
+        _part(meta, None, "bloom")      # locate() needs the filter
+        counts = "cm" in _kinds(spec)
+        fpr = next(e["params"]["fpr"] for e in spec["kinds"]
+                   if e["kind"] == "bloom")
         from pyspark.sql import functions as F
 
-        from . import serde
-        epoch, base = self._committed(name)
-        winners = store.fleet_winners(self.spark, self.store_path, name,
-                                      base, epoch)
-        plen = len(name) + 1
+        name = self._gname(table_path, self._FILE_GROUP, label)
+        epoch, _ = pins = self._committed(name)
         karr = np.asarray(list(keys), dtype=np.int64)
 
-        def gen(pdfs):
-            import pandas as pd
-            for pdf in pdfs:
-                # one NULL-file row per batch counts the files probed,
-                # so the collect below learns the fleet size for free
-                out_k, out_f, out_u = [0], [None], [len(pdf)]
-                for nm, blob, sha in zip(pdf["name"], pdf["blob"],
-                                         pdf["sha256"]):
-                    ms = serde.loads(store._verified(nm, blob, sha))
-                    mask = ms.parts[bidx].contains_batch(karr)
-                    if mask.any():
-                        hits = karr[mask]
-                        ubs = (ms.parts[cidx].point_query_batch(hits)
-                               if cidx >= 0
-                               else np.full(hits.shape, -1,
-                                            dtype=np.int64))
-                        out_k.extend(int(h) for h in hits)
-                        out_f.extend([nm[plen:]] * len(hits))
-                        out_u.extend(int(u) for u in ubs)
-                yield pd.DataFrame({"key": out_k, "file": out_f,
-                                    "count_ub": out_u})
+        def gen(pairs):
+            n = 0
+            for file, ms in pairs:
+                n += 1
+                mask = _part(meta, ms, "bloom")[1].contains_batch(karr)
+                if mask.any():
+                    hits = karr[mask]
+                    ubs = (_part(meta, ms, "cm")[1].point_query_batch(hits)
+                           if counts
+                           else np.full(hits.shape, -1, dtype=np.int64))
+                    yield from zip(hits.tolist(), [file] * len(hits),
+                                   ubs.tolist())
+            # one NULL-file row per task counts the files probed, so the
+            # collect below learns the fleet size for free
+            yield 0, None, n
 
-        probe = winners.mapInPandas(
-            gen, "key long, file string, count_ub long")
+        probe = self._stream_fleet(name, gen,
+                                   "key long, file string, count_ub long",
+                                   pins)
         hits = probe.filter(F.col("file").isNotNull())
         contract = ("no false negatives per key (every file containing "
                     f"it is listed); false positives <= fpr {fpr:g} "
@@ -1772,8 +1631,7 @@ class SketchCatalog:
     # -- introspection ------------------------------------------------------
 
     # grouped verbs the catalog exposes (count_distinct_grouped, ...)
-    _GROUPED_VERBS = ("count_distinct", "topk", "frequency", "quantile",
-                      "drift", "top_movers")
+    _GROUPED_VERBS = _SHAPES["grouped"][1]
 
     def explain(self, table_path: str, column: str, *,
                 group_col: str | None = None) -> dict:
@@ -1790,75 +1648,39 @@ class SketchCatalog:
             name = self._name(table_path, column)
             entry = store.latest_entry(self.spark, self.store_path, name)
             if entry is None or "catalog_spec" not in entry[1]:
-                raise KeyError(
-                    f"{table_path}:{column} is not registered in this "
-                    f"catalog (store: {self.store_path})")
+                raise self._unregistered(table_path, None, column)
             seq, meta = entry
             spec = meta["catalog_spec"]
             stale = self._stale_from(name, meta, table_path)
             covered = int(meta.get("table_rows", -1))
             store_rows = {"answer": f"{name} @ seq {seq} (one row)"}
-            if "sample" in spec:
-                routes = {v: {"kind": "psample", "available": True,
-                              "preference": ["psample"]}
-                          for v in ("subset_sum", "sample_total",
-                                    "sample_group_sums")}
-                return {"name": name,
-                        "table_path": os.path.abspath(table_path),
-                        "column": column, "group_col": None,
-                        "seq": seq, "kinds": ["psample"],
-                        "covered_rows": covered, "stale_files": stale,
-                        "store_rows": store_rows, "routes": routes}
-            verbs = dict(_VERB_ROUTES)
         else:
             name = self._gname(table_path, group_col, column)
             spec = self._gspec(table_path, group_col, column)
-            epoch, _base = grouped_epoch(self.spark, self.store_path, name)
-            seq = int(epoch)
-            stale = self.stale_files_grouped(table_path, group_col, column)
+            seq = int(self._committed(name)[0])
+            stale = self._stale_from(name, None, table_path)
             covered = -1
             store_rows = {
                 "single_group": f"{name}/<group> winner row within "
                                 f"committed epoch {seq} (one row)",
                 "fleet": f"{name}/* winners DataFrame at committed "
                          f"epoch {seq} (distributed, never collected)"}
-            if "sample" in spec:
-                routes = {"subset_sum": {"kind": "psample",
-                                         "available": True,
-                                         "preference": ["psample"]}}
-                return {"name": name,
-                        "table_path": os.path.abspath(table_path),
-                        "column": column, "group_col": group_col,
-                        "seq": seq, "kinds": ["psample"],
-                        "covered_rows": -1, "stale_files": stale,
-                        "store_rows": store_rows, "routes": routes}
             if spec.get("file_index"):
-                kinds = [e["kind"] for e in spec["kinds"]]
-                routes = {"locate": {"kind": "bloom",
-                                     "available": "bloom" in kinds,
-                                     "preference": ["bloom"]},
-                          "pruned_read": {"kind": "bloom",
-                                          "available": "bloom" in kinds,
-                                          "preference": ["bloom"]}}
                 store_rows["probe"] = (f"{name}/* winners probed in "
                                        f"mapInPandas at epoch {seq}")
-                return {"name": name,
-                        "table_path": os.path.abspath(table_path),
-                        "column": column, "group_col": group_col,
-                        "seq": seq, "kinds": kinds,
-                        "covered_rows": -1, "stale_files": stale,
-                        "store_rows": store_rows, "routes": routes}
-            verbs = {v: _VERB_ROUTES[v] for v in self._GROUPED_VERBS}
-        kinds = [e["kind"] for e in spec["kinds"]]
         routes = {}
-        for verb, wanted in sorted(verbs.items()):
-            served = next((w for w in wanted if w in kinds), None)
+        for verb in sorted(_SHAPES[_shape(spec)][1]):
+            wanted = _VERB_ROUTES[verb]
+            try:
+                served = _part({"catalog_spec": spec}, None, *wanted)[0]
+            except KeyError:
+                served = None
             routes[verb] = {"kind": served,
                             "available": served is not None,
                             "preference": list(wanted)}
         return {"name": name, "table_path": os.path.abspath(table_path),
                 "column": column, "group_col": group_col, "seq": seq,
-                "kinds": kinds, "covered_rows": covered,
+                "kinds": _kinds(spec), "covered_rows": covered,
                 "stale_files": stale, "store_rows": store_rows,
                 "routes": routes}
 
@@ -1895,7 +1717,7 @@ class SketchCatalog:
                 spec = self._gspec_at_name(entry)
                 if spec is None:
                     continue
-                seq = grouped_epoch(self.spark, self.store_path, entry)[0]
+                seq = self._committed(entry)[0]
             out.append({"name": entry, "seq": int(seq),
                         "table_path": meta["table_path"],
                         "column": meta["column"],
@@ -1911,8 +1733,7 @@ class SketchCatalog:
         out = []
         for r in self._registrations():
             spec = r.pop("spec")
-            e = {**r, "kinds": (["psample"] if "sample" in spec
-                                else [k["kind"] for k in spec["kinds"]]),
+            e = {**r, "kinds": _kinds(spec),
                  "file_index": bool(spec.get("file_index"))}
             try:
                 if e["group_col"] is not None:

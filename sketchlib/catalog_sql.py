@@ -27,8 +27,10 @@ O(1)-rows shape as ``SketchCatalog.*_grouped(group=...)``.
 
 Resolution is not a copy of the Python catalog's: the functions run the
 catalog's own naming (``SketchCatalog._name`` / ``_gname``), kind routing
-(``catalog._part``), committed-epoch pins (``incremental.grouped_epoch``
-/ ``grouped_epoch_at``) and the store's one pyarrow winner reader
+(``catalog._part``), committed-epoch pins (``SketchCatalog._committed``),
+its readers of committed fleet rows — ``SketchCatalog._group_row`` for
+one group's row, ``_fleet_dict`` for a whole fleet — and its
+``explain()``, over the store's one pyarrow winner reader
 (``store._winner_rows`` and its loaders) — executor-side with no
 SparkSession, which that layer never needs. Winners are sha-verified
 before deserialization, and reads are memoized on the store head's
@@ -48,17 +50,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from . import serde, store
-from .catalog import _VERB_ROUTES, SketchCatalog, _part
-from .incremental import grouped_epoch, grouped_epoch_at
-
-
-def _pins(sp: str, prefix: str, seq=None) -> tuple[int, int]:
-    """(epoch, base) of a fleet: the committed epoch, or the historical
-    committed epoch ``seq``."""
-    if seq is not None:
-        return grouped_epoch_at(None, sp, prefix, int(seq))
-    return SketchCatalog(None, sp)._committed(prefix)
+from . import store
+from .catalog import _VERB_ROUTES, SketchCatalog, _kinds, _part
 
 
 def _entry(sp: str, table_path: str, column: str, seq=None):
@@ -79,16 +72,9 @@ def _group(sp: str, table_path: str, group_col: str, column: str, group,
            seq=None):
     """(meta, sketch) of ONE committed group row of a fleet — at the
     committed epoch, or at epoch ``seq``; the fleet is never read."""
-    prefix = SketchCatalog._gname(table_path, group_col, column)
-    epoch, base = _pins(sp, prefix, seq)
-    got = store.load_group_sketches(None, sp, prefix, max_seq=epoch,
-                                    min_seq=base, groups=[str(group)])
-    if str(group) not in got:
-        raise KeyError(
-            f"group {group!r} has no committed sketch under "
-            f"{table_path}:{group_col}:{column} in {sp}")
-    spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
-    return {"catalog_spec": spec}, got[str(group)]
+    _, spec, ms = SketchCatalog(None, sp)._group_row(
+        table_path, group_col, column, group, seq)
+    return {"catalog_spec": spec}, ms
 
 
 def _merged(sp: str, table_path: str, group_col: str, column: str):
@@ -96,10 +82,8 @@ def _merged(sp: str, table_path: str, group_col: str, column: str):
     folded into one MultiSketch, in name order (SQL twin of the Python
     verbs' ``via=``; single-task evaluation, so the Python path is the
     10^6-group shape)."""
-    prefix = SketchCatalog._gname(table_path, group_col, column)
-    epoch, base = _pins(sp, prefix)
-    groups = store.load_group_sketches(None, sp, prefix, max_seq=epoch,
-                                       min_seq=base)
+    _, spec, groups = SketchCatalog(None, sp)._fleet_dict(
+        table_path, group_col, column)
     if not groups:
         raise KeyError(
             f"{table_path}:{group_col}:{column} has no committed "
@@ -110,7 +94,6 @@ def _merged(sp: str, table_path: str, group_col: str, column: str):
             ms = groups[g]
         else:
             ms.merge(groups[g])
-    spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
     return {"catalog_spec": spec}, ms
 
 
@@ -226,7 +209,8 @@ def register_catalog_sql(spark, store_path: str, *,
                                       pattern)):
             m = ((table == t) & (key_col == kc) & (weight_col == wc)
                  & (pattern == pat))
-            _, ps = _entry(sp, t, f"{kc}~{wc}")
+            ps = _kind(_entry(sp, t, SketchCatalog._sample_col(kc, wc)),
+                       "subset_sum")
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -245,7 +229,8 @@ def register_catalog_sql(spark, store_path: str, *,
                                              pattern)):
             m = ((table == t) & (gcol == gc) & (key_col == kc)
                  & (weight_col == wc) & (group == g) & (pattern == pat))
-            _, ps = _group(sp, t, gc, f"{kc}~{wc}", g)
+            ps = _kind(_group(sp, t, gc, SketchCatalog._sample_col(kc, wc),
+                              g), "subset_sum")
             out[m] = ps.estimate_subset(
                 lambda s: fnmatch.fnmatchcase(s, pat))
         return out
@@ -447,7 +432,7 @@ def register_catalog_sql(spark, store_path: str, *,
             prefix = SketchCatalog._gname(table_path, group_col, column)
 
             def keys_at(seq):
-                epoch, base = _pins(sp, prefix, seq)
+                epoch, base = SketchCatalog(None, sp)._committed(prefix, seq)
                 return {n[len(prefix) + 1:] for n in store._winner_rows(
                     sp, prefix=prefix, min_seq=base, max_seq=epoch,
                     payload=())}
@@ -487,51 +472,30 @@ def register_catalog_sql(spark, store_path: str, *,
         def eval(self):
             for r in SketchCatalog(None, sp)._registrations():
                 spec = r["spec"]
-                kinds = ("psample" if "sample" in spec else
-                         ",".join(k["kind"] for k in spec["kinds"]))
                 yield (r["name"], r["table_path"], r["column"],
-                       r["group_col"], kinds, r["seq"])
+                       r["group_col"], ",".join(_kinds(spec)), r["seq"])
 
     @udtf(returnType="verb string, kind string, available boolean, "
                      "preference string, seq bigint, kinds string")
     class Explain:
-        """SQL twin of ``cat.explain()``: one row per catalog verb with
-        the registered kind that would serve it — resolved through the
-        SAME ``_VERB_ROUTES`` preference table the Python answer methods
-        route through, so the report can never disagree with routing.
-        Pass ``group_col=''`` for a global entry (all verbs), a real
-        group column for a fleet (grouped verb subset, spec pinned to
-        the committed epoch). Store-metadata reads only — no blob is
+        """SQL twin of ``cat.explain()``, which it runs: one row per
+        verb the entry's shape answers, with the registered kind that
+        would serve it — resolved through the SAME ``_VERB_ROUTES``
+        preference table the Python answer methods route through, so
+        the report can never disagree with routing. Pass
+        ``group_col=''`` for a global entry, a real group column for a
+        fleet (spec pinned to the committed epoch). No blob is
         deserialized, no table is scanned. Freshness policy enforcement
-        stays with the answer verbs; use the Python ``explain()`` for
-        the stale-file count."""
+        stays with the answer verbs; the rows leave out explain()'s
+        stale-file count."""
         def eval(self, table_path: str, column: str,
                  group_col: str = ""):
-            cat = SketchCatalog(None, sp)
-            if group_col:
-                spec = cat._gspec(table_path, group_col, column)
-                seq = grouped_epoch(None, sp, SketchCatalog._gname(
-                    table_path, group_col, column))[0]
-                verbs = {v: _VERB_ROUTES[v]
-                         for v in SketchCatalog._GROUPED_VERBS}
-            else:
-                entry = store.latest_entry(
-                    None, sp, SketchCatalog._name(table_path, column))
-                if entry is None:
-                    raise KeyError(
-                        f"{table_path}:{column} is not registered")
-                seq, spec = entry[0], entry[1].get("catalog_spec")
-                verbs = dict(_VERB_ROUTES)
-            if spec is None:
-                raise KeyError(f"{table_path}:{column} carries no "
-                               "catalog spec")
-            kinds = [e["kind"] for e in spec["kinds"]]
-            kinds_s = ",".join(kinds)
-            for verb in sorted(verbs):
-                wanted = verbs[verb]
-                served = next((w for w in wanted if w in kinds), None)
-                yield (verb, served, served is not None,
-                       ",".join(wanted), seq, kinds_s)
+            ex = SketchCatalog(None, sp).explain(
+                table_path, column, group_col=group_col or None)
+            kinds = ",".join(ex["kinds"])
+            for verb, r in sorted(ex["routes"].items()):
+                yield (verb, r["kind"], r["available"],
+                       ",".join(r["preference"]), ex["seq"], kinds)
 
     @udtf(returnType="file string, count_ub bigint")
     class Locate:
@@ -546,32 +510,19 @@ def register_catalog_sql(spark, store_path: str, *,
         (pass a shingle hash from ngrams.array_ngrams as ``key``)."""
         def eval(self, table_path: str, column: str, key: int,
                  ngrams=None, ngram_seed: int = 1337):
-            label = column if ngrams is None else \
-                f"{column}~{int(ngrams)}gram-{int(ngram_seed)}"
-            prefix = SketchCatalog._gname(table_path, "__file__", label)
-            epoch, base = grouped_epoch(None, sp, prefix)
-            winners = {} if epoch is None else store._winner_rows(
-                sp, prefix=prefix, min_seq=base, max_seq=epoch,
-                payload=("blob",))
-            if not winners:
-                raise KeyError(
-                    f"{table_path}:{column} has no committed file "
-                    f"index in {sp} (register_file_index() it first)")
-            spec = SketchCatalog(None, sp)._gspec_at(prefix, epoch, base)
-            kinds = [e["kind"] for e in spec["kinds"]]
-            if "bloom" not in kinds:
-                raise KeyError(
-                    f"file index on {table_path}:{column} has no "
-                    f"'bloom' kind (registered: {kinds})")
-            bidx = kinds.index("bloom")
-            cidx = kinds.index("cm") if "cm" in kinds else -1
-            plen, k = len(prefix) + 1, int(key)
-            for nm in sorted(winners):
-                ms = serde.loads(winners[nm].blob)
-                if ms.parts[bidx].contains(k):
-                    ub = (int(ms.parts[cidx].point_query(k))
-                          if cidx >= 0 else -1)
-                    yield (nm[plen:], ub)
+            cat = SketchCatalog(None, sp)
+            label = cat._fidx_label(column, None if ngrams is None else
+                                    {"n": ngrams, "seed": ngram_seed})
+            _, spec, files = cat._fleet_dict(table_path, cat._FILE_GROUP,
+                                             label)
+            meta, k = {"catalog_spec": spec}, int(key)
+            _part(meta, None, "bloom")
+            counts = "cm" in _kinds(spec)
+            for f in sorted(files):
+                if _part(meta, files[f], "bloom")[1].contains(k):
+                    ub = (_part(meta, files[f], "cm")[1].point_query(k)
+                          if counts else -1)
+                    yield f, int(ub)
 
     names = []
     for suffix, fn in (("count_distinct", cd), ("frequency", freq),

@@ -1391,3 +1391,157 @@ def test_fleet_read_runs_no_duplicate_check_job(spark, table, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("fleet-read")) == 3
     assert a.value == expect and not a.refreshed
+
+
+def _value(answer):
+    """An Answer's value, with a lazy DataFrame collected to sorted rows."""
+    v = answer.value
+    return sorted(map(tuple, v.collect())) if hasattr(v, "collect") else v
+
+
+# entry shape -> (register it, answer from it under a policy, register it
+# again with a different spec)
+FRESHNESS_SHAPES = {
+    "global": (
+        lambda c, t: c.register(t, "tokens", ["theta"]),
+        lambda c, t, p: c.count_distinct(t, "tokens", policy=p),
+        lambda c, t: c.register(t, "tokens", ["hll"])),
+    "via": (
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, p: c.count_distinct(t, "tokens", via="source",
+                                         policy=p),
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
+    "grouped_group": (
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
+                                                 group="web", policy=p),
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
+    "grouped_dict": (
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
+                                                 policy=p),
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
+    "grouped_df": (
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
+                                                 as_df=True, policy=p),
+        lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
+    "sample": (
+        lambda c, t: c.register_sample(t, "doc_id", "n_tok", k=4096),
+        lambda c, t, p: c.subset_sum(t, "doc_id", "n_tok", pattern="*3",
+                                     policy=p),
+        lambda c, t: c.register_sample(t, "doc_id", "n_tok", k=128)),
+    "sample_grouped": (
+        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
+                                               "n_tok", k=4096),
+        lambda c, t, p: c.subset_sum_grouped(t, "source", "doc_id", "n_tok",
+                                             pattern="*3", policy=p),
+        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
+                                               "n_tok", k=128)),
+    "sample_via": (
+        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
+                                               "n_tok", k=4096),
+        lambda c, t, p: c.subset_sum(t, "doc_id", "n_tok", pattern="*3",
+                                     via="source", policy=p),
+        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
+                                               "n_tok", k=128)),
+    "file_index": (
+        lambda c, t: c.register_file_index(t, "tokens"),
+        lambda c, t, p: c.locate(t, "tokens", 1, policy=p),
+        lambda c, t: c.register_file_index(t, "tokens", ["bloom"])),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(FRESHNESS_SHAPES))
+def test_freshness_policies_on_every_entry_shape(spark, tmp_path, shape):
+    """Every entry shape refuses a different spec at registration and,
+    one appended file later, answers each staleness policy alike:
+    ``refuse`` raises, ``stale_ok`` answers and reports the lag, ``auto``
+    folds the file and answers as a fresh registration does."""
+    register, answer, respec = FRESHNESS_SHAPES[shape]
+    _write_part(tmp_path, 0, rows=300, seed=11)
+    data = str(tmp_path / "data")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    register(cat, data)
+    with pytest.raises(ValueError, match="different (sample )?spec"):
+        respec(cat, data)
+    _write_part(tmp_path, 1, rows=100, seed=22)
+
+    with pytest.raises(StaleEntryError, match="stale by 1"):
+        answer(cat, data, "refuse")
+    lag = answer(cat, data, "stale_ok")
+    assert lag.stale_files == 1 and not lag.refreshed
+    fresh = answer(cat, data, "auto")
+    assert fresh.refreshed and fresh.stale_files == 0
+
+    rebuilt = SketchCatalog(spark, str(tmp_path / "store2"))
+    register(rebuilt, data)
+    assert _value(fresh) == _value(answer(rebuilt, data, "auto"))
+
+
+def test_auto_sample_answer_reads_the_row_its_fold_published(
+        spark, table, tmp_path, monkeypatch):
+    """An ``auto`` answer over a stale sample entry answers from the row
+    its fold just published, as the token verbs do: it makes the same
+    store reads as an ``auto`` frequency answer."""
+    from sketchlib import store as store_mod
+
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register(table, "tokens", ["cm"])
+    cat.register_sample(table, "doc_id", "n_tok", k=4096)
+    _write_part(tmp_path, 1, rows=50, seed=12)
+
+    calls = []
+    for fn in ("latest_sketch", "latest_entry"):
+        def counted(*args, _fn=getattr(store_mod, fn), _name=fn, **kw):
+            calls.append(_name)
+            return _fn(*args, **kw)
+        monkeypatch.setattr(store_mod, fn, counted)
+
+    def reads(answer):
+        calls.clear()
+        assert answer().refreshed
+        return sorted(calls)
+
+    token = reads(lambda: cat.frequency(table, "tokens", 1))
+    sample = reads(lambda: cat.subset_sum(table, "doc_id", "n_tok",
+                                          pattern="*3"))
+    assert sample == token
+
+
+def test_fleet_dict_answer_refuses_a_fleet_above_the_limit(
+        spark, tmp_path, monkeypatch):
+    """A default (dict) grouped answer loads every group's blob on the
+    driver, so a fleet above ``_MAX_DICT_GROUPS`` is refused — counted
+    from row keys before any blob is loaded — and pointed at ``group=``
+    and ``as_df=True``, which still answer."""
+    import sketchlib.catalog as catalog_mod
+    from sketchlib import store as store_mod
+
+    data = str(tmp_path / "data")
+    os.makedirs(data)
+    pd.DataFrame({"g": ["a", "b", "c"] * 20,
+                  "val": np.arange(60, dtype=np.int64)}).to_parquet(
+        data + "/p.parquet")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register_grouped(data, "g", "val", ["theta"])
+    monkeypatch.setattr(catalog_mod, "_MAX_DICT_GROUPS", 3)
+    assert cat.count_distinct_grouped(data, "g", "val").value == {
+        "a": 20.0, "b": 20.0, "c": 20.0}
+
+    monkeypatch.setattr(catalog_mod, "_MAX_DICT_GROUPS", 2)
+    loads = []
+    orig = store_mod.load_group_sketches
+
+    def spy(*args, **kw):
+        loads.append(kw.get("groups"))
+        return orig(*args, **kw)
+
+    monkeypatch.setattr(store_mod, "load_group_sketches", spy)
+    with pytest.raises(ValueError, match="3 groups.*group=.*as_df=True"):
+        cat.count_distinct_grouped(data, "g", "val")
+    assert loads == []
+    assert cat.count_distinct_grouped(data, "g", "val",
+                                      group="b").value == 20.0
+    df = cat.count_distinct_grouped(data, "g", "val", as_df=True)
+    assert df.value.count() == 3
