@@ -815,6 +815,13 @@ class SketchCatalog:
         drift monitoring is free analytics over refresh history.
         ``seq_new`` defaults to the current epoch under ``policy``
         (auto folds appends first, so 'now' means NOW)."""
+        return self._drift(table_path, column, seq_old, seq_new,
+                           policy)[0]
+
+    def _drift(self, table_path: str, column: str, seq_old: int,
+               seq_new: int | None, policy: str | None):
+        """(drift Answer, mg_old, mg_new): the answer and the two
+        epochs' Misra-Gries parts it was computed from."""
         from .drift import tv_bounds
 
         name = self._name(table_path, column)
@@ -849,7 +856,7 @@ class SketchCatalog:
             sketch_bytes=mg_old.nbytes() + mg_new.nbytes(),
             extra={"seq_old": seq_old, "n_old": int(b.n_a),
                    "n_new": int(b.n_b),
-                   "candidates": int(b.n_candidates)})
+                   "candidates": int(b.n_candidates)}), mg_old, mg_new
 
     def top_movers(self, table_path: str, column: str, seq_old: int,
                    seq_new: int | None = None, *, limit: int = 20,
@@ -857,23 +864,14 @@ class SketchCatalog:
         """Keys with the largest CERTIFIED frequency shift between two
         published epochs (drift.top_movers over their MG parts): only
         shifts that survive the deficit bounds are reported, so every
-        listed mover is real. Same two-KB-read cost shape as drift()."""
+        listed mover is real. Same two-KB-read cost shape as drift(),
+        from the same two parts."""
         from .drift import top_movers as _tm
 
-        d = self.drift(table_path, column, seq_old, seq_new,
-                       policy=policy)
-        name = self._name(table_path, column)
-        old = store.latest_sketch(self.spark, self.store_path, name,
-                                  seq=seq_old)
-        new = store.latest_sketch(self.spark, self.store_path, name,
-                                  seq=d.seq)
-        _, mg_old = _part({"catalog_spec":
-                                old[1]["catalog_spec"]}, old[2], "mg")
-        _, mg_new = _part({"catalog_spec":
-                                new[1]["catalog_spec"]}, new[2], "mg")
-        movers = _tm(mg_old, mg_new, limit=limit)
+        d, mg_old, mg_new = self._drift(table_path, column, seq_old,
+                                        seq_new, policy)
         return Answer(
-            value=movers, kind="mg",
+            value=_tm(mg_old, mg_new, limit=limit), kind="mg",
             contract="certified shifts only: |freq_new - freq_old| > "
             "combined deficit bound; magnitudes are lower bounds",
             table=table_path, column=column, seq=d.seq,
@@ -1145,13 +1143,12 @@ class SketchCatalog:
                                   (epoch, base))
 
     def _epochs(self, table_path: str, group_col: str, column: str,
-                seq_old: int, seq_new: int | None, policy: str | None,
-                spec: bool = True):
+                seq_old: int, seq_new: int | None, policy: str | None):
         """(name, (epoch, base, spec) at ``seq_old``, the same at
         ``seq_new``, stale_files, refreshed) of a fleet's two PUBLISHED
         epochs; ``seq_new`` defaults to the committed epoch after
         ``policy``'s freshness handling. KeyError for an uncommitted
-        epoch, or (``spec``) one with no committed group row."""
+        epoch, or one with no committed group row."""
         name = self._gname(table_path, group_col, column)
         stale, refreshed = 0, False
         if seq_new is None:
@@ -1161,8 +1158,7 @@ class SketchCatalog:
         pins = []
         for seq in (seq_old, seq_new):
             epoch, base = self._committed(name, seq)
-            pins.append((epoch, base, spec and self._gspec_at(name, epoch,
-                                                              base)))
+            pins.append((epoch, base, self._gspec_at(name, epoch, base)))
             if pins[-1][2] is None:
                 raise KeyError(
                     f"{table_path}:{group_col}:{column} has no committed "
@@ -1403,6 +1399,25 @@ class SketchCatalog:
             table_path, group_col, self._sample_col(key_col, weight_col),
             policy, _VERB_ROUTES["subset_sum"], make, group=group)
 
+    def _groups_diff(self, name: str, seq_old: int, seq_new: int | None):
+        """(old epoch, new epoch, [(key, status), ...]) of fleet
+        ``name`` between two committed epochs (``seq_new`` None: the
+        committed one): the set difference of the two epochs' committed
+        row names, each pinned to its epoch's rebuild base so rows a
+        rebuild replaced are not counted. Row keys only — no blob is
+        read. 'appeared' rows come first, each status's keys sorted.
+        The one diff behind ``groups_diff`` and ``catalog_groups_diff``."""
+        epochs, keys = [], []
+        for seq in (seq_old, seq_new):
+            epoch, base = self._committed(name, seq)
+            epochs.append(epoch)
+            keys.append({n[len(name) + 1:] for n in store._winner_rows(
+                self.store_path, prefix=name, min_seq=base, max_seq=epoch,
+                payload=())})
+        old, new = keys
+        return (*epochs, [(k, "appeared") for k in sorted(new - old)]
+                + [(k, "disappeared") for k in sorted(old - new)])
+
     def groups_diff(self, table_path: str, group_col: str, column: str,
                     seq_old: int, seq_new: int | None = None, *,
                     policy: str | None = None) -> Answer:
@@ -1410,42 +1425,30 @@ class SketchCatalog:
         epochs of a grouped fleet — the membership companion of
         ``drift_grouped`` (which, like any two-sided envelope, can only
         speak about groups present in BOTH epochs). Store-METADATA
-        only: the two epochs' committed row-name sets full-outer-join
-        on the group key; no blob is ever deserialized, no table
-        scanned. ``Answer.value`` is a lazy DataFrame (key, status)
-        with status in {'appeared', 'disappeared'} — empty when the
-        fleet membership is unchanged."""
-        from pyspark.sql import functions as F
-
-        name, (old_epoch, old_base, _), (new_epoch, new_base, _), stale, \
-            refreshed = self._epochs(table_path, group_col, column,
-                                     seq_old, seq_new, policy, spec=False)
-
-        def keys_at(epoch, base):
-            df = store._spark_table(self.spark, self.store_path, "sketches")
-            prefix = name + "/"
-            return (df.filter(F.col("name").startswith(prefix))
-                    .filter((F.col("seq") >= base)
-                            & (F.col("seq") <= epoch))
-                    .select(F.expr(f"substring(name, {len(prefix) + 1})")
-                            .alias("key"))
-                    .distinct())
-
-        old_keys = keys_at(old_epoch, old_base)
-        new_keys = keys_at(new_epoch, new_base)
-        appeared = (new_keys.join(old_keys, "key", "left_anti")
-                    .withColumn("status", F.lit("appeared")))
-        gone = (old_keys.join(new_keys, "key", "left_anti")
-                .withColumn("status", F.lit("disappeared")))
+        only: ``_groups_diff`` diffs the two epochs' committed row-name
+        sets on the driver from the store's row keys; no blob is ever
+        deserialized, no table scanned. Not distributed: the diff is
+        computed before ``Answer.value`` — a DataFrame (key, status)
+        with status in {'appeared', 'disappeared'}, built from the
+        diff's rows and empty when the fleet membership is unchanged —
+        exists, so ``extra`` carries no ``distributed`` flag."""
+        name = self._gname(table_path, group_col, column)
+        stale, refreshed = 0, False
+        if seq_new is None:
+            _, stale, refreshed = self._gscope(table_path, group_col,
+                                               column, policy)
+        old_epoch, new_epoch, rows = self._groups_diff(name, seq_old,
+                                                       seq_new)
         return Answer(
-            value=appeared.unionByName(gone), kind="metadata",
+            value=self.spark.createDataFrame(rows,
+                                             "key string, status string"),
+            kind="metadata",
             contract="exact: committed row-name set difference between "
                      "the two pinned epochs",
             table=table_path, column=column, seq=new_epoch,
             covered_rows=-1, stale_files=stale, refreshed=refreshed,
             sketch_bytes=0,
-            extra={"seq_old": old_epoch, "group_col": group_col,
-                   "distributed": True})
+            extra={"seq_old": old_epoch, "group_col": group_col})
 
     # -- per-file data-skipping index ---------------------------------------
     #

@@ -29,15 +29,24 @@ Resolution is not a copy of the Python catalog's: the functions run the
 catalog's own naming (``SketchCatalog._name`` / ``_gname``), kind routing
 (``catalog._part``), committed-epoch pins (``SketchCatalog._committed``),
 its readers of committed fleet rows — ``SketchCatalog._group_row`` for
-one group's row, ``_fleet_dict`` for a whole fleet — and its
-``explain()``, over the store's one pyarrow winner reader
-(``store._winner_rows`` and its loaders) — executor-side with no
-SparkSession, which that layer never needs. Winners are sha-verified
-before deserialization, and reads are memoized on the store head's
-generation, so repeated calls against an unchanged store stat one file
-and never re-read parquet, while any commit (new epoch, compaction) is
-seen on the next call, which opens only the part files that call has
-not seen.
+one group's row, ``_fleet_dict`` for a whole fleet — its fleet
+membership diff (``SketchCatalog._groups_diff``) and its ``explain()``,
+over the store's one pyarrow winner reader (``store._winner_rows`` and
+its loaders) — executor-side with no SparkSession, which that layer
+never needs. Winners are sha-verified before deserialization, and reads
+are memoized on the store head's generation, so repeated calls against
+an unchanged store stat one file and never re-read parquet, while any
+commit (new epoch, compaction) is seen on the next call, which opens
+only the part files that call has not seen.
+
+Every scalar function is one row of ``_SCALARS`` — (suffix, return type,
+resolver, verb, probe) — served by one vectorized body (``_scalar``):
+it groups an Arrow batch by the resolver's address columns, resolves
+each address once, routes to the verb's part and probes the rest of the
+batch's columns at once, refusing NULL probe arguments. The table
+functions with a global and a one-group form (topk, drift, top_movers)
+are one eval body each over the ``_entry`` or ``_group`` resolver
+(``_table``).
 
 No counterpart in the reference — CountMinDB (cm.h) has a 4-method C++
 API and no SQL; this is north-star engine surface over the store/catalog
@@ -46,12 +55,16 @@ contracts.
 
 from __future__ import annotations
 
+import fnmatch
+import functools
+import inspect
 
 import numpy as np
 import pandas as pd
 
 from . import store
 from .catalog import _VERB_ROUTES, SketchCatalog, _kinds, _part
+from .drift import top_movers, tv_bounds
 
 
 def _entry(sp: str, table_path: str, column: str, seq=None):
@@ -103,6 +116,142 @@ def _kind(entry, verb: str):
     return _part(entry[0], entry[1], *_VERB_ROUTES[verb])[1]
 
 
+def _sample(sp: str, table_path: str, key_col: str, weight_col: str):
+    """(meta, PrioritySample) of a global sample entry's winning row."""
+    return _entry(sp, table_path,
+                  SketchCatalog._sample_col(key_col, weight_col))
+
+
+def _group_sample(sp: str, table_path: str, group_col: str, key_col: str,
+                  weight_col: str, group):
+    """(meta, PrioritySample) of ONE committed group row of a sample
+    fleet."""
+    return _group(sp, table_path, group_col,
+                  SketchCatalog._sample_col(key_col, weight_col), group)
+
+
+def _arity(resolve) -> int:
+    """The address columns of ``resolve``: its required arguments after
+    the store path."""
+    return sum(p.default is p.empty for p in
+               inspect.signature(resolve).parameters.values()) - 1
+
+
+def _keys(method: str):
+    """Probe: ``part.<method>`` over the key column as one int64 batch."""
+    return lambda part, key: getattr(part, method)(
+        key.to_numpy(dtype=np.int64))
+
+
+def _each(fn):
+    """Probe: ``fn(part, *args)`` once per distinct argument tuple."""
+    def probe(part, *args):
+        once = functools.cache(functools.partial(fn, part))
+        return [once(*a) for a in zip(*args)]
+    return probe
+
+
+def _estimate(part):
+    return part.estimate()
+
+
+def _quantile(part, q):
+    return part.quantile(float(q))
+
+
+def _subset_sum(part, pattern):
+    return part.estimate_subset(
+        lambda s: fnmatch.fnmatchcase(s, pattern))
+
+
+# One row per scalar SQL function: (suffix, return type, resolver, verb,
+# probe). Its arguments are the resolver's address, then the probe's.
+_SCALARS = (
+    ("count_distinct", "double", _entry, "count_distinct", _estimate),
+    ("frequency", "long", _entry, "frequency",
+     _keys("point_query_batch")),
+    ("frequency_unbiased", "double", _entry, "frequency_unbiased",
+     _keys("point_query_batch")),
+    ("second_moment", "double", _entry, "second_moment",
+     lambda part: part.f2_estimate()),
+    ("subset_sum", "double", _sample, "subset_sum", _each(_subset_sum)),
+    ("subset_sum_group", "double", _group_sample, "subset_sum",
+     _each(_subset_sum)),
+    ("member", "boolean", _entry, "member", _keys("contains_batch")),
+    ("quantile", "double", _entry, "quantile", _each(_quantile)),
+    ("range_count", "long", _entry, "range_count",
+     _each(lambda part, lo, hi: part.range_count(int(lo), int(hi)))),
+    ("count_distinct_group", "double", _group, "count_distinct",
+     _estimate),
+    ("frequency_group", "long", _group, "frequency",
+     _keys("point_query_batch")),
+    ("quantile_group", "double", _group, "quantile", _each(_quantile)),
+    ("count_distinct_merged", "double", _merged, "count_distinct",
+     _estimate),
+    ("frequency_merged", "long", _merged, "frequency",
+     _keys("point_query_batch")),
+)
+
+_DTYPES = {"double": np.float64, "long": np.int64, "boolean": np.bool_}
+
+
+def _scalar(sp: str, name: str, rtype: str, resolve, verb: str, probe):
+    """The one scalar-UDF body: per Arrow batch, each distinct address
+    resolves once and its rows are probed in one call."""
+    from pyspark.sql.functions import pandas_udf
+
+    n = _arity(resolve)
+
+    def fn(*cols: pd.Series) -> pd.Series:
+        addr, args = cols[:n], cols[n:]
+        if any(a.isna().any() for a in args):
+            raise ValueError(f"{name} argument column contains NULLs; "
+                             "filter isNotNull() first")
+        out = np.zeros(len(cols[0]), _DTYPES[rtype])
+        rows = pd.DataFrame(dict(enumerate(addr))).groupby(
+            list(range(n)), sort=False, dropna=False).indices
+        for a, idx in rows.items():
+            part = _kind(resolve(sp, *a), verb)
+            out[idx] = probe(part, *(c.iloc[idx] for c in args))
+        return pd.Series(out)
+
+    return pandas_udf(fn, rtype)
+
+
+def _topk(at, k):
+    for key, cnt in _kind(at(), "topk").top_items(int(k)):
+        yield int(key), int(cnt)
+
+
+def _drift(at, seq_old, seq_new):
+    b = tv_bounds(*(_kind(at(s), "drift") for s in (seq_old, seq_new)))
+    yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a), int(b.n_b),
+           int(b.n_candidates))
+
+
+def _movers(at, seq_old, seq_new, limit=20):
+    for tok, p_old, p_new, lb in top_movers(
+            *(_kind(at(s), "drift") for s in (seq_old, seq_new)),
+            limit=int(limit)):
+        yield int(tok), float(p_old), float(p_new), float(lb)
+
+
+def _table(sp: str, return_type: str, resolve, rows):
+    """A table function whose arguments are ``resolve``'s address, then
+    ``rows``' own: ``rows(at, *rest)`` yields its output, ``at(seq)``
+    resolving the address at epoch ``seq`` (default the latest)."""
+    from pyspark.sql.functions import udtf
+
+    n = _arity(resolve)
+
+    class Table:
+        def eval(self, *args):
+            yield from rows(functools.partial(resolve, sp, *args[:n]),
+                            *args[n:])
+
+    return udtf(Table, returnType=return_type)
+
+
 def register_catalog_sql(spark, store_path: str, *,
                          prefix: str = "catalog_") -> list[str]:
     """Register the catalog verbs as SQL functions bound to
@@ -149,299 +298,23 @@ def register_catalog_sql(spark, store_path: str, *,
       per-file data-skipping probe over a ``register_file_index``
       fleet: files that CAN contain the key (no false negatives).
     """
-    from pyspark.sql.functions import pandas_udf, udtf
+    from pyspark.sql.functions import udtf
 
     sp = store_path
-
-    @pandas_udf("double")
-    def cd(table: pd.Series, col: pd.Series) -> pd.Series:
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, c in set(zip(table, col)):
-            part = _kind(_entry(sp, t, c), "count_distinct")
-            out[(table == t) & (col == c)] = float(part.estimate())
-        return out
-
-    @pandas_udf("long")
-    def freq(table: pd.Series, col: pd.Series,
-             key: pd.Series) -> pd.Series:
-        if key.isna().any():
-            raise ValueError("catalog_frequency key column contains "
-                             "NULLs; filter isNotNull() first")
-        out = pd.Series(0, index=table.index, dtype="int64")
-        for t, c in set(zip(table, col)):
-            m = (table == t) & (col == c)
-            part = _kind(_entry(sp, t, c), "frequency")
-            out[m] = part.point_query_batch(
-                key[m].to_numpy(dtype=np.int64))
-        return out
-
-    @pandas_udf("double")
-    def frequb(table: pd.Series, col: pd.Series,
-               key: pd.Series) -> pd.Series:
-        if key.isna().any():
-            raise ValueError("catalog_frequency_unbiased key column "
-                             "contains NULLs; filter isNotNull() first")
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, c in set(zip(table, col)):
-            m = (table == t) & (col == c)
-            part = _kind(_entry(sp, t, c), "frequency_unbiased")
-            out[m] = part.point_query_batch(
-                key[m].to_numpy(dtype=np.int64))
-        return out
-
-    @pandas_udf("double")
-    def f2(table: pd.Series, col: pd.Series) -> pd.Series:
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, c in set(zip(table, col)):
-            part = _kind(_entry(sp, t, c), "second_moment")
-            out[(table == t) & (col == c)] = float(part.f2_estimate())
-        return out
-
-    @pandas_udf("double")
-    def subsum(table: pd.Series, key_col: pd.Series,
-               weight_col: pd.Series, pattern: pd.Series) -> pd.Series:
-        """Unbiased subset-sum from a registered PrioritySample entry:
-        Σ weight over keys matching the fnmatch ``pattern`` — O(k) on
-        the sample, exact while it never overflowed."""
-        import fnmatch
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, kc, wc, pat in set(zip(table, key_col, weight_col,
-                                      pattern)):
-            m = ((table == t) & (key_col == kc) & (weight_col == wc)
-                 & (pattern == pat))
-            ps = _kind(_entry(sp, t, SketchCatalog._sample_col(kc, wc)),
-                       "subset_sum")
-            out[m] = ps.estimate_subset(
-                lambda s: fnmatch.fnmatchcase(s, pat))
-        return out
-
-    @pandas_udf("double")
-    def subsumg(table: pd.Series, gcol: pd.Series, key_col: pd.Series,
-                weight_col: pd.Series, group: pd.Series,
-                pattern: pd.Series) -> pd.Series:
-        """Per-group subset sum from a grouped sample fleet: ONE
-        committed winner row (that group's sample at the committed
-        epoch) answers the fnmatch pattern in O(k)."""
-        import fnmatch
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, gc, kc, wc, g, pat in set(zip(table, gcol, key_col,
-                                             weight_col, group,
-                                             pattern)):
-            m = ((table == t) & (gcol == gc) & (key_col == kc)
-                 & (weight_col == wc) & (group == g) & (pattern == pat))
-            ps = _kind(_group(sp, t, gc, SketchCatalog._sample_col(kc, wc),
-                              g), "subset_sum")
-            out[m] = ps.estimate_subset(
-                lambda s: fnmatch.fnmatchcase(s, pat))
-        return out
-
-    @pandas_udf("boolean")
-    def member(table: pd.Series, col: pd.Series,
-               key: pd.Series) -> pd.Series:
-        if key.isna().any():
-            raise ValueError("catalog_member key column contains NULLs; "
-                             "filter isNotNull() first")
-        out = pd.Series(False, index=table.index, dtype="bool")
-        for t, c in set(zip(table, col)):
-            m = (table == t) & (col == c)
-            part = _kind(_entry(sp, t, c), "member")
-            out[m] = part.contains_batch(
-                key[m].to_numpy(dtype=np.int64))
-        return out
-
-    @pandas_udf("double")
-    def quant(table: pd.Series, col: pd.Series,
-              q: pd.Series) -> pd.Series:
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, c, qq in set(zip(table, col, q)):
-            part = _kind(_entry(sp, t, c), "quantile")
-            out[(table == t) & (col == c) & (q == qq)] = \
-                float(part.quantile(float(qq)))
-        return out
-
-    @pandas_udf("long")
-    def rcount(table: pd.Series, col: pd.Series, lo: pd.Series,
-               hi: pd.Series) -> pd.Series:
-        out = pd.Series(0, index=table.index, dtype="int64")
-        for t, c, a, b in set(zip(table, col, lo, hi)):
-            part = _kind(_entry(sp, t, c), "range_count")
-            out[(table == t) & (col == c) & (lo == a) & (hi == b)] = \
-                int(part.range_count(int(a), int(b)))
-        return out
-
-    @pandas_udf("double")
-    def cdg(table: pd.Series, gcol: pd.Series, col: pd.Series,
-            group: pd.Series) -> pd.Series:
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, gc, c, g in set(zip(table, gcol, col, group)):
-            part = _kind(_group(sp, t, gc, c, g), "count_distinct")
-            out[(table == t) & (gcol == gc) & (col == c)
-                & (group == g)] = float(part.estimate())
-        return out
-
-    @pandas_udf("long")
-    def fqg(table: pd.Series, gcol: pd.Series, col: pd.Series,
-            group: pd.Series, key: pd.Series) -> pd.Series:
-        if key.isna().any():
-            raise ValueError("catalog_frequency_group key column "
-                             "contains NULLs; filter isNotNull() first")
-        out = pd.Series(0, index=table.index, dtype="int64")
-        for t, gc, c, g in set(zip(table, gcol, col, group)):
-            m = ((table == t) & (gcol == gc) & (col == c)
-                 & (group == g))
-            part = _kind(_group(sp, t, gc, c, g), "frequency")
-            out[m] = part.point_query_batch(
-                key[m].to_numpy(dtype=np.int64))
-        return out
-
-    @pandas_udf("double")
-    def qgrp(table: pd.Series, gcol: pd.Series, col: pd.Series,
-             group: pd.Series, q: pd.Series) -> pd.Series:
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, gc, c, g, qq in set(zip(table, gcol, col, group, q)):
-            part = _kind(_group(sp, t, gc, c, g), "quantile")
-            out[(table == t) & (gcol == gc) & (col == c)
-                & (group == g) & (q == qq)] = \
-                float(part.quantile(float(qq)))
-        return out
-
-    @pandas_udf("double")
-    def cdm(table: pd.Series, gcol: pd.Series,
-            col: pd.Series) -> pd.Series:
-        """count_distinct answered from the MERGED grouped fleet (the
-        SQL twin of ``cat.count_distinct(..., via=gcol)``): theta
-        k-smallest-union / HLL register-max are order-independent, so
-        this equals a global entry's answer exactly."""
-        out = pd.Series(np.nan, index=table.index, dtype="float64")
-        for t, g, c in set(zip(table, gcol, col)):
-            part = _kind(_merged(sp, t, g, c), "count_distinct")
-            out[(table == t) & (gcol == g) & (col == c)] = \
-                float(part.estimate())
-        return out
-
-    @pandas_udf("long")
-    def fqm(table: pd.Series, gcol: pd.Series, col: pd.Series,
-            key: pd.Series) -> pd.Series:
-        """CM frequency upper bound from the MERGED grouped fleet
-        (``via=`` SQL twin; counter sums are order-independent, equal
-        to a global entry exactly). ``key`` may be a per-row column —
-        probed as one batch per (table, gcol, col)."""
-        out = pd.Series(0, index=table.index, dtype="int64")
-        for t, g, c in set(zip(table, gcol, col)):
-            part = _kind(_merged(sp, t, g, c), "frequency")
-            m = (table == t) & (gcol == g) & (col == c)
-            out[m] = part.point_query_batch(
-                key[m].to_numpy(dtype="int64"))
-        return out
-
-    @udtf(returnType="key bigint, count bigint")
-    class TopK:
-        def eval(self, table_path: str, column: str, k: int):
-            part = _kind(_entry(sp, table_path, column), "topk")
-            for key, cnt in part.top_items(int(k)):
-                yield int(key), int(cnt)
-
-    @udtf(returnType="key bigint, count bigint")
-    class TopKGroup:
-        """One group's MG survivors from exactly ONE committed fleet
-        row — the SQL twin of ``topk_grouped(group=...)``."""
-        def eval(self, table_path: str, group_col: str, column: str,
-                 group: str, k: int):
-            part = _kind(_group(sp, table_path, group_col, column, group),
-                         "topk")
-            for key, cnt in part.top_items(int(k)):
-                yield int(key), int(cnt)
-
-    @udtf(returnType="tv_lb double, tv_ub double, n_old bigint, "
-                     "n_new bigint, candidates bigint")
-    class Drift:
-        """Certified TV envelope between two published epochs of a
-        global entry, from two pinned KB store rows — the SQL twin of
-        ``cat.drift``. Pass NULL as seq_new for the latest epoch."""
-        def eval(self, table_path: str, column: str, seq_old: int,
-                 seq_new):
-            from .drift import tv_bounds
-            mg_old, mg_new = (_kind(_entry(sp, table_path, column, s),
-                                    "drift") for s in (seq_old, seq_new))
-            b = tv_bounds(mg_old, mg_new)
-            yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
-                   int(b.n_b), int(b.n_candidates))
-
-    @udtf(returnType="token bigint, p_old double, p_new double, "
-                     "shift_lb double")
-    class TopMovers:
-        """Certified key-level movers between two published epochs of a
-        global entry — the SQL twin of ``cat.top_movers``, from the
-        same two pinned KB rows as catalog_drift. Only tokens whose
-        certified lower bound on |p_old - p_new| is positive are
-        returned; silence is NOT stability."""
-        def eval(self, table_path: str, column: str, seq_old: int,
-                 seq_new, limit: int = 20):
-            from .drift import top_movers as _tm
-            mg_old, mg_new = (_kind(_entry(sp, table_path, column, s),
-                                    "drift") for s in (seq_old, seq_new))
-            for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
-                                             limit=int(limit)):
-                yield (int(tok), float(p_old), float(p_new), float(lb))
-
-    @udtf(returnType="tv_lb double, tv_ub double, n_old bigint, "
-                     "n_new bigint, n_candidates int")
-    class DriftGroup:
-        """Certified TV envelope between two published epochs of ONE
-        group of a fleet — exactly two committed winner rows are read
-        (each pinned by its epoch's commit marker), never the fleet.
-        The single-group SQL twin of ``cat.drift_grouped(group=...)``;
-        fleet-scale questions belong to the Python DataFrame verb."""
-        def eval(self, table_path: str, group_col: str, column: str,
-                 group: str, seq_old: int, seq_new: int):
-            from .drift import tv_bounds
-            mg_old, mg_new = (_kind(_group(sp, table_path, group_col,
-                                           column, group, s), "drift")
-                              for s in (seq_old, seq_new))
-            b = tv_bounds(mg_old, mg_new)
-            yield (float(b.tv_lb), float(b.tv_ub), int(b.n_a),
-                   int(b.n_b), int(b.n_candidates))
-
-    @udtf(returnType="token bigint, p_old double, p_new double, "
-                     "shift_lb double")
-    class TopMoversGroup:
-        """Certified key movers between two published epochs of ONE
-        group — the SQL twin of ``cat.top_movers_grouped(group=...)``:
-        two committed winner rows, O(1) at any fleet size."""
-        def eval(self, table_path: str, group_col: str, column: str,
-                 group: str, seq_old: int, seq_new: int,
-                 limit: int = 20):
-            from .drift import top_movers as _tm
-            mg_old, mg_new = (_kind(_group(sp, table_path, group_col,
-                                           column, group, s), "drift")
-                              for s in (seq_old, seq_new))
-            for tok, p_old, p_new, lb in _tm(mg_old, mg_new,
-                                             limit=int(limit)):
-                yield (int(tok), float(p_old), float(p_new), float(lb))
 
     @udtf(returnType="key string, status string")
     class GroupsDiff:
         """Fleet-membership changes between two published epochs — the
-        SQL twin of ``cat.groups_diff``: committed row-NAME set
+        SQL twin of ``cat.groups_diff``, through the same
+        ``SketchCatalog._groups_diff``: committed row-NAME set
         difference (status 'appeared' / 'disappeared'), each epoch
         pinned to its commit marker's base so pre-rebuild dead groups
-        are excluded. Store metadata only — no
-        blob is deserialized."""
+        are excluded. Store metadata only — no blob is deserialized."""
         def eval(self, table_path: str, group_col: str, column: str,
                  seq_old: int, seq_new: int):
-            prefix = SketchCatalog._gname(table_path, group_col, column)
-
-            def keys_at(seq):
-                epoch, base = SketchCatalog(None, sp)._committed(prefix, seq)
-                return {n[len(prefix) + 1:] for n in store._winner_rows(
-                    sp, prefix=prefix, min_seq=base, max_seq=epoch,
-                    payload=())}
-
-            old_k, new_k = keys_at(seq_old), keys_at(seq_new)
-            for k in sorted(new_k - old_k):
-                yield (k, "appeared")
-            for k in sorted(old_k - new_k):
-                yield (k, "disappeared")
+            yield from SketchCatalog(None, sp)._groups_diff(
+                SketchCatalog._gname(table_path, group_col, column),
+                seq_old, seq_new)[2]
 
     @udtf(returnType="union_est double, intersection_est double, "
                      "jaccard double, rse double")
@@ -524,29 +397,26 @@ def register_catalog_sql(spark, store_path: str, *,
                           if counts else -1)
                     yield f, int(ub)
 
+    topk = "key bigint, count bigint"
+    drift = "tv_lb double, tv_ub double, n_old bigint, n_new bigint, "
+    movers = "token bigint, p_old double, p_new double, shift_lb double"
+    tables = (("topk", _table(sp, topk, _entry, _topk)),
+              ("topk_group", _table(sp, topk, _group, _topk)),
+              ("locate", Locate),
+              ("drift", _table(sp, drift + "candidates bigint", _entry,
+                               _drift)),
+              ("top_movers", _table(sp, movers, _entry, _movers)),
+              ("drift_group", _table(sp, drift + "n_candidates int",
+                                     _group, _drift)),
+              ("top_movers_group", _table(sp, movers, _group, _movers)),
+              ("groups_diff", GroupsDiff), ("overlap", Overlap),
+              ("entries", Entries), ("explain", Explain))
     names = []
-    for suffix, fn in (("count_distinct", cd), ("frequency", freq),
-                       ("frequency_unbiased", frequb),
-                       ("second_moment", f2),
-                       ("subset_sum", subsum),
-                       ("subset_sum_group", subsumg),
-                       ("member", member), ("quantile", quant),
-                       ("range_count", rcount),
-                       ("count_distinct_group", cdg),
-                       ("frequency_group", fqg),
-                       ("quantile_group", qgrp),
-                       ("count_distinct_merged", cdm),
-                       ("frequency_merged", fqm)):
-        spark.udf.register(prefix + suffix, fn)
+    for suffix, rtype, resolve, verb, probe in _SCALARS:
+        spark.udf.register(prefix + suffix, _scalar(
+            sp, prefix + suffix, rtype, resolve, verb, probe))
         names.append(prefix + suffix)
-    for suffix, tvf in (("topk", TopK), ("topk_group", TopKGroup),
-                        ("locate", Locate),
-                        ("drift", Drift), ("top_movers", TopMovers),
-                        ("drift_group", DriftGroup),
-                        ("top_movers_group", TopMoversGroup),
-                        ("groups_diff", GroupsDiff),
-                        ("overlap", Overlap),
-                        ("entries", Entries), ("explain", Explain)):
+    for suffix, tvf in tables:
         spark.udtf.register(prefix + suffix, tvf)
         names.append(prefix + suffix)
     return names

@@ -869,6 +869,65 @@ def test_groups_diff_between_epochs(spark, tmp_path):
         cat.groups_diff(data, "source", "tokens", 99, reg2.seq)
 
 
+
+def test_groups_diff_runs_at_most_one_spark_job(spark, tmp_path):
+    """groups_diff diffs the two epochs' committed row keys on the
+    driver; collecting its value runs only the job of the DataFrame
+    built from the diff's rows (the Spark anti-join plan it replaced ran
+    7 for this call and collect)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _write_part(tmp_path, 0, rows=300, seed=11)
+    data = str(tmp_path / "data")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    reg0 = cat.register_grouped(data, "source", "tokens", ["mg"])
+    assert len(cat.topk_grouped(data, "source", "tokens").value) == 4
+    pq.write_table(pa.table({
+        "doc_id": pa.array(["n-0"]),
+        "tokens": pa.array([[7, 8]], type=pa.list_(pa.int32())),
+        "n_tok": pa.array([2], type=pa.int32()),
+        "source": pa.array(["novel-src"]),
+    }), os.path.join(data, "part-novel.parquet"))
+    reg1 = cat.refresh_grouped(data, "source", "tokens")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("groups-diff", "groups_diff between two epochs")
+    try:
+        rows = cat.groups_diff(data, "source", "tokens", reg0.seq,
+                               reg1.seq).value.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("groups-diff")) <= 1
+    assert [(r["key"], r["status"]) for r in rows] == \
+        [("novel-src", "appeared")]
+
+
+def test_top_movers_reads_each_epoch_once(spark, tmp_path, monkeypatch):
+    """top_movers computes its movers from the two Misra-Gries parts its
+    drift envelope was computed from: one store read per epoch."""
+    from sketchlib import store as store_mod
+
+    _write_part(tmp_path, 0, rows=300, seed=11)
+    data = str(tmp_path / "data")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register(data, "tokens", ["mg"])                     # seq 0
+    _write_part(tmp_path, 1, rows=200, seed=22)
+    cat.refresh(data, "tokens")                              # seq 1
+    want = cat.drift(data, "tokens", 0, 1).value
+
+    seqs = []
+    orig = store_mod.latest_sketch
+
+    def counted(*args, **kw):
+        seqs.append(kw.get("seq"))
+        return orig(*args, **kw)
+
+    monkeypatch.setattr(store_mod, "latest_sketch", counted)
+    mv = cat.top_movers(data, "tokens", 0, 1)
+    assert sorted(seqs) == [0, 1]
+    assert mv.seq == 1 and mv.extra["tv"] == want
+
 def test_cs_kind_unbiased_frequency_and_second_moment(spark, table,
                                                       tmp_path):
     """'cs' catalog kind: frequency_unbiased answers within a few

@@ -446,3 +446,71 @@ def test_sql_locate_ngram_index(spark, tmp_path):
     assert got == cat.locate(data, "tokens", h, ngrams=N,
                              ngram_seed=SEED).value
     assert "part0.parquet" in {f for f, _ in got}
+
+
+def test_sql_surface_names(spark, tmp_path):
+    """register_catalog_sql registers the same 25 functions, in the same
+    order, as before its scalar functions became rows of one table."""
+    assert register_catalog_sql(spark, str(tmp_path / "store")) == [
+        "catalog_count_distinct", "catalog_frequency",
+        "catalog_frequency_unbiased", "catalog_second_moment",
+        "catalog_subset_sum", "catalog_subset_sum_group",
+        "catalog_member", "catalog_quantile", "catalog_range_count",
+        "catalog_count_distinct_group", "catalog_frequency_group",
+        "catalog_quantile_group", "catalog_count_distinct_merged",
+        "catalog_frequency_merged", "catalog_topk", "catalog_topk_group",
+        "catalog_locate", "catalog_drift", "catalog_top_movers",
+        "catalog_drift_group", "catalog_top_movers_group",
+        "catalog_groups_diff", "catalog_overlap", "catalog_entries",
+        "catalog_explain"]
+
+
+def test_sql_range_count_matches_python(spark, tmp_path):
+    """catalog_range_count == cat.range_count for several (lo, hi)
+    pairs in one query: each row's two scalar arguments are probed
+    against one resolved dyadic entry."""
+    _write_part(tmp_path, 0, rows=300, seed=11)
+    data = str(tmp_path / "data")
+    store_path = str(tmp_path / "store")
+    cat = SketchCatalog(spark, store_path)
+    cat.register(data, "tokens", [("dyadic", {"eps": 1e-3})])
+    register_catalog_sql(spark, store_path)
+    pairs = [(0, 10), (5, 100), (0, 1000), (50, 50), (5, 100)]
+    got = [(r["lo"], r["hi"], r["n"]) for r in spark.sql(
+        f"SELECT lo, hi, catalog_range_count('{data}', 'tokens', lo, hi) "
+        f"AS n FROM VALUES {', '.join(map(str, pairs))} AS t(lo, hi)"
+    ).collect()]
+    assert got == [(lo, hi, cat.range_count(data, "tokens", lo, hi).value)
+                   for lo, hi in pairs]
+    assert got[1][2] > 0
+
+
+@pytest.fixture(scope="module")
+def keyed(spark, tmp_path_factory):
+    """A table with cm, cs and bloom on a global entry and a cm fleet:
+    every keyed SQL function answers from it."""
+    tmp = tmp_path_factory.mktemp("keyed")
+    _write_part(tmp, 0, rows=300, seed=11)
+    data = str(tmp / "data")
+    store_path = str(tmp / "store")
+    cat = SketchCatalog(spark, store_path)
+    cat.register(data, "tokens", [("cm", {"eps": 1e-3}), "cs",
+                                  ("bloom", {"capacity": 10_000})])
+    cat.register_grouped(data, "source", "tokens", [("cm", {"eps": 1e-3})])
+    register_catalog_sql(spark, store_path)
+    return data
+
+
+@pytest.mark.parametrize("fn, addr", [
+    ("frequency", "'tokens'"), ("frequency_unbiased", "'tokens'"),
+    ("member", "'tokens'"),
+    ("frequency_group", "'source', 'tokens', 'web'"),
+    ("frequency_merged", "'source', 'tokens'")])
+def test_sql_keyed_functions_refuse_null_keys(spark, keyed, fn, addr):
+    """Every keyed function answers a key and refuses a NULL key, which
+    would otherwise be probed as some integer."""
+    q = (f"SELECT catalog_{fn}('{keyed}', {addr}, k) AS v "
+         "FROM VALUES (1), (NULL) AS t(k)")
+    assert len(spark.sql(q + " WHERE k IS NOT NULL").collect()) == 1
+    with pytest.raises(Exception, match="contains NULLs"):
+        spark.sql(q).collect()
