@@ -59,9 +59,7 @@ from .psample import PrioritySample
 from .ddsketch import DDSketch
 from .dyadic import DyadicCM
 from .hll import HllSketch
-from .incremental import (_current_files, _diff_files,
-                          _grouped_manifest_state, _manifest_state,
-                          grouped_epoch, grouped_epoch_at,
+from .incremental import (_plan, grouped_epoch, grouped_epoch_at,
                           incremental_build, incremental_build_grouped)
 from .kll import KllSketch
 from .mg import MisraGries
@@ -432,21 +430,13 @@ class SketchCatalog:
         entry = store.latest_entry(self.spark, self.store_path, name)
         if entry is None:
             raise self._unregistered(table_path, None, column)
-        return self._stale_from(name, entry[1], table_path)
+        return self._stale_from(name, table_path)
 
-    def _stale_from(self, name: str, meta: dict | None,
-                    table_path: str) -> int:
-        """Files appended since entry ``name`` last folded, from an
-        already-loaded meta (no extra store read of the sketches table —
-        answers call this on the row they just loaded); ``meta`` None
-        for a fleet, whose ingested files are its committed epoch's."""
-        if meta is None:
-            ingested = _grouped_manifest_state(self.store_path, name)[2]
-        else:
-            ingested = _manifest_state(self.store_path, name,
-                                       int(meta.get("manifest_base", 0)))
-        return len(_diff_files(_current_files(table_path), ingested,
-                               table_path, name))
+    def _stale_from(self, name: str, table_path: str) -> int:
+        """Files appended since entry ``name`` (of any shape) last
+        folded: the size of the delta its next fold would plan — no read
+        of the sketches table."""
+        return len(_plan(table_path, self.store_path, name, False).new)
 
     def _gate(self, table_path: str, spec: dict, stale: int,
               policy: str | None):
@@ -471,7 +461,7 @@ class SketchCatalog:
         loaded = store.latest_sketch(self.spark, self.store_path, name)
         if loaded is None or "catalog_spec" not in loaded[1]:
             raise self._unregistered(table_path, None, column)
-        stale = self._stale_from(name, loaded[1], table_path)
+        stale = self._stale_from(name, table_path)
         res = self._gate(table_path, loaded[1]["catalog_spec"], stale,
                          policy)
         if res is not None:
@@ -974,7 +964,7 @@ class SketchCatalog:
                             column: str) -> int:
         self._gspec(table_path, group_col, column)   # registered?
         return self._stale_from(self._gname(table_path, group_col, column),
-                                None, table_path)
+                                table_path)
 
     def _gscope(self, table_path: str, group_col: str, column: str,
                 policy: str | None) -> tuple[dict, int, bool]:
@@ -984,7 +974,7 @@ class SketchCatalog:
         single-group question, a winners DataFrame for a fleet one."""
         spec = self._gspec(table_path, group_col, column)
         stale = self._stale_from(self._gname(table_path, group_col, column),
-                                 None, table_path)
+                                 table_path)
         if self._gate(table_path, spec, stale, policy) is None:
             return spec, stale, False
         return spec, 0, True
@@ -1654,14 +1644,12 @@ class SketchCatalog:
                 raise self._unregistered(table_path, None, column)
             seq, meta = entry
             spec = meta["catalog_spec"]
-            stale = self._stale_from(name, meta, table_path)
             covered = int(meta.get("table_rows", -1))
             store_rows = {"answer": f"{name} @ seq {seq} (one row)"}
         else:
             name = self._gname(table_path, group_col, column)
             spec = self._gspec(table_path, group_col, column)
             seq = int(self._committed(name)[0])
-            stale = self._stale_from(name, None, table_path)
             covered = -1
             store_rows = {
                 "single_group": f"{name}/<group> winner row within "
@@ -1684,7 +1672,8 @@ class SketchCatalog:
         return {"name": name, "table_path": os.path.abspath(table_path),
                 "column": column, "group_col": group_col, "seq": seq,
                 "kinds": _kinds(spec), "covered_rows": covered,
-                "stale_files": stale, "store_rows": store_rows,
+                "stale_files": self._stale_from(name, table_path),
+                "store_rows": store_rows,
                 "routes": routes}
 
     def _registrations(self) -> list[dict]:

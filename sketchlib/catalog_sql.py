@@ -21,8 +21,8 @@ not side-effect a delta fold. Clients that need ``auto`` freshness call
 functions then see the new epoch on their next call.
 
 Grouped fleets are addressable too: ``catalog_count_distinct_group``
-reads exactly ONE committed group row (the epoch/base pins come from the
-fleet's commit markers in the store's ingested/ manifest), the same
+reads exactly ONE committed group row (the epoch/base pins come from
+every entry's commit markers in the store's ingested/ manifest), the same
 O(1)-rows shape as ``SketchCatalog.*_grouped(group=...)``.
 
 Resolution is not a copy of the Python catalog's: the functions run the

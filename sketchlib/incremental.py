@@ -12,7 +12,7 @@ only: a daily 0.1% append costs 0.1% of a rebuild, forever.
 ``incremental_build`` is the load-merge-save loop around that identity:
 
 1. list the table's current data files (path + size = file identity);
-2. diff against the store's ingested-file manifest for this sketch name;
+2. diff against the files the name's lineage has ingested (``_plan``);
 3. parquet-direct build over ONLY the new files
    (spark_build.build_aggregator_parquet(files=...));
 4. merge into the loaded previous sketch and commit the next seq, its
@@ -22,20 +22,30 @@ only: a daily 0.1% append costs 0.1% of a rebuild, forever.
    fold that dies anywhere leaves the previous state, and its retry
    folds the same delta exactly once.
 
-Append-only is a checked assumption, not a hope: a manifest file whose
+One lineage record serves every fold shape (global, grouped, table):
+each commit's MARKER row ``(name, seq, "", base)`` names the committed
+epoch and the base epoch where its lineage began (the last full
+(re)build). ``_lineage`` is its one reader — the epoch, the base, and
+the files ingested in between — and every fold, staleness check,
+epoch pin and snapshot diff reads through it.
+
+Append-only is a checked assumption, not a hope: an ingested file whose
 size changed or that disappeared means the table was compacted/rewritten
 in place — the delta can no longer be identified by listing, so the call
 refuses and the caller rebuilds under a new name (or the same name: a
-``rebuild=True`` build rescans everything and resets the manifest at the
-next seq). Iceberg snapshot metadata would make this diff exact per
-commit; the file-listing manifest is the engine-portable equivalent and
-uses the identical contract (data files are immutable once committed).
+``rebuild=True`` build rescans everything and starts a new lineage, its
+marker's base, at the next seq). Iceberg snapshot metadata would make
+this diff exact per commit; the file-listing manifest is the
+engine-portable equivalent and uses the identical contract (data files
+are immutable once committed).
 
 Driver-side cost is one file listing + one manifest read per call —
 O(#files) strings, the same order as any parquet directory scan the
-build itself must do. One writer per name, enforced by the store's commit: a fold refused
-because another writer folded the name first re-runs once from the new
-state — usually a no-op, since that writer folded the same files.
+build itself must do. One writer per name, enforced by the store's
+commit for the blob folds: a fold refused because another writer folded
+the name first re-runs once from the new state — usually a no-op, since
+that writer folded the same files. Table folds are not guarded (see
+``incremental_build_table``).
 
 The module's full surface, one function per maintenance/analysis shape:
 
@@ -61,6 +71,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -85,22 +96,84 @@ def _current_files(table_path: str) -> dict[str, int]:
             for f in walk_parquet_files(table_path)}
 
 
-def _manifest_state(store_path: str, name: str,
-                    base_seq: int) -> dict[str, int]:
-    """{relative_path: size} of the files ingested into ``name``, in ONE
-    manifest read, considering only rows at/after the last full
-    (re)build (``base_seq`` — rows below it describe a pre-rebuild table
-    state and must not poison the diff). Nothing ingested == {}."""
-    return {f: sz for s, f, sz in store._manifest_rows(store_path, name)
-            if f and s >= base_seq}
+def _lineage(store_path: str, name: str, seq: int | None = None
+             ) -> tuple[int | None, int, dict[str, int]]:
+    """(epoch, base, ingested) of ``name``'s maintenance lineage in ONE
+    manifest read — the one reader of the commit markers ``(name, seq,
+    "", base)``: the committed epoch (the highest marker, or the past
+    committed epoch ``seq``), the base epoch its lineage began at (the
+    last full (re)build), and {relative_path: size} of the files folded
+    in [base, epoch] — rows below the base describe a pre-rebuild table
+    state. (None, 0, {}) when that epoch was never committed. A base of
+    -1 (global markers of stores written before the marker carried it)
+    reads as 0."""
+    rows = store._manifest_rows(store_path, name)
+    markers = [(s, b) for s, f, b in rows
+               if not f and (seq is None or s == seq)]
+    if not markers:
+        return None, 0, {}
+    epoch, base = max(markers)
+    base = max(base, 0)
+    return epoch, base, {f: sz for s, f, sz in rows
+                         if f and base <= s <= epoch}
+
+
+class _Plan(NamedTuple):
+    """A fold's delta: the lineage's committed epoch and base, the epoch
+    and base the fold commits, and the files it folds."""
+    epoch: int | None
+    base: int
+    next_epoch: int
+    next_base: int
+    new: dict[str, int]
+
+    @property
+    def full(self) -> bool:
+        """A first build or a rebuild: nothing to merge into."""
+        return self.next_base == self.next_epoch
+
+
+def _diff_files(current: dict[str, int], ingested: dict[str, int],
+                table_path: str, name: str) -> dict[str, int]:
+    """Files in ``current`` not yet ingested; refuses in-place rewrites
+    (the append-only contract of every fold shape)."""
+    mutated = {f for f, sz in ingested.items() if current.get(f, sz) != sz}
+    removed = ingested.keys() - current.keys()
+    if mutated or removed:
+        raise ValueError(
+            f"table {table_path} is not append-only vs sketch {name!r}: "
+            f"{len(mutated)} file(s) changed size, {len(removed)} removed "
+            "— the delta cannot be identified by listing; re-run with "
+            f"rebuild=True (e.g. {sorted(mutated | removed)[:3]})")
+    return {f: sz for f, sz in current.items() if f not in ingested}
+
+
+def _plan(table_path: str, store_path: str, name: str,
+          rebuild: bool) -> _Plan:
+    """The delta of ``name``'s next fold over ``table_path`` — every
+    file when the lineage is new or ``rebuild`` (a new lineage begins at
+    the next epoch), else the files the lineage has not ingested. Every
+    fold shape and every staleness check plans through here."""
+    epoch, base, ingested = _lineage(store_path, name)
+    current = _current_files(table_path)
+    nxt = 0 if epoch is None else epoch + 1
+    if epoch is None or rebuild:
+        return _Plan(epoch, base, nxt, nxt, current)
+    return _Plan(epoch, base, nxt, base,
+                 _diff_files(current, ingested, table_path, name))
+
+
+def _abs_files(table_path: str, new: dict[str, int]) -> list[str]:
+    if os.path.isdir(table_path):
+        return [os.path.join(table_path, f) for f in sorted(new)]
+    return [table_path] if new else []
 
 
 def _append_manifest(store_path: str, name: str, seq: int,
-                     files: dict[str, int], base_epoch: int = -1) -> None:
-    # The commit-marker row (file="") records epoch ``seq`` even for an
-    # EMPTY delta; its file_size is the lineage's base epoch on the
-    # GROUPED path (-1 on the global path: its base is in the meta).
-    rows = [(name, seq, "", base_epoch)]
+                     files: dict[str, int], base: int = 0) -> None:
+    # The commit-marker row (file="") records epoch ``seq`` and its
+    # lineage's base even for an EMPTY delta.
+    rows = [(name, seq, "", base)]
     rows += [(name, seq, f, sz) for f, sz in sorted(files.items())]
     with store._transaction(store_path, join=True):
         store._stage(store_path, "ingested", rows)
@@ -163,8 +236,9 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
 
     ``factory`` must construct the same sketch configuration every call —
     merging mismatched configs raises, it never silently degrades.
-    ``rebuild=True`` ignores the manifest, rescans everything, and resets
-    the manifest at the new seq (the recovery path after a table rewrite).
+    ``rebuild=True`` ignores the ingested files, rescans everything, and
+    starts a new lineage at the new seq (the recovery path after a table
+    rewrite).
 
     ``builder`` generalizes the delta scan to ANY build path: a callable
     ``(spark, file_list) -> BuildResult`` run over only the appended
@@ -176,26 +250,14 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
     list is handled here (fresh empty sketch), so builders never see
     zero files.
     """
-    current = _current_files(table_path)
+    plan = _plan(table_path, store_path, name, rebuild)
     prev = store.latest_sketch(spark, store_path, name)
-    prev_seq = None if prev is None else prev[0]
-    # seq of the last full (re)build: manifest rows older than it describe
-    # a table state that no longer exists and are excluded from the diff
-    base_seq = 0 if prev is None else int(prev[1].get("manifest_base", 0))
-
-    if prev_seq is None or rebuild:
-        new = current
-    else:
-        new = _diff_files(current,
-                          _manifest_state(store_path, name, base_seq),
-                          table_path, name)
-
-    if not new and prev_seq is not None and not rebuild:
+    if not plan.full and not plan.new:
         return IncrementalResult(
-            sketch=prev[2], seq=prev_seq, prev_seq=prev_seq, new_files=0,
+            sketch=prev[2], seq=prev[0], prev_seq=prev[0], new_files=0,
             new_rows=0, lineage=pd.DataFrame(), meta=prev[1])
 
-    abs_files = _abs_files(table_path, new)
+    abs_files = _abs_files(table_path, plan.new)
     if builder is not None:
         if abs_files:
             res = builder(spark, abs_files)
@@ -207,67 +269,28 @@ def incremental_build(spark: SparkSession, table_path: str, values_col: str,
             n_slices=n_slices, extract_array=extract_array,
             files=abs_files)
     sketch = res.sketch
-    if prev_seq is not None and not rebuild:
-        base = prev[2]
-        base.merge(sketch)
-        sketch = base
-    full = prev_seq is None or rebuild
-    next_seq = 0 if prev_seq is None else prev_seq + 1
+    if not plan.full:
+        sketch = prev[2]
+        sketch.merge(res.sketch)
     # n_rows on the published row is CUMULATIVE (the rows the sketch
     # covers — what audits compare against total_count); the delta's own
     # count lives in meta.delta_rows
-    prev_rows = 0 if full else int(prev[1].get("table_rows", 0))
+    prev_rows = 0 if plan.full else int(prev[1].get("table_rows", 0))
     table_rows = prev_rows + int(res.n_rows)
     # the meta exactly as a later read of the published row returns it
     meta = json.loads(json.dumps(
-        {**(meta or {}), "incremental_from": prev_seq,
-         "delta_files": len(new), "delta_rows": res.n_rows,
-         "table_rows": table_rows, "rebuild": bool(rebuild),
-         "manifest_base": next_seq if full else base_seq}, sort_keys=True))
+        {**(meta or {}), "incremental_from": plan.epoch,
+         "delta_files": len(plan.new), "delta_rows": res.n_rows,
+         "table_rows": table_rows, "rebuild": bool(rebuild)},
+        sort_keys=True))
     seq = store.save_sketch(
         spark, store_path, name, sketch, lineage=res.lineage,
-        n_rows=table_rows, seq=next_seq, meta=meta)
-    _append_manifest(store_path, name, seq, new)
+        n_rows=table_rows, seq=plan.next_epoch, meta=meta)
+    _append_manifest(store_path, name, seq, plan.new, plan.next_base)
     return IncrementalResult(
-        sketch=sketch, seq=seq, prev_seq=prev_seq, new_files=len(new),
-        new_rows=res.n_rows, lineage=res.lineage, meta=meta)
-
-
-def _grouped_manifest_state(
-        store_path: str, name: str) -> tuple[int | None, int, dict[str, int]]:
-    """(committed epoch, base epoch, ingested files) for a GROUPED
-    maintenance lineage, from the manifest alone. Commit-marker rows
-    (file="") carry the base epoch of the current lineage in file_size;
-    the highest marker seq is the committed epoch."""
-    rows = store._manifest_rows(store_path, name)
-    markers = [(s, sz) for s, f, sz in rows if not f]
-    if not markers:
-        return None, 0, {}
-    epoch, base = max(markers)
-    base = max(base, 0)   # global-path markers write -1; grouped >= 0
-    ingested = {f: sz for s, f, sz in rows if f and base <= s <= epoch}
-    return epoch, base, ingested
-
-
-def _diff_files(current: dict[str, int], ingested: dict[str, int],
-                table_path: str, name: str) -> dict[str, int]:
-    """Files in ``current`` not yet ingested; refuses in-place rewrites
-    (shared append-only contract of both maintenance paths)."""
-    mutated = {f for f, sz in ingested.items() if current.get(f, sz) != sz}
-    removed = ingested.keys() - current.keys()
-    if mutated or removed:
-        raise ValueError(
-            f"table {table_path} is not append-only vs sketch {name!r}: "
-            f"{len(mutated)} file(s) changed size, {len(removed)} removed "
-            "— the delta cannot be identified by listing; re-run with "
-            f"rebuild=True (e.g. {sorted(mutated | removed)[:3]})")
-    return {f: sz for f, sz in current.items() if f not in ingested}
-
-
-def _abs_files(table_path: str, new: dict[str, int]) -> list[str]:
-    if os.path.isdir(table_path):
-        return [os.path.join(table_path, f) for f in sorted(new)]
-    return [table_path] if new else []
+        sketch=sketch, seq=seq, prev_seq=plan.epoch,
+        new_files=len(plan.new), new_rows=res.n_rows, lineage=res.lineage,
+        meta=meta)
 
 
 @dataclass
@@ -320,31 +343,22 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     every call."""
     if "/" in name:
         raise ValueError(f"grouped sketch name may not contain '/': {name!r}")
-    current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(store_path, name)
-
-    full = epoch is None or rebuild
-    if not full:
-        new = _diff_files(current, ingested, table_path, name)
-        if not new:
-            return GroupedIncrementalResult(
-                sketches={}, seq=epoch, prev_seq=epoch, new_files=0,
-                new_rows=0, updated_groups=0)
-    else:
-        new = current
-    next_epoch = 0 if epoch is None else epoch + 1
-    next_base = next_epoch if full else base
+    plan = _plan(table_path, store_path, name, rebuild)
+    if not plan.full and not plan.new:
+        return GroupedIncrementalResult(
+            sketches={}, seq=plan.epoch, prev_seq=plan.epoch, new_files=0,
+            new_rows=0, updated_groups=0)
 
     from . import serde
     rows = []
-    if new:
+    if plan.new:
+        files = _abs_files(table_path, plan.new)
         if builder is not None:
-            gdf = builder(spark, _abs_files(table_path, new))
+            gdf = builder(spark, files)
         else:
             gdf = build_grouped_parquet(
                 spark, table_path, key_col, values_col, factory,
-                fanout=fanout, n_slices=n_slices,
-                files=_abs_files(table_path, new))
+                fanout=fanout, n_slices=n_slices, files=files)
         # arrow-collect: the delta's blobs come back as arrow buffers
         # instead of py4j-pickled Row objects — measured ~3x faster
         # driver fan-in on MB-scale grouped publishes (per-file fleets)
@@ -354,41 +368,48 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
             f"{key_col} contains NULL keys: a null group is refused "
             "(str() coercion would silently merge it with the string "
             "'None') — filter or fillna the key column first")
+    # the touched groups' committed rows — blob and CUMULATIVE n_rows —
+    # in one store read
     groups: dict[str, object] = {}
-    if not full and rows:
-        groups = store.load_group_sketches(
-            spark, store_path, name, max_seq=epoch, min_seq=base,
-            groups=[str(r["key"]) for r in rows])
+    counts: dict[str, int] = {}
+    if not plan.full and rows:
+        prior = store._winner_rows(
+            store_path, names=[f"{name}/{r['key']}" for r in rows],
+            min_seq=plan.base, max_seq=plan.epoch,
+            payload=("blob", "n_rows"))
+        for n, w in prior.items():
+            g = n[len(name) + 1:]
+            groups[g], counts[g] = serde.loads(w.blob), w.n_rows
     new_rows = 0
     entries = []
     for r in rows:
         g, delta = str(r["key"]), serde.loads(bytes(r["sketch"]))
         new_rows += int(r["n_rows"])
+        counts[g] = counts.get(g, 0) + int(r["n_rows"])
         if g in groups:
             groups[g].merge(delta)
         else:
             groups[g] = delta
-        entries.append((f"{name}/{g}", next_epoch, groups[g],
-                        int(r["n_rows"])))
+        entries.append((f"{name}/{g}", plan.next_epoch, groups[g],
+                        counts[g]))
     store.save_sketches_bulk(
         spark, store_path, entries,
-        meta={**(meta or {}), "incremental_from": epoch,
-              "delta_files": len(new), "rebuild": bool(rebuild)})
-    _append_manifest(store_path, name, next_epoch, new,
-                     base_epoch=next_base)
+        meta={**(meta or {}), "incremental_from": plan.epoch,
+              "delta_files": len(plan.new), "rebuild": bool(rebuild)})
+    _append_manifest(store_path, name, plan.next_epoch, plan.new,
+                     plan.next_base)
     return GroupedIncrementalResult(
-        sketches=groups, seq=next_epoch, prev_seq=epoch,
-        new_files=len(new), new_rows=new_rows,
+        sketches=groups, seq=plan.next_epoch, prev_seq=plan.epoch,
+        new_files=len(plan.new), new_rows=new_rows,
         updated_groups=len(entries))
 
 
 def grouped_epoch(spark: SparkSession, store_path: str,
                   name: str) -> tuple[int | None, int]:
-    """(committed epoch, base epoch) of a grouped/table maintenance
-    lineage — the pins a correct external read needs: dead pre-rebuild
+    """(committed epoch, base epoch) of a maintenance lineage of any fold
+    shape — the pins a correct external read needs: dead pre-rebuild
     rows sit BELOW the base. (None, 0) when nothing is committed yet."""
-    epoch, base, _ = _grouped_manifest_state(store_path, name)
-    return epoch, base
+    return _lineage(store_path, name)[:2]
 
 
 def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
@@ -398,13 +419,12 @@ def grouped_epoch_at(spark: SparkSession, store_path: str, name: str,
     at any seq in [base, seq], the base read from ``seq``'s own commit
     marker, so rows of a lineage dead at ``seq`` are excluded. KeyError
     when ``seq`` was never committed."""
-    bases = [sz for s, f, sz in store._manifest_rows(store_path, name)
-             if not f and s == int(seq)]
-    if not bases:
+    epoch, base, _ = _lineage(store_path, name, int(seq))
+    if epoch is None:
         raise KeyError(
             f"{name!r} has no committed epoch {seq} (see grouped_epoch "
             "for the current committed state)")
-    return int(seq), max(bases[0], 0)
+    return epoch, base
 
 
 def current_group_sketches(spark: SparkSession, store_path: str,
@@ -456,46 +476,43 @@ def incremental_build_table(spark: SparkSession, table_path: str,
     manifest commit of epoch k; a fold that dies first leaves a
     directory no commit marker names, which reads ignore and the retry
     overwrites. Do not reuse a blob-sketch name for a table sketch —
-    they share the manifest namespace."""
+    they share the manifest namespace.
+
+    The single-writer rule is NOT enforced for table folds: the
+    ``seq=<k>/`` write happens outside the store commit, whose
+    transaction starts only at the manifest append, after the plan. Two
+    racing table folds of one name can therefore both commit a marker
+    for one epoch, and the later Spark write can overwrite the directory
+    the earlier fold committed. Run one table fold per name at a time."""
     t0 = time.perf_counter()
     from .spark_build import _TRIPLE_SCHEMA, build_sketch_table
-    current = _current_files(table_path)
-    epoch, base, ingested = _grouped_manifest_state(store_path, name)
+    plan = _plan(table_path, store_path, name, rebuild)
+    root = f"{store_path}/tables/{name}"
+    if not plan.full and not plan.new:
+        path = f"{root}/seq={plan.epoch}"
+        return TableIncrementalResult(
+            table=spark.read.parquet(path), path=path, seq=plan.epoch,
+            prev_seq=plan.epoch, new_files=0,
+            wall_s=time.perf_counter() - t0)
 
-    full = epoch is None or rebuild
-    if full:
-        new = current
-        next_epoch = 0 if epoch is None else epoch + 1
-        next_base = next_epoch
-    else:
-        new = _diff_files(current, ingested, table_path, name)
-        next_epoch, next_base = epoch + 1, base
-        if not new:
-            path = f"{store_path}/tables/{name}/seq={epoch}"
-            return TableIncrementalResult(
-                table=spark.read.parquet(path), path=path, seq=epoch,
-                prev_seq=epoch, new_files=0,
-                wall_s=time.perf_counter() - t0)
-
-    abs_files = _abs_files(table_path, new)
+    abs_files = _abs_files(table_path, plan.new)
     if abs_files:
         delta = build_sketch_table(spark.read.parquet(*abs_files),
                                    values_col, cfg,
                                    flush_triples=flush_triples)
     else:
         delta = spark.createDataFrame([], _TRIPLE_SCHEMA)
-    if not full:
-        prev_tab = spark.read.parquet(
-            f"{store_path}/tables/{name}/seq={epoch}")
+    if not plan.full:
+        prev_tab = spark.read.parquet(f"{root}/seq={plan.epoch}")
         delta = (prev_tab.unionByName(delta).groupBy("row", "col")
                  .agg(F.sum("cnt").alias("cnt")))
-    out = f"{store_path}/tables/{name}/seq={next_epoch}"
+    out = f"{root}/seq={plan.next_epoch}"
     delta.write.mode("overwrite").parquet(out)
-    _append_manifest(store_path, name, next_epoch, new,
-                     base_epoch=next_base)
+    _append_manifest(store_path, name, plan.next_epoch, plan.new,
+                     plan.next_base)
     return TableIncrementalResult(
-        table=spark.read.parquet(out), path=out, seq=next_epoch,
-        prev_seq=epoch, new_files=len(new),
+        table=spark.read.parquet(out), path=out, seq=plan.next_epoch,
+        prev_seq=plan.epoch, new_files=len(plan.new),
         wall_s=time.perf_counter() - t0)
 
 
@@ -513,7 +530,7 @@ def prune_table_epochs(spark: SparkSession, store_path: str, name: str,
     import shutil as _shutil
     if keep < 1:
         raise ValueError("keep must be >= 1 (the committed epoch itself)")
-    epoch, _, _ = _grouped_manifest_state(store_path, name)
+    epoch = _lineage(store_path, name)[0]
     if epoch is None:
         return []
     root = os.path.join(store_path, "tables", name)
@@ -564,7 +581,7 @@ def snapshot_diff_table(spark: SparkSession, store_path: str, name: str,
     joined diff is cached around the negativity check so the caller's
     first action doesn't recompute the shuffle; unpersist the returned
     frame when done with it."""
-    epoch, base, _ = _grouped_manifest_state(store_path, name)
+    epoch, base, _ = _lineage(store_path, name)
     if epoch is None:
         raise KeyError(f"no table sketch named {name!r} in {store_path}")
     if seq_new is None:
@@ -611,9 +628,9 @@ def snapshot_diff(spark: SparkSession, store_path: str, name: str,
     from different lineages are refused too: after a rebuild=True, seqs
     below the rebuild describe a table state that no longer exists, and
     their subtraction can pass the negative-counter check (deletions
-    masked by colliding additions) while meaning nothing — the published
-    meta's manifest_base records the lineage boundary and is enforced
-    here."""
+    masked by colliding additions) while meaning nothing — the commit
+    marker of ``seq_new`` records its lineage's base (``_lineage``),
+    enforced here."""
     ent_new = store.latest_sketch(spark, store_path, name, seq=seq_new)
     ent_old = store.latest_sketch(spark, store_path, name, seq=seq_old)
     if ent_new is None or ent_old is None:
@@ -627,7 +644,7 @@ def snapshot_diff(spark: SparkSession, store_path: str, name: str,
             f"{type(new).__name__} is not a linear sketch: snapshot "
             "diffs need counter-wise subtraction (CountMinSketch or "
             "CountSketch)")
-    lineage_base = int(ent_new[1].get("manifest_base", 0))
+    lineage_base = _lineage(store_path, name, ent_new[0])[1]
     if ent_old[0] < lineage_base:
         raise ValueError(
             f"seq {ent_old[0]} predates the lineage of seq {ent_new[0]} "

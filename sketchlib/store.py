@@ -11,7 +11,10 @@ keeps the byte-identity contract ``load_sketch(save_sketch(s)).to_bytes()
   (a re-save adds a higher seq; loads resolve latest-wins), ``lineage/``
   rows ``(name, seq, pid, n_rows, n_items, total_count, build_ms)`` (the
   per-partition build audit trail), ``ingested/`` rows ``(name, seq,
-  file, file_size)`` (incremental.py's manifest) — write-once parts;
+  file, file_size)`` (incremental.py's manifest: the files each fold
+  ingested, and per fold one commit MARKER row ``(name, seq, "", base)``
+  whose file_size is the base epoch where the name's lineage began) —
+  write-once parts;
 - ``_head``: JSON of the store's id, generation and live parts. Readers
   read exactly these parts, never one the head does not name;
 - ``_log/<g>.json``: the claim of generation g — the names its commit
@@ -544,8 +547,10 @@ def _scan(fs: pafs.FileSystem, keys: dict, sel: _Select, columns: tuple):
                 yield part, rg, [r for r in rows if sel.row(r[0], r[1])]
 
 
-# one winning sketches/ row; meta_json / blob are None when not read
-Winner = namedtuple("Winner", "name seq sha256 meta_json blob")
+# one winning sketches/ row; meta_json / blob / n_rows are None when not
+# read
+Winner = namedtuple("Winner", "name seq sha256 meta_json blob n_rows",
+                    defaults=(None,))
 
 
 def _rank(row) -> tuple:
@@ -609,7 +614,7 @@ def _winner_rows(path: str, *, names=None, prefix: str | None = None,
                 if w in ws:
                     blob = r.get("blob")
                     out[w.name] = w._replace(
-                        meta_json=r.get("meta_json"),
+                        meta_json=r.get("meta_json"), n_rows=r.get("n_rows"),
                         blob=None if blob is None
                         else _verified(w.name, blob, w.sha256, w.seq))
         return out, sum(128 + len(n) + len(w.meta_json or "")

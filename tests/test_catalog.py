@@ -1458,54 +1458,59 @@ def _value(answer):
     return sorted(map(tuple, v.collect())) if hasattr(v, "collect") else v
 
 
-# entry shape -> (register it, answer from it under a policy, register it
-# again with a different spec)
+# entry shape -> (register it, with keywords such as rebuild=True; answer
+# from it under a policy; register it again with a different spec)
 FRESHNESS_SHAPES = {
     "global": (
-        lambda c, t: c.register(t, "tokens", ["theta"]),
+        lambda c, t, **kw: c.register(t, "tokens", ["theta"], **kw),
         lambda c, t, p: c.count_distinct(t, "tokens", policy=p),
         lambda c, t: c.register(t, "tokens", ["hll"])),
     "via": (
-        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, **kw: c.register_grouped(t, "source", "tokens",
+                                              ["theta"], **kw),
         lambda c, t, p: c.count_distinct(t, "tokens", via="source",
                                          policy=p),
         lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
     "grouped_group": (
-        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, **kw: c.register_grouped(t, "source", "tokens",
+                                              ["theta"], **kw),
         lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
                                                  group="web", policy=p),
         lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
     "grouped_dict": (
-        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, **kw: c.register_grouped(t, "source", "tokens",
+                                              ["theta"], **kw),
         lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
                                                  policy=p),
         lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
     "grouped_df": (
-        lambda c, t: c.register_grouped(t, "source", "tokens", ["theta"]),
+        lambda c, t, **kw: c.register_grouped(t, "source", "tokens",
+                                              ["theta"], **kw),
         lambda c, t, p: c.count_distinct_grouped(t, "source", "tokens",
                                                  as_df=True, policy=p),
         lambda c, t: c.register_grouped(t, "source", "tokens", ["hll"])),
     "sample": (
-        lambda c, t: c.register_sample(t, "doc_id", "n_tok", k=4096),
+        lambda c, t, **kw: c.register_sample(t, "doc_id", "n_tok",
+                                             k=4096, **kw),
         lambda c, t, p: c.subset_sum(t, "doc_id", "n_tok", pattern="*3",
                                      policy=p),
         lambda c, t: c.register_sample(t, "doc_id", "n_tok", k=128)),
     "sample_grouped": (
-        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
-                                               "n_tok", k=4096),
+        lambda c, t, **kw: c.register_sample_grouped(
+            t, "source", "doc_id", "n_tok", k=4096, **kw),
         lambda c, t, p: c.subset_sum_grouped(t, "source", "doc_id", "n_tok",
                                              pattern="*3", policy=p),
         lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
                                                "n_tok", k=128)),
     "sample_via": (
-        lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
-                                               "n_tok", k=4096),
+        lambda c, t, **kw: c.register_sample_grouped(
+            t, "source", "doc_id", "n_tok", k=4096, **kw),
         lambda c, t, p: c.subset_sum(t, "doc_id", "n_tok", pattern="*3",
                                      via="source", policy=p),
         lambda c, t: c.register_sample_grouped(t, "source", "doc_id",
                                                "n_tok", k=128)),
     "file_index": (
-        lambda c, t: c.register_file_index(t, "tokens"),
+        lambda c, t, **kw: c.register_file_index(t, "tokens", **kw),
         lambda c, t, p: c.locate(t, "tokens", 1, policy=p),
         lambda c, t: c.register_file_index(t, "tokens", ["bloom"])),
 }
@@ -1516,7 +1521,9 @@ def test_freshness_policies_on_every_entry_shape(spark, tmp_path, shape):
     """Every entry shape refuses a different spec at registration and,
     one appended file later, answers each staleness policy alike:
     ``refuse`` raises, ``stale_ok`` answers and reports the lag, ``auto``
-    folds the file and answers as a fresh registration does."""
+    folds the file and answers as a fresh registration does. After an
+    in-place rewrite and ``rebuild=True`` every shape counts staleness
+    from the rebuilt lineage."""
     register, answer, respec = FRESHNESS_SHAPES[shape]
     _write_part(tmp_path, 0, rows=300, seed=11)
     data = str(tmp_path / "data")
@@ -1536,6 +1543,14 @@ def test_freshness_policies_on_every_entry_shape(spark, tmp_path, shape):
     rebuilt = SketchCatalog(spark, str(tmp_path / "store2"))
     register(rebuilt, data)
     assert _value(fresh) == _value(answer(rebuilt, data, "auto"))
+
+    # a file rewritten in place, then a rebuild: fresh again, and one
+    # more append is one stale file
+    _write_part(tmp_path, 0, rows=200, seed=33)
+    register(cat, data, rebuild=True)
+    assert answer(cat, data, "stale_ok").stale_files == 0
+    _write_part(tmp_path, 2, rows=100, seed=44)
+    assert answer(cat, data, "stale_ok").stale_files == 1
 
 
 def test_auto_sample_answer_reads_the_row_its_fold_published(

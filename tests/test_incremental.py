@@ -652,3 +652,112 @@ def test_current_files_keys_equal_relpath(tmp_path, monkeypatch):
                        for f in walk_parquet_files(table)}
         assert got == {k: len(k) for k in got}
     assert _current_files("t/a.parquet") == {"a.parquet": 9}
+
+
+def test_grouped_rows_publish_cumulative_n_rows(spark, tmp_path):
+    """A grouped fold publishes each touched group's CUMULATIVE row
+    count, as the global fold does: 10 rows of group ``a``, then 2 more,
+    read 12 on both the global row and the group's row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from sketchlib.incremental import incremental_build_grouped
+    from sketchlib.store import list_sketches
+    data, st = tmp_path / "data", str(tmp_path / "store")
+    os.makedirs(data)
+    fac = functools.partial(CountMinSketch, CFG)
+    for i, n in enumerate((10, 2)):
+        pq.write_table(pa.table({
+            "g": ["a"] * n,
+            "tokens": pa.array([[j] for j in range(n)],
+                               type=pa.list_(pa.int32()))}),
+            data / f"p{i}.parquet")
+        incremental_build(spark, str(data), "tokens", fac, store_path=st,
+                          name="c")
+        incremental_build_grouped(spark, str(data), "g", "tokens", fac,
+                                  store_path=st, name="g")
+    assert {r["name"]: r["n_rows"]
+            for r in list_sketches(spark, st).collect()} == {"c": 12,
+                                                             "g/a": 12}
+
+
+@pytest.mark.parametrize("shape", ["global", "grouped", "table"])
+def test_one_lineage_across_fold_shapes(spark, table, tmp_path, shape):
+    """Every fold shape records its lineage in its commit markers alone:
+    after a fold, an append and fold, an in-place rewrite folded with
+    ``rebuild=True``, and one more append and fold, the lineage stands at
+    epoch 3 from base 2 and has ingested exactly the files committed
+    since the rebuild."""
+    from sketchlib.incremental import (_lineage, grouped_epoch,
+                                       incremental_build_grouped,
+                                       incremental_build_table,
+                                       snapshot_diff)
+    st, data = str(tmp_path / "store"), str(table / "data")
+    fac = functools.partial(CountMinSketch, CFG)
+    fold = {
+        "global": lambda **kw: incremental_build(
+            spark, data, "tokens", fac, store_path=st, name="s", **kw),
+        "grouped": lambda **kw: incremental_build_grouped(
+            spark, data, "source", "tokens", fac, store_path=st,
+            name="s", **kw),
+        "table": lambda **kw: incremental_build_table(
+            spark, data, "tokens", CFG, store_path=st, name="s", **kw),
+    }[shape]
+    fold()
+    _write_part(table, 1, rows=100, seed=22)
+    fold()
+    _write_part(table, 0, rows=300, seed=44)     # rewritten in place
+    fold(rebuild=True)
+    _write_part(table, 2, rows=100, seed=33)
+    fold()
+    assert grouped_epoch(spark, st, "s") == (3, 2)
+    assert _lineage(st, "s")[2] == {
+        f: os.path.getsize(os.path.join(data, f)) for f in os.listdir(data)}
+    if shape == "global":
+        with pytest.raises(ValueError, match="predates the lineage"):
+            snapshot_diff(spark, st, "s", seq_old=1)
+
+
+def test_lineage_staged_in_the_earlier_global_format(spark, table,
+                                                     tmp_path):
+    """A global lineage committed before the marker carried its base —
+    markers with file_size -1, the base in the published meta — reads as
+    base 0: an append-only fold still equals a rebuild, an in-place
+    rewrite is refused rather than folded, and ``rebuild=True`` then
+    records the new base in its marker."""
+    from sketchlib import store
+    from sketchlib.incremental import _lineage, grouped_epoch
+    st, data = str(tmp_path / "store"), str(table / "data")
+    fac = functools.partial(CountMinSketch, CFG)
+
+    def from_scratch():
+        return build_aggregator_parquet(spark, data, "tokens",
+                                        fac).sketch.to_bytes()
+
+    first = build_aggregator_parquet(spark, data, "tokens", fac)
+    size = os.path.getsize(os.path.join(data, "part0.parquet"))
+    with store._transaction(st):
+        store.save_sketch(spark, st, "cm", first.sketch, seq=0,
+                          n_rows=first.n_rows, meta={
+                              "incremental_from": None, "delta_files": 1,
+                              "delta_rows": first.n_rows,
+                              "table_rows": first.n_rows,
+                              "rebuild": False, "manifest_base": 0})
+        store._stage(st, "ingested", [("cm", 0, "", -1),
+                                      ("cm", 0, "part0.parquet", size)])
+    assert grouped_epoch(spark, st, "cm") == (0, 0)
+
+    _write_part(table, 1, rows=100, seed=22)
+    r = incremental_build(spark, data, "tokens", fac, store_path=st,
+                          name="cm")
+    assert r.new_files == 1 and r.sketch.to_bytes() == from_scratch()
+
+    _write_part(table, 0, rows=300, seed=44)     # rewritten in place
+    with pytest.raises(ValueError, match="not append-only.*rebuild=True"):
+        incremental_build(spark, data, "tokens", fac, store_path=st,
+                          name="cm")
+    r = incremental_build(spark, data, "tokens", fac, store_path=st,
+                          name="cm", rebuild=True)
+    assert r.sketch.to_bytes() == from_scratch()
+    assert grouped_epoch(spark, st, "cm") == (2, 2)
+    assert _lineage(st, "cm")[2] == {
+        f: os.path.getsize(os.path.join(data, f)) for f in os.listdir(data)}

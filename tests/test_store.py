@@ -200,7 +200,7 @@ def test_compact_store_preserves_everything(spark, tmp_path, monkeypatch):
     from sketchlib import store
     from sketchlib.countmin import CMConfig, CountMinSketch
     from sketchlib.datagen import generate_token_table
-    from sketchlib.incremental import (_grouped_manifest_state,
+    from sketchlib.incremental import (_lineage,
                                        incremental_build,
                                        incremental_build_grouped,
                                        snapshot_diff)
@@ -231,7 +231,7 @@ def test_compact_store_preserves_everything(spark, tmp_path, monkeypatch):
             "pinned": store.load_sketch(spark, st, "cm", seq=0).to_bytes(),
             "groups": {g: s.to_bytes() for g, s in
                        store.load_group_sketches(spark, st, "g").items()},
-            "gstate": _grouped_manifest_state(st, "g"),
+            "gstate": _lineage(st, "g"),
             "diff": snapshot_diff(spark, st, "cm", seq_old=0).to_bytes(),
             "winners": store._winner_rows(st),
             "manifests": {n: sorted(store._manifest_rows(st, n))
@@ -389,7 +389,7 @@ def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
                                           store_path=st, name="cm")
     files = {t: sorted(os.listdir(os.path.join(st, t)))
              for t in ("sketches", "lineage", "ingested")}
-    manifest = incremental._manifest_state(st, "cm", 0)
+    manifest = incremental._lineage(st, "cm")[2]
     lineage = sorted(r["pid"] for r in
                      load_lineage(spark, st, "cm").collect())
     real_write = store.pq.write_table
@@ -410,7 +410,7 @@ def test_failed_append_leaves_no_trace(spark, tmp_path, monkeypatch, table):
 
     for t in ("sketches", "lineage", "ingested"):
         assert sorted(os.listdir(os.path.join(st, t))) == files[t]
-    assert incremental._manifest_state(st, "cm", 0) == manifest
+    assert incremental._lineage(st, "cm")[2] == manifest
     got = store.latest_sketch(spark, st, "cm")
     assert got[0] == first.seq
     assert got[2].to_bytes() == first.sketch.to_bytes()
@@ -476,7 +476,7 @@ def test_spark_written_parts_read_identically(spark, tmp_path):
                        store._MANIFEST_SCHEMA)
      .write.mode("append").parquet(path + "/ingested"))
     incremental._append_manifest(path, "m", 1, {"f1": 20})
-    assert incremental._manifest_state(path, "m", 0) == {"f1": 20}
+    assert incremental._lineage(path, "m")[2] == {"f1": 20}
 
 
 def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
@@ -500,7 +500,7 @@ def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
         store.save_sketch(spark, path, "x", version(i))
         incremental._append_manifest(path, "x", i, {f"f{i}": i})
     assert store.latest_sketch(spark, path, "x")[0] == 19
-    assert len(incremental._manifest_state(path, "x", 0)) == 20
+    assert len(incremental._lineage(path, "x")[2]) == 20
 
     opened, walks, stats = [], [], []
     real_open, real_walk = store.pq.ParquetFile, store.pafs.FileSelector
@@ -535,7 +535,7 @@ def test_read_opens_only_new_parts(spark, tmp_path, monkeypatch):
 
     incremental._append_manifest(path, "x", 20, {"f20": 20})
     opened.clear()
-    files = incremental._manifest_state(path, "x", 0)
+    files = incremental._lineage(path, "x")[2]
     assert files == {f"f{i}": i for i in range(21)}
     assert len(opened) == 1
     assert walks == []
