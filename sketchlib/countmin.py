@@ -44,18 +44,19 @@ _MAGIC = b"CMSK"
 _MAGIC_SPARSE = b"CMSP"
 _VERSION = 1
 
-# Persistent per-process workspaces for duplicate pre-aggregation. np.unique
+# Persistent per-thread workspaces for duplicate pre-aggregation. np.unique
 # on a ~26 M-token chunk allocates a ~100 MB sort copy plus O(unique)
 # outputs per call; ephemeral allocations of that size with overlapping
 # lifetimes and varying sizes defeat glibc hole reuse, so their pages are
 # released and re-faulted call after call (~25k minor faults each — see
 # BENCH/BASELINE.md Session E). Under 32 concurrent workers that
 # fault/zeroing storm collapses aggregate throughput ~2x (88 -> 158 M tok/s
-# measured at 32 procs). Workspaces grow geometrically, keyed by key dtype;
-# one set per thread: Spark Python workers are single-threaded, but
-# driver-side thread pools (the selfcheck query fan-out) can build
-# sketches concurrently, and a process-shared buffer would interleave two
-# sorts — silently wrong (vals, counts) since the output is a view.
+# measured at 32 procs). Workspaces grow geometrically, keyed by key dtype,
+# to the largest array passed: ``update_batch`` passes at most one
+# ``_AGG_CHUNK`` (2^17 keys), MultiSketch's shared pass one streamed
+# record batch. One set per thread: parquet builds run their slices on
+# driver threads, and a process-shared buffer would interleave two sorts
+# — silently wrong (vals, counts) since the output is a view.
 _UC_TLS = threading.local()
 
 
@@ -63,7 +64,7 @@ def _unique_counts(arr: np.ndarray):
     """``np.unique(arr, return_counts=True)`` with persistent workspaces.
 
     Returns ``(values, counts)`` where values is a view into a reused
-    buffer (valid until the next call from this process) and counts is
+    buffer (valid until the next call from this thread) and counts is
     float64 (exact for counts < 2^53 — what ``accumulate_into`` converts
     weights to anyway, so no further copy downstream). Identical values
     and counts to np.unique (pinned by test).
@@ -90,7 +91,8 @@ def _unique_counts(arr: np.ndarray):
     idx = np.flatnonzero(m)  # O(unique) — the one unavoidable allocation
     u = idx.shape[0] + 1
     if ws[2].shape[0] < u:
-        cap = max(u, 2 * ws[2].shape[0])
+        # u <= n: never larger than the sort buffer
+        cap = min(max(u, 2 * ws[2].shape[0]), ws[0].shape[0])
         ws[2] = np.empty(cap, arr.dtype)
         ws[3] = np.empty(cap, np.float64)
     vals = ws[2][:u]
@@ -177,6 +179,17 @@ class CountMinSketch:
     # the O(n log n) sort is cheaper than hashing duplicates d times (skewed
     # token streams — the reference's Zipf workload — are ~90% duplicates)
     _AGG_THRESHOLD = 1 << 16
+    # ... and collapse them in fixed-size chunks: counter adds commute, so
+    # the table is byte-identical to one whole-batch pass, and the sort
+    # workspace stays one chunk per thread (~2.2 MB for int32 keys)
+    # instead of growing with the largest batch (one 13 M-token call left
+    # ~65 MB resident for good). Chunks also sort in cache: 13 M tokens of
+    # perfbench's build table fold at 17.7 M tok/s in 2^16-key chunks,
+    # 17.6 in 2^17, 17.4 in 2^18 and 14.3 in one pass (medians of 7
+    # interleaved rounds, 4 vCPU). 2^17 keeps a streamed 512-row batch of
+    # that table (~97k tokens) in one chunk: split in two at 2^16, 100
+    # threaded builds took 349 ms each against 264-268 ms at 2^17.
+    _AGG_CHUNK = 1 << 17
 
     def update_batch(self, keys, counts=None, preaggregate: bool | None = None) -> None:
         """Standard CM batch update: one bincount-scatter per depth row.
@@ -200,11 +213,14 @@ class CountMinSketch:
         do_agg = (n >= self._AGG_THRESHOLD) if preaggregate is None else (
             preaggregate and n > 1)
         if counts is None:
-            if do_agg:
-                arr, agg = _unique_counts(arr)
-            else:
-                agg = None
             self.total_count += n
+            if do_agg:
+                for st in range(0, n, self._AGG_CHUNK):
+                    vals, cnts = _unique_counts(arr[st:st + self._AGG_CHUNK])
+                    accumulate_into(vals, self.cfg.row_seeds, self.cfg.width,
+                                    self.table, weights=cnts)
+                return
+            agg = None
         else:
             c = np.asarray(counts, dtype=np.int64)
             self.total_count += int(c.sum())

@@ -11,34 +11,36 @@ metrics)``. Raw tokens never shuffle; only partial blobs move.
 
 One partial builder per source; a sketch type is a factory and a feed.
 DataFrame sources run ``_agg_partial_builder`` (mapInArrow), parquet
-row-group slices ``_parquet_agg_partial_builder``, grouped DataFrame
-builds ``_grouped_agg_builder``; each emits the same partial record
-(``_partial_row``). The factory makes an empty sketch; the feed updates
-it from one Arrow batch or column. Count-Min is ``CountMinSketch(cfg)``
-fed by ``update_batch`` (``update_batch_cu`` when ``cu``), as any other
-sketch.
+row-group slices ``_parquet_slice`` (on driver threads or in Spark
+tasks), grouped DataFrame builds ``_grouped_agg_builder``; each Spark task
+emits the same partial record (``_partial_row``). The factory makes an
+empty sketch; the feed updates it from one Arrow batch or column.
+Count-Min is ``CountMinSketch(cfg)`` fed by ``update_batch``
+(``update_batch_cu`` when ``cu``), as any other sketch.
 
-One merge planner (``_merge``) turns partials into the result, picking one
-of three cases from sizes the driver already knows:
+One planner turns partials into the result, picking one of three cases
+from sizes the driver already knows:
 
-  driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES (the
-               common case): ONE Spark job collects every partial, blob and
-               lineage together (``toArrow``); the driver folds the blobs
-               in pid order. No persist, no shuffle.
+  threads      parquet builds whose value column is at most
+               _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
+               footers the planner reads anyway): the slice builder the
+               Spark tasks run is called on a pool of defaultParallelism
+               driver threads and the slice sketches fold in pid order; no
+               Spark job, no partial blob (perfbench's build table and
+               every incremental delta it folds).
+  driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES:
+               ONE Spark job collects every partial, blob and lineage
+               together (``toArrow``); the driver folds the blobs in pid
+               order. No persist, no shuffle.
   shuffle tree above that bound: ``pmod(pid, m)`` merge stages over the
                blob shuffle, recursive so that no task and not the driver
                folds more than ``fanout`` blobs (fanout^2 partials take one
                stage, fanout^3 two, ...); the driver folds the survivors.
-  in-process   parquet builds whose value column is at most
-               _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
-               footers the planner reads anyway): the same slice builder
-               the Spark tasks run is called in the driver process; no
-               Spark job at all (small incremental deltas).
 
 CM, HLL, theta, Bloom and Count-Sketch merge by addition (or max/union), so
 all three cases and every partitioning give byte-identical results.
 Order-sensitive sketches (MG, KLL) are folded in a fixed pid order, so the
-driver fold and the in-process path agree byte for byte and every path is
+driver fold and the threaded path agree byte for byte and every path is
 reproducible run to run on the same layout.
 
 Checkpointed builds write partials to a parquet directory keyed by
@@ -55,6 +57,7 @@ import json
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
@@ -93,14 +96,18 @@ _TREE_SCHEMA = "pid int, sketch binary"
 # perfbench's build p50 from 1.33 to 0.93 s; 4 vCPU).
 _DRIVER_FOLD_MAX_BYTES = 64 << 20
 
-# In-process bound on the value column's uncompressed bytes. One driver
-# core folds the catalog's cm+theta+mg+bloom MultiSketch at about 25 MB/s
-# of column bytes and a Count-Min at about 40 MB/s, so 4 MB takes at most
-# ~160 ms: less than the ~0.4 s a one-job fold spends in Spark (perfbench
-# ingest fold p50 0.45 s through the driver fold, 0.04 s in-process;
-# 4 vCPU). perfbench's ingest deltas (17 KB) and registered table
-# (0.59 MB) fold here; its build table (37.5 MB) stays on parallel slices.
-_IN_PROCESS_MAX_BYTES = 4 << 20
+# Threaded-slice bound on the value column's uncompressed bytes: about the
+# bytes driver threads fold in the time one Spark job costs before its
+# tasks do any work (a 4-task mapInPandas + toArrow job of empty tasks:
+# 0.55 s median). A Count-Min folds about 165 MB/s of column bytes on 4
+# threads (~90 MB in that time), the catalog's cm+theta+mg+bloom
+# MultiSketch about 70 MB/s (~39 MB); 48 MB sits between them. Above it
+# the Spark path runs, whose executors can outnumber the driver's cores;
+# on local[4] the threads stay ahead at every size measured (143 MB: 0.82
+# vs 2.76 s for a Count-Min, 1.96 vs 3.87 s for the MultiSketch; 4 vCPU).
+# perfbench's build table (35.8 MB), its registered ingest table (0.59 MB)
+# and its deltas (17 KB) all build on threads.
+_IN_PROCESS_MAX_BYTES = 48 << 20
 
 
 @dataclass
@@ -165,15 +172,20 @@ def _pid() -> int:
     return ctx.partitionId() if ctx is not None else 0
 
 
+def _lineage_row(pid: int, sk, n_rows: int, t0: float) -> dict:
+    """One partial's lineage; ``build_ms`` is the fold since ``t0``."""
+    return {"pid": pid, "n_rows": n_rows, "n_items": sk.n_items,
+            "total_count": getattr(sk, "total_count", 0),
+            "build_ms": (time.perf_counter() - t0) * 1e3}
+
+
 def _partial_row(pid: int, sk, n_rows: int, t0: float) -> dict:
-    """THE partial record of every ungrouped builder, as columns:
-    ``build_ms`` is the fold since ``t0``; the blob is ``dumps_partial``
-    (size-adaptive where the sketch has such an encoding)."""
-    ms = (time.perf_counter() - t0) * 1e3
-    return {"pid": [pid], "sketch": [serde.dumps_partial(sk)],
-            "n_rows": [n_rows], "n_items": [sk.n_items],
-            "total_count": [getattr(sk, "total_count", 0)],
-            "build_ms": [ms]}
+    """THE partial record of every ungrouped Spark builder, as columns:
+    its lineage and the ``dumps_partial`` blob (size-adaptive where the
+    sketch has such an encoding)."""
+    lin = _lineage_row(pid, sk, n_rows, t0)
+    return {k: [v] for k, v in
+            {"pid": pid, "sketch": serde.dumps_partial(sk), **lin}.items()}
 
 
 def _update(sk, vals, cu: bool) -> None:
@@ -384,16 +396,17 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
 
 
 def _list_row_groups(path: str, files: list[str] | None = None,
-                     column: str | None = None
-                     ) -> list[tuple[str, int, int, int]]:
-    """[(file, row_group_idx, n_rows, column_bytes)] for a parquet file or
-    directory (recursive), from the footers alone. ``column_bytes`` is the
-    uncompressed size of ``column``'s chunks in that row group (every leaf
-    of a nested column; 0 when ``column`` is None) — the in-process
-    planner's size. Hive-partitioned layouts (key=val dirs) are REFUSED:
-    their partition columns live in directory names, not the files, so a
-    raw row-group scan would silently drop them — route those through
-    ``build_sketch(spark.read.parquet(path), ...)`` instead.
+                     column: str | None = None) -> list[tuple]:
+    """[(file, row_group_idx, n_rows, column_bytes, footer)] for a parquet
+    file or directory (recursive), from the footers alone. ``column_bytes``
+    is the uncompressed size of ``column``'s chunks in that row group
+    (every leaf of a nested column; 0 when ``column`` is None) — the
+    planner's size; ``footer`` is the file's parsed FileMetaData, which
+    the threaded slices open their handles with. Hive-partitioned layouts
+    (key=val dirs) are REFUSED: their partition columns live in directory
+    names, not the files, so a raw row-group scan would silently drop them
+    — route those through ``build_sketch(spark.read.parquet(path), ...)``
+    instead.
 
     ``files``: explicit file list (absolute paths) to scan INSTEAD of
     walking ``path`` — the incremental-maintenance path, where only the
@@ -412,7 +425,7 @@ def _list_row_groups(path: str, files: list[str] | None = None,
             rg = md.row_group(i)
             out.append((f, i, rg.num_rows,
                         sum(rg.column(j).total_uncompressed_size
-                            for j in leaves)))
+                            for j in leaves), md))
     return out
 
 
@@ -441,21 +454,31 @@ def walk_parquet_files(path: str) -> list[str]:
     return files
 
 
-def _slice_assignments(rgs: list[tuple], n_slices: int):
-    """Contiguous row-group ranges per slice, one row per (slice, file)."""
+def _slice_assignments(rgs: list[tuple], n_slices: int) -> list[list]:
+    """Contiguous row-group ranges: each slice's [(file, [row_group, ...]),
+    ...], at most ``n_slices`` slices and at least one."""
     n = len(rgs)
     n_slices = max(1, min(n_slices, n))
-    rows = []
+    parts = []
     for s in range(n_slices):
-        lo = s * n // n_slices
-        hi = (s + 1) * n // n_slices
         by_file: dict[str, list[int]] = {}
-        for f, i, *_ in rgs[lo:hi]:
+        for f, i, *_ in rgs[s * n // n_slices:(s + 1) * n // n_slices]:
             by_file.setdefault(f, []).append(i)
-        for f, idxs in by_file.items():
-            rows.append((s, f, idxs))
-    return n_slices, rows
+        parts.append(list(by_file.items()))
+    return parts
 
+
+# A slice streams each row group as record batches of _SLICE_BATCH_ROWS
+# rows, so it holds one batch of values, not a whole row group; driver
+# threads read through a _READ_BUFFER_BYTES buffer. 60 driver-only builds
+# of perfbench's build table (4 slices of one 12,500-row row group, on 4
+# threads, results dropped; 4 vCPU) peaked at 422 MB RSS reading whole
+# row groups, 275 MB with 2,048-row batches, 229 MB with 512-row batches
+# and 210 MB with the buffer as well, at 193-226 ms per build. Batches
+# never span row groups, so a row group folds the same whichever slice
+# holds it.
+_SLICE_BATCH_ROWS = 512
+_READ_BUFFER_BYTES = 256 << 10
 
 # Worker-persistent ParquetFile handles: a task re-opening the file would
 # re-parse the whole footer (~0.25 s on a 640-row-group file), and tasks
@@ -465,6 +488,8 @@ def _slice_assignments(rgs: list[tuple], n_slices: int):
 # per (worker, file). Entries are validated against os.stat (mtime_ns,
 # size): a file rewritten at the same path within a long-lived session is
 # reopened, not served stale. Bounded FIFO so worker fds don't accumulate.
+# Spark workers only: the dict is unlocked, and a handle is not shared
+# between threads — driver threads open their own (``_thread_slices``).
 _PQ_FILE_CACHE: dict = {}
 _PQ_FILE_CACHE_MAX = 64
 
@@ -485,54 +510,62 @@ def _pq_file(path: str):
     return pf
 
 
-def _parquet_agg_partial_builder(factory, values_col: str,
-                                 extract_array=None, cu: bool = False):
-    """THE parquet slice builder: one ``factory()`` sketch per slice, read
-    row group by row group through the worker-persistent ParquetFile
-    cache. Null rows are dropped, as the DataFrame path's isNotNull filter
-    drops them (a null scalar would decay its chunk to float64 NaNs), so
-    the sketch bytes and ``n_rows`` equal that path's. The feed is
-    ``extract_array(pa.Array) -> np.ndarray`` (default: flatten; e.g.
-    ngrams.array_bigrams) into ``update_batch``, or ``update_batch_cu``
-    when ``cu``."""
+def _parquet_slice(values_col: str, extract_array=None, cu: bool = False):
+    """THE parquet slice builder: ``one_slice(sk, parts, open_file) ->
+    n_rows`` folds the row groups of ``parts`` ([(file, [row_group]),
+    ...]) into the empty sketch ``sk``; ``open_file(path)`` gives the
+    slice its ParquetFile handle. Null rows are dropped, as the
+    DataFrame path's isNotNull filter drops them (a null scalar would
+    decay its batch to float64 NaNs), so the sketch bytes and ``n_rows``
+    equal that path's. The feed is ``extract_array(pa.Array) ->
+    np.ndarray`` (default: flatten; e.g. ngrams.array_bigrams) into
+    ``update_batch``, or ``update_batch_cu`` when ``cu``."""
     extract_array = extract_array or _flat_values
 
-    def one_slice(slice_id: int, parts: list[tuple[str, list[int]]]):
-        t0 = time.perf_counter()
-        sk = factory()
+    def one_slice(sk, parts, open_file):
         n_rows = 0
         for file, rgs in parts:
-            pf = _pq_file(file)
+            pf = open_file(file)
             for rg in rgs:
-                # use_threads=False: every core already runs a worker; nested
-                # Arrow threadpools (32 tasks x 32 threads) thrash the box
-                col = pf.read_row_group(int(rg), columns=[values_col],
-                                        use_threads=False).column(0)
-                for chunk in col.chunks:
-                    if chunk.null_count:
-                        chunk = chunk.drop_null()
-                    n_rows += len(chunk)   # ROWS, before list flattening
-                    _update(sk, extract_array(chunk), cu)
-        return pd.DataFrame(_partial_row(slice_id, sk, n_rows, t0))
+                # use_threads=False: every core already runs a slice;
+                # nested Arrow threadpools (32 tasks x 32 threads) thrash
+                for batch in pf.iter_batches(
+                        _SLICE_BATCH_ROWS, row_groups=[int(rg)],
+                        columns=[values_col], use_threads=False):
+                    col = batch.column(0)
+                    if col.null_count:
+                        col = col.drop_null()
+                    n_rows += len(col)   # ROWS, before list flattening
+                    _update(sk, extract_array(col), cu)
+        return n_rows
 
-    return _slice_dispatch(one_slice)
+    return one_slice
+
+
+def _spark_slices(one_slice, factory):
+    """mapInPandas function of an ungrouped slice builder: one partial row
+    per slice, its files opened through the worker-persistent cache."""
+    def partial(slice_id: int, parts):
+        t0 = time.perf_counter()
+        sk = factory()
+        n_rows = one_slice(sk, parts, _pq_file)
+        return pd.DataFrame(_partial_row(slice_id, sk, n_rows, t0))
+    return _slice_dispatch(partial)
 
 
 def _slice_dispatch(one_slice):
-    """mapInPandas wrapper shared by every parquet-direct builder: a
-    partition may carry several slices; each MUST yield its own partial
-    keyed by its own slice id (checkpoint resume correctness). A slice
-    whose ``one_slice`` returns None (no groups) yields nothing."""
+    """mapInPandas wrapper shared by every parquet-direct builder: each
+    slice of the assignment frame (``_assign_slices``) yields its own
+    partial keyed by its own slice id (checkpoint resume correctness). A
+    slice whose ``one_slice`` returns None (no groups) yields nothing."""
     def fn(pdf_iter):
-        by_slice: dict[int, list[tuple[str, list[int]]]] = {}
         for pdf in pdf_iter:
-            for _, row in pdf.iterrows():  # tiny: one row per (slice, file)
-                by_slice.setdefault(int(row["slice_id"]), []).append(
-                    (row["file"], [int(r) for r in row["rgs"]]))
-        for slice_id in sorted(by_slice):
-            out = one_slice(slice_id, by_slice[slice_id])
-            if out is not None:
-                yield out
+            for s, files, rgs in zip(pdf["slice_id"], pdf["files"],
+                                     pdf["rgs"]):
+                out = one_slice(int(s), [(f, [int(r) for r in rl])
+                                         for f, rl in zip(files, rgs)])
+                if out is not None:
+                    yield out
     return fn
 
 
@@ -578,12 +611,15 @@ def _pin_checkpoint_slices(checkpoint_dir: str, rgs, n_slices: int | None,
 
 
 def _default_n_slices(spark: SparkSession, n_rgs: int) -> int:
-    # ~4 tasks per core: the Python-worker framework costs ~0.2-0.3 s
+    # ~4 slices per core, one rule for both paths so that they build the
+    # same slices. On Spark the Python-worker framework costs ~0.2-0.3 s
     # per task (measured via machine-busy minus in-task CPU), so
     # row-group-sized tasks (~3M tokens) burn ~50% of worker CPU on
     # overhead; ~4x-parallelism slices amortize it while keeping
-    # stragglers bounded. Explicit n_slices overrides (finer slices =
-    # finer checkpoint lineage).
+    # stragglers bounded. On driver threads the count barely matters: a
+    # 143 MB, 16-row-group table took 0.78 s as 4 slices and as 16 on 4
+    # threads (4 vCPU). Explicit n_slices overrides (finer slices = finer
+    # checkpoint lineage).
     par = spark.sparkContext.defaultParallelism
     return min(n_rgs, max(4 * par, 1))
 
@@ -595,8 +631,10 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     """Count-Min build over a parquet table using Python-side columnar reads.
 
     Functionally identical (byte-identical result, same ``n_rows``) to
-    ``build_sketch(spark.read.parquet(path), ...)`` but ~5x faster: the token
-    arrays never pass through JVM rows. Null rows are dropped as in
+    ``build_sketch(spark.read.parquet(path), ...)``, and the token arrays
+    never pass through JVM rows. On driver threads (up to
+    _IN_PROCESS_MAX_BYTES) it is 3.8x faster: 0.21 vs 0.80 s over a
+    35.7 MB table on local[4] (4 vCPU). Null rows are dropped as in
     ``build_sketch``; list and scalar columns are both accepted. With
     ``checkpoint_dir`` the slice assignment is pinned in
     {checkpoint_dir}/SLICES.json on the first run, so resume skips completed
@@ -606,9 +644,9 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, column=tokens_col)
     factory = functools.partial(CountMinSketch, cfg)
-    builder = _parquet_agg_partial_builder(factory, tokens_col, cu=cu)
+    one_slice = _parquet_slice(tokens_col, cu=cu)
     if checkpoint_dir is None:
-        return _build_slices(spark, rgs, n_slices, builder,
+        return _build_slices(spark, rgs, n_slices, one_slice,
                              _blob_bytes(factory), fanout, factory, t0)
     if not rgs:
         return BuildResult.empty(factory(), time.perf_counter() - t0)
@@ -619,41 +657,78 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     n_slices = _pin_checkpoint_slices(
         checkpoint_dir.rstrip("/"), rgs, n_slices,
         _default_n_slices(spark, len(rgs)))
-    n_slices, rows = _slice_assignments(rgs, n_slices)
+    parts = _slice_assignments(rgs, n_slices)
     return _checkpointed(
-        spark, checkpoint_dir, n_slices,
-        lambda done: _assign_slices(
-            spark, [r for r in rows if r[0] not in done]).mapInPandas(
-                builder, schema=_PARTIAL_SCHEMA),
+        spark, checkpoint_dir, len(parts),
+        lambda done: _assign_slices(spark, parts, done).mapInPandas(
+            _spark_slices(one_slice, factory), schema=_PARTIAL_SCHEMA),
         _blob_bytes(factory), fanout, factory, t0)
 
 
-def _assign_slices(spark: SparkSession, rows) -> DataFrame:
-    return _assign_df(spark, rows, "slice_id int, file string, rgs array<int>")
+def _assign_slices(spark: SparkSession, parts,
+                   skip=frozenset()) -> DataFrame:
+    """Assignment frame of the slices ``parts`` not in ``skip``: one row,
+    so one task, per slice, however many files it spans."""
+    return _assign_df(spark, [(s, [f for f, _ in p], [r for _, r in p])
+                              for s, p in enumerate(parts) if s not in skip],
+                      "slice_id int, files array<string>, "
+                      "rgs array<array<int>>")
 
 
-def _build_slices(spark: SparkSession, rgs, n_slices: int | None, builder,
-                  blob_bytes: int, fanout: int | None, empty,
+def _build_slices(spark: SparkSession, rgs, n_slices: int | None,
+                  one_slice, blob_bytes: int, fanout: int | None, factory,
                   t0: float) -> BuildResult:
-    """Partials of a parquet slice ``builder`` (a _slice_dispatch
-    function), merged by the planner: in this process when the value
-    column (``rgs``' fourth field) is at most _IN_PROCESS_MAX_BYTES, else
-    one Spark task per slice and ``_merge``. The slices are the same
-    either way, so the partials and their pid-order fold are too."""
+    """``factory()`` sketches filled by a parquet slice builder
+    ``one_slice`` (``_parquet_slice``), merged by the planner: on driver
+    threads when the value column (``rgs``' fourth field) is at most
+    _IN_PROCESS_MAX_BYTES, else one Spark task per slice and ``_merge``.
+    The slices and their builder are the same either way, so the partials
+    and their pid-order fold are too."""
     if not rgs:
-        return BuildResult.empty(empty(), time.perf_counter() - t0)
+        return BuildResult.empty(factory(), time.perf_counter() - t0)
     if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows = _slice_assignments(rgs, n_slices)
+    parts = _slice_assignments(rgs, n_slices)
     if sum(r[3] for r in rgs) <= _IN_PROCESS_MAX_BYTES:
-        assign = pd.DataFrame(rows, columns=["slice_id", "file", "rgs"])
-        tbl = pa.Table.from_pandas(pd.concat(list(builder(iter([assign])))),
-                                   schema=_PARTIAL_PA_SCHEMA,
-                                   preserve_index=False)
-        return _result(_fold(tbl["pid"], tbl["sketch"]), tbl, empty, t0)
-    partials = _assign_slices(spark, rows).mapInPandas(
-        builder, schema=_PARTIAL_SCHEMA)
-    return _merge(partials, n_slices, blob_bytes, fanout, empty, t0)
+        # a driver-only fold (no session, explicit n_slices) has a thread
+        # per slice
+        par = (len(parts) if spark is None
+               else spark.sparkContext.defaultParallelism)
+        return _thread_slices(par, rgs, parts, one_slice, factory, t0)
+    partials = _assign_slices(spark, parts).mapInPandas(
+        _spark_slices(one_slice, factory), schema=_PARTIAL_SCHEMA)
+    return _merge(partials, len(parts), blob_bytes, fanout, factory, t0)
+
+
+def _thread_slices(n_threads: int, rgs, parts, one_slice, factory,
+                   t0: float) -> BuildResult:
+    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads,
+    the slice sketches folded in pid order as they are: no blob, no
+    assignment frame. Each slice opens its own handles over the footers
+    ``rgs`` carries, so no handle is shared between threads and no footer
+    is parsed twice. The sketches are made on this thread, not the pool's:
+    the result outlives the build, and in a pool thread's malloc arena it
+    kept that arena's freed memory resident (100 driver-only builds of
+    perfbench's build table, keeping every result, peaked at 271-272 MB
+    RSS that way and at 252-254 MB this way; 4 vCPU)."""
+    import pyarrow.parquet as pq
+    footers = {r[0]: r[4] for r in rgs}
+    sketches = [factory() for _ in parts]
+
+    def open_file(f):
+        return pq.ParquetFile(f, metadata=footers[f],
+                              buffer_size=_READ_BUFFER_BYTES)
+
+    def run(pid):
+        t1 = time.perf_counter()
+        n_rows = one_slice(sketches[pid], parts[pid], open_file)
+        return _lineage_row(pid, sketches[pid], n_rows, t1)
+
+    with ThreadPoolExecutor(min(n_threads, len(parts))) as pool:
+        lineage = list(pool.map(run, range(len(parts))))
+    return _result(functools.reduce(lambda a, b: a.merge(b), sketches),
+                   pa.Table.from_pylist(lineage, schema=_LINEAGE_PA_SCHEMA),
+                   factory, t0)
 
 
 _GEN_TOKBUF = None  # per-worker persistent token buffer (see fn below)
@@ -1063,16 +1138,16 @@ def inner_product_rawlog(spark: SparkSession, sketch: CountMinSketch,
                 schema=pa.schema([("sums", pa.list_(pa.int64()))]))
 
     src = df.select(tokens_col).filter(F.col(tokens_col).isNotNull())
-    rows = src.mapInArrow(fn, schema="sums array<long>").collect()
-    if not rows:
-        return 0
-    # Python-int accumulation: per-slice partials are safely int64, but
-    # their grand total passes 2^63 around 10^12-update streams
-    total = [0] * depth
-    for r in rows:
-        for j, v in enumerate(r["sums"]):
-            total[j] += int(v)
-    return int(min(total))
+    return _min_row_total(
+        src.mapInArrow(fn, schema="sums array<long>").collect())
+
+
+def _min_row_total(rows) -> int:
+    """Min over depth rows of the partials' summed ``sums`` (0 for none).
+    Python-int accumulation: per-slice partials are safely int64, but
+    their grand total passes 2^63 around 10^12-update streams."""
+    return int(min((sum(map(int, col)) for col in
+                    zip(*(r["sums"] for r in rows))), default=0))
 
 
 def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
@@ -1088,17 +1163,19 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
     depth = sketch.cfg.depth
 
     rgs = _list_row_groups(path)
+    if not rgs:
+        return 0      # empty table: inner product with anything is 0
     if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows_assign = _slice_assignments(rgs, n_slices)
 
     def fn(pdf_iter):
         sums = np.zeros(depth, dtype=np.int64)
         seen = False
         for pdf in pdf_iter:
-            for _, row in pdf.iterrows():  # tiny: one row per (slice, file)
-                pf = _pq_file(row["file"])
-                for rg in row["rgs"]:
+            for file, rgs in zip(np.concatenate(pdf["files"].to_numpy()),
+                                 np.concatenate(pdf["rgs"].to_numpy())):
+                pf = _pq_file(file)
+                for rg in rgs:
                     col = pf.read_row_group(int(rg), columns=[tokens_col],
                                             use_threads=False).column(0)
                     for chunk in col.chunks:
@@ -1110,19 +1187,9 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
         if seen:
             yield pd.DataFrame({"sums": [sums.tolist()]})
 
-    if not rows_assign:
-        return 0      # empty table: inner product with anything is 0
-    assign = _assign_slices(spark, rows_assign)
-    rows = assign.mapInPandas(fn, schema="sums array<long>").collect()
-    if not rows:
-        return 0
-    # Python-int accumulation: per-slice partials are safely int64, but
-    # their grand total passes 2^63 around 10^12-update streams
-    total = [0] * depth
-    for r in rows:
-        for j, v in enumerate(r["sums"]):
-            total[j] += int(v)
-    return int(min(total))
+    return _min_row_total(
+        _assign_slices(spark, _slice_assignments(rgs, n_slices))
+        .mapInPandas(fn, schema="sums array<long>").collect())
 
 
 # ---------------------------------------------------------------------------
@@ -1279,8 +1346,7 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, files=files, column=values_col)
     return _build_slices(
-        spark, rgs, n_slices,
-        _parquet_agg_partial_builder(factory, values_col, extract_array),
+        spark, rgs, n_slices, _parquet_slice(values_col, extract_array),
         _blob_bytes(factory), fanout, factory, t0)
 
 
@@ -1309,7 +1375,7 @@ def _grouped_slices(spark: SparkSession, path: str, files, n_slices,
         return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
     if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
-    n_slices, rows_assign = _slice_assignments(rgs, n_slices)
+    slices = _slice_assignments(rgs, n_slices)
 
     def one_slice(slice_id, parts):
         sketches: dict = {}
@@ -1322,9 +1388,9 @@ def _grouped_slices(spark: SparkSession, path: str, files, n_slices,
         if sketches:
             return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
 
-    partials = _assign_slices(spark, rows_assign).mapInPandas(
+    partials = _assign_slices(spark, slices).mapInPandas(
         _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, n_slices)
+    return _grouped_merge(partials, fanout, len(slices))
 
 
 def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,

@@ -312,3 +312,53 @@ def test_concurrent_sketch_builds_thread_safe():
         for _ in range(4):
             got = list(pool.map(build, streams))
             assert got == expected
+
+
+@pytest.mark.parametrize("dist", ["zipf", "uniform"])
+def test_chunked_preaggregation_equals_one_pass(monkeypatch, dist):
+    """update_batch pre-aggregates in _AGG_CHUNK-key chunks; over several
+    chunks' worth of keys the sketch equals one whole-batch pass and one
+    pass with no pre-aggregation, byte for byte, with equal n_items and
+    total_count."""
+    cfg = CMConfig(eps=1e-3, delta=0.01, seed=1337)
+    n = 3 * CountMinSketch._AGG_CHUNK + 12_345
+    rng = np.random.default_rng(7)
+    keys = (rng.zipf(1.2, n) % 100_000 if dist == "zipf"
+            else rng.integers(0, 2**31 - 1, n)).astype(np.int32)
+
+    def build(**kw):
+        cm = CountMinSketch(cfg)
+        cm.update_batch(keys, **kw)
+        return cm
+
+    chunked = build()
+    unaggregated = build(preaggregate=False)
+    monkeypatch.setattr(CountMinSketch, "_AGG_CHUNK", n)
+    whole = build()
+    for other in (whole, unaggregated):
+        assert chunked.to_bytes() == other.to_bytes()
+        assert (chunked.n_items, chunked.total_count) == \
+            (other.n_items, other.total_count) == (n, n)
+
+
+def test_preaggregation_workspace_stays_one_chunk():
+    """A 10 M-key update_batch leaves its thread's _unique_counts
+    workspace no larger than one pre-aggregation chunk."""
+    import threading
+
+    from sketchlib import countmin
+
+    cfg = CMConfig(eps=1e-3, delta=0.01, seed=1337)
+    keys = np.random.default_rng(3).integers(0, 2**31 - 1, 10_000_000,
+                                             dtype=np.int32)
+    sizes = []
+
+    def run():
+        CountMinSketch(cfg).update_batch(keys)
+        sizes.extend(a.shape[0] for ws in countmin._UC_TLS.ws.values()
+                     for a in ws)
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    assert sizes and max(sizes) <= CountMinSketch._AGG_CHUNK

@@ -1,8 +1,8 @@
 """Spark E2E: distributed sketch build vs exact counts (SURVEY.md §5 item 4).
 
 Covers: mapInArrow partial build, merge byte-identity across
-partitionings and across the merge planner's paths (in-process, driver
-fold, 2- and 3-level shuffle trees), Spark job counts, grouped
+partitionings and across the merge planner's paths (driver threads,
+driver fold, 2- and 3-level shuffle trees), Spark job counts, grouped
 (per-source) build, checkpoint/resume, and the broadcast point-query UDF.
 """
 
@@ -572,21 +572,62 @@ def _run_jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_parquet_build_runs_one_spark_job(spark, multi_rg_path):
-    """The merge planner's driver fold: one job collects every partial
-    with its lineage, and the driver folds the blobs (no persist, no
-    separate lineage collect, no merge shuffle)."""
+def _single_process_bytes(path):
+    """The Count-Min bytes of one ``update_batch`` over every token."""
     import pyarrow.parquet as pq
-    from sketchlib.spark_build import build_sketch_parquet
-
-    res, jobs = _run_jobs(spark, "one-job-build", lambda: build_sketch_parquet(
-        spark, multi_rg_path, "tokens", CFG))
-    assert jobs == 1
     ref = CountMinSketch(CFG)
-    ref.update_batch(pq.read_table(multi_rg_path, columns=["tokens"])
+    ref.update_batch(pq.read_table(path, columns=["tokens"])
                      .column(0).combine_chunks().flatten().to_numpy())
-    assert res.sketch.to_bytes() == ref.to_bytes()
-    assert len(res.lineage) > 1 and res.n_rows == 30_000
+    return ref.to_bytes()
+
+
+def test_parquet_build_runs_on_driver_threads(spark, multi_rg_path,
+                                              monkeypatch):
+    """A multi-row-group table above the former 4 MB in-process bound
+    builds on driver threads with no Spark job. Forced onto the Spark
+    slice path it runs one job (the driver fold collects every partial
+    with its lineage: no persist, no merge shuffle). Both equal the
+    single-process reference byte for byte and have equal lineage, and an
+    order-sensitive Misra-Gries, whose row groups stream as several
+    record batches, agrees across the two paths too."""
+    from sketchlib import spark_build as sb
+    from sketchlib.mg import MisraGries
+
+    rgs = sb._list_row_groups(multi_rg_path, column="tokens")
+    assert len(rgs) > 1 and sum(r[3] for r in rgs) > 4 << 20
+    assert min(r[2] for r in rgs) > sb._SLICE_BATCH_ROWS
+
+    def builds():
+        return (sb.build_sketch_parquet(spark, multi_rg_path, "tokens", CFG),
+                sb.build_aggregator_parquet(
+                    spark, multi_rg_path, "tokens",
+                    functools.partial(MisraGries, 8)).sketch.to_bytes())
+
+    (threads, mg_threads), jobs = _run_jobs(spark, "threads", builds)
+    assert jobs == 0
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    (driver, mg_driver), jobs = _run_jobs(spark, "driver-fold", builds)
+    assert jobs == 2
+    want = _single_process_bytes(multi_rg_path)
+    for res in (threads, driver):
+        assert res.sketch.to_bytes() == want
+        assert len(res.lineage) == len(rgs) and res.n_rows == 30_000
+    cols = ["pid", "n_rows", "n_items", "total_count"]
+    assert threads.lineage[cols].equals(driver.lineage[cols])
+    assert mg_threads == mg_driver
+
+
+def test_concurrent_parquet_builds_of_one_file(spark, multi_rg_path):
+    """Two driver threads build the same file at once. Every slice opens
+    its own ParquetFile handle, so both equal the single-process
+    reference."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(lambda _: build_sketch_parquet(
+            spark, multi_rg_path, "tokens", CFG).sketch.to_bytes(),
+            range(2)))
+    assert got == [_single_process_bytes(multi_rg_path)] * 2
 
 
 @pytest.fixture(scope="module")
@@ -689,3 +730,31 @@ def test_order_sensitive_merges_fold_in_pid_order(spark, small_vocab_path,
     assert build() == local
     monkeypatch.setattr(sb, "_DRIVER_FOLD_MAX_BYTES", -1)
     assert build(fanout=2) == build(fanout=2)
+
+
+def test_slice_over_two_files_is_one_partial(spark, tmp_path, monkeypatch):
+    """A slice whose row groups span two files is one Spark task and one
+    partial, as it is one sketch on driver threads: an order-sensitive
+    Misra-Gries and the lineage agree across the two paths."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from sketchlib import spark_build as sb
+    from sketchlib.mg import MisraGries
+
+    rng = np.random.default_rng(9)
+    for name in ("a", "b"):
+        pq.write_table(pa.table({"tokens": rng.integers(0, 50, 600)}),
+                       str(tmp_path / f"{name}.parquet"))
+
+    def build():
+        return sb.build_aggregator_parquet(
+            spark, str(tmp_path), "tokens", functools.partial(MisraGries, 4),
+            n_slices=1)
+
+    threads = build()
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    spark_path = build()
+    assert list(spark_path.lineage["pid"]) == [0] == \
+        list(threads.lineage["pid"])
+    assert spark_path.n_rows == threads.n_rows == 1200
+    assert spark_path.sketch.to_bytes() == threads.sketch.to_bytes()
