@@ -65,8 +65,8 @@ from .kll import KllSketch
 from .mg import MisraGries
 from .multi import MultiSketch
 from .spark_build import (build_aggregator_pairs,
-                          build_grouped_aggregator_pairs,
-                          build_per_file_parquet)
+                          build_grouped_aggregator_pairs, collect_fleet,
+                          per_file_parquet_fleet)
 from .tdigest import TDigest
 from .theta import ThetaSketch
 
@@ -359,7 +359,7 @@ class SketchCatalog:
                                               seed=int(ng["seed"]))
 
             def builder(sp, files):
-                return build_per_file_parquet(
+                return per_file_parquet_fleet(
                     sp, table_path, spec["column"], factory, files=files,
                     transform=transform)
         elif s:
@@ -369,9 +369,9 @@ class SketchCatalog:
                     return build_aggregator_pairs(
                         df, s["key_col"], s["weight_col"], factory,
                         payload_col=s["payload_col"])
-                return build_grouped_aggregator_pairs(
+                return collect_fleet(build_grouped_aggregator_pairs(
                     df, g, s["key_col"], s["weight_col"], factory,
-                    payload_col=s["payload_col"])
+                    payload_col=s["payload_col"]))
 
         meta = {"catalog_spec": spec,
                 "table_path": os.path.abspath(table_path), "column": label}
@@ -1444,7 +1444,7 @@ class SketchCatalog:
     #
     # A file index is a grouped fleet whose group key is the FILE (the
     # incremental manifest's relative path), built file-locally by
-    # build_per_file_parquet — no grouping shuffle, and delta folds
+    # per_file_parquet_fleet — no grouping shuffle, and delta folds
     # create only NEW groups (an appended file is its own group), so
     # existing rows never republish. locate() then answers "which files
     # CAN contain key k" from store rows: the Iceberg-metadata-style

@@ -78,8 +78,9 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import store
-from .spark_build import (BuildResult, build_aggregator_parquet,
-                          build_grouped_parquet, walk_parquet_files)
+from .spark_build import (BuildResult, _merge_fleets,
+                          build_aggregator_parquet, grouped_parquet_fleet,
+                          walk_parquet_files)
 
 
 def _current_files(table_path: str) -> dict[str, int]:
@@ -335,8 +336,8 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     the delta touches few groups, which is the point.
 
     ``builder`` generalizes the delta scan like the global path's hook:
-    a callable ``(spark, file_list) -> DataFrame`` whose result carries
-    (key string, sketch binary, n_rows long) rows — e.g.
+    a callable ``(spark, file_list) -> {key: (sketch, n_rows)}``, the
+    fleet ``grouped_parquet_fleet`` returns — e.g. ``collect_fleet`` of
     ``build_grouped_aggregator_pairs`` for per-group weighted samples.
     When set, values_col/fanout/n_slices are ignored; it must be
     deterministic in the file list and use the same factory config
@@ -350,48 +351,31 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
             new_rows=0, updated_groups=0)
 
     from . import serde
-    rows = []
+    delta = {}
     if plan.new:
         files = _abs_files(table_path, plan.new)
-        if builder is not None:
-            gdf = builder(spark, files)
-        else:
-            gdf = build_grouped_parquet(
-                spark, table_path, key_col, values_col, factory,
-                fanout=fanout, n_slices=n_slices, files=files)
-        # arrow-collect: the delta's blobs come back as arrow buffers
-        # instead of py4j-pickled Row objects — measured ~3x faster
-        # driver fan-in on MB-scale grouped publishes (per-file fleets)
-        rows = gdf.toArrow().to_pylist()
-    if any(r["key"] is None for r in rows):
+        delta = (builder(spark, files) if builder is not None
+                 else grouped_parquet_fleet(
+                     spark, table_path, key_col, values_col, factory,
+                     fanout=fanout, n_slices=n_slices, files=files))
+    if None in delta:
         raise ValueError(
             f"{key_col} contains NULL keys: a null group is refused "
             "(str() coercion would silently merge it with the string "
             "'None') — filter or fillna the key column first")
+    delta = {str(k): v for k, v in delta.items()}
     # the touched groups' committed rows — blob and CUMULATIVE n_rows —
-    # in one store read
-    groups: dict[str, object] = {}
-    counts: dict[str, int] = {}
-    if not plan.full and rows:
+    # in one store read, then the delta folded into them
+    fleet = {}
+    if not plan.full and delta:
         prior = store._winner_rows(
-            store_path, names=[f"{name}/{r['key']}" for r in rows],
+            store_path, names=[f"{name}/{g}" for g in delta],
             min_seq=plan.base, max_seq=plan.epoch,
             payload=("blob", "n_rows"))
-        for n, w in prior.items():
-            g = n[len(name) + 1:]
-            groups[g], counts[g] = serde.loads(w.blob), w.n_rows
-    new_rows = 0
-    entries = []
-    for r in rows:
-        g, delta = str(r["key"]), serde.loads(bytes(r["sketch"]))
-        new_rows += int(r["n_rows"])
-        counts[g] = counts.get(g, 0) + int(r["n_rows"])
-        if g in groups:
-            groups[g].merge(delta)
-        else:
-            groups[g] = delta
-        entries.append((f"{name}/{g}", plan.next_epoch, groups[g],
-                        counts[g]))
+        fleet = {n[len(name) + 1:]: (serde.loads(w.blob), w.n_rows)
+                 for n, w in prior.items()}
+    fleet = _merge_fleets(fleet, delta)
+    entries = [(f"{name}/{g}", plan.next_epoch, *fleet[g]) for g in delta]
     store.save_sketches_bulk(
         spark, store_path, entries,
         meta={**(meta or {}), "incremental_from": plan.epoch,
@@ -399,8 +383,9 @@ def incremental_build_grouped(spark: SparkSession, table_path: str,
     _append_manifest(store_path, name, plan.next_epoch, plan.new,
                      plan.next_base)
     return GroupedIncrementalResult(
-        sketches=groups, seq=plan.next_epoch, prev_seq=plan.epoch,
-        new_files=len(plan.new), new_rows=new_rows,
+        sketches={g: fleet[g][0] for g in delta},
+        seq=plan.next_epoch, prev_seq=plan.epoch, new_files=len(plan.new),
+        new_rows=sum(n for _, n in delta.values()),
         updated_groups=len(entries))
 
 

@@ -10,24 +10,28 @@ per-row Python) and emits one row ``(pid, sketch: binary, lineage
 metrics)``. Raw tokens never shuffle; only partial blobs move.
 
 One partial builder per source; a sketch type is a factory and a feed.
-DataFrame sources run ``_agg_partial_builder`` (mapInArrow), parquet
-row-group slices ``_parquet_slice`` (on driver threads or in Spark
-tasks), grouped DataFrame builds ``_grouped_agg_builder``; each Spark task
-emits the same partial record (``_partial_row``). The factory makes an
-empty sketch; the feed updates it from one Arrow batch or column.
-Count-Min is ``CountMinSketch(cfg)`` fed by ``update_batch``
-(``update_batch_cu`` when ``cu``), as any other sketch.
+DataFrame sources run ``_agg_partial_builder`` (mapInArrow), grouped
+DataFrame builds ``_grouped_agg_builder``, and every parquet scan
+(ungrouped, grouped, per-file, inner product) one slice reader
+(``_read_slice``) under one runner (``_run_slices``, on driver threads or
+in Spark tasks); each ungrouped Spark task emits the same partial record
+(``_partial_row``). The factory makes an empty sketch; the feed updates
+it from one Arrow batch or column. Count-Min is ``CountMinSketch(cfg)``
+fed by ``update_batch`` (``update_batch_cu`` when ``cu``), as any other
+sketch.
 
 One planner turns partials into the result, picking one of three cases
 from sizes the driver already knows:
 
-  threads      parquet builds whose value column is at most
+  threads      parquet scans whose columns read are at most
                _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
-               footers the planner reads anyway): the slice builder the
+               footers the planner reads anyway): the slice reader the
                Spark tasks run is called on a pool of defaultParallelism
-               driver threads and the slice sketches fold in pid order; no
-               Spark job, no partial blob (perfbench's build table and
-               every incremental delta it folds).
+               driver threads and the slice accumulators (a sketch, a
+               per-key fleet or a vector of inner-product sums) fold in
+               pid order; no Spark job, no partial blob (perfbench's build
+               table, every incremental delta it folds, and the grouped
+               and per-file folds of small deltas).
   driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES:
                ONE Spark job collects every partial, blob and lineage
                together (``toArrow``); the driver folds the blobs in pid
@@ -96,7 +100,8 @@ _TREE_SCHEMA = "pid int, sketch binary"
 # perfbench's build p50 from 1.33 to 0.93 s; 4 vCPU).
 _DRIVER_FOLD_MAX_BYTES = 64 << 20
 
-# Threaded-slice bound on the value column's uncompressed bytes: about the
+# Threaded-slice bound on the uncompressed bytes of the columns a parquet
+# scan reads (a grouped scan counts its key column too): about the
 # bytes driver threads fold in the time one Spark job costs before its
 # tasks do any work (a 4-task mapInPandas + toArrow job of empty tasks:
 # 0.55 s median). A Count-Min folds about 165 MB/s of column bytes on 4
@@ -173,8 +178,11 @@ def _pid() -> int:
 
 
 def _lineage_row(pid: int, sk, n_rows: int, t0: float) -> dict:
-    """One partial's lineage; ``build_ms`` is the fold since ``t0``."""
-    return {"pid": pid, "n_rows": n_rows, "n_items": sk.n_items,
+    """One partial's lineage; ``build_ms`` is the fold since ``t0``. An
+    accumulator that is not a sketch (a fleet, a vector of sums) counts
+    0 items."""
+    return {"pid": pid, "n_rows": n_rows,
+            "n_items": getattr(sk, "n_items", 0),
             "total_count": getattr(sk, "total_count", 0),
             "build_ms": (time.perf_counter() - t0) * 1e3}
 
@@ -228,8 +236,8 @@ def _build_frame(src: DataFrame, factory, feed, fanout: int | None,
     """Partials of ``src`` through the one builder, merged by the planner."""
     partials = src.mapInArrow(_agg_partial_builder(factory, feed),
                               schema=_PARTIAL_SCHEMA)
-    return _merge(partials, partials.rdd.getNumPartitions(),
-                  _blob_bytes(factory), fanout, factory, t0)
+    return _result(*_merge(partials, partials.rdd.getNumPartitions(),
+                           _blob_bytes(factory), fanout), factory, t0)
 
 
 def _fold(pids, blobs):
@@ -275,21 +283,21 @@ def _shuffle_tree(partials: DataFrame, fanout: int | None,
 
 
 def _merge(partials: DataFrame, n_partials: int, blob_bytes: int,
-           fanout: int | None, empty, t0: float) -> BuildResult:
+           fanout: int | None) -> tuple:
     """THE merge planner for Spark-built partials (module docstring):
     driver fold in one job while ``n_partials * blob_bytes`` stays under
-    _DRIVER_FOLD_MAX_BYTES, the shuffle tree above it. ``empty()`` makes
-    the result for zero partials."""
+    _DRIVER_FOLD_MAX_BYTES, the shuffle tree above it. Returns (merged
+    sketch, or None for zero partials; their lineage table)."""
     if n_partials * blob_bytes <= _DRIVER_FOLD_MAX_BYTES:
         tbl = partials.toArrow()
-        return _result(_fold(tbl["pid"], tbl["sketch"]), tbl, empty, t0)
+        return _fold(tbl["pid"], tbl["sketch"]), tbl
     partials = partials.persist()
     try:
         lineage = partials.select(*_LINEAGE_PA_SCHEMA.names).toArrow()
         top = _shuffle_tree(partials, fanout, n_partials).toArrow()
     finally:
         partials.unpersist()
-    return _result(_fold(top["pid"], top["sketch"]), lineage, empty, t0)
+    return _fold(top["pid"], top["sketch"]), lineage
 
 
 def _result(sketch, lineage: pa.Table, empty, t0: float) -> BuildResult:
@@ -319,7 +327,8 @@ def _checkpointed(spark: SparkSession, checkpoint_dir: str, n_partials: int,
     partials = store.read_table(spark, path, schema=_PARTIAL_SCHEMA)
     if partials is None:
         return BuildResult.empty(empty(), time.perf_counter() - t0)
-    return _merge(partials, n_partials, blob_bytes, fanout, empty, t0)
+    return _result(*_merge(partials, n_partials, blob_bytes, fanout),
+                   empty, t0)
 
 
 def build_sketch(df: DataFrame, tokens_col: str, cfg: CMConfig, *,
@@ -381,28 +390,32 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
 
 
 # ---------------------------------------------------------------------------
-# parquet-direct source: pyarrow row-group reads inside the Python workers
+# parquet-direct source: pyarrow row-group reads in the driver's threads or
+# inside the Python workers
 # ---------------------------------------------------------------------------
 # Spark's physical plan for mapInArrow over a parquet scan is
 # Scan(columnar) -> ColumnarToRow -> MapInArrow: every array element is
 # bounced through a JVM row before being re-encoded to Arrow (measured
 # ~0.5 GB/s ceiling — the NumPy kernel alone sustains >5 GB/s aggregate).
-# For the dominant "build a sketch over a parquet table" job we instead let
-# Spark schedule *row-group assignments* and have each Python task read its
-# row groups straight into Arrow with pyarrow — the same pattern as a
-# columnar DataSource, with Spark still owning distribution, retries and the
-# merge topology. Slices are deterministic, so checkpoint resume is keyed by
-# slice id and carries (file, row-group) lineage.
+# For every parquet scan here (a sketch, a per-key or per-file fleet, an
+# inner product) we instead cut the table into *row-group slices* and read
+# each straight into Arrow with pyarrow, through one reader
+# (``_read_slice``) and one runner (``_run_slices``): small tables on
+# driver threads, larger ones one Spark task per slice, the pattern of a
+# columnar DataSource, with Spark still owning distribution, retries and
+# the merge topology. Slices are deterministic, so checkpoint resume is
+# keyed by slice id and carries (file, row-group) lineage.
 
 
 def _list_row_groups(path: str, files: list[str] | None = None,
-                     column: str | None = None) -> list[tuple]:
+                     column: str | list[str] | None = None) -> list[tuple]:
     """[(file, row_group_idx, n_rows, column_bytes, footer)] for a parquet
     file or directory (recursive), from the footers alone. ``column_bytes``
-    is the uncompressed size of ``column``'s chunks in that row group
-    (every leaf of a nested column; 0 when ``column`` is None) — the
-    planner's size; ``footer`` is the file's parsed FileMetaData, which
-    the threaded slices open their handles with. Hive-partitioned layouts
+    is the uncompressed size of the chunks of ``column`` (a name or the
+    list of names a scan reads; every leaf of a nested column; 0 when
+    None) in that row group — the planner's size; ``footer`` is the
+    file's parsed FileMetaData, which the threaded slices open their
+    handles with. Hive-partitioned layouts
     (key=val dirs) are REFUSED: their partition columns live in directory
     names, not the files, so a raw row-group scan would silently drop them
     — route those through ``build_sketch(spark.read.parquet(path), ...)``
@@ -414,13 +427,14 @@ def _list_row_groups(path: str, files: list[str] | None = None,
     import pyarrow.parquet as pq
     if files is None:
         files = walk_parquet_files(path)
+    cols = [column] if isinstance(column, str) else column or []
     out = []
     for f in sorted(files):
         md = pq.read_metadata(f)
         leaves = [j for j in range(md.num_columns)
-                  if column is not None
-                  and (md.schema.column(j).path == column
-                       or md.schema.column(j).path.startswith(column + "."))]
+                  if any(md.schema.column(j).path == c
+                         or md.schema.column(j).path.startswith(c + ".")
+                         for c in cols)]
         for i in range(md.num_row_groups):
             rg = md.row_group(i)
             out.append((f, i, rg.num_rows,
@@ -488,8 +502,9 @@ _READ_BUFFER_BYTES = 256 << 10
 # per (worker, file). Entries are validated against os.stat (mtime_ns,
 # size): a file rewritten at the same path within a long-lived session is
 # reopened, not served stale. Bounded FIFO so worker fds don't accumulate.
-# Spark workers only: the dict is unlocked, and a handle is not shared
-# between threads — driver threads open their own (``_thread_slices``).
+# Spark workers only (``_spark_slices``): the dict is unlocked, and a
+# handle is not shared between threads — driver threads open their own
+# over the footers ``_list_row_groups`` parsed (``_thread_slices``).
 _PQ_FILE_CACHE: dict = {}
 _PQ_FILE_CACHE_MAX = 64
 
@@ -510,19 +525,16 @@ def _pq_file(path: str):
     return pf
 
 
-def _parquet_slice(values_col: str, extract_array=None, cu: bool = False):
-    """THE parquet slice builder: ``one_slice(sk, parts, open_file) ->
-    n_rows`` folds the row groups of ``parts`` ([(file, [row_group]),
-    ...]) into the empty sketch ``sk``; ``open_file(path)`` gives the
-    slice its ParquetFile handle. Null rows are dropped, as the
-    DataFrame path's isNotNull filter drops them (a null scalar would
-    decay its batch to float64 NaNs), so the sketch bytes and ``n_rows``
-    equal that path's. The feed is ``extract_array(pa.Array) ->
-    np.ndarray`` (default: flatten; e.g. ngrams.array_bigrams) into
-    ``update_batch``, or ``update_batch_cu`` when ``cu``."""
-    extract_array = extract_array or _flat_values
-
-    def one_slice(sk, parts, open_file):
+def _read_slice(columns: list[str], feed):
+    """THE parquet slice reader: ``read(acc, parts, open_file) -> n_rows``
+    streams ``columns`` of the row groups of ``parts`` ([(file,
+    [row_group]), ...]) as record batches through ``open_file(path)``'s
+    handle, drops the rows whose value (the last column) is null, and
+    folds each batch into the accumulator ``acc`` with ``feed(acc, batch,
+    file)``. Null rows go as the DataFrame builds' isNotNull filter drops
+    them (a null scalar would decay its batch to float64 NaNs), so the
+    sketch bytes and ``n_rows`` equal those builds'."""
+    def read(acc, parts, open_file):
         n_rows = 0
         for file, rgs in parts:
             pf = open_file(file)
@@ -531,41 +543,44 @@ def _parquet_slice(values_col: str, extract_array=None, cu: bool = False):
                 # nested Arrow threadpools (32 tasks x 32 threads) thrash
                 for batch in pf.iter_batches(
                         _SLICE_BATCH_ROWS, row_groups=[int(rg)],
-                        columns=[values_col], use_threads=False):
-                    col = batch.column(0)
-                    if col.null_count:
-                        col = col.drop_null()
-                    n_rows += len(col)   # ROWS, before list flattening
-                    _update(sk, extract_array(col), cu)
+                        columns=columns, use_threads=False):
+                    value = batch.column(columns[-1])
+                    if value.null_count:
+                        batch = batch.filter(value.is_valid())
+                    n_rows += batch.num_rows   # ROWS, before list flattening
+                    feed(acc, batch, file)
         return n_rows
-
-    return one_slice
-
-
-def _spark_slices(one_slice, factory):
-    """mapInPandas function of an ungrouped slice builder: one partial row
-    per slice, its files opened through the worker-persistent cache."""
-    def partial(slice_id: int, parts):
-        t0 = time.perf_counter()
-        sk = factory()
-        n_rows = one_slice(sk, parts, _pq_file)
-        return pd.DataFrame(_partial_row(slice_id, sk, n_rows, t0))
-    return _slice_dispatch(partial)
+    return read
 
 
-def _slice_dispatch(one_slice):
-    """mapInPandas wrapper shared by every parquet-direct builder: each
-    slice of the assignment frame (``_assign_slices``) yields its own
-    partial keyed by its own slice id (checkpoint resume correctness). A
-    slice whose ``one_slice`` returns None (no groups) yields nothing."""
+def _parquet_slice(values_col: str, extract_array=None, cu: bool = False):
+    """The ungrouped slice reader: one sketch fed ``extract_array(pa.Array)
+    -> np.ndarray`` of ``values_col`` (default: flatten; e.g.
+    ngrams.array_bigrams) into ``update_batch``, or ``update_batch_cu``
+    when ``cu``."""
+    extract_array = extract_array or _flat_values
+    return _read_slice([values_col], lambda sk, batch, file: _update(
+        sk, extract_array(batch.column(0)), cu))
+
+
+def _spark_slices(new, read, emit):
+    """mapInPandas function of the slice runner's Spark path: every slice
+    of the assignment frame (``_assign_slices``) fills a ``new()``
+    accumulator through ``read``, its files opened through the
+    worker-persistent cache, and yields the columns ``emit(slice_id, acc,
+    n_rows, t0)`` keyed by its own slice id (checkpoint resume
+    correctness), or nothing when they are None."""
     def fn(pdf_iter):
         for pdf in pdf_iter:
             for s, files, rgs in zip(pdf["slice_id"], pdf["files"],
                                      pdf["rgs"]):
-                out = one_slice(int(s), [(f, [int(r) for r in rl])
-                                         for f, rl in zip(files, rgs)])
+                t0 = time.perf_counter()
+                acc = new()
+                n_rows = read(acc, [(f, [int(r) for r in rl])
+                                    for f, rl in zip(files, rgs)], _pq_file)
+                out = emit(int(s), acc, n_rows, t0)
                 if out is not None:
-                    yield out
+                    yield pd.DataFrame(out)
     return fn
 
 
@@ -644,10 +659,9 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, column=tokens_col)
     factory = functools.partial(CountMinSketch, cfg)
-    one_slice = _parquet_slice(tokens_col, cu=cu)
+    read = _parquet_slice(tokens_col, cu=cu)
     if checkpoint_dir is None:
-        return _build_slices(spark, rgs, n_slices, one_slice,
-                             _blob_bytes(factory), fanout, factory, t0)
+        return _build_slices(spark, rgs, n_slices, read, fanout, factory, t0)
     if not rgs:
         return BuildResult.empty(factory(), time.perf_counter() - t0)
     # pass the raw (possibly-None) n_slices: an explicit value must match
@@ -661,7 +675,8 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
     return _checkpointed(
         spark, checkpoint_dir, len(parts),
         lambda done: _assign_slices(spark, parts, done).mapInPandas(
-            _spark_slices(one_slice, factory), schema=_PARTIAL_SCHEMA),
+            _spark_slices(factory, read, _partial_row),
+            schema=_PARTIAL_SCHEMA),
         _blob_bytes(factory), fanout, factory, t0)
 
 
@@ -675,17 +690,26 @@ def _assign_slices(spark: SparkSession, parts,
                       "rgs array<array<int>>")
 
 
-def _build_slices(spark: SparkSession, rgs, n_slices: int | None,
-                  one_slice, blob_bytes: int, fanout: int | None, factory,
-                  t0: float) -> BuildResult:
-    """``factory()`` sketches filled by a parquet slice builder
-    ``one_slice`` (``_parquet_slice``), merged by the planner: on driver
-    threads when the value column (``rgs``' fourth field) is at most
-    _IN_PROCESS_MAX_BYTES, else one Spark task per slice and ``_merge``.
-    The slices and their builder are the same either way, so the partials
-    and their pid-order fold are too."""
+def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
+                combine, emit, schema: str, finish) -> tuple:
+    """THE parquet slice runner, the one place every parquet scan picks
+    threads or Spark. ``rgs`` (``_list_row_groups``) is cut into slices;
+    each fills a ``new()`` accumulator (one sketch, a ``{key: (sketch,
+    n_rows)}`` fleet, a depth-vector of sums) through ``read(acc, parts,
+    open_file)`` (``_read_slice``). Returns (accumulator, lineage table):
+
+    - the columns read (``rgs``' fourth field) at most
+      _IN_PROCESS_MAX_BYTES: the slices run on ``_thread_slices``' pool
+      and fold with ``combine(a, b) -> a`` in pid order;
+    - above it, one Spark task per slice emits ``emit(pid, acc, n_rows,
+      t0)`` rows of ``schema``, and ``finish(partials, n_slices)`` merges
+      them into the pair.
+
+    The slices and their reader are the same either way, so the
+    accumulators and their pid-order fold are too. No row group gives
+    (``new()``, no lineage row)."""
     if not rgs:
-        return BuildResult.empty(factory(), time.perf_counter() - t0)
+        return new(), _LINEAGE_PA_SCHEMA.empty_table()
     if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
     parts = _slice_assignments(rgs, n_slices)
@@ -694,26 +718,27 @@ def _build_slices(spark: SparkSession, rgs, n_slices: int | None,
         # per slice
         par = (len(parts) if spark is None
                else spark.sparkContext.defaultParallelism)
-        return _thread_slices(par, rgs, parts, one_slice, factory, t0)
+        return _thread_slices(par, rgs, parts, new, read, combine)
     partials = _assign_slices(spark, parts).mapInPandas(
-        _spark_slices(one_slice, factory), schema=_PARTIAL_SCHEMA)
-    return _merge(partials, len(parts), blob_bytes, fanout, factory, t0)
+        _spark_slices(new, read, emit), schema=schema)
+    return finish(partials, len(parts))
 
 
-def _thread_slices(n_threads: int, rgs, parts, one_slice, factory,
-                   t0: float) -> BuildResult:
-    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads,
-    the slice sketches folded in pid order as they are: no blob, no
-    assignment frame. Each slice opens its own handles over the footers
-    ``rgs`` carries, so no handle is shared between threads and no footer
-    is parsed twice. The sketches are made on this thread, not the pool's:
-    the result outlives the build, and in a pool thread's malloc arena it
-    kept that arena's freed memory resident (100 driver-only builds of
-    perfbench's build table, keeping every result, peaked at 271-272 MB
-    RSS that way and at 252-254 MB this way; 4 vCPU)."""
+def _thread_slices(n_threads: int, rgs, parts, new, read, combine) -> tuple:
+    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads:
+    no blob, no assignment frame. Each slice opens its own handles over
+    the footers ``rgs`` carries, so no handle is shared between threads
+    and no footer is parsed twice. Finished slices fold into the first in
+    pid order and are dropped, so the driver holds the result and the
+    slices in flight, not every slice. The accumulators are made on this
+    thread, not the pool's: the result outlives the build, and in a pool
+    thread's malloc arena it kept that arena's freed memory resident (100
+    driver-only builds of perfbench's build table, keeping every result,
+    peaked at 271-272 MB RSS that way and at 252-254 MB this way; 4
+    vCPU)."""
     import pyarrow.parquet as pq
     footers = {r[0]: r[4] for r in rgs}
-    sketches = [factory() for _ in parts]
+    accs = [new() for _ in parts]
 
     def open_file(f):
         return pq.ParquetFile(f, metadata=footers[f],
@@ -721,14 +746,29 @@ def _thread_slices(n_threads: int, rgs, parts, one_slice, factory,
 
     def run(pid):
         t1 = time.perf_counter()
-        n_rows = one_slice(sketches[pid], parts[pid], open_file)
-        return _lineage_row(pid, sketches[pid], n_rows, t1)
+        n_rows = read(accs[pid], parts[pid], open_file)
+        return _lineage_row(pid, accs[pid], n_rows, t1)
 
+    lineage = []
     with ThreadPoolExecutor(min(n_threads, len(parts))) as pool:
-        lineage = list(pool.map(run, range(len(parts))))
-    return _result(functools.reduce(lambda a, b: a.merge(b), sketches),
-                   pa.Table.from_pylist(lineage, schema=_LINEAGE_PA_SCHEMA),
-                   factory, t0)
+        for pid, row in enumerate(pool.map(run, range(len(parts)))):
+            lineage.append(row)
+            if pid:
+                accs[0] = combine(accs[0], accs[pid])
+                accs[pid] = None
+    return accs[0], pa.Table.from_pylist(lineage, schema=_LINEAGE_PA_SCHEMA)
+
+
+def _build_slices(spark: SparkSession, rgs, n_slices: int | None, read,
+                  fanout: int | None, factory, t0: float) -> BuildResult:
+    """``factory()`` sketches filled by an ungrouped slice reader
+    (``_parquet_slice``) through the slice runner; on the Spark path the
+    merge planner folds their partials."""
+    return _result(*_run_slices(
+        spark, rgs, n_slices, factory, read, lambda a, b: a.merge(b),
+        _partial_row, _PARTIAL_SCHEMA,
+        lambda partials, n: _merge(partials, n, _blob_bytes(factory),
+                                   fanout)), factory, t0)
 
 
 _GEN_TOKBUF = None  # per-worker persistent token buffer (see fn below)
@@ -802,8 +842,8 @@ def build_sketch_generated(spark: SparkSession, rows: int, cfg: CMConfig, *,
         return BuildResult.empty(factory(), time.perf_counter() - t0)
     partials = _assign_df(spark, assigns, "chunk int, start bigint, n int"
                           ).mapInPandas(fn, schema=_PARTIAL_SCHEMA)
-    return _merge(partials, len(assigns), _blob_bytes(factory), fanout,
-                  factory, t0)
+    return _result(*_merge(partials, len(assigns), _blob_bytes(factory),
+                           fanout), factory, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -845,14 +885,23 @@ def _ragged_take(flat: np.ndarray, starts: np.ndarray,
     return flat[idx]
 
 
-def _ingest_grouped(sketches: dict, rows: dict, keys: np.ndarray,
-                    values_col, make_sketch, cu: bool) -> None:
-    """Fold one batch's (keys, values) into per-key sketches. ``values_col``
-    is an Arrow array (list or scalar). Grouping sorts only the ROW keys
-    (thousands) and gathers each key's token ranges with a ragged take —
-    never a token-count-sized sort/repeat: those ~n_tokens×8-byte
-    temporaries were the dominant cost per batch and fault badly on
-    long-lived workers with fragmented heaps."""
+def _fleet_update(fleet: dict, key, values, n_rows: int, make_sketch,
+                  cu: bool) -> None:
+    """Fold ``n_rows`` rows' ``values`` into ``fleet[key]``, a (sketch,
+    n_rows) pair made with ``make_sketch()`` on first sight."""
+    sk, n = fleet.get(key) or (make_sketch(), 0)
+    _update(sk, values, cu)
+    fleet[key] = (sk, n + n_rows)
+
+
+def _ingest_grouped(fleet: dict, keys: np.ndarray, values_col, make_sketch,
+                    cu: bool) -> None:
+    """Fold one batch's (keys, values) into the ``{key: (sketch, n_rows)}``
+    fleet. ``values_col`` is an Arrow array (list or scalar). Grouping
+    sorts only the ROW keys (thousands) and gathers each key's token
+    ranges with a ragged take — never a token-count-sized sort/repeat:
+    those ~n_tokens×8-byte temporaries were the dominant cost per batch
+    and fault badly on long-lived workers with fragmented heaps."""
     import pyarrow.compute as pc
     is_list = pa.types.is_list(values_col.type) or pa.types.is_large_list(values_col.type)
     if is_list:
@@ -872,15 +921,9 @@ def _ingest_grouped(sketches: dict, rows: dict, keys: np.ndarray,
     # cannot order None against str, so peel those rows off first
     null_keys = np.array([k is None for k in keys.tolist()], dtype=bool)
     if null_keys.any():
-        starts_n = offsets[:-1][null_keys]
-        lens_n = lens[null_keys]
-        sk = sketches.get(None)
-        if sk is None:
-            sk = sketches[None] = make_sketch()
-            rows[None] = 0
-        seg = _ragged_take(flat, starts_n, lens_n)
-        (sk.update_batch_cu if cu else sk.update_batch)(seg)
-        rows[None] += int(null_keys.sum())
+        _fleet_update(fleet, None, _ragged_take(
+            flat, offsets[:-1][null_keys], lens[null_keys]),
+            int(null_keys.sum()), make_sketch, cu)
         keep = ~null_keys
         keys = keys[keep]
         lens = lens[keep]
@@ -897,56 +940,57 @@ def _ingest_grouped(sketches: dict, rows: dict, keys: np.ndarray,
     order = np.argsort(inv, kind="stable")
     bounds = np.zeros(len(uniq) + 1, dtype=np.int64)
     np.cumsum(row_counts, out=bounds[1:])
-    starts_all = off_starts
     for g, key in enumerate(uniq.tolist()):
-        sk = sketches.get(key)
-        if sk is None:
-            sk = sketches[key] = make_sketch()
-            rows[key] = 0
         sel = order[bounds[g]:bounds[g + 1]]
-        seg = _ragged_take(flat, starts_all[sel], lens[sel])
-        if cu:
-            sk.update_batch_cu(seg)
-        else:
-            sk.update_batch(seg)
-        rows[key] += int(row_counts[g])
+        _fleet_update(fleet, key, _ragged_take(flat, off_starts[sel],
+                                               lens[sel]),
+                      int(row_counts[g]), make_sketch, cu)
 
 
-def _grouped_rows(pid: int, sketches: dict, rows: dict) -> dict:
-    """Grouped-partial columns: one row per key (a NULL key first)."""
-    ordered = sorted(sketches, key=lambda k: (k is not None, k))
+def _grouped_rows(pid: int, fleet: dict) -> dict | None:
+    """Grouped-partial columns of a fleet: one row per key (a NULL key
+    first); None for an empty fleet."""
+    if not fleet:
+        return None
+    ordered = sorted(fleet, key=lambda k: (k is not None, k))
+    sks = [fleet[k][0] for k in ordered]
     return {"key": ordered, "pid": [pid] * len(ordered),
-            "sketch": [serde.dumps_partial(sketches[k]) for k in ordered],
-            "n_rows": [rows[k] for k in ordered],
-            "n_items": [sketches[k].n_items for k in ordered],
-            "total_count": [getattr(sketches[k], "total_count", 0)
-                            for k in ordered]}
+            "sketch": [serde.dumps_partial(sk) for sk in sks],
+            "n_rows": [fleet[k][1] for k in ordered],
+            "n_items": [sk.n_items for sk in sks],
+            "total_count": [getattr(sk, "total_count", 0) for sk in sks]}
 
 
 def _grouped_agg_builder(ingest):
-    """THE grouped mapInArrow builder: per-(partition, key) sketches that
-    ``ingest(sketches, rows, batch)`` (the grouped feed) folds each Arrow
-    batch into; one partial row per key."""
+    """THE grouped mapInArrow builder: a per-partition fleet that
+    ``ingest(fleet, batch)`` (the grouped feed) folds each Arrow batch
+    into; one partial row per key."""
     def fn(batches):
-        pid = _pid()
-        sketches: dict = {}
-        rows: dict = {}
+        fleet: dict = {}
         for batch in batches:
-            ingest(sketches, rows, batch)
-        if sketches:
+            ingest(fleet, batch)
+        cols = _grouped_rows(_pid(), fleet)
+        if cols is not None:
             yield pa.RecordBatch.from_pydict(
-                _grouped_rows(pid, sketches, rows),
-                schema=_GROUPED_PARTIAL_PA_SCHEMA)
+                cols, schema=_GROUPED_PARTIAL_PA_SCHEMA)
     return fn
 
 
 def _grouped_feed(values_col: str, factory, cu: bool = False):
     """Grouped feed of one value column, keyed by the batch's ``key``."""
-    def ingest(sketches, rows, batch):
-        _ingest_grouped(sketches, rows,
+    def ingest(fleet, batch):
+        _ingest_grouped(fleet,
                         batch.column("key").to_numpy(zero_copy_only=False),
                         batch.column(values_col), factory, cu)
     return ingest
+
+
+def _merge_fleets(a: dict, b: dict) -> dict:
+    """Fleet ``b`` folded into fleet ``a`` per key: sketches merged in
+    that order, row counts added."""
+    for k, (sk, n) in b.items():
+        a[k] = (a[k][0].merge(sk), a[k][1] + n) if k in a else (sk, n)
+    return a
 
 
 def _grouped_frame(df: DataFrame, key_col: str, values_col: str, factory,
@@ -1017,9 +1061,26 @@ def build_grouped(df: DataFrame, key_col: str, tokens_col: str, cfg: CMConfig,
                           functools.partial(CountMinSketch, cfg), cu, fanout)
 
 
-def collect_grouped(grouped_df: DataFrame) -> dict[str, CountMinSketch]:
-    return {r["key"]: CountMinSketch.from_bytes(bytes(r["sketch"]))
-            for r in grouped_df.collect()}
+def collect_fleet(grouped_df: DataFrame) -> dict:
+    """THE fleet collector: ``{key: (sketch, n_rows)}`` of a grouped
+    build's (key, sketch, n_rows, ...) frame, any sketch type, in one
+    Arrow collect."""
+    t = grouped_df.select("key", "sketch", "n_rows").toArrow()
+    return {k: (serde.loads(b), n) for k, b, n in zip(
+        *(t[c].to_pylist() for c in ("key", "sketch", "n_rows")))}
+
+
+def collect_grouped(grouped_df: DataFrame) -> dict:
+    """``{key: sketch}`` of a grouped build's frame, any sketch type."""
+    return {k: sk for k, (sk, _) in collect_fleet(grouped_df).items()}
+
+
+def _fleet_frame(spark: SparkSession, fleet: dict) -> DataFrame:
+    """A fleet as the grouped builds' (key, sketch, n_rows, n_items,
+    total_count) frame."""
+    return spark.createDataFrame(
+        [(k, sk.to_bytes(), n, sk.n_items, getattr(sk, "total_count", 0))
+         for k, (sk, n) in fleet.items()], _GROUPED_MERGED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,58 +1199,38 @@ def inner_product_rawlog(spark: SparkSession, sketch: CountMinSketch,
                 schema=pa.schema([("sums", pa.list_(pa.int64()))]))
 
     src = df.select(tokens_col).filter(F.col(tokens_col).isNotNull())
-    return _min_row_total(
-        src.mapInArrow(fn, schema="sums array<long>").collect())
+    rows = src.mapInArrow(fn, schema="sums array<long>").collect()
+    return int(min(functools.reduce(_add_sums, (r["sums"] for r in rows),
+                                    [0] * depth)))
 
 
-def _min_row_total(rows) -> int:
-    """Min over depth rows of the partials' summed ``sums`` (0 for none).
-    Python-int accumulation: per-slice partials are safely int64, but
-    their grand total passes 2^63 around 10^12-update streams."""
-    return int(min((sum(map(int, col)) for col in
-                    zip(*(r["sums"] for r in rows))), default=0))
+def _add_sums(a, b) -> list:
+    """Two depth-vectors of inner-product sums, added in Python ints:
+    per-slice partials are safely int64, but their grand total passes
+    2^63 around 10^12-update streams."""
+    return [int(x) + int(y) for x, y in zip(a, b)]
 
 
 def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
                                  path: str, tokens_col: str, *,
                                  n_slices: int | None = None) -> int:
-    """inner_product_rawlog over a parquet token table via the same
-    Python-side columnar row-group reads as build_sketch_parquet — the raw
-    log never passes through JVM rows, and per slice only a d-vector of
-    partial sums returns to the driver."""
-    blob = sketch.to_bytes()
-    digest = hashlib.blake2b(blob, digest_size=16).hexdigest()
-    bc = spark.sparkContext.broadcast(blob)
-    depth = sketch.cfg.depth
+    """inner_product_rawlog over a parquet token table through the slice
+    runner that build_sketch_parquet runs: the raw log never passes
+    through JVM rows, null rows are dropped as the DataFrame version's
+    filter drops them, and per slice only a d-vector of partial sums
+    returns."""
+    def feed(sums, batch, file):
+        sums += sketch.row_probe_sums(_flat_values(batch.column(0)))
 
-    rgs = _list_row_groups(path)
-    if not rgs:
-        return 0      # empty table: inner product with anything is 0
-    if n_slices is None:
-        n_slices = _default_n_slices(spark, len(rgs))
-
-    def fn(pdf_iter):
-        sums = np.zeros(depth, dtype=np.int64)
-        seen = False
-        for pdf in pdf_iter:
-            for file, rgs in zip(np.concatenate(pdf["files"].to_numpy()),
-                                 np.concatenate(pdf["rgs"].to_numpy())):
-                pf = _pq_file(file)
-                for rg in rgs:
-                    col = pf.read_row_group(int(rg), columns=[tokens_col],
-                                            use_threads=False).column(0)
-                    for chunk in col.chunks:
-                        toks = _flat_values(chunk)
-                        if toks.shape[0]:
-                            cm = _cached_sketch(digest, bc.value)
-                            sums += cm.row_probe_sums(toks)
-                            seen = True
-        if seen:
-            yield pd.DataFrame({"sums": [sums.tolist()]})
-
-    return _min_row_total(
-        _assign_slices(spark, _slice_assignments(rgs, n_slices))
-        .mapInPandas(fn, schema="sums array<long>").collect())
+    sums, _ = _run_slices(
+        spark, _list_row_groups(path, column=tokens_col), n_slices,
+        lambda: np.zeros(sketch.cfg.depth, dtype=np.int64),
+        _read_slice([tokens_col], feed), _add_sums,
+        lambda pid, sums, n_rows, t0: {"sums": [sums.tolist()]},
+        "sums array<long>",
+        lambda partials, n: (functools.reduce(
+            _add_sums, (r["sums"] for r in partials.collect())), None))
+    return int(min(sums))
 
 
 # ---------------------------------------------------------------------------
@@ -1306,18 +1347,16 @@ def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
                                F.lit("")).alias("_pl"))
     feed = _pairs_feed("_ik", "_w", "_pl" if payload_col else None)
 
-    def ingest(sketches, rows, batch):
+    def ingest(fleet, batch):
         gvals = batch.column(0).to_numpy(zero_copy_only=False)
         order = np.argsort(gvals, kind="stable")
         g_sorted = gvals[order]
         starts = np.flatnonzero(np.r_[True, g_sorted[1:] != g_sorted[:-1]])
         bounds = np.r_[starts, len(g_sorted)]
         for s, e in zip(bounds[:-1], bounds[1:]):
-            g = g_sorted[s]
-            if g not in sketches:
-                sketches[g], rows[g] = factory(), 0
-            feed(sketches[g], batch.take(pa.array(order[s:e])))
-            rows[g] += e - s
+            sk, n = fleet.get(g_sorted[s]) or (factory(), 0)
+            feed(sk, batch.take(pa.array(order[s:e])))
+            fleet[g_sorted[s]] = (sk, n + int(e - s))
 
     src = (df.select(*cols)
            .filter(F.col("key").isNotNull() & F.col("_ik").isNotNull()
@@ -1334,7 +1373,7 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
                              files: list[str] | None = None) -> BuildResult:
     """Parquet-direct build of ANY sketchlib mergeable sketch: workers read
     row-group slices with pyarrow (no JVM scan, no Arrow IPC double-hop)
-    through the one parquet slice builder that build_sketch_parquet also
+    through the one parquet slice reader that build_sketch_parquet also
     runs. Measured at 2.08 B tokens on local[32]: Count-Sketch 67.2 M tok/s
     here vs 26.7 M via ``build_aggregator(spark.read.parquet(path), ...)``
     (2.5x — the token arrays never leave the Python worker), and within
@@ -1347,7 +1386,7 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
     rgs = _list_row_groups(path, files=files, column=values_col)
     return _build_slices(
         spark, rgs, n_slices, _parquet_slice(values_col, extract_array),
-        _blob_bytes(factory), fanout, factory, t0)
+        fanout, factory, t0)
 
 
 def build_grouped_aggregator(df: DataFrame, key_col: str, values_col: str,
@@ -1364,66 +1403,57 @@ def _factory(cfg_or_factory):
     return cfg_or_factory
 
 
-def _grouped_slices(spark: SparkSession, path: str, files, n_slices,
-                    fanout: int, columns: list[str], ingest) -> DataFrame:
-    """The tail of the grouped parquet builds: each slice reads
-    ``columns`` of its row groups, ``ingest(sketches, rows, table, file)``
-    folds each into per-key sketches, one partial row per (slice, key)
-    goes to _grouped_merge. An empty table gives an empty grouped frame."""
-    rgs = _list_row_groups(path, files=files)
-    if not rgs:
-        return spark.createDataFrame([], _GROUPED_MERGED_SCHEMA)
-    if n_slices is None:
-        n_slices = _default_n_slices(spark, len(rgs))
-    slices = _slice_assignments(rgs, n_slices)
-
-    def one_slice(slice_id, parts):
-        sketches: dict = {}
-        rows: dict = {}
-        for file, rgl in parts:
-            pf = _pq_file(file)
-            for rg in rgl:
-                ingest(sketches, rows, pf.read_row_group(
-                    rg, columns=columns, use_threads=False), file)
-        if sketches:
-            return pd.DataFrame(_grouped_rows(slice_id, sketches, rows))
-
-    partials = _assign_slices(spark, slices).mapInPandas(
-        _slice_dispatch(one_slice), schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, len(slices))
+def _fleet_slices(spark: SparkSession, path: str, files, n_slices,
+                  fanout: int, columns: list[str], feed) -> dict:
+    """The fleet ``{key: (sketch, n_rows)}`` of a grouped parquet scan
+    through the slice runner: ``feed(fleet, batch, file)`` folds each
+    batch of ``columns`` into its slice's fleet, and the slice fleets
+    merge per key in pid order (on the Spark path through
+    ``_grouped_merge`` and ``collect_fleet``)."""
+    fleet, _ = _run_slices(
+        spark, _list_row_groups(path, files=files, column=columns),
+        n_slices, dict, _read_slice(columns, feed), _merge_fleets,
+        lambda pid, fleet, n_rows, t0: _grouped_rows(pid, fleet),
+        _GROUPED_PARTIAL_SCHEMA,
+        lambda partials, n: (collect_fleet(
+            _grouped_merge(partials, fanout, n)), None))
+    return fleet
 
 
-def build_grouped_parquet(spark: SparkSession, path: str, key_col: str,
+def grouped_parquet_fleet(spark: SparkSession, path: str, key_col: str,
                           tokens_col: str, cfg_or_factory, *,
                           cu: bool = False, fanout: int = 8,
                           n_slices: int | None = None,
-                          files: list[str] | None = None) -> DataFrame:
-    """Per-key sketches over a parquet table via Python-side columnar reads —
-    the grouped counterpart of build_sketch_parquet (same ColumnarToRow
-    bypass, same per-row-group slicing). ``cfg_or_factory`` is a CMConfig or
-    a zero-arg sketch factory. Returns (key, sketch, n_rows, n_items,
-    total_count). ``files`` restricts the scan to an explicit file list
-    (the incremental-maintenance delta, as in build_aggregator_parquet)."""
+                          files: list[str] | None = None) -> dict:
+    """Per-key sketches over a parquet table via Python-side columnar
+    reads, as the fleet ``{key: (sketch, n_rows)}`` — the grouped
+    counterpart of build_sketch_parquet (same ColumnarToRow bypass, same
+    slice reader and runner). ``cfg_or_factory`` is a CMConfig or a
+    zero-arg sketch factory. Null values are dropped, as
+    ``build_grouped``'s filter drops them. ``files`` restricts the scan to
+    an explicit file list (the incremental-maintenance delta, as in
+    build_aggregator_parquet)."""
     factory = _factory(cfg_or_factory)
-
-    def ingest(sketches, rows, tbl, file):
-        # null values are dropped, as _grouped_frame's filter does
-        tbl = tbl.filter(tbl.column(1).is_valid())
-        _ingest_grouped(sketches, rows,
-                        tbl.column(0).to_numpy(zero_copy_only=False),
-                        tbl.column(1).combine_chunks(), factory, cu)
-
-    return _grouped_slices(spark, path, files, n_slices, fanout,
-                           [key_col, tokens_col], ingest)
+    return _fleet_slices(
+        spark, path, files, n_slices, fanout, [key_col, tokens_col],
+        lambda fleet, batch, file: _ingest_grouped(
+            fleet, batch.column(key_col).to_numpy(zero_copy_only=False),
+            batch.column(tokens_col), factory, cu))
 
 
-def build_per_file_parquet(spark: SparkSession, path: str,
-                           tokens_col: str, cfg_or_factory, *,
-                           cu: bool = False, fanout: int = 8,
-                           n_slices: int | None = None,
+def build_grouped_parquet(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """``grouped_parquet_fleet(spark, ...)`` as the grouped builds' (key,
+    sketch, n_rows, n_items, total_count) frame."""
+    return _fleet_frame(spark, grouped_parquet_fleet(spark, *args, **kwargs))
+
+
+def per_file_parquet_fleet(spark: SparkSession, path: str, tokens_col: str,
+                           cfg_or_factory, *, cu: bool = False,
+                           fanout: int = 8, n_slices: int | None = None,
                            files: list[str] | None = None,
-                           transform=None) -> DataFrame:
-    """One sketch per parquet FILE — the data-skipping index builder.
+                           transform=None) -> dict:
+    """One sketch per parquet FILE — the data-skipping index builder — as
+    the fleet ``{key: (sketch, n_rows)}``.
 
     The group key is the file's path RELATIVE TO THE TABLE ROOT, i.e.
     exactly the key the incremental manifest uses (incremental.py
@@ -1433,37 +1463,37 @@ def build_per_file_parquet(spark: SparkSession, path: str,
     group is ever republished by a delta fold. No grouping shuffle
     happens at all — the data is already partitioned by the key (a row
     group belongs to exactly one file), so each slice folds its row
-    groups straight into per-file accumulators; `_grouped_merge` only
-    reconciles files whose row groups landed in different slices.
-
-    Returns the same (key, sketch, n_rows, n_items, total_count) frame
-    as ``build_grouped_parquet``. ``files`` restricts the scan to an
-    explicit file list (the incremental-maintenance delta).
+    groups straight into per-file accumulators; the slice fleets only
+    reconcile files whose row groups landed in different slices. Null
+    rows are dropped: they count in no file's ``n_rows``, as in
+    ``build_sketch_parquet``. ``files`` restricts the scan to an explicit
+    file list (the incremental-maintenance delta).
 
     ``transform`` derives the indexed keys from the raw column: a
-    callable ``(arrow column) -> int64 ndarray`` applied per row group
-    (e.g. ``ngrams.array_ngrams`` for hashed n-gram shingles — row
-    boundaries respected by the transform itself, so per-file indexing
-    of DERIVED keys needs no extra machinery). Must be deterministic:
-    delta folds and rebuilds must derive identical keys."""
+    callable ``(arrow column) -> int64 ndarray`` applied per record batch
+    (e.g. ``ngrams.array_ngrams`` for hashed n-gram shingles — batches
+    split only at row boundaries and the transform respects them itself,
+    so per-file indexing of DERIVED keys needs no extra machinery). Must
+    be deterministic: delta folds and rebuilds must derive identical
+    keys."""
     factory = _factory(cfg_or_factory)
     root = os.path.abspath(path) if os.path.isdir(path) \
         else os.path.dirname(os.path.abspath(path))
 
-    def ingest(sketches, rows, tbl, file):
-        key = os.path.relpath(os.path.abspath(file), root)
-        if key not in sketches:
-            sketches[key], rows[key] = factory(), 0
-        vcol = tbl.column(0).combine_chunks()
-        # a NULL row (list slot or scalar) contributes nothing, which is
-        # what a whole-file fold wants
-        flat = (transform(vcol) if transform is not None
-                else _flat_values(vcol.drop_null()))
-        _update(sketches[key], flat, cu)
-        rows[key] += tbl.num_rows
+    def feed(fleet, batch, file):
+        col = batch.column(0)
+        _fleet_update(fleet, os.path.relpath(os.path.abspath(file), root),
+                      _flat_values(col) if transform is None
+                      else transform(col), batch.num_rows, factory, cu)
 
-    return _grouped_slices(spark, path, files, n_slices, fanout,
-                           [tokens_col], ingest)
+    return _fleet_slices(spark, path, files, n_slices, fanout, [tokens_col],
+                         feed)
+
+
+def build_per_file_parquet(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """``per_file_parquet_fleet(spark, ...)`` as the grouped builds' (key,
+    sketch, n_rows, n_items, total_count) frame."""
+    return _fleet_frame(spark, per_file_parquet_fleet(spark, *args, **kwargs))
 
 
 # ---------------------------------------------------------------------------

@@ -152,8 +152,9 @@ def test_snapshot_diff_table(spark, tmp_path):
 
 
 def test_snapshot_diff_refuses_cross_lineage(spark, tmp_path):
-    """Seqs below a rebuild's manifest_base describe a dead table state;
-    both diff paths refuse them even when no counter would go negative."""
+    """Seqs below a rebuild's lineage base (the ``base`` its ``ingested/``
+    commit marker records) describe a dead table state; both diff paths
+    refuse them even when no counter would go negative."""
     from sketchlib.incremental import (incremental_build,
                                        incremental_build_table,
                                        snapshot_diff, snapshot_diff_table)

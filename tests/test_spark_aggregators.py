@@ -238,15 +238,20 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
     isNotNull filter — same sketch bytes, same n_rows — for both scalar
     and list columns (a null scalar would otherwise decay the chunk to
     float64 NaNs and hash garbage); build_sketch_parquet likewise against
-    build_sketch, and build_grouped_parquet per key against
-    build_grouped."""
+    build_sketch, build_grouped_parquet per key against build_grouped,
+    and inner_product_rawlog_parquet against inner_product_rawlog over a
+    sketch with no zero counter, where a null read as a key always
+    adds."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from sketchlib.countmin import CMConfig
     from sketchlib.kll import KllSketch
+    from sketchlib.countmin import CountMinSketch
     from sketchlib.spark_build import (build_aggregator_parquet,
                                        build_grouped, build_grouped_parquet,
-                                       build_sketch, build_sketch_parquet)
+                                       build_sketch, build_sketch_parquet,
+                                       inner_product_rawlog,
+                                       inner_product_rawlog_parquet)
     path = str(tmp_path / "nulls.parquet")
     pq.write_table(pa.table({
         "v": pa.array([3, None, 5, 7, None, 9], pa.int32()),
@@ -274,3 +279,9 @@ def test_parquet_direct_aggregator_null_rows(spark, tmp_path):
                                     build_grouped(df, "k", col, cfg)))
         assert direct == via_df, col
         assert {k: n for k, (_, n) in direct.items()} == {"a": 2, "b": 2}
+    dense = CountMinSketch(cfg)
+    dense.update_batch(np.arange(100_000, dtype=np.int64))
+    assert dense.table.min() > 0
+    for col in ("v", "arr"):
+        assert (inner_product_rawlog_parquet(spark, dense, path, col)
+                == inner_product_rawlog(spark, dense, df, col)), col

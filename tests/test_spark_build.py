@@ -525,11 +525,14 @@ def test_assign_df_exactly_one_row_per_partition(spark):
 
 def test_build_per_file_parquet_matches_single_file_builds(spark, tmp_path):
     """The data-skipping index builder: each file's sketch is
-    byte-identical to a standalone build over that file alone, keys are
-    the manifest-relative file names, and restricting ``files=`` to a
-    subset (the incremental delta) yields exactly that subset's rows."""
+    byte-identical to a standalone build over that file alone, and so is
+    its ``n_rows``, null rows dropped as there; keys are the
+    manifest-relative file names, and restricting ``files=`` to a subset
+    (the incremental delta) yields exactly that subset's rows."""
     import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from sketchlib import serde
     from sketchlib.datagen import generate_token_table
     from sketchlib.spark_build import (build_per_file_parquet,
@@ -540,11 +543,17 @@ def test_build_per_file_parquet_matches_single_file_builds(spark, tmp_path):
     for lbl, rows, seed in (("a", 500, 41), ("b", 400, 42)):
         generate_token_table(os.path.join(data, f"{lbl}.parquet"),
                              rows=rows, seed=seed, dist="zipf")
+    rng = np.random.default_rng(43)
+    pq.write_table(pa.table({"tokens": pa.array(
+        [None if i % 10 == 3 else rng.integers(0, 500, 1 + i % 7).tolist()
+         for i in range(300)], pa.list_(pa.int32()))}),
+        os.path.join(data, "c.parquet"))
     cfg = CMConfig(1e-3, math.exp(-3), seed=7)
 
     out = {r["key"]: r for r in
            build_per_file_parquet(spark, data, "tokens", cfg).collect()}
-    assert sorted(out) == ["a.parquet", "b.parquet"]
+    assert sorted(out) == ["a.parquet", "b.parquet", "c.parquet"]
+    assert out["c.parquet"]["n_rows"] == 270
     for key, r in out.items():
         solo = build_sketch_parquet(
             spark, os.path.join(data, key), "tokens", cfg)
@@ -570,6 +579,101 @@ def _run_jobs(spark, group, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_collect_fleet_reads_any_sketch(spark, tokens_df):
+    """collect_fleet gives ``{key: (sketch, n_rows)}`` of a fleet of any
+    sketch type (HLL and Misra-Gries here, which a Count-Min-only decode
+    refuses), and collect_grouped gives its sketches."""
+    from sketchlib.hll import HllSketch
+    from sketchlib.mg import MisraGries
+    from sketchlib.spark_build import build_grouped_aggregator, collect_fleet
+
+    for fac in (functools.partial(HllSketch, p=10),
+                functools.partial(MisraGries, 16)):
+        gdf = build_grouped_aggregator(tokens_df, "source", "tokens", fac)
+        rows = {r["key"]: (bytes(r["sketch"]), r["n_rows"])
+                for r in gdf.collect()}
+        fleet = collect_fleet(gdf)
+        assert {k: (sk.to_bytes(), n) for k, (sk, n) in fleet.items()} \
+            == rows
+        assert all(type(sk) is type(fac()) for sk, _ in fleet.values())
+        assert {k: sk.to_bytes() for k, sk in collect_grouped(gdf).items()} \
+            == {k: b for k, (b, _) in rows.items()}
+
+
+@pytest.fixture(scope="module")
+def two_file_path(tmp_path_factory):
+    """Two token files of 700-row row groups: four slices span the files
+    and every row group streams as several record batches."""
+    import pyarrow.parquet as pq
+    from sketchlib.datagen import generate_token_table
+    base = tmp_path_factory.mktemp("twofile")
+    src = str(base / "src.parquet")
+    generate_token_table(src, rows=4_000, seed=79, dist="zipf")
+    t = pq.read_table(src)
+    os.makedirs(base / "data")
+    for i, (lo, hi) in enumerate(((0, 2_300), (2_300, 4_000))):
+        pq.write_table(t.slice(lo, hi - lo),
+                       str(base / "data" / f"p{i}.parquet"),
+                       row_group_size=700)
+    return str(base / "data")
+
+
+def test_grouped_fleets_agree_across_paths(spark, two_file_path,
+                                           monkeypatch):
+    """Grouped and per-file fleets, Count-Min and an order-sensitive
+    Misra-Gries, are byte-equal between driver threads (no Spark job) and
+    the forced Spark path, with equal per-key row counts."""
+    from sketchlib import spark_build as sb
+    from sketchlib.mg import MisraGries
+
+    facs = (functools.partial(CountMinSketch, CFG),
+            functools.partial(MisraGries, 8))
+
+    def fleets():
+        return [{k: (sk.to_bytes(), n) for k, (sk, n) in
+                 sb.collect_fleet(build()).items()}
+                for fac in facs for build in (
+                    lambda: sb.build_grouped_parquet(
+                        spark, two_file_path, "source", "tokens", fac,
+                        n_slices=4),
+                    lambda: sb.build_per_file_parquet(
+                        spark, two_file_path, "tokens", fac, n_slices=4))]
+
+    def fleet():
+        return sb.grouped_parquet_fleet(spark, two_file_path, "source",
+                                        "tokens", facs[0])
+
+    threads = fleets()
+    assert _run_jobs(spark, "threads", fleet)[1] == 0
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    assert fleets() == threads
+    assert _run_jobs(spark, "spark", fleet)[1] > 0
+    assert sorted(threads[1]) == ["p0.parquet", "p1.parquet"]
+    assert sum(n for _, n in threads[1].values()) == 4_000
+
+
+def test_small_grouped_and_file_index_folds_run_no_spark_job(spark,
+                                                             tmp_path):
+    """A grouped fold and a file-index fold of a 10-row delta build and
+    fold their fleets on driver threads: no Spark job."""
+    from sketchlib.catalog import SketchCatalog
+    from sketchlib.datagen import generate_token_table
+
+    data = str(tmp_path / "data")
+    os.makedirs(data)
+    generate_token_table(os.path.join(data, "p0.parquet"), rows=1_000,
+                         seed=1, dist="uniform")
+    cat = SketchCatalog(spark, str(tmp_path / "store"))
+    cat.register_grouped(data, "source", "tokens", ["cm", "mg"])
+    cat.register_file_index(data, "tokens")
+    generate_token_table(os.path.join(data, "p1.parquet"), rows=10,
+                         seed=2, dist="uniform")
+    for fold in (lambda: cat.refresh_grouped(data, "source", "tokens"),
+                 lambda: cat.refresh_file_index(data, "tokens")):
+        ans, jobs = _run_jobs(spark, "fold", fold)
+        assert jobs == 0 and ans.extra["new_rows"] == 10
 
 
 def _single_process_bytes(path):

@@ -6,8 +6,8 @@ Concurrent commits of one name: the second is refused; of different
 names: both land.
 
 The killed writers run in a subprocess without Spark (``spark=None``:
-the store never needs a session, the global fold takes the in-process
-build path, the grouped fold an in-process builder)."""
+the store never needs a session, and the global and grouped folds build
+their deltas on driver threads)."""
 
 import functools
 import math
@@ -19,8 +19,6 @@ import threading
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -30,39 +28,14 @@ from sketchlib.datagen import generate_token_table
 from sketchlib.incremental import (current_group_sketches,
                                    incremental_build,
                                    incremental_build_grouped)
-from sketchlib.spark_build import build_aggregator_parquet
+from sketchlib.spark_build import (build_aggregator_parquet,
+                                   grouped_parquet_fleet)
 
 _fac = functools.partial(CountMinSketch,
                          CMConfig(eps=1e-2, delta=math.exp(-3), seed=5))
 KILLED = 17
 # the function whose return ends each durable step of a commit
 STEPS = {"parts": "_write_parts", "claim": "_claim", "head": "_write_head"}
-
-
-class _Rows:
-    """A grouped builder's result: the one DataFrame method
-    incremental_build_grouped calls on it."""
-
-    def __init__(self, rows):
-        self.rows = rows
-
-    def toArrow(self):
-        return pa.Table.from_pylist(self.rows)
-
-
-def _grouped(spark, files):
-    """Per-source Count-Min sketches of ``files``, built in process."""
-    t = pa.concat_tables(pq.read_table(f, columns=["source", "tokens"])
-                         for f in files)
-    rows = []
-    for src in sorted(set(t.column("source").to_pylist())):
-        sub = t.filter(pc.equal(t.column("source"), src))
-        sk = _fac()
-        sk.update_batch(np.asarray(
-            sub.column("tokens").combine_chunks().flatten(), np.int64))
-        rows.append({"key": src, "sketch": sk.to_bytes(),
-                     "n_rows": sub.num_rows})
-    return _Rows(rows)
 
 
 def _sketch(n):
@@ -84,7 +57,7 @@ OPS = {
         None, data, "tokens", _fac, store_path=st, name="cm", n_slices=1),
     "grouped": lambda st, data: incremental_build_grouped(
         None, data, "source", "tokens", _fac, store_path=st, name="g",
-        builder=_grouped),
+        n_slices=1),
     "compact": lambda st, data: store.compact_store(None, st),
 }
 
@@ -170,9 +143,8 @@ def test_killed_writer_leaves_a_committed_state(seeded, tmp_path, op,
                 == full.sketch.to_bytes())
         assert OPS["fold"](st, data).no_op      # nothing left, nothing twice
     elif op == "grouped":
-        full = {r["key"]: r["sketch"] for r in _grouped(
-            None, sorted(os.path.join(data, f) for f in os.listdir(data)
-                         if f.endswith(".parquet"))).rows}
+        full = {g: sk.to_bytes() for g, (sk, _) in grouped_parquet_fleet(
+            None, data, "source", "tokens", _fac, n_slices=1).items()}
         got = current_group_sketches(None, st, "g")
         assert {g: s.to_bytes() for g, s in got.items()} == full
         assert OPS["grouped"](st, data).no_op
