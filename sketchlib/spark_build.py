@@ -27,11 +27,13 @@ from sizes the driver already knows:
                _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
                footers the planner reads anyway): the slice reader the
                Spark tasks run is called on a pool of defaultParallelism
-               driver threads and the slice accumulators (a sketch, a
-               per-key fleet or a vector of inner-product sums) fold in
-               pid order; no Spark job, no partial blob (perfbench's build
-               table, every incremental delta it folds, and the grouped
-               and per-file folds of small deltas).
+               driver threads (a per-key fleet's slices one at a time)
+               and the slice accumulators (a sketch, a fleet or a vector
+               of inner-product sums) fold in pid order; no Spark job, no
+               partial blob (perfbench's build table, every incremental
+               delta it folds, and the grouped and per-file folds of
+               small deltas). On Spark, grouped and per-file frames stay
+               distributed (``_grouped_merge``).
   driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES:
                ONE Spark job collects every partial, blob and lineage
                together (``toArrow``); the driver folds the blobs in pid
@@ -60,6 +62,7 @@ import hashlib
 import json
 import math
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -111,7 +114,14 @@ _DRIVER_FOLD_MAX_BYTES = 64 << 20
 # on local[4] the threads stay ahead at every size measured (143 MB: 0.82
 # vs 2.76 s for a Count-Min, 1.96 vs 3.87 s for the MultiSketch; 4 vCPU).
 # perfbench's build table (35.8 MB), its registered ingest table (0.59 MB)
-# and its deltas (17 KB) all build on threads.
+# and its deltas (17 KB) all build on threads. The other parquet scans
+# share the bound; near it (44.1 MB of a 62,000-row token table's source
+# and tokens columns, Count-Min eps 1e-4, medians of 5, local[4]) threads
+# against the forced Spark path took: a grouped fleet, one slice at a
+# time, 0.95 vs 1.38 s; a per-file fleet 0.68 vs 1.09 s; the inner
+# product 0.35 vs 0.87 s; but build_grouped_parquet read back with
+# collect_fleet 1.33 vs 1.22 s, its local frame's round trip costing more
+# than the two Spark jobs save (ROADMAP).
 _IN_PROCESS_MAX_BYTES = 48 << 20
 
 
@@ -691,7 +701,8 @@ def _assign_slices(spark: SparkSession, parts,
 
 
 def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
-                combine, emit, schema: str, finish) -> tuple:
+                combine, emit, schema: str, finish,
+                serial: bool = False) -> tuple:
     """THE parquet slice runner, the one place every parquet scan picks
     threads or Spark. ``rgs`` (``_list_row_groups``) is cut into slices;
     each fills a ``new()`` accumulator (one sketch, a ``{key: (sketch,
@@ -700,9 +711,13 @@ def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
 
     - the columns read (``rgs``' fourth field) at most
       _IN_PROCESS_MAX_BYTES: the slices run on ``_thread_slices``' pool
-      and fold with ``combine(a, b) -> a`` in pid order;
+      and fold with ``combine(a, b) -> a`` in pid order; ``serial`` runs
+      them one at a time on the calling thread instead, for accumulators
+      that grow with their input (a fleet holds a sketch per key its
+      slice touches, so the driver holds the result and one slice's
+      fleet, not one per thread);
     - above it, one Spark task per slice emits ``emit(pid, acc, n_rows,
-      t0)`` rows of ``schema``, and ``finish(partials, n_slices)`` merges
+      t0)`` rows of ``schema``, and ``finish(partials, n_slices)`` turns
       them into the pair.
 
     The slices and their reader are the same either way, so the
@@ -716,7 +731,7 @@ def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
     if sum(r[3] for r in rgs) <= _IN_PROCESS_MAX_BYTES:
         # a driver-only fold (no session, explicit n_slices) has a thread
         # per slice
-        par = (len(parts) if spark is None
+        par = (1 if serial else len(parts) if spark is None
                else spark.sparkContext.defaultParallelism)
         return _thread_slices(par, rgs, parts, new, read, combine)
     partials = _assign_slices(spark, parts).mapInPandas(
@@ -725,7 +740,8 @@ def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
 
 
 def _thread_slices(n_threads: int, rgs, parts, new, read, combine) -> tuple:
-    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads:
+    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads
+    (one thread: on this thread, each slice run as the fold reaches it):
     no blob, no assignment frame. Each slice opens its own handles over
     the footers ``rgs`` carries, so no handle is shared between threads
     and no footer is parsed twice. Finished slices fold into the first in
@@ -750,8 +766,10 @@ def _thread_slices(n_threads: int, rgs, parts, new, read, combine) -> tuple:
         return _lineage_row(pid, accs[pid], n_rows, t1)
 
     lineage = []
-    with ThreadPoolExecutor(min(n_threads, len(parts))) as pool:
-        for pid, row in enumerate(pool.map(run, range(len(parts)))):
+    n_threads = min(n_threads, len(parts))
+    with ThreadPoolExecutor(n_threads) as pool:
+        runs = (pool.map if n_threads > 1 else map)(run, range(len(parts)))
+        for pid, row in enumerate(runs):
             lineage.append(row)
             if pid:
                 accs[0] = combine(accs[0], accs[pid])
@@ -1075,9 +1093,19 @@ def collect_grouped(grouped_df: DataFrame) -> dict:
     return {k: sk for k, (sk, _) in collect_fleet(grouped_df).items()}
 
 
-def _fleet_frame(spark: SparkSession, fleet: dict) -> DataFrame:
-    """A fleet as the grouped builds' (key, sketch, n_rows, n_items,
-    total_count) frame."""
+def _fleet_dict(fleet) -> dict:
+    """A fleet scan's result (``_fleet_slices``) as ``{key: (sketch,
+    n_rows)}``: the threaded path's dict as it is, the Spark path's frame
+    collected."""
+    return fleet if isinstance(fleet, dict) else collect_fleet(fleet)
+
+
+def _fleet_df(spark: SparkSession, fleet) -> DataFrame:
+    """A fleet scan's result as the grouped builds' (key, sketch, n_rows,
+    n_items, total_count) frame: the Spark path's merged frame as it is,
+    lazy and distributed, the threaded path's dict as a local frame."""
+    if isinstance(fleet, DataFrame):
+        return fleet
     return spark.createDataFrame(
         [(k, sk.to_bytes(), n, sk.n_items, getattr(sk, "total_count", 0))
          for k, (sk, n) in fleet.items()], _GROUPED_MERGED_SCHEMA)
@@ -1091,17 +1119,21 @@ def _fleet_frame(spark: SparkSession, fleet: dict) -> DataFrame:
 # id(): a broadcast blob's id() can be reused by a later broadcast after GC,
 # which would silently serve the wrong sketch. The digest is computed once on
 # the driver (blobs are ~KB-MB) and shipped inside the UDF closure. Bounded
-# FIFO so long sessions with many sketches don't pin old tables.
+# FIFO so long sessions with many sketches don't pin old tables. Locked for
+# inner_product_rawlog_parquet's driver threads; a worker runs one task at
+# a time.
 _SKETCH_CACHE: dict[str, object] = {}
 _SKETCH_CACHE_MAX = 16
+_SKETCH_CACHE_LOCK = threading.Lock()
 
 
 def _cached_sketch(digest: str, blob: bytes):
-    sk = _SKETCH_CACHE.get(digest)
-    if sk is None:
-        while len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX:
-            _SKETCH_CACHE.pop(next(iter(_SKETCH_CACHE)))
-        sk = _SKETCH_CACHE[digest] = serde.loads(bytes(blob))
+    with _SKETCH_CACHE_LOCK:
+        sk = _SKETCH_CACHE.get(digest)
+        if sk is None:
+            while len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX:
+                _SKETCH_CACHE.pop(next(iter(_SKETCH_CACHE)))
+            sk = _SKETCH_CACHE[digest] = serde.loads(bytes(blob))
     return sk
 
 
@@ -1218,18 +1250,29 @@ def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
     runner that build_sketch_parquet runs: the raw log never passes
     through JVM rows, null rows are dropped as the DataFrame version's
     filter drops them, and per slice only a d-vector of partial sums
-    returns."""
-    def feed(sums, batch, file):
-        sums += sketch.row_probe_sums(_flat_values(batch.column(0)))
+    returns. The sketch travels as inner_product_rawlog's does, one
+    broadcast deserialized once per worker (driver threads read the
+    same broadcast; their cached copy is dropped on return)."""
+    blob = sketch.to_bytes()
+    digest = hashlib.blake2b(blob, digest_size=16).hexdigest()
+    bc = spark.sparkContext.broadcast(blob)
+    depth = sketch.cfg.depth
 
-    sums, _ = _run_slices(
-        spark, _list_row_groups(path, column=tokens_col), n_slices,
-        lambda: np.zeros(sketch.cfg.depth, dtype=np.int64),
-        _read_slice([tokens_col], feed), _add_sums,
-        lambda pid, sums, n_rows, t0: {"sums": [sums.tolist()]},
-        "sums array<long>",
-        lambda partials, n: (functools.reduce(
-            _add_sums, (r["sums"] for r in partials.collect())), None))
+    def feed(sums, batch, file):
+        sums += _cached_sketch(digest, bc.value).row_probe_sums(
+            _flat_values(batch.column(0)))
+
+    try:
+        sums, _ = _run_slices(
+            spark, _list_row_groups(path, column=tokens_col), n_slices,
+            lambda: np.zeros(depth, dtype=np.int64),
+            _read_slice([tokens_col], feed), _add_sums,
+            lambda pid, sums, n_rows, t0: {"sums": [sums.tolist()]},
+            "sums array<long>",
+            lambda partials, n: (functools.reduce(
+                _add_sums, (r["sums"] for r in partials.collect())), None))
+    finally:
+        _SKETCH_CACHE.pop(digest, None)
     return int(min(sums))
 
 
@@ -1404,35 +1447,36 @@ def _factory(cfg_or_factory):
 
 
 def _fleet_slices(spark: SparkSession, path: str, files, n_slices,
-                  fanout: int, columns: list[str], feed) -> dict:
-    """The fleet ``{key: (sketch, n_rows)}`` of a grouped parquet scan
-    through the slice runner: ``feed(fleet, batch, file)`` folds each
-    batch of ``columns`` into its slice's fleet, and the slice fleets
-    merge per key in pid order (on the Spark path through
-    ``_grouped_merge`` and ``collect_fleet``)."""
+                  fanout: int, columns: list[str], feed):
+    """A grouped parquet scan through the slice runner: ``feed(fleet,
+    batch, file)`` folds each batch of ``columns`` into its slice's fleet.
+    On driver threads the slices run one at a time (``serial``) and their
+    fleets merge per key in pid order into the fleet ``{key: (sketch,
+    n_rows)}``; on Spark the slice fleets go through ``_grouped_merge``,
+    whose frame is returned uncollected (``_fleet_dict`` and ``_fleet_df``
+    take either form)."""
     fleet, _ = _run_slices(
         spark, _list_row_groups(path, files=files, column=columns),
         n_slices, dict, _read_slice(columns, feed), _merge_fleets,
         lambda pid, fleet, n_rows, t0: _grouped_rows(pid, fleet),
         _GROUPED_PARTIAL_SCHEMA,
-        lambda partials, n: (collect_fleet(
-            _grouped_merge(partials, fanout, n)), None))
+        lambda partials, n: (_grouped_merge(partials, fanout, n), None),
+        serial=True)
     return fleet
 
 
-def grouped_parquet_fleet(spark: SparkSession, path: str, key_col: str,
-                          tokens_col: str, cfg_or_factory, *,
-                          cu: bool = False, fanout: int = 8,
-                          n_slices: int | None = None,
-                          files: list[str] | None = None) -> dict:
+def _grouped_parquet(spark: SparkSession, path: str, key_col: str,
+                     tokens_col: str, cfg_or_factory, *, cu: bool = False,
+                     fanout: int = 8, n_slices: int | None = None,
+                     files: list[str] | None = None):
     """Per-key sketches over a parquet table via Python-side columnar
-    reads, as the fleet ``{key: (sketch, n_rows)}`` — the grouped
-    counterpart of build_sketch_parquet (same ColumnarToRow bypass, same
-    slice reader and runner). ``cfg_or_factory`` is a CMConfig or a
-    zero-arg sketch factory. Null values are dropped, as
-    ``build_grouped``'s filter drops them. ``files`` restricts the scan to
-    an explicit file list (the incremental-maintenance delta, as in
-    build_aggregator_parquet)."""
+    reads — the grouped counterpart of build_sketch_parquet (same
+    ColumnarToRow bypass, same slice reader and runner).
+    ``cfg_or_factory`` is a CMConfig or a zero-arg sketch factory. Null
+    values are dropped, as ``build_grouped``'s filter drops them.
+    ``files`` restricts the scan to an explicit file list (the
+    incremental-maintenance delta, as in build_aggregator_parquet).
+    Returns ``_fleet_slices``' result."""
     factory = _factory(cfg_or_factory)
     return _fleet_slices(
         spark, path, files, n_slices, fanout, [key_col, tokens_col],
@@ -1441,19 +1485,24 @@ def grouped_parquet_fleet(spark: SparkSession, path: str, key_col: str,
             batch.column(tokens_col), factory, cu))
 
 
+def grouped_parquet_fleet(spark: SparkSession, *args, **kwargs) -> dict:
+    """``_grouped_parquet(spark, ...)``'s per-key sketches as the fleet
+    ``{key: (sketch, n_rows)}``."""
+    return _fleet_dict(_grouped_parquet(spark, *args, **kwargs))
+
+
 def build_grouped_parquet(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """``grouped_parquet_fleet(spark, ...)`` as the grouped builds' (key,
-    sketch, n_rows, n_items, total_count) frame."""
-    return _fleet_frame(spark, grouped_parquet_fleet(spark, *args, **kwargs))
+    """``_grouped_parquet(spark, ...)``'s per-key sketches as a (key,
+    sketch, n_rows, n_items, total_count) frame, kept distributed when
+    the scan ran on Spark."""
+    return _fleet_df(spark, _grouped_parquet(spark, *args, **kwargs))
 
 
-def per_file_parquet_fleet(spark: SparkSession, path: str, tokens_col: str,
-                           cfg_or_factory, *, cu: bool = False,
-                           fanout: int = 8, n_slices: int | None = None,
-                           files: list[str] | None = None,
-                           transform=None) -> dict:
-    """One sketch per parquet FILE — the data-skipping index builder — as
-    the fleet ``{key: (sketch, n_rows)}``.
+def _per_file_parquet(spark: SparkSession, path: str, tokens_col: str,
+                      cfg_or_factory, *, cu: bool = False, fanout: int = 8,
+                      n_slices: int | None = None,
+                      files: list[str] | None = None, transform=None):
+    """One sketch per parquet FILE — the data-skipping index builder.
 
     The group key is the file's path RELATIVE TO THE TABLE ROOT, i.e.
     exactly the key the incremental manifest uses (incremental.py
@@ -1475,7 +1524,7 @@ def per_file_parquet_fleet(spark: SparkSession, path: str, tokens_col: str,
     split only at row boundaries and the transform respects them itself,
     so per-file indexing of DERIVED keys needs no extra machinery). Must
     be deterministic: delta folds and rebuilds must derive identical
-    keys."""
+    keys. Returns ``_fleet_slices``' result."""
     factory = _factory(cfg_or_factory)
     root = os.path.abspath(path) if os.path.isdir(path) \
         else os.path.dirname(os.path.abspath(path))
@@ -1490,10 +1539,17 @@ def per_file_parquet_fleet(spark: SparkSession, path: str, tokens_col: str,
                          feed)
 
 
+def per_file_parquet_fleet(spark: SparkSession, *args, **kwargs) -> dict:
+    """``_per_file_parquet(spark, ...)``'s per-file sketches as the fleet
+    ``{file: (sketch, n_rows)}``."""
+    return _fleet_dict(_per_file_parquet(spark, *args, **kwargs))
+
+
 def build_per_file_parquet(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """``per_file_parquet_fleet(spark, ...)`` as the grouped builds' (key,
-    sketch, n_rows, n_items, total_count) frame."""
-    return _fleet_frame(spark, per_file_parquet_fleet(spark, *args, **kwargs))
+    """``_per_file_parquet(spark, ...)``'s per-file sketches as a (key,
+    sketch, n_rows, n_items, total_count) frame, kept distributed when
+    the scan ran on Spark."""
+    return _fleet_df(spark, _per_file_parquet(spark, *args, **kwargs))
 
 
 # ---------------------------------------------------------------------------

@@ -654,6 +654,55 @@ def test_grouped_fleets_agree_across_paths(spark, two_file_path,
     assert sum(n for _, n in threads[1].values()) == 4_000
 
 
+def test_fleet_scans_hold_one_slice_fleet(spark, two_file_path,
+                                          monkeypatch):
+    """On driver threads a fleet scan runs its slices one at a time on
+    the calling thread, so the driver holds the result and one slice's
+    fleet; on the Spark path the grouped and per-file frames come back
+    unbuilt (no Spark job until they are read) and stay distributed."""
+    import threading
+    from sketchlib import spark_build as sb
+
+    seen = set()
+
+    def transform(col):
+        seen.add(threading.get_ident())
+        return sb._flat_values(col)
+
+    fleet = sb.per_file_parquet_fleet(
+        spark, two_file_path, "tokens", CFG, n_slices=4, transform=transform)
+    assert seen == {threading.get_ident()}
+    assert sum(n for _, n in fleet.values()) == 4_000
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    for build in (lambda: sb.build_grouped_parquet(
+                      spark, two_file_path, "source", "tokens", CFG),
+                  lambda: sb.build_per_file_parquet(
+                      spark, two_file_path, "tokens", CFG)):
+        frame, jobs = _run_jobs(spark, "lazy", build)
+        assert jobs == 0
+        assert frame.agg(F.sum("n_rows")).first()[0] == 4_000
+
+
+def test_inner_product_parquet_paths_agree(spark, two_file_path,
+                                          monkeypatch):
+    """inner_product_rawlog_parquet gives the DataFrame version's estimate
+    on driver threads and on the forced Spark path, and the driver keeps
+    no cached copy of the sketch afterwards."""
+    import hashlib
+    from sketchlib import spark_build as sb
+
+    cm = build_sketch_parquet(spark, two_file_path, "tokens", CFG).sketch
+    want = sb.inner_product_rawlog(
+        spark, cm, spark.read.parquet(two_file_path), "tokens")
+    assert sb.inner_product_rawlog_parquet(
+        spark, cm, two_file_path, "tokens", n_slices=4) == want > 0
+    assert hashlib.blake2b(cm.to_bytes(), digest_size=16).hexdigest() \
+        not in sb._SKETCH_CACHE
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    assert sb.inner_product_rawlog_parquet(
+        spark, cm, two_file_path, "tokens", n_slices=4) == want
+
+
 def test_small_grouped_and_file_index_folds_run_no_spark_job(spark,
                                                              tmp_path):
     """A grouped fold and a file-index fold of a 10-row delta build and
