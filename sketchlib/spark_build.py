@@ -11,29 +11,34 @@ metrics)``. Raw tokens never shuffle; only partial blobs move.
 
 One partial builder per source; a sketch type is a factory and a feed.
 DataFrame sources run ``_agg_partial_builder`` (mapInArrow), grouped
-DataFrame builds ``_grouped_agg_builder``, and every parquet scan
-(ungrouped, grouped, per-file, inner product) one slice reader
-(``_read_slice``) under one runner (``_run_slices``, on driver threads or
-in Spark tasks); each ungrouped Spark task emits the same partial record
-(``_partial_row``). The factory makes an empty sketch; the feed updates
-it from one Arrow batch or column. Count-Min is ``CountMinSketch(cfg)``
-fed by ``update_batch`` (``update_batch_cu`` when ``cu``), as any other
-sketch.
+DataFrame builds ``_grouped_agg_builder``. Every parquet scan (ungrouped,
+grouped, per-file, inner product) goes through one runner
+(``_run_slices``) with one feed ``(accumulator, batch, file)``: on driver
+threads one slice reader (``_read_slice``) streams row-group slices into
+it; on Spark the same feed drives those mapInArrow builders (or
+``inner_product_rawlog``'s) over ``spark.read.parquet`` of the same files
+(``_spark_scan``). Each ungrouped Spark task emits the same partial
+record (``_partial_row``). The factory makes an empty sketch; the feed
+updates it from one Arrow batch or column. Count-Min is
+``CountMinSketch(cfg)`` fed by ``update_batch`` (``update_batch_cu`` when
+``cu``), as any other sketch.
 
 One planner turns partials into the result, picking one of three cases
 from sizes the driver already knows:
 
   threads      parquet scans whose columns read are at most
                _IN_PROCESS_MAX_BYTES uncompressed (from the row-group
-               footers the planner reads anyway): the slice reader the
-               Spark tasks run is called on a pool of defaultParallelism
-               driver threads (a per-key fleet's slices one at a time)
-               and the slice accumulators (a sketch, a fleet or a vector
-               of inner-product sums) fold in pid order; no Spark job, no
-               partial blob (perfbench's build table, every incremental
-               delta it folds, and the grouped and per-file folds of
-               small deltas). On Spark, grouped and per-file frames stay
-               distributed (``_grouped_merge``).
+               footers the planner reads anyway), or that have no
+               session: the slice reader runs on a pool of
+               defaultParallelism driver threads (a per-key fleet's
+               slices one at a time) and the slice accumulators (a
+               sketch, a fleet or a vector of inner-product sums) fold in
+               pid order; no Spark job, no partial blob (perfbench's
+               build table, every incremental delta it folds, and the
+               grouped and per-file folds of small deltas). Larger scans
+               read through Spark's parquet scan, one partial per scan
+               partition; grouped and per-file frames stay distributed
+               (``_grouped_merge``).
   driver fold  partial count x partial bytes <= _DRIVER_FOLD_MAX_BYTES:
                ONE Spark job collects every partial, blob and lineage
                together (``toArrow``); the driver folds the blobs in pid
@@ -45,9 +50,9 @@ from sizes the driver already knows:
 
 CM, HLL, theta, Bloom and Count-Sketch merge by addition (or max/union), so
 all three cases and every partitioning give byte-identical results.
-Order-sensitive sketches (MG, KLL) are folded in a fixed pid order, so the
-driver fold and the threaded path agree byte for byte and every path is
-reproducible run to run on the same layout.
+Order-sensitive sketches (MG, KLL) are folded in a fixed pid order, so
+every path is reproducible run to run on the same layout; their bytes
+follow the layout (threaded slices or Spark's file splits).
 
 Checkpointed builds write partials to a parquet directory keyed by
 partition id (the analogue of the reference's mmap'd SSD residency,
@@ -66,6 +71,7 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -110,18 +116,15 @@ _DRIVER_FOLD_MAX_BYTES = 64 << 20
 # 0.55 s median). A Count-Min folds about 165 MB/s of column bytes on 4
 # threads (~90 MB in that time), the catalog's cm+theta+mg+bloom
 # MultiSketch about 70 MB/s (~39 MB); 48 MB sits between them. Above it
-# the Spark path runs, whose executors can outnumber the driver's cores;
-# on local[4] the threads stay ahead at every size measured (143 MB: 0.82
-# vs 2.76 s for a Count-Min, 1.96 vs 3.87 s for the MultiSketch; 4 vCPU).
-# perfbench's build table (35.8 MB), its registered ingest table (0.59 MB)
-# and its deltas (17 KB) all build on threads. The other parquet scans
-# share the bound; near it (44.1 MB of a 62,000-row token table's source
-# and tokens columns, Count-Min eps 1e-4, medians of 5, local[4]) threads
-# against the forced Spark path took: a grouped fleet, one slice at a
-# time, 0.95 vs 1.38 s; a per-file fleet 0.68 vs 1.09 s; the inner
-# product 0.35 vs 0.87 s; but build_grouped_parquet read back with
-# collect_fleet 1.33 vs 1.22 s, its local frame's round trip costing more
-# than the two Spark jobs save (ROADMAP).
+# a scan reads through Spark's parquet scan, whose executors can
+# outnumber the driver's cores. At the bound (47.6 MB of a 16-row-group
+# token table, Count-Min eps 1e-4, local[4], medians of 3, 4 vCPU)
+# threads against that route took 0.46 vs 1.09 s for a build and 0.41 vs
+# 1.16 s for the inner product, but 1.89 vs 1.45 s for a grouped fleet,
+# whose slices run one at a time (ROADMAP); at 150 MB 1.01 vs 1.96 s,
+# 1.00 vs 1.68 s and 4.35 vs 2.36 s. perfbench's build table (35.8 MB),
+# its registered ingest table (0.59 MB) and its deltas (17 KB) all build
+# on threads.
 _IN_PROCESS_MAX_BYTES = 48 << 20
 
 
@@ -197,13 +200,12 @@ def _lineage_row(pid: int, sk, n_rows: int, t0: float) -> dict:
             "build_ms": (time.perf_counter() - t0) * 1e3}
 
 
-def _partial_row(pid: int, sk, n_rows: int, t0: float) -> dict:
-    """THE partial record of every ungrouped Spark builder, as columns:
-    its lineage and the ``dumps_partial`` blob (size-adaptive where the
-    sketch has such an encoding)."""
-    lin = _lineage_row(pid, sk, n_rows, t0)
-    return {k: [v] for k, v in
-            {"pid": pid, "sketch": serde.dumps_partial(sk), **lin}.items()}
+def _partial_row(sk, lin: dict) -> dict:
+    """THE partial record of every ungrouped Spark builder and of the
+    checkpointed parquet build: a partial's lineage (``_lineage_row``)
+    and its ``dumps_partial`` blob (size-adaptive where the sketch has
+    such an encoding)."""
+    return {"pid": lin["pid"], "sketch": serde.dumps_partial(sk), **lin}
 
 
 def _update(sk, vals, cu: bool) -> None:
@@ -236,18 +238,24 @@ def _agg_partial_builder(factory, feed, skip_pids=frozenset()):
         for batch in batches:
             feed(sk, batch)
             n_rows += batch.num_rows
-        yield pa.RecordBatch.from_pydict(_partial_row(pid, sk, n_rows, t0),
-                                         schema=_PARTIAL_PA_SCHEMA)
+        yield pa.RecordBatch.from_pylist(
+            [_partial_row(sk, _lineage_row(pid, sk, n_rows, t0))],
+            schema=_PARTIAL_PA_SCHEMA)
     return fn
+
+
+def _frame_merge(src: DataFrame, factory, feed, fanout: int | None) -> tuple:
+    """Partials of ``src`` through the one builder, merged by the
+    planner: (sketch or None, lineage table), as ``_merge``."""
+    partials = src.mapInArrow(_agg_partial_builder(factory, feed),
+                              schema=_PARTIAL_SCHEMA)
+    return _merge(partials, partials.rdd.getNumPartitions(),
+                  _blob_bytes(factory), fanout)
 
 
 def _build_frame(src: DataFrame, factory, feed, fanout: int | None,
                  t0: float) -> BuildResult:
-    """Partials of ``src`` through the one builder, merged by the planner."""
-    partials = src.mapInArrow(_agg_partial_builder(factory, feed),
-                              schema=_PARTIAL_SCHEMA)
-    return _result(*_merge(partials, partials.rdd.getNumPartitions(),
-                           _blob_bytes(factory), fanout), factory, t0)
+    return _result(*_frame_merge(src, factory, feed, fanout), factory, t0)
 
 
 def _fold(pids, blobs):
@@ -400,21 +408,27 @@ def build_sketch_from_counts(df: DataFrame, key_col: str, count_col: str,
 
 
 # ---------------------------------------------------------------------------
-# parquet-direct source: pyarrow row-group reads in the driver's threads or
-# inside the Python workers
+# parquet-direct source: pyarrow row-group reads on driver threads, Spark's
+# own parquet scan above the thread bound
 # ---------------------------------------------------------------------------
-# Spark's physical plan for mapInArrow over a parquet scan is
-# Scan(columnar) -> ColumnarToRow -> MapInArrow: every array element is
-# bounced through a JVM row before being re-encoded to Arrow (measured
-# ~0.5 GB/s ceiling — the NumPy kernel alone sustains >5 GB/s aggregate).
-# For every parquet scan here (a sketch, a per-key or per-file fleet, an
-# inner product) we instead cut the table into *row-group slices* and read
-# each straight into Arrow with pyarrow, through one reader
-# (``_read_slice``) and one runner (``_run_slices``): small tables on
-# driver threads, larger ones one Spark task per slice, the pattern of a
-# columnar DataSource, with Spark still owning distribution, retries and
-# the merge topology. Slices are deterministic, so checkpoint resume is
-# keyed by slice id and carries (file, row-group) lineage.
+# Every parquet scan here (a sketch, a per-key or per-file fleet, an inner
+# product) lists the table's row groups from their footers and runs under
+# one runner (``_run_slices``) with one feed, one of two ways:
+# - up to _IN_PROCESS_MAX_BYTES of the columns read, or with no session,
+#   driver threads cut the row groups into slices and read them straight
+#   into Arrow with pyarrow (``_read_slice``): no Spark job, no JVM row,
+#   no partial blob;
+# - above it, ``spark.read.parquet`` of the same files (``_spark_scan``)
+#   feeds the DataFrame builders' mapInArrow functions, and Spark owns the
+#   splits, distribution, retries and the merge topology.
+# Above the bound Spark's own scan, not pyarrow reads inside Spark's
+# Python workers: those slice tasks lost to it on local[4] for every
+# shape (150 MB, 16 row groups, medians of 3: Count-Min 2.97 vs 1.96 s,
+# grouped fleet 3.58 vs 2.36 s, inner product 2.75 vs 1.68 s; 4 vCPU).
+# The ColumnarToRow ceiling they were built around (~0.5 GB/s, measured
+# on 32 cores) has not been re-measured. Threaded slices are
+# deterministic, so a checkpointed build's resume is keyed by slice id and
+# carries (file, row-group) lineage.
 
 
 def _list_row_groups(path: str, files: list[str] | None = None,
@@ -425,11 +439,11 @@ def _list_row_groups(path: str, files: list[str] | None = None,
     list of names a scan reads; every leaf of a nested column; 0 when
     None) in that row group — the planner's size; ``footer`` is the
     file's parsed FileMetaData, which the threaded slices open their
-    handles with. Hive-partitioned layouts
-    (key=val dirs) are REFUSED: their partition columns live in directory
-    names, not the files, so a raw row-group scan would silently drop them
-    — route those through ``build_sketch(spark.read.parquet(path), ...)``
-    instead.
+    handles with and the Spark route takes its schema from.
+    Hive-partitioned layouts (key=val dirs) are REFUSED: their partition
+    columns live in directory names, not the files, so a raw row-group
+    scan would silently drop them — route those through
+    ``build_sketch(spark.read.parquet(path), ...)`` instead.
 
     ``files``: explicit file list (absolute paths) to scan INSTEAD of
     walking ``path`` — the incremental-maintenance path, where only the
@@ -504,94 +518,76 @@ def _slice_assignments(rgs: list[tuple], n_slices: int) -> list[list]:
 _SLICE_BATCH_ROWS = 512
 _READ_BUFFER_BYTES = 256 << 10
 
-# Worker-persistent ParquetFile handles: a task re-opening the file would
-# re-parse the whole footer (~0.25 s on a 640-row-group file), and tasks
-# scale with row groups, so per-task parses are O(row_groups^2) total work
-# — measured as ~30% of all worker CPU before caching. Reused Python
-# workers keep this module imported, so the cache amortizes to one parse
-# per (worker, file). Entries are validated against os.stat (mtime_ns,
-# size): a file rewritten at the same path within a long-lived session is
-# reopened, not served stale. Bounded FIFO so worker fds don't accumulate.
-# Spark workers only (``_spark_slices``): the dict is unlocked, and a
-# handle is not shared between threads — driver threads open their own
-# over the footers ``_list_row_groups`` parsed (``_thread_slices``).
-_PQ_FILE_CACHE: dict = {}
-_PQ_FILE_CACHE_MAX = 64
-
-
-def _pq_file(path: str):
+def _read_slice(acc, parts, footers: dict, columns: list[str], feed) -> int:
+    """THE parquet slice reader: streams ``columns`` of the row groups of
+    ``parts`` ([(file, [row_group]), ...]) as record batches through a
+    handle of its own over each file's parsed footer (``footers``), drops
+    the rows whose value (the last column) is null, folds each batch into
+    the accumulator ``acc`` with ``feed(acc, batch, file)`` and returns
+    the rows it kept. Null rows go as the DataFrame builds' isNotNull
+    filter drops them (a null scalar would decay its batch to float64
+    NaNs), so the sketch bytes and ``n_rows`` equal those builds'."""
     import pyarrow.parquet as pq
-    st = os.stat(path)
-    sig = (st.st_mtime_ns, st.st_size)
-    entry = _PQ_FILE_CACHE.get(path)
-    if entry is not None and entry[0] == sig:
-        return entry[1]
-    if entry is not None:
-        del _PQ_FILE_CACHE[path]
-    pf = pq.ParquetFile(path)
-    while len(_PQ_FILE_CACHE) >= _PQ_FILE_CACHE_MAX:
-        _PQ_FILE_CACHE.pop(next(iter(_PQ_FILE_CACHE)))
-    _PQ_FILE_CACHE[path] = (sig, pf)
-    return pf
+    n_rows = 0
+    for file, rgs in parts:
+        pf = pq.ParquetFile(file, metadata=footers[file],
+                            buffer_size=_READ_BUFFER_BYTES)
+        for rg in rgs:
+            # use_threads=False: every core already runs a slice;
+            # nested Arrow threadpools thrash
+            for batch in pf.iter_batches(
+                    _SLICE_BATCH_ROWS, row_groups=[int(rg)],
+                    columns=columns, use_threads=False):
+                value = batch.column(columns[-1])
+                if value.null_count:
+                    batch = batch.filter(value.is_valid())
+                n_rows += batch.num_rows   # ROWS, before list flattening
+                feed(acc, batch, file)
+    return n_rows
 
 
-def _read_slice(columns: list[str], feed):
-    """THE parquet slice reader: ``read(acc, parts, open_file) -> n_rows``
-    streams ``columns`` of the row groups of ``parts`` ([(file,
-    [row_group]), ...]) as record batches through ``open_file(path)``'s
-    handle, drops the rows whose value (the last column) is null, and
-    folds each batch into the accumulator ``acc`` with ``feed(acc, batch,
-    file)``. Null rows go as the DataFrame builds' isNotNull filter drops
-    them (a null scalar would decay its batch to float64 NaNs), so the
-    sketch bytes and ``n_rows`` equal those builds'."""
-    def read(acc, parts, open_file):
-        n_rows = 0
-        for file, rgs in parts:
-            pf = open_file(file)
-            for rg in rgs:
-                # use_threads=False: every core already runs a slice;
-                # nested Arrow threadpools (32 tasks x 32 threads) thrash
-                for batch in pf.iter_batches(
-                        _SLICE_BATCH_ROWS, row_groups=[int(rg)],
-                        columns=columns, use_threads=False):
-                    value = batch.column(columns[-1])
-                    if value.null_count:
-                        batch = batch.filter(value.is_valid())
-                    n_rows += batch.num_rows   # ROWS, before list flattening
-                    feed(acc, batch, file)
-        return n_rows
-    return read
-
-
-def _parquet_slice(values_col: str, extract_array=None, cu: bool = False):
-    """The ungrouped slice reader: one sketch fed ``extract_array(pa.Array)
-    -> np.ndarray`` of ``values_col`` (default: flatten; e.g.
+def _array_feed(extract_array=None, cu: bool = False):
+    """The ungrouped scans' feed: one sketch fed ``extract_array(pa.Array)
+    -> np.ndarray`` of the batch's value column (default: flatten; e.g.
     ngrams.array_bigrams) into ``update_batch``, or ``update_batch_cu``
     when ``cu``."""
     extract_array = extract_array or _flat_values
-    return _read_slice([values_col], lambda sk, batch, file: _update(
-        sk, extract_array(batch.column(0)), cu))
+    return lambda sk, batch, file: _update(
+        sk, extract_array(batch.column(0)), cu)
 
 
-def _spark_slices(new, read, emit):
-    """mapInPandas function of the slice runner's Spark path: every slice
-    of the assignment frame (``_assign_slices``) fills a ``new()``
-    accumulator through ``read``, its files opened through the
-    worker-persistent cache, and yields the columns ``emit(slice_id, acc,
-    n_rows, t0)`` keyed by its own slice id (checkpoint resume
-    correctness), or nothing when they are None."""
-    def fn(pdf_iter):
-        for pdf in pdf_iter:
-            for s, files, rgs in zip(pdf["slice_id"], pdf["files"],
-                                     pdf["rgs"]):
-                t0 = time.perf_counter()
-                acc = new()
-                n_rows = read(acc, [(f, [int(r) for r in rl])
-                                    for f, rl in zip(files, rgs)], _pq_file)
-                out = emit(int(s), acc, n_rows, t0)
-                if out is not None:
-                    yield pd.DataFrame(out)
-    return fn
+def _spark_scan(spark: SparkSession, rgs, columns: list[str], feed,
+                with_file: bool = False) -> tuple:
+    """The Spark route of a parquet scan, (frame, batch feed): the frame
+    is ``spark.read.parquet`` of the files ``rgs`` lists, ``columns`` read
+    with the types of the first footer (a given schema spares Spark's
+    schema-inference job), rows whose value (the last column) is null
+    dropped as ``_read_slice`` drops them; the batch feed is the slice
+    ``feed`` as a mapInArrow feed ``(acc, batch)``, with ``file`` None.
+    ``with_file`` also reads each row's ``_metadata.file_path``, and the
+    feed folds each file's rows of a batch with that file's local path
+    (Spark gives a percent-encoded URI), as the threads name it."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    footer = rgs[0][4].schema.to_arrow_schema()
+    cols = [F.col(c) for c in columns]
+    if with_file:
+        cols.append(F.col("_metadata.file_path"))
+    src = (spark.read.schema(from_arrow_schema(
+               pa.schema([footer.field(c) for c in columns])))
+           .parquet(*dict.fromkeys(r[0] for r in rgs))
+           .select(*cols).filter(F.col(columns[-1]).isNotNull()))
+    if not with_file:
+        return src, lambda acc, batch: feed(acc, batch, None)
+
+    def by_file(acc, batch):
+        import pyarrow.compute as pc
+        uris = batch.column(len(columns))
+        files = pc.unique(uris)
+        for uri in files.to_pylist():
+            feed(acc, batch if len(files) == 1
+                 else batch.filter(pc.equal(uris, uri)),
+                 unquote(urlparse(uri).path))
+    return src, by_file
 
 
 def _rg_layout_digest(rgs: list[tuple]) -> str:
@@ -636,15 +632,13 @@ def _pin_checkpoint_slices(checkpoint_dir: str, rgs, n_slices: int | None,
 
 
 def _default_n_slices(spark: SparkSession, n_rgs: int) -> int:
-    # ~4 slices per core, one rule for both paths so that they build the
-    # same slices. On Spark the Python-worker framework costs ~0.2-0.3 s
-    # per task (measured via machine-busy minus in-task CPU), so
-    # row-group-sized tasks (~3M tokens) burn ~50% of worker CPU on
-    # overhead; ~4x-parallelism slices amortize it while keeping
-    # stragglers bounded. On driver threads the count barely matters: a
-    # 143 MB, 16-row-group table took 0.78 s as 4 slices and as 16 on 4
-    # threads (4 vCPU). Explicit n_slices overrides (finer slices = finer
-    # checkpoint lineage).
+    # ~4 slices per core, at most one per row group: the threaded slices
+    # and a checkpointed build's pinned resume units. On driver threads
+    # the count barely matters: a 143 MB, 16-row-group table took 0.78 s
+    # as 4 slices and as 16 on 4 threads (4 vCPU). Explicit n_slices
+    # overrides (finer slices = finer checkpoint lineage). Above the
+    # thread bound a scan's partials are Spark's scan partitions, so
+    # n_slices, explicit or not, shapes nothing there.
     par = spark.sparkContext.defaultParallelism
     return min(n_rgs, max(4 * par, 1))
 
@@ -653,25 +647,28 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
                          cfg: CMConfig, *, cu: bool = False,
                          fanout: int | None = None, n_slices: int | None = None,
                          checkpoint_dir: str | None = None) -> BuildResult:
-    """Count-Min build over a parquet table using Python-side columnar reads.
+    """Count-Min build over a parquet table through the parquet scan
+    runner.
 
     Functionally identical (byte-identical result, same ``n_rows``) to
-    ``build_sketch(spark.read.parquet(path), ...)``, and the token arrays
-    never pass through JVM rows. On driver threads (up to
-    _IN_PROCESS_MAX_BYTES) it is 3.8x faster: 0.21 vs 0.80 s over a
-    35.7 MB table on local[4] (4 vCPU). Null rows are dropped as in
-    ``build_sketch``; list and scalar columns are both accepted. With
-    ``checkpoint_dir`` the slice assignment is pinned in
-    {checkpoint_dir}/SLICES.json on the first run, so resume skips completed
-    slices before any IO happens and is immune to a changed core count or
-    data layout (validated, not assumed).
+    ``build_sketch(spark.read.parquet(path), ...)``, which it is above
+    _IN_PROCESS_MAX_BYTES; up to that bound driver threads read the
+    token arrays with pyarrow, never through JVM rows, 3.8x faster: 0.21
+    vs 0.80 s over a 35.7 MB table on local[4] (4 vCPU). Null rows are
+    dropped as in ``build_sketch``; list and scalar columns are both
+    accepted. With ``checkpoint_dir`` the slice assignment is pinned in
+    {checkpoint_dir}/SLICES.json on the first run, so resume skips
+    completed slices before any IO happens and is immune to a changed
+    core count or data layout (validated, not assumed); the slices a
+    checkpoint lacks build on driver threads at any size.
     """
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, column=tokens_col)
     factory = functools.partial(CountMinSketch, cfg)
-    read = _parquet_slice(tokens_col, cu=cu)
+    feed = _array_feed(cu=cu)
     if checkpoint_dir is None:
-        return _build_slices(spark, rgs, n_slices, read, fanout, factory, t0)
+        return _build_slices(spark, rgs, n_slices, tokens_col, feed, fanout,
+                             factory, t0)
     if not rgs:
         return BuildResult.empty(factory(), time.perf_counter() - t0)
     # pass the raw (possibly-None) n_slices: an explicit value must match
@@ -682,111 +679,105 @@ def build_sketch_parquet(spark: SparkSession, path: str, tokens_col: str,
         checkpoint_dir.rstrip("/"), rgs, n_slices,
         _default_n_slices(spark, len(rgs)))
     parts = _slice_assignments(rgs, n_slices)
-    return _checkpointed(
-        spark, checkpoint_dir, len(parts),
-        lambda done: _assign_slices(spark, parts, done).mapInPandas(
-            _spark_slices(factory, read, _partial_row),
-            schema=_PARTIAL_SCHEMA),
-        _blob_bytes(factory), fanout, factory, t0)
+
+    def fresh(done):
+        return spark.createDataFrame(pa.Table.from_pylist(
+            [_partial_row(sk, lin) for sk, lin in _thread_slices(
+                spark.sparkContext.defaultParallelism, rgs,
+                [(s, p) for s, p in enumerate(parts) if s not in done],
+                factory, [tokens_col], feed)],
+            schema=_PARTIAL_PA_SCHEMA))
+
+    return _checkpointed(spark, checkpoint_dir, len(parts), fresh,
+                         _blob_bytes(factory), fanout, factory, t0)
 
 
-def _assign_slices(spark: SparkSession, parts,
-                   skip=frozenset()) -> DataFrame:
-    """Assignment frame of the slices ``parts`` not in ``skip``: one row,
-    so one task, per slice, however many files it spans."""
-    return _assign_df(spark, [(s, [f for f, _ in p], [r for _, r in p])
-                              for s, p in enumerate(parts) if s not in skip],
-                      "slice_id int, files array<string>, "
-                      "rgs array<array<int>>")
+def _run_slices(spark: SparkSession, rgs, n_slices: int | None,
+                columns: list[str], feed, new, combine, on_spark, *,
+                serial: bool = False, with_file: bool = False) -> tuple:
+    """THE parquet scan runner, the one place every parquet scan picks
+    driver threads or Spark. ``rgs`` (``_list_row_groups``) lists the
+    table's row groups; ``feed(acc, batch, file)`` folds a record batch
+    of ``columns`` (the value last) read from ``file`` into an
+    accumulator made by ``new()`` (one sketch, a ``{key: (sketch,
+    n_rows)}`` fleet, a depth-vector of sums). Returns (accumulator,
+    lineage table):
 
+    - with a session and more than _IN_PROCESS_MAX_BYTES of the columns
+      read (``rgs``' fourth field): ``on_spark(src, batch_feed)`` of
+      ``_spark_scan``'s frame and feed (``with_file`` as there), which
+      runs the caller's DataFrame builder over Spark's parquet scan;
+    - otherwise ``n_slices`` slices of the row groups run on
+      ``_thread_slices``' pool and fold with ``combine(a, b) -> a`` in
+      pid order; ``serial`` runs them one at a time on the calling thread
+      instead, for accumulators that grow with their input (a fleet
+      holds a sketch per key its slice touches, so the driver holds the
+      result and one slice's fleet, not one per thread). Without a
+      session, threads are the one route at any size, a thread per
+      slice.
 
-def _run_slices(spark: SparkSession, rgs, n_slices: int | None, new, read,
-                combine, emit, schema: str, finish,
-                serial: bool = False) -> tuple:
-    """THE parquet slice runner, the one place every parquet scan picks
-    threads or Spark. ``rgs`` (``_list_row_groups``) is cut into slices;
-    each fills a ``new()`` accumulator (one sketch, a ``{key: (sketch,
-    n_rows)}`` fleet, a depth-vector of sums) through ``read(acc, parts,
-    open_file)`` (``_read_slice``). Returns (accumulator, lineage table):
-
-    - the columns read (``rgs``' fourth field) at most
-      _IN_PROCESS_MAX_BYTES: the slices run on ``_thread_slices``' pool
-      and fold with ``combine(a, b) -> a`` in pid order; ``serial`` runs
-      them one at a time on the calling thread instead, for accumulators
-      that grow with their input (a fleet holds a sketch per key its
-      slice touches, so the driver holds the result and one slice's
-      fleet, not one per thread);
-    - above it, one Spark task per slice emits ``emit(pid, acc, n_rows,
-      t0)`` rows of ``schema``, and ``finish(partials, n_slices)`` turns
-      them into the pair.
-
-    The slices and their reader are the same either way, so the
-    accumulators and their pid-order fold are too. No row group gives
-    (``new()``, no lineage row)."""
+    No row group gives (``new()``, no lineage row)."""
     if not rgs:
         return new(), _LINEAGE_PA_SCHEMA.empty_table()
+    if spark is not None and sum(r[3] for r in rgs) > _IN_PROCESS_MAX_BYTES:
+        return on_spark(*_spark_scan(spark, rgs, columns, feed, with_file))
     if n_slices is None:
         n_slices = _default_n_slices(spark, len(rgs))
     parts = _slice_assignments(rgs, n_slices)
-    if sum(r[3] for r in rgs) <= _IN_PROCESS_MAX_BYTES:
-        # a driver-only fold (no session, explicit n_slices) has a thread
-        # per slice
-        par = (1 if serial else len(parts) if spark is None
-               else spark.sparkContext.defaultParallelism)
-        return _thread_slices(par, rgs, parts, new, read, combine)
-    partials = _assign_slices(spark, parts).mapInPandas(
-        _spark_slices(new, read, emit), schema=schema)
-    return finish(partials, len(parts))
+    par = (1 if serial else len(parts) if spark is None
+           else spark.sparkContext.defaultParallelism)
+    acc, lineage = None, []
+    for a, row in _thread_slices(par, rgs, list(enumerate(parts)), new,
+                                 columns, feed):
+        acc = a if acc is None else combine(acc, a)
+        lineage.append(row)
+    return acc, pa.Table.from_pylist(lineage, schema=_LINEAGE_PA_SCHEMA)
 
 
-def _thread_slices(n_threads: int, rgs, parts, new, read, combine) -> tuple:
-    """Every slice of ``parts`` on a pool of ``n_threads`` driver threads
-    (one thread: on this thread, each slice run as the fold reaches it):
-    no blob, no assignment frame. Each slice opens its own handles over
-    the footers ``rgs`` carries, so no handle is shared between threads
-    and no footer is parsed twice. Finished slices fold into the first in
-    pid order and are dropped, so the driver holds the result and the
-    slices in flight, not every slice. The accumulators are made on this
-    thread, not the pool's: the result outlives the build, and in a pool
-    thread's malloc arena it kept that arena's freed memory resident (100
-    driver-only builds of perfbench's build table, keeping every result,
-    peaked at 271-272 MB RSS that way and at 252-254 MB this way; 4
-    vCPU)."""
-    import pyarrow.parquet as pq
+def _thread_slices(n_threads: int, rgs, slices: list, new,
+                   columns: list[str], feed):
+    """Yields (accumulator, lineage row) of every ``(pid, parts)`` slice of
+    ``slices``, in that order, each a ``new()`` accumulator that
+    ``_read_slice`` fills with ``feed``, on a pool of ``n_threads``
+    driver threads (one thread: on this thread, each slice run as the
+    caller reaches it): no blob, no Spark task. Each slice opens its own
+    handles over the footers ``rgs`` carries, so no handle is shared
+    between threads and no footer is parsed twice. A yielded slice is
+    dropped here, so the caller decides what stays: the runner folds it,
+    the checkpointed build serializes it. The accumulators are made on
+    this thread, not the pool's: the result outlives the build, and in a
+    pool thread's malloc arena it kept that arena's freed memory resident
+    (100 driver-only builds of perfbench's build table, keeping every
+    result, peaked at 271-272 MB RSS that way and at 252-254 MB this way;
+    4 vCPU)."""
     footers = {r[0]: r[4] for r in rgs}
-    accs = [new() for _ in parts]
+    accs = [new() for _ in slices]
 
-    def open_file(f):
-        return pq.ParquetFile(f, metadata=footers[f],
-                              buffer_size=_READ_BUFFER_BYTES)
-
-    def run(pid):
+    def run(i):
+        pid, parts = slices[i]
         t1 = time.perf_counter()
-        n_rows = read(accs[pid], parts[pid], open_file)
-        return _lineage_row(pid, accs[pid], n_rows, t1)
+        n_rows = _read_slice(accs[i], parts, footers, columns, feed)
+        return _lineage_row(pid, accs[i], n_rows, t1)
 
-    lineage = []
-    n_threads = min(n_threads, len(parts))
+    n_threads = min(n_threads, len(slices))
     with ThreadPoolExecutor(n_threads) as pool:
-        runs = (pool.map if n_threads > 1 else map)(run, range(len(parts)))
-        for pid, row in enumerate(runs):
-            lineage.append(row)
-            if pid:
-                accs[0] = combine(accs[0], accs[pid])
-                accs[pid] = None
-    return accs[0], pa.Table.from_pylist(lineage, schema=_LINEAGE_PA_SCHEMA)
+        runs = (pool.map if n_threads > 1 else map)(run, range(len(slices)))
+        for i, row in enumerate(runs):
+            acc, accs[i] = accs[i], None
+            yield acc, row
 
 
-def _build_slices(spark: SparkSession, rgs, n_slices: int | None, read,
-                  fanout: int | None, factory, t0: float) -> BuildResult:
-    """``factory()`` sketches filled by an ungrouped slice reader
-    (``_parquet_slice``) through the slice runner; on the Spark path the
-    merge planner folds their partials."""
+def _build_slices(spark: SparkSession, rgs, n_slices: int | None,
+                  values_col: str, feed, fanout: int | None, factory,
+                  t0: float) -> BuildResult:
+    """``factory()`` sketches of ``values_col`` filled by an ungrouped
+    feed (``_array_feed``) through the scan runner; on Spark the one
+    builder and the merge planner (``_frame_merge``) run over the scan."""
     return _result(*_run_slices(
-        spark, rgs, n_slices, factory, read, lambda a, b: a.merge(b),
-        _partial_row, _PARTIAL_SCHEMA,
-        lambda partials, n: _merge(partials, n, _blob_bytes(factory),
-                                   fanout)), factory, t0)
+        spark, rgs, n_slices, [values_col], feed, factory,
+        lambda a, b: a.merge(b),
+        lambda src, batch_feed: _frame_merge(src, factory, batch_feed,
+                                             fanout)), factory, t0)
 
 
 _GEN_TOKBUF = None  # per-worker persistent token buffer (see fn below)
@@ -852,8 +843,8 @@ def build_sketch_generated(spark: SparkSession, rows: int, cfg: CMConfig, *,
                     # measured — Session E); with IO/decode interleaved
                     # (parquet path) the heuristic default still wins
                     cm.update_batch(toks, preaggregate=False)
-                yield pd.DataFrame(_partial_row(int(row["chunk"]), cm,
-                                                int(row["n"]), t1))
+                yield pd.DataFrame([_partial_row(cm, _lineage_row(
+                    int(row["chunk"]), cm, int(row["n"]), t1))])
 
     factory = functools.partial(CountMinSketch, cfg)
     if not assigns:
@@ -1016,9 +1007,14 @@ def _grouped_frame(df: DataFrame, key_col: str, values_col: str, factory,
     """Per-key sketches of one value column through the grouped builder."""
     src = (df.select(F.col(key_col).alias("key"), F.col(values_col))
              .filter(F.col(values_col).isNotNull()))
-    partials = src.mapInArrow(
-        _grouped_agg_builder(_grouped_feed(values_col, factory, cu)),
-        schema=_GROUPED_PARTIAL_SCHEMA)
+    return _grouped_build(src, _grouped_feed(values_col, factory, cu), fanout)
+
+
+def _grouped_build(src: DataFrame, ingest, fanout: int) -> DataFrame:
+    """Per-key sketches of ``src``: the grouped builder fed by
+    ``ingest(fleet, batch)``, its partials merged per key."""
+    partials = src.mapInArrow(_grouped_agg_builder(ingest),
+                              schema=_GROUPED_PARTIAL_SCHEMA)
     return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
 
 
@@ -1119,9 +1115,10 @@ def _fleet_df(spark: SparkSession, fleet) -> DataFrame:
 # id(): a broadcast blob's id() can be reused by a later broadcast after GC,
 # which would silently serve the wrong sketch. The digest is computed once on
 # the driver (blobs are ~KB-MB) and shipped inside the UDF closure. Bounded
-# FIFO so long sessions with many sketches don't pin old tables. Locked for
-# inner_product_rawlog_parquet's driver threads; a worker runs one task at
-# a time.
+# FIFO so long sessions with many sketches don't pin old tables. A Spark
+# Python worker runs one task at a time, so the lock is uncontended there;
+# it keeps the check-then-insert whole for a caller that probes from
+# several threads of one process.
 _SKETCH_CACHE: dict[str, object] = {}
 _SKETCH_CACHE_MAX = 16
 _SKETCH_CACHE_LOCK = threading.Lock()
@@ -1208,6 +1205,12 @@ def inner_product_rawlog(spark: SparkSession, sketch: CountMinSketch,
     two-sketch estimate bit-for-bit — but skips the second build's shuffle
     and memory. Per partition only a d-vector of partial sums moves.
     """
+    return int(min(_rawlog_sums(spark, sketch, df, tokens_col)))
+
+
+def _rawlog_sums(spark: SparkSession, sketch: CountMinSketch, df: DataFrame,
+                 tokens_col: str) -> list:
+    """inner_product_rawlog's depth-vector of row sums, before the min."""
     blob = sketch.to_bytes()
     digest = hashlib.blake2b(blob, digest_size=16).hexdigest()
     bc = spark.sparkContext.broadcast(blob)
@@ -1232,8 +1235,8 @@ def inner_product_rawlog(spark: SparkSession, sketch: CountMinSketch,
 
     src = df.select(tokens_col).filter(F.col(tokens_col).isNotNull())
     rows = src.mapInArrow(fn, schema="sums array<long>").collect()
-    return int(min(functools.reduce(_add_sums, (r["sums"] for r in rows),
-                                    [0] * depth)))
+    return functools.reduce(_add_sums, (r["sums"] for r in rows),
+                            [0] * depth)
 
 
 def _add_sums(a, b) -> list:
@@ -1246,33 +1249,24 @@ def _add_sums(a, b) -> list:
 def inner_product_rawlog_parquet(spark: SparkSession, sketch: CountMinSketch,
                                  path: str, tokens_col: str, *,
                                  n_slices: int | None = None) -> int:
-    """inner_product_rawlog over a parquet token table through the slice
-    runner that build_sketch_parquet runs: the raw log never passes
-    through JVM rows, null rows are dropped as the DataFrame version's
-    filter drops them, and per slice only a d-vector of partial sums
-    returns. The sketch travels as inner_product_rawlog's does, one
-    broadcast deserialized once per worker (driver threads read the
-    same broadcast; their cached copy is dropped on return)."""
-    blob = sketch.to_bytes()
-    digest = hashlib.blake2b(blob, digest_size=16).hexdigest()
-    bc = spark.sparkContext.broadcast(blob)
+    """inner_product_rawlog over a parquet token table through the scan
+    runner that build_sketch_parquet runs: null rows are dropped as the
+    DataFrame version's filter drops them. On driver threads the slices
+    probe ``sketch`` itself (``row_probe_sums`` only reads its table) and
+    each returns a d-vector of partial sums; with no session the scan
+    runs there at any size. Above the runner's bound it is
+    inner_product_rawlog over Spark's scan of the same files, the
+    sketch broadcast and deserialized once per worker."""
     depth = sketch.cfg.depth
 
     def feed(sums, batch, file):
-        sums += _cached_sketch(digest, bc.value).row_probe_sums(
-            _flat_values(batch.column(0)))
+        sums += sketch.row_probe_sums(_flat_values(batch.column(0)))
 
-    try:
-        sums, _ = _run_slices(
-            spark, _list_row_groups(path, column=tokens_col), n_slices,
-            lambda: np.zeros(depth, dtype=np.int64),
-            _read_slice([tokens_col], feed), _add_sums,
-            lambda pid, sums, n_rows, t0: {"sums": [sums.tolist()]},
-            "sums array<long>",
-            lambda partials, n: (functools.reduce(
-                _add_sums, (r["sums"] for r in partials.collect())), None))
-    finally:
-        _SKETCH_CACHE.pop(digest, None)
+    sums, _ = _run_slices(
+        spark, _list_row_groups(path, column=tokens_col), n_slices,
+        [tokens_col], feed, lambda: np.zeros(depth, dtype=np.int64),
+        _add_sums,
+        lambda src, _: (_rawlog_sums(spark, sketch, src, tokens_col), None))
     return int(min(sums))
 
 
@@ -1404,9 +1398,7 @@ def build_grouped_aggregator_pairs(df: DataFrame, group_col: str,
     src = (df.select(*cols)
            .filter(F.col("key").isNotNull() & F.col("_ik").isNotNull()
                    & (F.col("_w") > 0)))
-    partials = src.mapInArrow(_grouped_agg_builder(ingest),
-                              schema=_GROUPED_PARTIAL_SCHEMA)
-    return _grouped_merge(partials, fanout, src.rdd.getNumPartitions())
+    return _grouped_build(src, ingest, fanout)
 
 
 def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
@@ -1414,22 +1406,19 @@ def build_aggregator_parquet(spark: SparkSession, path: str, values_col: str,
                              n_slices: int | None = None,
                              extract_array=None,
                              files: list[str] | None = None) -> BuildResult:
-    """Parquet-direct build of ANY sketchlib mergeable sketch: workers read
-    row-group slices with pyarrow (no JVM scan, no Arrow IPC double-hop)
-    through the one parquet slice reader that build_sketch_parquet also
-    runs. Measured at 2.08 B tokens on local[32]: Count-Sketch 67.2 M tok/s
-    here vs 26.7 M via ``build_aggregator(spark.read.parquet(path), ...)``
-    (2.5x — the token arrays never leave the Python worker), and within
-    1.27x of a same-shape Count-Min (85.0 M tok/s).
-    Byte-identical result to the DataFrame path for the same data, with
-    the same ``n_rows`` (null rows dropped). Checkpoint/resume is
+    """Parquet build of ANY sketchlib mergeable sketch through the parquet
+    scan runner that build_sketch_parquet runs: up to
+    _IN_PROCESS_MAX_BYTES driver threads read row-group slices with
+    pyarrow (no JVM scan, no Arrow IPC double-hop), above it it is
+    ``build_aggregator(spark.read.parquet(...), ...)`` over the same
+    files. Byte-identical result to the DataFrame path for the same data,
+    with the same ``n_rows`` (null rows dropped). Checkpoint/resume is
     build_sketch_parquet's.
     """
     t0 = time.perf_counter()
     rgs = _list_row_groups(path, files=files, column=values_col)
-    return _build_slices(
-        spark, rgs, n_slices, _parquet_slice(values_col, extract_array),
-        fanout, factory, t0)
+    return _build_slices(spark, rgs, n_slices, values_col,
+                         _array_feed(extract_array), fanout, factory, t0)
 
 
 def build_grouped_aggregator(df: DataFrame, key_col: str, values_col: str,
@@ -1447,21 +1436,20 @@ def _factory(cfg_or_factory):
 
 
 def _fleet_slices(spark: SparkSession, path: str, files, n_slices,
-                  fanout: int, columns: list[str], feed):
-    """A grouped parquet scan through the slice runner: ``feed(fleet,
-    batch, file)`` folds each batch of ``columns`` into its slice's fleet.
-    On driver threads the slices run one at a time (``serial``) and their
+                  fanout: int, columns: list[str], feed,
+                  with_file: bool = False):
+    """A grouped parquet scan through the scan runner: ``feed(fleet,
+    batch, file)`` folds each batch of ``columns`` into a fleet. On
+    driver threads the slices run one at a time (``serial``) and their
     fleets merge per key in pid order into the fleet ``{key: (sketch,
-    n_rows)}``; on Spark the slice fleets go through ``_grouped_merge``,
-    whose frame is returned uncollected (``_fleet_dict`` and ``_fleet_df``
-    take either form)."""
+    n_rows)}``; on Spark the grouped builder runs over the scan and its
+    ``_grouped_merge`` frame is returned uncollected (``_fleet_dict`` and
+    ``_fleet_df`` take either form)."""
     fleet, _ = _run_slices(
         spark, _list_row_groups(path, files=files, column=columns),
-        n_slices, dict, _read_slice(columns, feed), _merge_fleets,
-        lambda pid, fleet, n_rows, t0: _grouped_rows(pid, fleet),
-        _GROUPED_PARTIAL_SCHEMA,
-        lambda partials, n: (_grouped_merge(partials, fanout, n), None),
-        serial=True)
+        n_slices, columns, feed, dict, _merge_fleets,
+        lambda src, ingest: (_grouped_build(src, ingest, fanout), None),
+        serial=True, with_file=with_file)
     return fleet
 
 
@@ -1469,9 +1457,9 @@ def _grouped_parquet(spark: SparkSession, path: str, key_col: str,
                      tokens_col: str, cfg_or_factory, *, cu: bool = False,
                      fanout: int = 8, n_slices: int | None = None,
                      files: list[str] | None = None):
-    """Per-key sketches over a parquet table via Python-side columnar
-    reads — the grouped counterpart of build_sketch_parquet (same
-    ColumnarToRow bypass, same slice reader and runner).
+    """Per-key sketches over a parquet table — the grouped counterpart
+    of build_sketch_parquet (same scan runner: pyarrow slices on driver
+    threads up to its bound, ``build_grouped`` over Spark's scan above).
     ``cfg_or_factory`` is a CMConfig or a zero-arg sketch factory. Null
     values are dropped, as ``build_grouped``'s filter drops them.
     ``files`` restricts the scan to an explicit file list (the
@@ -1509,11 +1497,11 @@ def _per_file_parquet(spark: SparkSession, path: str, tokens_col: str,
     `_current_files`), so a per-file fleet maintained through
     `incremental_build_grouped` lines up with delta files by
     construction: every appended file is a NEW group, and no existing
-    group is ever republished by a delta fold. No grouping shuffle
-    happens at all — the data is already partitioned by the key (a row
-    group belongs to exactly one file), so each slice folds its row
-    groups straight into per-file accumulators; the slice fleets only
-    reconcile files whose row groups landed in different slices. Null
+    group is ever republished by a delta fold. No raw row shuffles —
+    the data is already partitioned by the key (a row group belongs to
+    exactly one file), so each slice or scan partition folds its rows
+    straight into per-file accumulators; the partial fleets only
+    reconcile files split across slices or partitions. Null
     rows are dropped: they count in no file's ``n_rows``, as in
     ``build_sketch_parquet``. ``files`` restricts the scan to an explicit
     file list (the incremental-maintenance delta).
@@ -1536,7 +1524,7 @@ def _per_file_parquet(spark: SparkSession, path: str, tokens_col: str,
                       else transform(col), batch.num_rows, factory, cu)
 
     return _fleet_slices(spark, path, files, n_slices, fanout, [tokens_col],
-                         feed)
+                         feed, with_file=True)
 
 
 def per_file_parquet_fleet(spark: SparkSession, *args, **kwargs) -> dict:

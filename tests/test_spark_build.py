@@ -340,26 +340,6 @@ def test_checkpoint_slices_pinned_across_parallelism(spark, multi_rg_path,
                              checkpoint_dir=ckpt)
 
 
-def test_pq_file_cache_invalidates_on_rewrite(tmp_path):
-    """ADVICE (medium): the worker-side ParquetFile cache validates
-    (mtime_ns, size) — a file rewritten at the same path is reopened."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from sketchlib.spark_build import _pq_file
-    p = str(tmp_path / "f.parquet")
-    pq.write_table(pa.table({"x": [1, 2, 3]}), p)
-    pf1 = _pq_file(p)
-    assert pf1.metadata.num_rows == 3
-    assert _pq_file(p) is pf1  # cache hit while unchanged
-    import os
-    import time as _t
-    _t.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
-    pq.write_table(pa.table({"x": [1, 2, 3, 4, 5]}), p)
-    pf2 = _pq_file(p)
-    assert pf2 is not pf1
-    assert pf2.metadata.num_rows == 5
-
-
 def test_sketch_table_equals_dense(spark, tokens_df):
     """The sketch-as-table build (counters as a distributed DataFrame, for
     ε too small for dense partials) must produce EXACTLY the dense build's
@@ -620,38 +600,69 @@ def two_file_path(tmp_path_factory):
     return str(base / "data")
 
 
+@pytest.fixture(scope="module")
+def odd_name_path(tmp_path_factory):
+    """A token table whose file names hold a space and a '%', one of them
+    in a subdirectory whose name holds a space."""
+    from sketchlib.datagen import generate_token_table
+    data = tmp_path_factory.mktemp("oddname") / "data"
+    os.makedirs(data / "sp ace")
+    generate_token_table(str(data / "sp ace" / "a b%.parquet"), rows=500,
+                         seed=81, dist="zipf")
+    generate_token_table(str(data / "c%20d.parquet"), rows=300, seed=82,
+                         dist="zipf")
+    return str(data)
+
+
 def test_grouped_fleets_agree_across_paths(spark, two_file_path,
-                                           monkeypatch):
-    """Grouped and per-file fleets, Count-Min and an order-sensitive
-    Misra-Gries, are byte-equal between driver threads (no Spark job) and
-    the forced Spark path, with equal per-key row counts."""
+                                           odd_name_path, monkeypatch):
+    """Grouped and per-file Count-Min fleets are byte-equal between driver
+    threads (no Spark job) and Spark's parquet scan, with equal per-key
+    row counts; per-file keys are the manifest's relative file names on
+    both, whatever characters those hold."""
     from sketchlib import spark_build as sb
-    from sketchlib.mg import MisraGries
+    from sketchlib.incremental import _current_files
 
-    facs = (functools.partial(CountMinSketch, CFG),
-            functools.partial(MisraGries, 8))
-
-    def fleets():
+    def fleets(path):
         return [{k: (sk.to_bytes(), n) for k, (sk, n) in
                  sb.collect_fleet(build()).items()}
-                for fac in facs for build in (
+                for build in (
                     lambda: sb.build_grouped_parquet(
-                        spark, two_file_path, "source", "tokens", fac,
-                        n_slices=4),
+                        spark, path, "source", "tokens", CFG, n_slices=4),
                     lambda: sb.build_per_file_parquet(
-                        spark, two_file_path, "tokens", fac, n_slices=4))]
+                        spark, path, "tokens", CFG, n_slices=4))]
 
     def fleet():
         return sb.grouped_parquet_fleet(spark, two_file_path, "source",
-                                        "tokens", facs[0])
+                                        "tokens", CFG)
 
-    threads = fleets()
+    paths = (two_file_path, odd_name_path)
+    threads = [fleets(p) for p in paths]
     assert _run_jobs(spark, "threads", fleet)[1] == 0
     monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
-    assert fleets() == threads
+    assert [fleets(p) for p in paths] == threads
     assert _run_jobs(spark, "spark", fleet)[1] > 0
-    assert sorted(threads[1]) == ["p0.parquet", "p1.parquet"]
-    assert sum(n for _, n in threads[1].values()) == 4_000
+    assert sorted(threads[0][1]) == ["p0.parquet", "p1.parquet"]
+    assert sum(n for _, n in threads[0][1].values()) == 4_000
+    assert sorted(threads[1][1]) == sorted(_current_files(odd_name_path)) \
+        == ["c%20d.parquet", "sp ace/a b%.parquet"]
+
+
+def test_driver_only_scan_above_bound_runs_on_threads(two_file_path,
+                                                      monkeypatch):
+    """With no session a scan above the thread bound still runs on driver
+    threads, the one route that can run: the fleet equals the one built
+    below the bound."""
+    from sketchlib import spark_build as sb
+
+    def fleet():
+        return {k: (sk.to_bytes(), n) for k, (sk, n) in
+                sb.grouped_parquet_fleet(None, two_file_path, "source",
+                                         "tokens", CFG, n_slices=2).items()}
+
+    want = fleet()
+    monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
+    assert fleet() == want
 
 
 def test_fleet_scans_hold_one_slice_fleet(spark, two_file_path,
@@ -703,6 +714,24 @@ def test_inner_product_parquet_paths_agree(spark, two_file_path,
         spark, cm, two_file_path, "tokens", n_slices=4) == want
 
 
+def test_threaded_inner_product_probes_the_sketch(spark, two_file_path,
+                                                  monkeypatch):
+    """On driver threads the inner product probes the caller's sketch
+    directly: it needs no session and never writes the sketch cache."""
+    from sketchlib import spark_build as sb
+
+    class NoWrites(dict):
+        def __setitem__(self, key, value):
+            raise AssertionError("sketch cache written")
+
+    cm = build_sketch_parquet(spark, two_file_path, "tokens", CFG).sketch
+    want = sb.inner_product_rawlog(
+        spark, cm, spark.read.parquet(two_file_path), "tokens")
+    monkeypatch.setattr(sb, "_SKETCH_CACHE", NoWrites())
+    assert sb.inner_product_rawlog_parquet(
+        None, cm, two_file_path, "tokens", n_slices=2) == want > 0
+
+
 def test_small_grouped_and_file_index_folds_run_no_spark_job(spark,
                                                              tmp_path):
     """A grouped fold and a file-index fold of a 10-row delta build and
@@ -737,37 +766,28 @@ def _single_process_bytes(path):
 def test_parquet_build_runs_on_driver_threads(spark, multi_rg_path,
                                               monkeypatch):
     """A multi-row-group table above the former 4 MB in-process bound
-    builds on driver threads with no Spark job. Forced onto the Spark
-    slice path it runs one job (the driver fold collects every partial
-    with its lineage: no persist, no merge shuffle). Both equal the
-    single-process reference byte for byte and have equal lineage, and an
-    order-sensitive Misra-Gries, whose row groups stream as several
-    record batches, agrees across the two paths too."""
+    builds on driver threads with no Spark job, one lineage row per
+    slice. Forced onto Spark's parquet scan it runs one job (the footer
+    gives the schema, and the driver fold collects every partial with
+    its lineage: no persist, no merge shuffle). Both equal the
+    single-process reference byte for byte."""
     from sketchlib import spark_build as sb
-    from sketchlib.mg import MisraGries
 
     rgs = sb._list_row_groups(multi_rg_path, column="tokens")
     assert len(rgs) > 1 and sum(r[3] for r in rgs) > 4 << 20
     assert min(r[2] for r in rgs) > sb._SLICE_BATCH_ROWS
 
-    def builds():
-        return (sb.build_sketch_parquet(spark, multi_rg_path, "tokens", CFG),
-                sb.build_aggregator_parquet(
-                    spark, multi_rg_path, "tokens",
-                    functools.partial(MisraGries, 8)).sketch.to_bytes())
+    def build():
+        return sb.build_sketch_parquet(spark, multi_rg_path, "tokens", CFG)
 
-    (threads, mg_threads), jobs = _run_jobs(spark, "threads", builds)
-    assert jobs == 0
+    threads, jobs = _run_jobs(spark, "threads", build)
+    assert jobs == 0 and len(threads.lineage) == len(rgs)
     monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
-    (driver, mg_driver), jobs = _run_jobs(spark, "driver-fold", builds)
-    assert jobs == 2
-    want = _single_process_bytes(multi_rg_path)
-    for res in (threads, driver):
-        assert res.sketch.to_bytes() == want
-        assert len(res.lineage) == len(rgs) and res.n_rows == 30_000
-    cols = ["pid", "n_rows", "n_items", "total_count"]
-    assert threads.lineage[cols].equals(driver.lineage[cols])
-    assert mg_threads == mg_driver
+    scan, jobs = _run_jobs(spark, "spark-scan", build)
+    assert jobs == 1
+    for res in (threads, scan):
+        assert res.sketch.to_bytes() == _single_process_bytes(multi_rg_path)
+        assert res.n_rows == 30_000
 
 
 def test_concurrent_parquet_builds_of_one_file(spark, multi_rg_path):
@@ -785,28 +805,43 @@ def test_concurrent_parquet_builds_of_one_file(spark, multi_rg_path):
 
 @pytest.fixture(scope="module")
 def small_vocab_path(tmp_path_factory):
-    """Eight row groups of Zipf-skewed list<int32> tokens over 600 keys.
-    Fewer keys than the catalog MG's k=1024, so no MG update or merge
-    ever shrinks and its merges are additions like the other kinds'."""
+    """Eight files of one 100-row row group each, Zipf-skewed list<int32>
+    tokens over 600 keys: eight slices on driver threads. Fewer keys than
+    the catalog MG's k=1024, so no MG update or merge ever shrinks and its
+    merges are additions like the other kinds'."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     rng = np.random.default_rng(5)
     lens = rng.integers(1, 60, 800)
     vals = (rng.zipf(1.3, int(lens.sum())) % 600).astype(np.int32)
     offsets = pa.array(np.r_[0, np.cumsum(lens)].astype(np.int32))
-    path = str(tmp_path_factory.mktemp("vocab") / "t.parquet")
-    pq.write_table(pa.table({"tokens": pa.ListArray.from_arrays(
-        offsets, pa.array(vals))}), path, row_group_size=100)
-    return path
+    table = pa.table({"tokens": pa.ListArray.from_arrays(
+        offsets, pa.array(vals))})
+    path = tmp_path_factory.mktemp("vocab")
+    for i in range(8):
+        pq.write_table(table.slice(100 * i, 100), str(path / f"t{i}.parquet"))
+    return str(path)
+
+
+@pytest.fixture
+def eight_scan_partitions(spark):
+    """Spark's scan of ``small_vocab_path`` gives each file a partition of
+    its own, eight partials as on eight cores; a local[4] session packs
+    small files into four."""
+    spark.conf.set("spark.sql.files.minPartitionNum", "8")
+    yield
+    spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
 @pytest.mark.parametrize("kind", ["cm", "catalog_multi"])
 def test_merge_planner_paths_byte_identical(spark, small_vocab_path,
+                                            eight_scan_partitions,
                                             monkeypatch, tmp_path, kind):
-    """One table built four ways — in-process, driver fold, a 2-level
-    shuffle tree (one stage + the driver) and a 3-level one (two stages)
-    — gives byte-identical sketches and lineage of one shape, which an
-    empty build shares."""
+    """One table built four ways — on driver threads, and over Spark's
+    parquet scan through the driver fold, a 2-level shuffle tree (one
+    stage + the driver) and a 3-level one (two stages) — gives
+    byte-identical sketches, the same per-file lineage rows, and lineage
+    of one shape, which an empty build shares."""
     from sketchlib import spark_build as sb
     from sketchlib.catalog import _factory_from_spec, _normalize_kinds
 
@@ -845,11 +880,15 @@ def test_merge_planner_paths_byte_identical(spark, small_vocab_path,
     assert stages == [1, 2]
 
     want = local.sketch.to_bytes()
+    def rows(res):
+        return sorted(map(tuple, res.lineage[
+            ["n_rows", "n_items", "total_count"]].to_numpy().tolist()))
+
     for res in (driver, two, three):
         assert res.sketch.to_bytes() == want
         assert res.n_rows == 800
-        pd_cols = ["pid", "n_rows", "n_items", "total_count"]
-        assert res.lineage[pd_cols].equals(local.lineage[pd_cols])
+        assert sorted(res.lineage["pid"]) == list(range(8))
+        assert rows(res) == rows(local)
     assert list(local.lineage["pid"]) == list(range(8))
 
     (tmp_path / "empty").mkdir()
@@ -862,10 +901,10 @@ def test_merge_planner_paths_byte_identical(spark, small_vocab_path,
 
 def test_order_sensitive_merges_fold_in_pid_order(spark, small_vocab_path,
                                                   monkeypatch):
-    """Misra-Gries merges depend on order once they shrink (k=8 here). The
-    in-process path and the driver fold fold the same slice partials in
-    pid order, so they agree byte for byte, and a tree build repeats
-    itself exactly."""
+    """Misra-Gries merges depend on order once they shrink (k=8 here).
+    Over Spark's parquet scan the driver fold folds the partitions'
+    partials in pid order, so a build repeats itself byte for byte, and
+    so does a tree build."""
     import functools
 
     from sketchlib import spark_build as sb
@@ -878,17 +917,15 @@ def test_order_sensitive_merges_fold_in_pid_order(spark, small_vocab_path,
             spark, small_vocab_path, "tokens", fac, n_slices=8,
             fanout=fanout).sketch.to_bytes()
 
-    local = build()
     monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
-    assert build() == local
+    assert build() == build()
     monkeypatch.setattr(sb, "_DRIVER_FOLD_MAX_BYTES", -1)
     assert build(fanout=2) == build(fanout=2)
 
 
 def test_slice_over_two_files_is_one_partial(spark, tmp_path, monkeypatch):
-    """A slice whose row groups span two files is one Spark task and one
-    partial, as it is one sketch on driver threads: an order-sensitive
-    Misra-Gries and the lineage agree across the two paths."""
+    """A slice whose row groups span two files is one partial on driver
+    threads, and Spark's scan of the two files reads every row too."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from sketchlib import spark_build as sb
@@ -905,9 +942,6 @@ def test_slice_over_two_files_is_one_partial(spark, tmp_path, monkeypatch):
             n_slices=1)
 
     threads = build()
+    assert list(threads.lineage["pid"]) == [0] and threads.n_rows == 1200
     monkeypatch.setattr(sb, "_IN_PROCESS_MAX_BYTES", -1)
-    spark_path = build()
-    assert list(spark_path.lineage["pid"]) == [0] == \
-        list(threads.lineage["pid"])
-    assert spark_path.n_rows == threads.n_rows == 1200
-    assert spark_path.sketch.to_bytes() == threads.sketch.to_bytes()
+    assert build().n_rows == 1200
